@@ -16,15 +16,9 @@ object Explain {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // same A/B hook as TimeQ: lets a plan audit force a dispatcher
-    // branch (e.g. the bucketed percentile) without code edits
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(
-      _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => spark.conf.set(k, v)
-          case _ => sys.error(s"SPARK_GRAFT_EXTRA_CONF entry without '=': '$kv'")
-        }
-      })
+    // the TimeQ A/B hook: lets a plan audit force a dispatcher branch
+    // (e.g. the bucketed percentile) without code edits
+    graft.tools.ExtraConf.applyTo(spark)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { n =>

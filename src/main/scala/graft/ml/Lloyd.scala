@@ -1,20 +1,21 @@
 package graft.ml
 
 /** Deterministic driver-side Lloyd's k-means on a bounded sample —
-  * the coarse/product quantizer trainer shared by [[graft.operators.Ivf]]
-  * and [[graft.operators.Pq]]. Seeds are spread-index picks over the
-  * (deterministically ordered) sample, ties break to the lowest
-  * centroid index, and an emptied cluster keeps its previous centroid,
-  * so the same sample always yields the same centroids.
+  * the coarse/product quantizer trainer behind
+  * [[graft.operators.Ann.fitCentroids]] and
+  * [[graft.operators.Pq.trainCodebooks]]. Seeds are spread-index picks
+  * over the (deterministically ordered) sample, ties break to the
+  * lowest centroid index, and an emptied cluster keeps its previous
+  * centroid, so the same sample always yields the same centroids.
   *
   * Scale rationale: quantizer quality converges on a few thousand
   * sample points long before a distributed fit pays for itself; the
-  * sample collect is the same bounded driver edge as the 16-centroid
-  * collect the IVF search already does, and it removes the per-
-  * iteration Spark jobs a distributed k-means would run. */
+  * sample collect is one bounded driver edge, it removes the per-
+  * iteration Spark jobs a distributed k-means would run, and the
+  * fitted centroids re-enter the plan as a tiny broadcast relation. */
 object Lloyd {
 
-  def nearest(p: Array[Double], cents: Array[Array[Double]]): Int = {
+  private def nearest(p: Array[Double], cents: Array[Array[Double]]): Int = {
     var best = 0; var bd = Double.MaxValue; var j = 0
     while (j < cents.length) {
       var d = 0.0; var i = 0

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Product quantization (PQ) — the memory side of the ANN scale path
@@ -14,13 +13,13 @@ import org.apache.spark.sql.functions._
   * corpus distance is m table lookups — no float vector is ever read
   * at search time.
   *
-  * Scale design: codebooks train driver-side on a bounded
-  * deterministic sample (tiny: m*K*subDim doubles — the same
-  * collect-at-edges rule as [[Ivf]] centroids), encoding is one
-  * mapPartitions corpus pass with the codebooks broadcast, and search
-  * reads only the (vec_id, codes) relation — at 100 TB that is the
-  * difference between scanning 100 TB of floats and ~3 TB of codes.
-  * The LUTs are per-query driver arithmetic on the codebooks alone.
+  * This object holds the quality side: codebook training and the
+  * distortion diagnostic. Encode and ADC search are the relational
+  * [[Ann]] stages the oracle-checked seeded queries share. Codebooks
+  * train driver-side on a bounded deterministic sample (tiny:
+  * m*K*subDim doubles — the collect-at-edges rule), so at 100 TB
+  * search still reads only the (vec_id, m, code) relation: ~3 TB of
+  * codes instead of 100 TB of floats.
   */
 object Pq {
 
@@ -36,16 +35,11 @@ object Pq {
   }
 
   /** Deterministic driver-side Lloyd's ([[graft.ml.Lloyd]]) per
-    * subspace on the `sampleN` smallest seeded id-hashes — a
-    * pseudo-random slice spread over the whole id space (a head-of-ids
-    * sample would bias the codebooks toward early ingestion), planned
-    * as TakeOrdered. Deterministic training, so encoding is too. */
+    * subspace on the seeded-hash [[Ann.trainingSample]].
+    * Deterministic training, so encoding is too. */
   def trainCodebooks(embeddings: DataFrame, m: Int, k: Int,
                      sampleN: Int, iters: Int = 15): Codebooks = {
-    val sample = embeddings
-      .orderBy(xxhash64(col("vec_id"), lit(1337L)), col("vec_id")).limit(sampleN)
-      .select(transform(col("embedding"), _.cast("double")).as("v"))
-      .collect().map(_.getSeq[Double](0).toArray)
+    val sample = Ann.trainingSample(embeddings, sampleN, 1337L)
     require(sample.nonEmpty, "empty training sample")
     val dim = sample.head.length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
@@ -55,75 +49,6 @@ object Pq {
       val pts = sample.map(v => java.util.Arrays.copyOfRange(v, off, off + subDim))
       graft.ml.Lloyd.fit(pts, k, iters)
     }
-  }
-
-  /** One corpus pass: (vec_id, codes) with codes(sub) = nearest
-    * codeword of that subvector. The codebooks ride the closure (tiny;
-    * an explicit broadcast for clarity at scale). */
-  def encode(embeddings: DataFrame, codebooks: Codebooks): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(codebooks)
-    val m = codebooks.length
-    val subDim = codebooks(0)(0).length
-    embeddings
-      .select(col("vec_id"),
-        transform(col("embedding"), _.cast("double")).as("v"))
-      .as[(Long, Array[Double])]
-      .mapPartitions { rows =>
-        val cb = bc.value
-        rows.map { case (id, v) =>
-          val codes = new Array[Int](m)
-          var sub = 0
-          while (sub < m) {
-            val cents = cb(sub); val off = sub * subDim
-            var best = 0; var bd = Double.MaxValue; var j = 0
-            while (j < cents.length) {
-              val d = subDist(v, off, cents(j))
-              if (d < bd) { bd = d; best = j }
-              j += 1
-            }
-            codes(sub) = best
-            sub += 1
-          }
-          (id, codes)
-        }
-      }.toDF("vec_id", "codes")
-  }
-
-  /** ADC top-k: per query a m x K LUT of exact subspace distances is
-    * computed from the codebooks (driver arithmetic), then the scan of
-    * the codes relation scores every vector with m lookups. `queries`:
-    * (q_id, full double vector), collected — the broadcast query-set
-    * edge, same as brute-force ANN. */
-  def adcSearch(codes: DataFrame, codebooks: Codebooks,
-                queries: Array[(Long, Array[Double])], topK: Int): DataFrame = {
-    val spark = codes.sparkSession
-    import spark.implicits._
-    val m = codebooks.length
-    val subDim = codebooks(0)(0).length
-    val luts: Array[(Long, Array[Array[Double]])] = queries.map { case (qid, qv) =>
-      qid -> Array.tabulate(m)(sub =>
-        codebooks(sub).map(c => subDist(qv, sub * subDim, c)))
-    }
-    val bc = spark.sparkContext.broadcast(luts)
-    val scored = codes.as[(Long, Array[Int])]
-      .mapPartitions { rows =>
-        val qs = bc.value
-        rows.flatMap { case (id, cs) =>
-          qs.iterator.map { case (qid, lut) =>
-            var d = 0.0; var sub = 0
-            while (sub < m) { d += lut(sub)(cs(sub)); sub += 1 }
-            (qid, id, d)
-          }
-        }
-      }.toDF("q_id", "vec_id", "adc")
-    scored.filter(col("vec_id") =!= col("q_id"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id"))
-          .orderBy(col("adc"), col("vec_id"))).cast("long"))
-      .filter(col("rank") <= topK)
-      .select(col("q_id"), col("vec_id").as("n_id"), col("adc"), col("rank"))
   }
 
   /** Mean squared reconstruction error of the encoding over a frame —

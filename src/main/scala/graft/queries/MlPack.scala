@@ -505,9 +505,21 @@ object MlPack extends QueryPack {
     * / q_forward_select model family as a CrossVal-contract fitter):
     * per-feature beta/mean plus the target mean collected at the
     * driver edge (one tiny agg row per fold — |feats| numbers, the
-    * legitimate collect edge), prediction a codegen'd expression. */
+    * legitimate collect edge), prediction a codegen'd expression. The
+    * full-feature case of [[olsFitterNested]]. */
   def olsFitter(feats: Seq[String], target: String)
-               (train: DataFrame): DataFrame => DataFrame = {
+               (train: DataFrame): DataFrame => DataFrame =
+    olsFitterNested(feats, target)(train)(feats)
+
+  /** [[olsFitter]] for NESTED candidate scans
+    * ([[graft.ml.Reduction.tuneOverKsSharedFit]]): each feature's
+    * beta/mean is univariate — independent of which other features are
+    * in the model — so ONE train aggregate over the full feature list
+    * serves every prefix (each aggregate expression accumulates
+    * independently of its siblings, so the collected values are the
+    * per-subset fits'). */
+  def olsFitterNested(feats: Seq[String], target: String)
+                     (train: DataFrame): Seq[String] => DataFrame => DataFrame = {
     val aggs = feats.flatMap(f => Seq(
       (covar_samp(col(f), col(target)) / var_samp(col(f))).as(s"b_$f"),
       avg(col(f)).as(s"mx_$f"))) :+ avg(col(target)).as("my")
@@ -525,30 +537,6 @@ object MlPack extends QueryPack {
     // oracle's left-to-right evaluation order exactly: double addition
     // is non-associative, and a (Σ terms) + my grouping can differ by
     // ulps, flipping a (pred, vec_id) row_number at a float boundary
-    test => test.withColumn("pred",
-      feats.foldLeft(lit(my): org.apache.spark.sql.Column)((acc, f) =>
-        acc + lit(num(s"b_$f")) * (col(f) - lit(num(s"mx_$f")))))
-  }
-
-  /** [[olsFitter]] for NESTED candidate scans
-    * ([[graft.ml.Reduction.tuneOverKsSharedFit]]): each feature's
-    * beta/mean is univariate — independent of which other features are
-    * in the model — so ONE train aggregate over the full feature list
-    * serves every prefix. The returned per-subset predictor folds the
-    * same literals in the same left-to-right order as [[olsFitter]]
-    * (each aggregate expression accumulates independently of its
-    * siblings, so the collected values are the per-subset fits'). */
-  def olsFitterNested(feats: Seq[String], target: String)
-                     (train: DataFrame): Seq[String] => DataFrame => DataFrame = {
-    val aggs = feats.flatMap(f => Seq(
-      (covar_samp(col(f), col(target)) / var_samp(col(f))).as(s"b_$f"),
-      avg(col(f)).as(s"mx_$f"))) :+ avg(col(target)).as("my")
-    val r = train.agg(aggs.head, aggs.tail: _*).head()
-    def num(name: String): Double = {
-      val v = r.getAs[java.lang.Double](name)
-      if (v == null) 0.0 else v.doubleValue()
-    }
-    val my = num("my")
     subset => test => test.withColumn("pred",
       subset.foldLeft(lit(my): org.apache.spark.sql.Column)((acc, f) =>
         acc + lit(num(s"b_$f")) * (col(f) - lit(num(s"mx_$f")))))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.{Ann, Pq}
 
 /** Similarity search over the `embeddings` table (north-star ANN
   * surface): brute-force cosine top-k as the exact baseline, and a
@@ -110,15 +111,7 @@ object SimilarityPack extends QueryPack {
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val scored = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 6))
-    scored
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("vec_id").as("n_id"), col("cos"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+    Ann.rerank(e.crossJoin(broadcast(q)), 5).orderBy(col("q_id"), col("rank"))
   }
 
   /** FILTERED vector search — top-5 cosine restricted to candidates
@@ -455,163 +448,123 @@ object SimilarityPack extends QueryPack {
       .orderBy(col("a"), col("b"))
   }
 
-  /** IVF ANN with recall measurement: KMeans(16) coarse quantizer,
-    * probe the 4 closest lists per query, exact cosine within them;
-    * reports recall@5 against the brute-force answer per query.
-    * Rows-only (KMeans centroids are engine-specific). */
-  def qAnnIvf(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.Ivf
-    val (posting, centroids) = Ivf.build(Tables.embeddings(s, d), k = 16, seed = 42)
-    val queries = posting.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val ivfTop = Ivf.search(posting, centroids, queries, nprobe = 4, topK = 5)
-      .select(col("q_id"), col("n_id"))
-    val exactTop = qAnnCosine(s, d).select(col("q_id").as("qe"), col("n_id").as("ne"))
-    // left join, not semi: a query with zero hits must report
-    // recall 0.0, not silently vanish from the result
-    ivfTop.join(exactTop, col("q_id") === col("qe") && col("n_id") === col("ne"),
-        "left")
-      .groupBy(col("q_id"))
-      .agg(sum(when(col("ne").isNotNull, 1).otherwise(0)).as("hits"))
-      .select(col("q_id"), round(col("hits") / 5.0, 2).as("recall_at_5"))
-      .orderBy(col("q_id"))
-  }
-
-  /** IVF ANN, ORACLE-CHECKED end to end: same index pipeline as
-    * [[qAnnIvf]] — assign each vector to its nearest coarse centroid,
-    * probe the 4 closest posting lists per query, exact cosine rerank
-    * within them — but with SEEDED centroids (the 16 smallest-id
-    * vectors) instead of a k-means fit, so every stage is a
-    * deterministic relational expression DuckDB replays verbatim:
-    * assignment distance is sqrt(Σ(aᵢ−bᵢ)²) summed in index order
-    * (bitwise `list_distance`), ties break toward the lower centroid
-    * id, and the rerank is the proven [[qAnnCosine]] cosine.
-    *
-    * Scale shape: assignment is a broadcast-16 fan-out folded by a
-    * partial `min_by` aggregate (map-side combine — the 16× blowup
-    * never crosses the shuffle); the probe relation is (10 queries ×
-    * 4 lists) broadcast; candidates join on the cluster key only.
-    * The Lloyd-fitted [[qAnnIvf]] stays as the quality path (better
-    * centroids → better recall); this twin pins the MACHINERY. */
-  def qAnnIvfSeeded(s: SparkSession, d: String): DataFrame = {
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val cents = broadcast(e.orderBy(col("vec_id")).limit(16)
-      .select(col("vec_id").as("cid"), col("v").as("cv")))
-    def l2(a: Column, b: Column): Column = {
-      val diff = zip_with(a, b, _ - _)
-      sqrt(dot(diff, diff))
-    }
-    val posting = e.crossJoin(cents)
-      .select(col("vec_id"), col("v"), col("cid"), l2(col("v"), col("cv")).as("dist"))
-      .groupBy(col("vec_id"))
-      .agg(min_by(col("cid"), struct(col("dist"), col("cid"))).as("cluster"),
-        first(col("v")).as("v"))
+  /** Top-5 IVF search for the query vectors vec_id < 10 over (vec_id,
+    * v) vectors and a (cid, cv) centroid relation, on the [[Ann]]
+    * stages: assign every vector to its nearest centroid, probe the 4
+    * nearest lists per query, exact cosine rerank within them. Scale
+    * shape: the probe relation (10 queries × 4 lists, carrying the
+    * query vectors) broadcasts; candidates join on the cluster key
+    * only. */
+  private[graft] def ivfTop5(e: DataFrame, cents: DataFrame): DataFrame = {
+    val posting = Ann.assign(e, cents)
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
       .withColumn("qn", sqrt(dot(col("qv"), col("qv"))))
-    val probes = q.crossJoin(cents)
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(l2(col("qv"), col("cv")), col("cid"))))
-      .filter(col("rn") <= 4)
-      .select(col("q_id"), col("cid").as("cluster"))
-    val cand = posting.join(broadcast(probes), "cluster")
-      .join(broadcast(q), "q_id")
-    cand.select(col("q_id"), col("vec_id"), col("v"), col("nrm"), col("qv"), col("qn"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 6))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("vec_id").as("n_id"), col("cos"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+    val probes = Ann.probe(q, cents, nprobe = 4).drop("cv")
+    Ann.rerank(posting.join(broadcast(probes), "cluster"), 5)
+  }
+
+  /** The seeded coarse quantizer: the 16 smallest-id vectors as the
+    * (cid, cv) centroid relation. */
+  private def seededCentroids(e: DataFrame): DataFrame =
+    e.orderBy(col("vec_id")).limit(16).select(col("vec_id").as("cid"), col("v").as("cv"))
+
+  /** recall@5 per query of an ANN top-5 (q_id, n_id) against the exact
+    * top-5 (q_id, n_id), which broadcasts (50 rows). Left join, not
+    * semi: a query with zero hits must report recall 0.0, not silently
+    * vanish from the result. One row per query, so the final sort runs
+    * in one partition instead of a range shuffle and its sampling job. */
+  private def recallAt5(top: DataFrame, exact: DataFrame): DataFrame =
+    top.select(col("q_id"), col("n_id"))
+      .join(broadcast(exact.select(col("q_id").as("qe"), col("n_id").as("ne"))),
+        col("q_id") === col("qe") && col("n_id") === col("ne"), "left")
+      .groupBy(col("q_id"))
+      .agg(sum(when(col("ne").isNotNull, 1).otherwise(0)).as("hits"))
+      .select(col("q_id"), round(col("hits") / 5.0, 2).as("recall_at_5"))
+      .coalesce(1).orderBy(col("q_id"))
+
+  /** IVF ANN with recall measurement: a Lloyd-fitted 16-centroid
+    * coarse quantizer ([[Ann.fitCentroids]]) searched by exactly the
+    * stages of the oracle-checked [[qAnnIvfSeeded]] (probe 4 lists per
+    * query, exact cosine within them); reports recall@5 against the
+    * brute-force answer per query. Rows-only: the driver-side k-means
+    * training is the one unchecked step (its centroids are
+    * engine-specific). */
+  def qAnnIvf(s: SparkSession, d: String): DataFrame = {
+    val emb = Tables.embeddings(s, d)
+    val top = ivfTop5(emb.select(col("vec_id"), asDouble(col("embedding")).as("v")),
+      Ann.fitCentroids(emb, k = 16, seed = 42))
+    recallAt5(top, qAnnCosine(s, d))
+  }
+
+  /** IVF ANN, ORACLE-CHECKED end to end: the [[qAnnIvf]] pipeline with
+    * SEEDED centroids (the 16 smallest-id vectors) instead of a
+    * k-means fit, so every stage is a deterministic relational
+    * expression DuckDB replays verbatim: assignment ranks by the
+    * index-ordered distance (the oracle's `list_distance`; the squared
+    * form picks the same argmin), ties break toward the lower centroid
+    * id, and the rerank is the proven [[qAnnCosine]] cosine. The
+    * fitted [[qAnnIvf]] runs the same stages for better recall; this
+    * twin pins the MACHINERY. */
+  def qAnnIvfSeeded(s: SparkSession, d: String): DataFrame = {
+    val e = Tables.embeddings(s, d)
+      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    ivfTop5(e, seededCentroids(e)).orderBy(col("q_id"), col("rank"))
+  }
+
+  /** Top-5 flat-PQ ADC search for the query vectors vec_id < 10 over
+    * (vec_id, v) vectors and an (m, j, cw) codebook relation: encode
+    * the corpus, ADC against the code relation only (PQ's point: the
+    * scan reads 8 codes per vector, not 64 floats), rank on the
+    * rounded distance. */
+  private def pqTop5(e: DataFrame, cb: DataFrame): DataFrame = {
+    val q = e.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"))
+    Ann.rankAdc(Ann.adc(Ann.encode(e, cb), q, cb), 5)
+      .select(col("q_id"), col("vec_id").as("n_id"), col("adc_d2"), col("rank"))
   }
 
   /** PQ ANN, ORACLE-CHECKED end to end (the [[qAnnIvfSeeded]] pattern
     * for product quantization): 8 subspaces × 16 codewords taken from
     * the 16 smallest-id vectors' subvectors instead of a k-means fit,
     * so encode and ADC search are deterministic relational expressions
-    * DuckDB replays verbatim. Encode: per (vector, subspace), the
-    * codeword minimizing the index-ordered squared L2, ties to the
-    * lower codeword id — a 128-way broadcast fan-out folded by a
-    * partial `min_by` (map-side combine). Search: the 10×128 query LUT
-    * broadcasts against the CODE relation only (PQ's point: the scan
-    * reads 8 codes per vector, not 64 floats), and the 8 per-subspace
-    * distances fold in FIXED m order (a float sum over an unordered
-    * aggregate would be merge-order-dependent on both engines).
-    * Ranking is on the rounded distance with a vec_id tie-break, the
-    * engine-stable selection convention. [[qAnnPq]] stays as the
-    * quality path (fitted codebooks → lower distortion); this twin
-    * pins the MACHINERY. */
+    * DuckDB replays verbatim ([[Ann.encode]], [[Ann.adc]],
+    * [[Ann.rankAdc]]). The fitted [[qAnnPq]] runs the same stages with
+    * lower-distortion codebooks; this twin pins the MACHINERY. */
   def qAnnPqSeeded(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val ms = s.range(0, 8).select(col("id").cast("int").as("m"))
-    val base = e.orderBy(col("vec_id")).limit(16)
+    val cb = Ann.codebook(e.orderBy(col("vec_id")).limit(16)
       .withColumn("j",
-        row_number().over(Window.orderBy(col("vec_id"))).cast("int") - 1)
-    val cb = broadcast(base.crossJoin(ms)
-      .select(col("m"), col("j"), expr("slice(v, m*8+1, 8)").as("cw")))
-    def d2(a: Column, b: Column): Column = {
-      val diff = zip_with(a, b, _ - _)
-      dot(diff, diff)
-    }
-    val sub = e.crossJoin(broadcast(ms))
-      .select(col("vec_id"), col("m"), expr("slice(v, m*8+1, 8)").as("sv"))
-    val codes = sub.join(cb, "m")
-      .select(col("vec_id"), col("m"), col("j"), d2(col("sv"), col("cw")).as("d2"))
-      .groupBy(col("vec_id"), col("m"))
-      .agg(min_by(col("j"), struct(col("d2"), col("j"))).as("code"))
-    val lut = broadcast(sub.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("m").as("lm"), col("sv"))
-      .join(cb, col("lm") === col("m"))
-      .select(col("q_id"), col("lm"), col("j"), d2(col("sv"), col("cw")).as("d2")))
-    val percell = codes
-      .join(lut, codes("m") === lut("lm") && codes("code") === lut("j"))
-      .select(col("q_id"), col("vec_id"), col("m"), col("d2"))
-    percell.groupBy(col("q_id"), col("vec_id"))
-      .agg((0 to 7).map(i => max(when(col("m") === i, col("d2"))))
-        .reduce(_ + _).as("dist2"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("adc_d2", round(col("dist2"), 6))
-      .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("adc_d2"), col("vec_id"))).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("vec_id").as("n_id"), col("adc_d2"), col("rank"))
-      .orderBy(col("q_id"), col("rank"))
+        row_number().over(Window.orderBy(col("vec_id"))).cast("int") - 1))
+    pqTop5(e, cb).orderBy(col("q_id"), col("rank"))
   }
 
   /** IVF-PQ ANN, ORACLE-CHECKED end to end — the composition every
     * production ANN system runs (FAISS IndexIVFPQ; Jégou et al. 2011):
     * coarse lists prune the corpus to nprobe/k AND product-quantized
-    * RESIDUAL codes stand in for the float payload inside them. The
-    * seeded twin of [[graft.operators.IvfPq]] (which carries the
-    * Lloyd-fitted quality path): centroids are the 16 smallest-id
-    * vectors, codebooks the NEXT 16 vectors' residuals w.r.t. their
-    * own coarse assignment (the seed vectors' residuals are
-    * identically zero — degenerate codebooks — so the second sixteen
-    * are the deterministic training set), both fully relational so
-    * DuckDB replays every stage verbatim. Encode: per (vector,
-    * subspace) the codeword minimizing the index-ordered squared L2
-    * of the RESIDUAL subvector, ties to the lower codeword. Search:
-    * per (query, probed cluster) the LUT is built from the query's
-    * residual AGAINST THAT CLUSTER'S centroid (the per-list LUT is
-    * what distinguishes IVF-PQ's ADC from flat PQ), candidates join
-    * cluster-keyed, distances fold in fixed m order, ranking on the
-    * rounded distance with the vec_id tie-break. The shared helper
-    * returns the UNRANKED (q_id, vec_id, adc_d2) candidate relation,
-    * consumed by [[qAnnIvfPqSeeded]] (top-5) and [[qAnnRefine]]
-    * (top-20 → exact re-rank) — silver-tabled (r17) so the two
-    * consumers pay the codebook/encode/LUT pipeline once per
-    * (dir, content), not once each: the relation is
-    * |queries|·(corpus/nprobe-share) ≈ 5k rows at sf0.1. */
+    * RESIDUAL codes stand in for the float payload inside them.
+    * Centroids are the 16 smallest-id vectors, codebooks the NEXT 16
+    * vectors' residuals w.r.t. their own coarse assignment (the seed
+    * vectors' residuals are identically zero — degenerate codebooks —
+    * so the second sixteen are the deterministic training set), both
+    * fully relational so DuckDB replays every stage verbatim. It is
+    * flat PQ with the cluster key added: codes encode the residual
+    * subvectors per (vector, cluster), and the LUT of each (query,
+    * probed cluster) comes from the query's residual AGAINST THAT
+    * CLUSTER'S centroid (the per-list LUT is what distinguishes
+    * IVF-PQ's ADC from flat PQ). The shared helper returns the
+    * UNRANKED (q_id, vec_id, adc_d2) candidate relation, consumed by
+    * [[qAnnIvfPqSeeded]] (top-5) and [[qAnnRefine]] (top-20 → exact
+    * re-rank) — silver-tabled (r17) so the two consumers pay the
+    * codebook/encode/LUT pipeline once per (dir, content), not once
+    * each: the relation is |queries|·(corpus/nprobe-share) ≈ 5k rows
+    * at sf0.1. */
   private def ivfPqSeededAdc(s: SparkSession, d: String,
                              tagSuffix: String = ""): DataFrame =
     SilverTables.memoized(s, "adc" + tagSuffix, d + "@" + embFingerprint(s, d)) { out =>
-      ivfPqSeededAdcBuild(s, d)
-        .select(col("q_id"), col("vec_id"), col("adc_d2"))
-        .write.mode("overwrite").parquet(out)
+      ivfPqSeededAdcBuild(s, d).write.mode("overwrite").parquet(out)
     }
 
   /** Bench hook: materialize the shared ADC candidate table so its
@@ -628,70 +581,25 @@ object SimilarityPack extends QueryPack {
   private[graft] def ivfPqSeededAdcBuild(s: SparkSession, d: String): DataFrame = {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val cents = broadcast(e.orderBy(col("vec_id")).limit(16)
-      .select(col("vec_id").as("cid"), col("v").as("cv")))
-    def l2(a: Column, b: Column): Column = {
-      val diff = zip_with(a, b, _ - _)
-      sqrt(dot(diff, diff))
-    }
-    def d2(a: Column, b: Column): Column = {
-      val diff = zip_with(a, b, _ - _)
-      dot(diff, diff)
-    }
-    val asg = e.crossJoin(cents)
-      .select(col("vec_id"), col("v"), col("cid"), l2(col("v"), col("cv")).as("dist"))
-      .groupBy(col("vec_id"))
-      .agg(min_by(col("cid"), struct(col("dist"), col("cid"))).as("cluster"),
-        first(col("v")).as("v"))
-    val resid = asg.join(cents, col("cluster") === col("cid"))
-      .select(col("vec_id"), col("cluster"),
-        zip_with(col("v"), col("cv"), _ - _).as("r"))
-    val b = e.orderBy(col("vec_id")).limit(32)
+    val cents = seededCentroids(e)
+    val resid = Ann.assign(e, cents)
+      .join(broadcast(cents), col("cluster") === col("cid"))
+      .select(col("vec_id"), col("cluster"), zip_with(col("v"), col("cv"), _ - _).as("v"))
+    val words = e.orderBy(col("vec_id")).limit(32)
       .withColumn("rn", row_number().over(Window.orderBy(col("vec_id"))))
       .filter(col("rn") > 16)
       .select(col("vec_id").as("bid"), (col("rn") - 17).cast("int").as("j"))
-    val ms = s.range(0, 8).select(col("id").cast("int").as("m"))
-    val cb = broadcast(resid.join(broadcast(b), col("vec_id") === col("bid"))
-      .crossJoin(ms)
-      .select(col("m"), col("j"), expr("slice(r, m*8+1, 8)").as("cw")))
-    val sub = resid.crossJoin(broadcast(ms))
-      .select(col("vec_id"), col("cluster"), col("m"),
-        expr("slice(r, m*8+1, 8)").as("sv"))
-    val codes = sub.join(cb, "m")
-      .select(col("vec_id"), col("cluster"), col("m"), col("j"),
-        d2(col("sv"), col("cw")).as("d2"))
-      .groupBy(col("vec_id"), col("cluster"), col("m"))
-      .agg(min_by(col("j"), struct(col("d2"), col("j"))).as("code"))
+    val cb = Ann.codebook(resid.join(broadcast(words), col("vec_id") === col("bid"))
+      .select(col("j"), col("v")))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"))
-    val probes = q.crossJoin(cents)
-      .withColumn("rn", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(l2(col("qv"), col("cv")), col("cid"))))
-      .filter(col("rn") <= 4)
-      .select(col("q_id"), col("cid").as("pcl"),
-        zip_with(col("qv"), col("cv"), _ - _).as("qr"))
-    val lut = broadcast(probes.crossJoin(broadcast(ms))
-      .select(col("q_id"), col("pcl"), col("m").as("lm"),
-        expr("slice(qr, m*8+1, 8)").as("qsv"))
-      .join(cb, col("lm") === col("m"))
-      .select(col("q_id"), col("pcl"), col("lm"), col("j"),
-        d2(col("qsv"), col("cw")).as("d2")))
-    val percell = codes.join(lut,
-        codes("cluster") === lut("pcl") && codes("m") === lut("lm")
-          && codes("code") === lut("j"))
-      .select(col("q_id"), col("vec_id"), codes("m"), col("d2"))
-    percell.groupBy(col("q_id"), col("vec_id"))
-      .agg((0 to 7).map(i => max(when(col("m") === i, col("d2"))))
-        .reduce(_ + _).as("dist2"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("adc_d2", round(col("dist2"), 6))
+    val probes = Ann.probe(q, cents, nprobe = 4)
+      .select(col("q_id"), col("cluster"), zip_with(col("qv"), col("cv"), _ - _).as("qv"))
+    Ann.adc(Ann.encode(resid, cb, Seq("cluster")), probes, cb, Seq("cluster"))
   }
 
   def qAnnIvfPqSeeded(s: SparkSession, d: String): DataFrame =
-    ivfPqSeededAdc(s, d)
-      .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("adc_d2"), col("vec_id"))).cast("long"))
-      .filter(col("rank") <= 5)
+    Ann.rankAdc(ivfPqSeededAdc(s, d), 5)
       .select(col("q_id"), col("vec_id").as("n_id"), col("adc_d2"), col("rank"))
       .orderBy(col("q_id"), col("rank"))
 
@@ -711,57 +619,40 @@ object SimilarityPack extends QueryPack {
     val e = Tables.embeddings(s, d)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    val cand = ivfPqSeededAdc(s, d)
-      .withColumn("adc_rank", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("adc_d2"), col("vec_id"))).cast("long"))
-      .filter(col("adc_rank") <= 20)
-      .select(col("q_id"), col("vec_id").as("n_id"), col("adc_rank"))
+    val cand = Ann.rankAdc(ivfPqSeededAdc(s, d), 20)
+      .select(col("q_id"), col("vec_id").as("n_id"), col("rank").as("adc_rank"))
     val qv = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-    e.join(broadcast(cand), col("vec_id") === col("n_id"))
-      .join(broadcast(qv), "q_id")
-      .withColumn("cos", round(dot(col("v"), col("qv")) / (col("nrm") * col("qn")), 6))
-      .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
-        .orderBy(col("cos").desc, col("n_id"))).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("n_id"), col("adc_rank"), col("cos"), col("rank"))
+    Ann.rerank(e.join(broadcast(cand), col("vec_id") === col("n_id"))
+        .join(broadcast(qv), "q_id"), 5, carry = Seq("adc_rank"))
       .orderBy(col("q_id"), col("rank"))
   }
 
-  /** PQ ANN with recall measurement ([[graft.operators.Pq]]): 8
-    * subspaces x 16 codewords (vectors stored as 8 codes — 32x
-    * compression), ADC search against the code relation only, recall@5
-    * vs the exact L2 top-5. Rows-only (codebooks are engine-specific,
-    * like the IVF centroids). At 100 TB search scans ~3 TB of codes
-    * instead of 100 TB of floats; compose with [[qAnnIvf]]'s posting
-    * lists for the full IVF-PQ index. */
+  /** PQ ANN with recall measurement: 8 subspaces × 16 codewords
+    * trained by Lloyd's per subspace ([[graft.operators.Pq]]) and
+    * searched by exactly the stages of the oracle-checked
+    * [[qAnnPqSeeded]] (vectors stored as 8 codes — 32x compression,
+    * ADC against the code relation only); reports recall@5 vs the
+    * exact L2 top-5. Rows-only: the codebook training is the one
+    * unchecked step (its codebooks are engine-specific). At 100 TB
+    * search scans ~3 TB of codes instead of 100 TB of floats. */
   def qAnnPq(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.Pq
     val emb = Tables.embeddings(s, d)
-    val cb = Pq.trainCodebooks(emb, m = 8, k = 16, sampleN = 512)
-    val codes = Pq.encode(emb, cb)
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
-    val pqTop = Pq.adcSearch(codes, cb, queries, topK = 5)
-      .select(col("q_id"), col("n_id"))
-    // exact L2 top-5 (the metric ADC approximates), one corpus pass
+    val cb = Ann.codebookRelation(s,
+      Pq.trainCodebooks(emb, m = Ann.M, k = 16, sampleN = 512))
     val e = emb.select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("n2", dot(col("v"), col("v")))
-    val q = e.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qe"), col("v").as("qv"), col("n2").as("qn2"))
-    val exact = e.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("qe"))
+    // exact L2 top-5 (the metric ADC approximates), one corpus pass
+    val en = e.withColumn("n2", dot(col("v"), col("v")))
+    val q = en.filter(col("vec_id") < 10)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("n2").as("qn2"))
+    val exact = en.crossJoin(broadcast(q))
+      .filter(col("vec_id") =!= col("q_id"))
       .withColumn("d2", col("n2") + col("qn2") - lit(2.0) * dot(col("v"), col("qv")))
       .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qe")).orderBy(col("d2"), col("vec_id"))))
+        Window.partitionBy(col("q_id")).orderBy(col("d2"), col("vec_id"))))
       .filter(col("rank") <= 5)
-      .select(col("qe"), col("vec_id").as("ne"))
-    pqTop.join(exact, col("q_id") === col("qe") && col("n_id") === col("ne"), "left")
-      .groupBy(col("q_id"))
-      .agg(sum(when(col("ne").isNotNull, 1).otherwise(0)).as("hits"))
-      .select(col("q_id"), round(col("hits") / 5.0, 2).as("recall_at_5"))
-      .orderBy(col("q_id"))
+      .select(col("q_id"), col("vec_id").as("n_id"))
+    recallAt5(pqTop5(e, cb), exact)
   }
 
   /** Symmetric int8 quantization of the embedding column — the 4x

@@ -226,68 +226,46 @@ object EventStream {
   private[graft] def buildAnnIndex(e: DataFrame, k: Int,
                                    twoLevelMin: Int = TwoLevelKMin)
       : (DataFrame, DataFrame) = {
-    def d2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) = {
-      val diff = zip_with(a, b, _ - _)
-      graft.functions.DotProduct.dot_product(diff, diff)
-    }
+    import graft.operators.Ann
     def postingFrom(assigned: DataFrame): DataFrame = assigned
-      .groupBy(col("vec_id"))
-      .agg(min_by(col("cid"), struct(col("dist"), col("cid"))).as("cluster"),
-        first(col("v")).as("hv"))
-      .select(col("vec_id").as("n_id"), col("cluster"), col("hv"),
-        sqrt(graft.functions.DotProduct.dot_product(col("hv"), col("hv"))).as("hn"))
+      .select(col("vec_id").as("n_id"), col("cluster"), col("v").as("hv"),
+        sqrt(graft.functions.DotProduct.dot_product(col("v"), col("v"))).as("hn"))
     // centroid schema carries the hierarchy: level 1 rows are coarse
     // cells (parent = self), level 2 rows are the posting-list cells
     // (parent = owning coarse cell). The flat form emits level-2 rows
     // only — the probe kernel detects the absent level-1 tier and
     // scans all cells, the exact r16 behavior the oracle replays.
-    val (cents, posting) =
-      if (k <= twoLevelMin) {
-        val c = e.orderBy(col("vec_id")).limit(k)
-          .select(col("vec_id").as("cid"), col("v").as("cv"))
-        val p = postingFrom(e.crossJoin(broadcast(c))
-          .select(col("vec_id"), col("v"), col("cid"),
-            d2(col("v"), col("cv")).as("dist")))
-        (c.select(col("cid"), col("cv"), col("cid").as("parent"),
-          lit(2).as("level")), p)
-      } else {
-        // TWO-LEVEL (IMI-style): √k coarse cells seeded from the
-        // smallest history ids (the flat seeding convention), every
-        // vector assigned to its nearest coarse cell (n×k1 scan-local
-        // distances, never n×k); then √k sub-cells per coarse cell
-        // seeded from the cell's smallest member ids, members
-        // assigned to the nearest sub-cell of their OWN cell (a
-        // cell-keyed equi-join: n×k2 distances total). Build cost
-        // drops O(n·k) → O(n·√k) — at the r16 100× cell (n=160k,
-        // k=512) that is 82M → 7.7M candidate rows; the index build
-        // was that cell's entire 22.6× residual.
-        import org.apache.spark.sql.expressions.Window
-        val m = java.lang.Integer.numberOfTrailingZeros(k)
-        val k1 = 1 << ((m + 1) / 2)
-        val k2 = k / k1
-        val l1 = e.orderBy(col("vec_id")).limit(k1)
-          .select(col("vec_id").as("p_id"), col("v").as("pv"))
-        val a1 = e.crossJoin(broadcast(l1))
-          .select(col("vec_id"), col("v"), col("p_id"),
-            d2(col("v"), col("pv")).as("dist"))
-          .groupBy(col("vec_id"))
-          .agg(min_by(col("p_id"), struct(col("dist"), col("p_id"))).as("parent"),
-            first(col("v")).as("v"))
-        val rk = row_number().over(
-          Window.partitionBy(col("parent")).orderBy(col("vec_id")))
-        val sub = a1.withColumn("rk", rk).filter(col("rk") <= k2)
-          .select(col("vec_id").as("cid"), col("v").as("cv"), col("parent"))
-        val p = postingFrom(a1
-          .join(sub.select(col("parent"), col("cid"), col("cv")), Seq("parent"))
-          .select(col("vec_id"), col("v"), col("cid"),
-            d2(col("v"), col("cv")).as("dist")))
-        val c = l1.select(col("p_id").as("cid"), col("pv").as("cv"),
-            col("p_id").as("parent"), lit(1).as("level"))
-          .unionByName(sub.select(col("cid"), col("cv"), col("parent"),
-            lit(2).as("level")))
-        (c, p)
-      }
-    (cents, posting)
+    if (k <= twoLevelMin) {
+      val c = e.orderBy(col("vec_id")).limit(k)
+        .select(col("vec_id").as("cid"), col("v").as("cv"))
+      (c.select(col("cid"), col("cv"), col("cid").as("parent"), lit(2).as("level")),
+        postingFrom(Ann.assign(e, c)))
+    } else {
+      // TWO-LEVEL (IMI-style): √k coarse cells seeded from the
+      // smallest history ids (the flat seeding convention), every
+      // vector assigned to its nearest coarse cell (n×k1 scan-local
+      // distances, never n×k); then √k sub-cells per coarse cell
+      // seeded from the cell's smallest member ids, members
+      // assigned to the nearest sub-cell of their OWN cell (a
+      // cell-keyed equi-join: n×k2 distances total). Build cost
+      // drops O(n·k) → O(n·√k) — at the r16 100× cell (n=160k,
+      // k=512) that is 82M → 7.7M candidate rows; the index build
+      // was that cell's entire 22.6× residual.
+      import org.apache.spark.sql.expressions.Window
+      val m = java.lang.Integer.numberOfTrailingZeros(k)
+      val k1 = 1 << ((m + 1) / 2)
+      val k2 = k / k1
+      val l1 = e.orderBy(col("vec_id")).limit(k1)
+        .select(col("vec_id").as("cid"), col("v").as("cv"))
+      val a1 = Ann.assign(e, l1).withColumnRenamed("cluster", "parent")
+      val rk = row_number().over(
+        Window.partitionBy(col("parent")).orderBy(col("vec_id")))
+      val sub = a1.withColumn("rk", rk).filter(col("rk") <= k2)
+        .select(col("vec_id").as("cid"), col("v").as("cv"), col("parent"))
+      val c = l1.select(col("cid"), col("cv"), col("cid").as("parent"), lit(1).as("level"))
+        .unionByName(sub.withColumn("level", lit(2)))
+      (c, postingFrom(Ann.assign(a1, sub, on = Seq("parent"))))
+    }
   }
 
   /** `floor`: minimum ROUNDED cosine for a candidate to emit — 0.2

@@ -33,19 +33,7 @@ object TimeQ {
         b0.config("spark.graft.stream.checkpointDir", "/dev/shm/graft_ckpt")
       else b0).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // A/B experiment hook: semicolon-separated k=v runtime SQL confs.
-    // Skip empty tokens (a trailing semicolon) and fail with a named
-    // error on a token without '=' instead of an opaque MatchError.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(
-      _.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) =>
-            spark.conf.set(k, v)
-            println(s"[timeq] conf $k=$v")
-          case _ => sys.error(
-            s"SPARK_GRAFT_EXTRA_CONF entry without '=': '$kv'")
-        }
-      })
+    ExtraConf.applyTo(spark).foreach { case (k, v) => println(s"[timeq] conf $k=$v") }
     // same warm-up as Bench: JIT/codegen the common paths untimed
     locally {
       import org.apache.spark.sql.functions._

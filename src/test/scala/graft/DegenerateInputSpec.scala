@@ -38,11 +38,11 @@ class DegenerateInputSpec extends AnyFunSuite {
     assert(graft.queries.TextPack.qContainment(spark, dir).count() == 0)
   }
 
-  test("IVF-PQ build refuses an empty corpus loudly") {
+  test("IVF training refuses an empty corpus loudly") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
     val e = intercept[IllegalArgumentException] {
-      graft.operators.IvfPq.build(empty, k = 4, m = 8, kc = 4, seed = 1L)
+      graft.operators.Ann.fitCentroids(empty, k = 4, seed = 1L)
     }
     assert(e.getMessage.contains("empty training sample"))
   }

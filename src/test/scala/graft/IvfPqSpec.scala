@@ -1,73 +1,38 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{IvfPq, Pq}
+import graft.operators.Ann
+import graft.queries.SimilarityPack
 
-/** The r14 IVF-PQ composition (Lloyd-fitted quality path): residual
-  * encoding must beat flat PQ at the same codebook budget, the index
-  * must partition the corpus exactly, search must stay within the
-  * probed lists with usable recall, and the whole build must be
-  * deterministic.
+/** The relational IVF stages with a Lloyd-fitted coarse quantizer (the
+  * q_ann_ivf path): assignment must partition the corpus exactly,
+  * search must stay within the probed lists with usable recall, and
+  * the whole build must be deterministic.
   */
 class IvfPqSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  private def vecs(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+
   private lazy val emb = Tables.embeddings(spark, TestSpark.sf)
-  private lazy val index = IvfPq.build(emb, k = 16, m = 8, kc = 16, seed = 7L)
-
-  private def reconstructionMse(ix: IvfPq.Index): Double = {
-    val vecs = emb.select(col("vec_id"),
-        transform(col("embedding"), _.cast("double")).as("v"))
-      .join(ix.posting, "vec_id")
-      .select(col("v"), col("cluster"), col("codes"))
-      .as[(Array[Double], Int, Array[Int])]
-    val cents = ix.centroids; val cb = ix.codebooks
-    val subDim = cb(0)(0).length
-    val (errSum, n) = vecs.collect().foldLeft((0.0, 0L)) {
-      case ((acc, cnt), (v, ci, codes)) =>
-        var err = 0.0
-        var sub = 0
-        while (sub < cb.length) {
-          val cw = cb(sub)(codes(sub)); val off = sub * subDim
-          var i = 0
-          while (i < subDim) {
-            val x = v(off + i) - (cents(ci)(off + i) + cw(i))
-            err += x * x; i += 1
-          }
-          sub += 1
-        }
-        (acc + err, cnt + 1)
-    }
-    errSum / n
-  }
-
-  test("residual encoding beats flat PQ at the same codebook budget") {
-    val flat = Pq.trainCodebooks(emb, m = 8, k = 16, sampleN = 2048)
-    val flatMse = Pq.distortion(emb, flat)
-    val ivfpqMse = reconstructionMse(index)
-    assert(ivfpqMse < flatMse,
-      s"residual PQ should reduce distortion: ivfpq=$ivfpqMse flat=$flatMse")
-  }
+  private lazy val cents = Ann.fitCentroids(emb, k = 16, seed = 7L)
+  private lazy val posting = Ann.assign(vecs(emb), cents)
 
   test("the posting relation partitions the corpus exactly once") {
     val n = emb.count()
-    assert(index.posting.count() == n)
-    assert(index.posting.select(col("vec_id")).distinct().count() == n)
-    val bad = index.posting.filter(col("cluster") < 0 || col("cluster") >= 16)
-    assert(bad.count() == 0)
-    val badCode = index.posting
-      .filter(exists(col("codes"), c => c < 0 || c >= 16))
-    assert(badCode.count() == 0)
+    assert(posting.count() == n)
+    assert(posting.select(col("vec_id")).distinct().count() == n)
+    assert(posting.filter(col("cluster") < 0 || col("cluster") >= 16).count() == 0)
   }
 
   test("search returns a well-formed ranked relation on the fixture") {
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
-      .as[(Long, Array[Double])].collect()
-    val got = IvfPq.search(index, queries, nprobe = 4, topK = 5)
+    val got = SimilarityPack.ivfTop5(vecs(emb), cents)
+    val queries = vecs(emb).filter(col("vec_id") < 10).as[(Long, Array[Double])].collect()
     // exactly <= 5 ranked rows per query, ranks 1..n, no self-match
     val perQ = got.groupBy(col("q_id")).agg(count(lit(1)).as("n"),
       max(col("rank")).as("mx")).collect()
@@ -80,15 +45,15 @@ class IvfPqSpec extends AnyFunSuite {
       while (i < a.length) { val x = a(i) - b(i); d += x * x; i += 1 }
       d
     }
-    val clusterOf = index.posting.select(col("vec_id"), col("cluster"))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val centroids = cents.as[(Long, Array[Double])].collect()
+    val clusterOf = posting.select(col("vec_id"), col("cluster"))
+      .as[(Long, Long)].collect().toMap
     val probedOf = queries.map { case (qid, qv) =>
-      qid -> index.centroids.zipWithIndex
-        .map { case (c, ci) => (ci, l2(qv, c)) }
+      qid -> centroids.map { case (ci, c) => (ci, l2(qv, c)) }
         .sortBy(t => (t._2, t._1)).take(4).map(_._1).toSet
     }.toMap
-    val escaped = got.select(col("q_id"), col("n_id")).collect()
-      .filterNot(r => probedOf(r.getLong(0))(clusterOf(r.getLong(1))))
+    val escaped = got.select(col("q_id"), col("n_id")).as[(Long, Long)].collect()
+      .filterNot { case (q, n) => probedOf(q)(clusterOf(n)) }
     assert(escaped.isEmpty, s"candidates outside probed lists: ${escaped.length}")
   }
 
@@ -97,9 +62,9 @@ class IvfPqSpec extends AnyFunSuite {
     // fixture (near-uniform noise — all pairwise distances
     // concentrate) and pure isotropic clusters (within a cluster every
     // member is a statistical tie — no quantizer can rank ties, and
-    // "the" top-5 is arbitrary). The regime IVF-PQ exists for is
-    // corpora with real structure: clusters AND genuinely-near items.
-    // So: 16 separated centers, cluster noise 0.2, and 5 PLANTED
+    // "the" top-5 is arbitrary). The regime IVF exists for is corpora
+    // with real structure: clusters AND genuinely-near items. So: 16
+    // separated centers, cluster noise 0.2, and 5 PLANTED
     // near-duplicates per query (noise 0.01) — the planted set is the
     // unambiguous exact top-5 and a working index must recover it.
     val rnd = new scala.util.Random(99)
@@ -118,14 +83,10 @@ class IvfPqSpec extends AnyFunSuite {
           Array.tabulate(64)(i => qv(i) + rnd.nextGaussian() * 0.01))
       }
     }
-    val rows = base ++ dups
-    val df = rows.map { case (id, v) => (id, v.map(_.toFloat)) }
+    val df = (base ++ dups).map { case (id, v) => (id, v.map(_.toFloat)) }
       .toDF("vec_id", "embedding")
-    val ix = IvfPq.build(df, k = 16, m = 8, kc = 16, seed = 7L)
-    val queries = base.take(10).map { case (id, v) => (id, v) }.toArray
-    val got = IvfPq.search(ix, queries, nprobe = 4, topK = 5)
-      .select(col("q_id"), col("n_id"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = SimilarityPack.ivfTop5(vecs(df), Ann.fitCentroids(df, k = 16, seed = 7L))
+      .select(col("q_id"), col("n_id")).as[(Long, Long)].collect().toSet
     val expected = (0L until 10L).flatMap(q =>
       (0 until 5).map(j => (q, 10000L + q * 10 + j))).toSet
     val recall = expected.count(got.contains).toDouble / expected.size
@@ -133,29 +94,8 @@ class IvfPqSpec extends AnyFunSuite {
   }
 
   test("the build is deterministic") {
-    val again = IvfPq.build(emb, k = 16, m = 8, kc = 16, seed = 7L)
-    assert(index.posting.orderBy(col("vec_id")).collect().toSeq ==
-      again.posting.orderBy(col("vec_id")).collect().toSeq)
-  }
-
-  test("exact refine: ranks by true cosine, repairs ADC order, stays inside the candidates") {
-    val refined = graft.queries.SimilarityPack.qAnnRefine(spark, TestSpark.sf)
-      .as[(Long, Long, Long, Double, Long)].collect()
-    assert(refined.nonEmpty)
-    val byQ = refined.groupBy(_._1)
-    byQ.foreach { case (q, rows) =>
-      val sorted = rows.sortBy(_._5)
-      assert(sorted.map(_._5).toSeq == (1L to sorted.length))
-      // refined order is exactly descending true cosine (n_id ties)
-      assert(sorted.sliding(2).forall(w =>
-        w(0)._4 > w(1)._4 || (w(0)._4 == w(1)._4 && w(0)._2 < w(1)._2)),
-        s"query $q not in cosine order")
-      assert(rows.forall(r => r._3 >= 1 && r._3 <= 20),
-        s"query $q refined a vector outside the ADC top-20")
-    }
-    // the refine step must actually repair quantization error
-    // somewhere on the fixture, else the stage is vacuous
-    assert(refined.exists(r => r._3 != r._5),
-      "every refined rank equals its ADC rank — refine changed nothing")
+    val again = Ann.assign(vecs(emb), Ann.fitCentroids(emb, k = 16, seed = 7L))
+    assert(posting.orderBy(col("vec_id")).collect().toSeq ==
+      again.orderBy(col("vec_id")).collect().toSeq)
   }
 }

@@ -373,6 +373,17 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin"), p.take(2000))
   }
 
+  test("fitted ANN: the 16-row centroid and codebook relations broadcast, no sort-merge join") {
+    // q_ann_ivf / q_ann_pq feed their driver-trained quantizers back
+    // into the shared stages as tiny local relations: the corpus must
+    // meet them through broadcasts, never a shuffle join
+    for (q <- Seq("q_ann_ivf", "q_ann_pq")) {
+      val p = plan(q)
+      assert(p.contains("BroadcastExchange") && p.contains("LocalTableScan"), p.take(3000))
+      assert(!p.contains("SortMergeJoin"), p.take(3000))
+    }
+  }
+
   test("filtered ANN: the query set broadcasts, ranking is WindowGroupLimit") {
     // the label predicate rides the broadcast join condition — the
     // corpus scan must never sort-merge against the 10-row query set,
