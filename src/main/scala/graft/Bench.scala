@@ -1,38 +1,35 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+  /** The bench session's conf: [[Sessions.conf]] plus
+    *  - stream-drain checkpoints on RAM when the host has /dev/shm:
+    *    the offset/commit WAL fsyncs per micro-batch and /tmp is
+    *    disk-backed here (~100 ms/drain measured by StreamFloorProbe);
+    *    durability across JVMs is meaningless for these
+    *    drain-to-completion harness streams;
+    *  - `localDir` (`SPARK_GRAFT_LOCAL_DIR`): shuffle/spill scratch,
+    *    overridable so a RAM-backed dir can take the block-manager
+    *    writes off the /tmp disk; unset keeps the JVM tmpdir;
+    *  - a whole-battery codegen cache: the whole-stage-codegen compile
+    *    cache defaults to 100 entries, and ~195 queries × several
+    *    codegen stages evict it within one sweep, so the spaced-sweep
+    *    min would re-pay janino compilation (~0.2-0.5 s/query) in
+    *    EVERY sweep — back-to-back passes hid that by re-running while
+    *    still cached. Sized to hold the whole battery so the min
+    *    measures plan execution, not recompilation. */
+  def sessionConf(cpus: String = Sessions.cpus,
+                  shm: Boolean = new java.io.File("/dev/shm").isDirectory,
+                  localDir: Option[String] = sys.env.get("SPARK_GRAFT_LOCAL_DIR"))
+      : Seq[(String, String)] =
+    Sessions.conf(cpus) ++
+      (if (shm) Seq("spark.graft.stream.checkpointDir" -> "/dev/shm/graft_ckpt")
+       else Nil) ++
+      localDir.map("spark.local.dir" -> _) ++
+      Seq("spark.sql.codegen.cache.maxEntries" -> "5000")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle/spill scratch: overridable so a RAM-backed dir
-    // (/dev/shm) can take the block-manager writes off the /tmp disk;
-    // default stays the JVM tmpdir
-    val localDir = sys.env.get("SPARK_GRAFT_LOCAL_DIR")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-    // stream-drain checkpoints on RAM when the host has it: the
-    // offset/commit WAL fsyncs per micro-batch and /tmp is
-    // disk-backed here (~100 ms/drain measured by StreamFloorProbe);
-    // durability across JVMs is meaningless for these
-    // drain-to-completion harness streams
-    val b1 =
-      if (new java.io.File("/dev/shm").isDirectory)
-        b0.config("spark.graft.stream.checkpointDir", "/dev/shm/graft_ckpt")
-      else b0
-    val spark = localDir.fold(b1)(d => b1.config("spark.local.dir", d))
-      // the whole-stage-codegen compile cache defaults to 100 entries;
-      // ~195 queries × several codegen stages evict it within one
-      // sweep, so the spaced-sweep min would re-pay janino compilation
-      // (~0.2-0.5 s/query) in EVERY sweep — back-to-back passes hid
-      // that by re-running while still cached. Sized to hold the whole
-      // battery so the min measures plan execution, not recompilation.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
+    val spark = Sessions.create(sessionConf())
     spark.sparkContext.setLogLevel("WARN")
     // the streaming drains' stop() emits benign "Failed to cancel job
     // group" WARN pairs from DAGScheduler at teardown; they land in

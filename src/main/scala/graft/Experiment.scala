@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ml._
@@ -21,15 +21,7 @@ object Experiment {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.01")
     val outDir = args.lift(1).getOrElse(
       java.nio.file.Files.createTempDirectory("graft_race").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Sessions.create(Sessions.conf())
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection harness: prints the formatted physical plan of the
   * named queries (or all with oracle entries) so pushdown/broadcast/
   * codegen can be audited. Usage: runMain graft.Explain [names...] */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Sessions.create(Sessions.conf())
     spark.sparkContext.setLogLevel("ERROR")
     // the TimeQ A/B hook: lets a plan audit force a dispatcher branch
     // (e.g. the bucketed percentile) without code edits

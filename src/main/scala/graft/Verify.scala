@@ -1,9 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The dump session's conf: exactly [[Sessions.conf]]. */
+  def sessionConf(cpus: String = Sessions.cpus): Seq[(String, String)] =
+    Sessions.conf(cpus)
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, only) = args match {
       case Array(sf, out)        => (sf, out, None)
@@ -12,17 +15,7 @@ object Verify {
         System.err.println("usage: graft.Verify <sfDir> <outDir> [name,name,...]")
         sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS); read as long, normalized
-      // back to timestamp in Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = Sessions.create(sessionConf())
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

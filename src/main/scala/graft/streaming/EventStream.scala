@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, StreamingQueryListener}
 
 /** Structured Streaming surface (SURVEY §2.10 — engine-new, the
   * streaming generalization of the reference's batch era processing):
@@ -130,13 +131,12 @@ object EventStream {
   def runNeardupOnce(spark: SparkSession, dir: String,
                      name: String = "graft_stream_neardup"): DataFrame = {
     val silver = graft.TempDirs.create("graft_neardup_silver")
-    try {
+    val sink = try {
       val hist = writeNeardupIndex(spark, dir, silver.toString)
-      drain(spark, neardupAgainstHistory(spark, dir, Some(hist)), name,
+      drainToMemory(spark, neardupAgainstHistory(spark, dir, Some(hist)), name,
         mode = "append")
     } finally graft.TempDirs.deleteRecursively(silver)
-    spark.table(name)
-      .select(col("doc_id"), col("hist_id"), col("n_match")).distinct()
+    sink.select(col("doc_id"), col("hist_id"), col("n_match")).distinct()
       .groupBy(col("doc_id"))
       .agg(min(col("hist_id")).as("rep"), count(lit(1)).as("n_cand"),
         max(col("n_match")).as("best_match"))
@@ -347,9 +347,8 @@ object EventStream {
       // oracle-gated path: the DuckDB oracle seeds exactly 16
       // centroids, so pin k=16 here (see writeAnnIndex scaladoc)
       val ix = writeAnnIndex(spark, dir, silver.toString, requireK = Some(16))
-      drain(spark, annAgainstHistory(spark, dir, ix), name, mode = "append")
       import org.apache.spark.sql.expressions.Window
-      spark.table(name)
+      drainToMemory(spark, annAgainstHistory(spark, dir, ix), name, mode = "append")
         .select(col("q_id"), col("n_id"), col("cos")).distinct()
         .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
           .orderBy(col("cos").desc, col("n_id"))).cast("long"))
@@ -473,11 +472,11 @@ object EventStream {
   def runQualityGateOnce(spark: SparkSession, dir: String,
                          name: String = "graft_stream_qgate"): DataFrame = {
     val silver = graft.TempDirs.create("graft_qgate_silver")
-    try {
+    val sink = try {
       val (model, thr) = writeQualityModel(spark, dir, silver.toString)
-      drain(spark, qualityGate(spark, dir, model, thr), name, mode = "append")
+      drainToMemory(spark, qualityGate(spark, dir, model, thr), name, mode = "append")
     } finally graft.TempDirs.deleteRecursively(silver)
-    spark.table(name).orderBy(col("doc_id"))
+    sink.orderBy(col("doc_id"))
   }
 
   /** Streaming exact dedup (the north-star dedup family as a STREAM
@@ -499,7 +498,7 @@ object EventStream {
   /** Drain [[dedupCounts]] synchronously into a memory sink. */
   def runDedupOnce(spark: SparkSession, dir: String,
                    name: String = "graft_stream_dedup"): DataFrame =
-    drain(spark, dedupCounts(spark, dir), name)
+    drainToMemory(spark, dedupCounts(spark, dir), name)
 
   /** Watermark-BOUNDED streaming dedup — the 100 TB scale path that
     * [[dedupCounts]]' plain `dropDuplicates` is not: its key state
@@ -521,44 +520,49 @@ object EventStream {
     * row is emitted exactly once, when first seen). */
   def runDedupWmOnce(spark: SparkSession, dir: String,
                      name: String = "graft_stream_dedup_wm"): DataFrame =
-    drain(spark, dedupWithinWatermark(spark, dir), name, mode = "append")
+    drainToMemory(spark, dedupWithinWatermark(spark, dir), name, mode = "append")
 
   /** Drain [[runningUserTotals]] in UPDATE mode: the sink accumulates
     * every per-key state update; the caller reduces to final state
     * (n_events is strictly increasing per key, so the max-n_events row
     * IS the final state). */
   def runUserTotalsOnce(spark: SparkSession, dir: String,
-                        name: String = "graft_stream_totals"): DataFrame = {
-    withDrainPartitions(spark) {
-      val ckpt = newCheckpointDir(spark)
-      val q = runningUserTotals(spark, dir).toDF()
-        .writeStream.outputMode("update")
-        .format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      try q.processAllAvailable() finally {
-        q.stop()
-        graft.TempDirs.deleteRecursively(ckpt)
+                        name: String = "graft_stream_totals"): DataFrame =
+    drainToMemory(spark, runningUserTotals(spark, dir).toDF(), name, mode = "update")
+
+  /** Run `body` with every `(key, value)` pair set on the session
+    * conf, then restore each key it set to its previous value (or
+    * unset it), also when a later pair or `body` throws. Start-time confs (the
+    * shuffle-partition count, the state-store provider) are read when
+    * a query starts, so pinning them around [[drain]] scopes them to
+    * that one query. */
+  private[graft] def withConf[A](spark: SparkSession, pairs: (String, String)*)
+                                (body: => A): A = {
+    val prev = scala.collection.mutable.ArrayBuffer.empty[(String, Option[String])]
+    try {
+      pairs.foreach { case (k, v) =>
+        val p = spark.conf.getOption(k)
+        spark.conf.set(k, v)
+        prev += k -> p
       }
+      body
+    } finally prev.reverseIterator.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
     }
-    spark.table(name)
   }
 
-  /** Pin the shuffle-partition count low for one synchronous drain and
-    * restore it after (see [[drain]]'s rationale: state-store init per
-    * shuffle partition dominates fixture-scale streams). ONE home for
-    * the save/set/restore invariant — every drain path shares it. */
-  private def withDrainPartitions[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    // fixture-scale default 4 (state-store init per shuffle partition
-    // dominates small drains); the scale probe overrides to full
-    // parallelism — at 100x the 4-way pin, not the state store, would
-    // be the measured bottleneck
-    spark.conf.set(key,
-      spark.conf.get("spark.graft.stream.drainPartitions", "4"))
-    try body finally spark.conf.set(key, prev)
-  }
+  /** Start-time conf pair selecting the RocksDB state store provider,
+    * which `transformWithState` requires (its named states and timers
+    * each live in their own column family — the HDFS-backed store is
+    * single-family). Passed to [[drain]] for the one query that needs
+    * it; every other harness stream keeps the session default. RocksDB
+    * is also the honest scale configuration: state lives off-heap on
+    * local disk with changelog checkpointing, the shape that holds
+    * 100 TB-scale keyed state per executor. */
+  val RocksDb: (String, String) =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Per-drain checkpoint dir, honoring the optional
     * `spark.graft.stream.checkpointDir` base: the offset/commit WAL is
@@ -574,54 +578,91 @@ object EventStream {
       case None       => graft.TempDirs.create("graft_stream_ckpt")
     }
 
-  /** Probe-only drain: consume a stream through the no-op streaming
-    * sink. No driver-side collection — unlike the memory sink the
-    * Verify harness needs for its returned DataFrame, which collects
-    * every append/update row at the driver (at 100x the dedup stream
-    * that is ~10M rows: a harness artifact that OOMs an 8g driver and
-    * dominates wall time). Timing this isolates the state-store +
-    * shuffle path, which is what scales to a real cluster where
-    * streams write to distributed file sinks. */
-  def drainNoop(spark: SparkSession, df: DataFrame,
-                mode: String = "complete"): Unit =
-    withDrainPartitions(spark) {
-      // registered (JVM-exit) AND deleted right after the drain: the
-      // scale probe drains every stream entry twice per size, so
-      // leaving each drain's RocksDB/state checkpoint in /tmp until
-      // exit accumulates state data across a probe run
+  /** THE stream drain: start → processAllAvailable → stop, with `sink`
+    * choosing where the rows go (memory table, noop, foreachBatch).
+    *
+    * - Bounded state-partition count: a stateful streaming query
+    *   materializes one state store per shuffle partition at START
+    *   time, so a 32-partition session pays 32 store inits +
+    *   maintenance threads for a fixture-sized stream — the dominant
+    *   (and noisy) cost of the harness queries. The drain pins
+    *   `spark.graft.stream.drainPartitions` (default 4) for its query;
+    *   results are unaffected (same aggregation, fewer state shards).
+    *   The scale probe raises it to full parallelism: at 100x the
+    *   4-way pin, not the state store, would be the measured
+    *   bottleneck.
+    * - `conf`: further start-time pairs for this query (e.g.
+    *   [[RocksDb]]), pinned with the partition count by [[withConf]].
+    * - Explicit checkpoint dir ([[newCheckpointDir]]) instead of
+    *   Spark's implicit temp one, deleted right after the drain: the
+    *   scale probe drains every stream twice per size, and leaving
+    *   each drain's state checkpoint until JVM exit accumulates.
+    * - `horizonMs`: append-mode outer joins emit their null-extended
+    *   rows in the state-cleanup batch that RUNS WITH the final
+    *   watermark — a no-data batch after the last data batch, which
+    *   `processAllAvailable` does not wait for. Given a horizon (the
+    *   final watermark, a pure function of the data — see
+    *   [[outerHorizonMs]]), the drain exits only once a committed
+    *   progress of its query reports it. The listener is registered
+    *   before `start()`, so the signal cannot be missed, and a progress
+    *   is posted only after its batch (sink write included) commits. A
+    *   drain that never sees the signal throws instead of returning a
+    *   possibly-nulls-missing relation.
+    *
+    * Everything the drain sets up — conf, listener, checkpoint dir, the
+    * query — is undone on exit, also when `start()` or a micro-batch
+    * fails. */
+  def drain(spark: SparkSession, df: DataFrame, mode: String,
+            sink: DataStreamWriter[Row] => DataStreamWriter[Row],
+            conf: Seq[(String, String)] = Nil,
+            horizonMs: Option[Long] = None): Unit =
+    withConf(spark, ("spark.sql.shuffle.partitions" ->
+        spark.conf.get("spark.graft.stream.drainPartitions", "4")) +: conf: _*) {
       val ckpt = newCheckpointDir(spark)
-      val q = df.writeStream.outputMode(mode).format("noop")
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      try q.processAllAvailable() finally {
-        q.stop()
+      // every watermark progress, keyed by query id: the id is known
+      // only once start() returns, and a progress may precede that
+      val seen = new java.util.concurrent.LinkedBlockingQueue[(java.util.UUID, Long)]()
+      val listener = horizonMs.map(_ => new StreamingQueryListener {
+        import StreamingQueryListener._
+        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+        override def onQueryProgress(e: QueryProgressEvent): Unit =
+          Option(e.progress.eventTime.get("watermark")).foreach(w =>
+            seen.put(e.progress.id -> java.time.Instant.parse(w).toEpochMilli))
+      })
+      var started: Option[StreamingQuery] = None
+      try {
+        listener.foreach(spark.streams.addListener)
+        val q = sink(df.writeStream.outputMode(mode))
+          .option("checkpointLocation", ckpt.toString).start()
+        started = Some(q)
+        q.processAllAvailable()
+        horizonMs.foreach { h =>
+          val deadline = System.nanoTime() + 120L * 1000000000L
+          val reached = Iterator
+            .continually(seen.poll(deadline - System.nanoTime(),
+              java.util.concurrent.TimeUnit.NANOSECONDS))
+            .takeWhile(_ != null)
+            .exists { case (id, wm) => id == q.id && wm >= h }
+          if (!reached) throw new IllegalStateException(
+            s"drain '${q.name}': no committed batch reached the final " +
+              s"watermark ($h ms) within 120 s — refusing to return a " +
+              "provisional (nulls-missing) relation")
+        }
+      } finally {
+        started.foreach(_.stop())
+        listener.foreach(spark.streams.removeListener)
         graft.TempDirs.deleteRecursively(ckpt)
       }
     }
 
-  /** Start → processAllAvailable → stop with a bounded state-partition
-    * count: a stateful streaming query materializes one state store
-    * per shuffle partition at START time, so a 32-partition session
-    * pays 32 store inits + maintenance threads for a fixture-sized
-    * stream — the dominant (and noisy) cost of the harness queries.
-    * The partition count is pinned low for the drain and restored
-    * after; results are unaffected (same aggregation, fewer state
-    * shards). On a real cluster the session default applies. */
-  private def drain(spark: SparkSession, df: DataFrame, name: String,
-                    mode: String = "complete"): DataFrame = {
-    withDrainPartitions(spark) {
-      // explicit checkpoint (deleted right after) instead of Spark's
-      // implicit temp one, so the harness's checkpointDir base applies
-      val ckpt = newCheckpointDir(spark)
-      val q = df.writeStream.outputMode(mode)
-        .format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      try q.processAllAvailable() finally {
-        q.stop()
-        graft.TempDirs.deleteRecursively(ckpt)
-      }
-    }
+  /** [[drain]] into a memory sink named `name`; returns the sink
+    * table (the Verify harness reads the drained result from it). */
+  private def drainToMemory(spark: SparkSession, df: DataFrame, name: String,
+                            mode: String = "complete",
+                            conf: Seq[(String, String)] = Nil,
+                            horizonMs: Option[Long] = None): DataFrame = {
+    drain(spark, df, mode, _.format("memory").queryName(name), conf, horizonMs)
     spark.table(name)
   }
 
@@ -649,126 +690,90 @@ object EventStream {
     * the drain it IS the final session relation. */
   def runSessionsOnce(spark: SparkSession, dir: String,
                       name: String = "graft_stream_sess"): DataFrame =
-    drain(spark, sessionCounts(spark, dir), name)
+    drainToMemory(spark, sessionCounts(spark, dir), name)
 
-  /** Stream-stream INNER join: clicks ⋈ purchases by the same user
-    * within an hour. Both sides are watermarked and the join condition
-    * carries the event-time range, so Spark can evict buffered rows
-    * once the watermark passes — the shape whose join state stays
-    * bounded on an unbounded stream (an equi-only condition would
-    * buffer both streams forever). Append mode, one output row per
-    * qualifying (click, purchase) pair. */
-  def clickPurchasePairs(spark: SparkSession, dir: String): DataFrame = {
-    // both sides filter the SAME stream source (a stream self-join):
-    // one file source and one staging dir, not two
+  /** Stream-stream click → purchase self-join: clicks ⋈ purchases by
+    * the same user within an hour, as one `joinType`. Both sides are
+    * watermarked and the join condition carries the event-time range,
+    * so Spark can evict buffered rows once the watermark passes — the
+    * shape whose join state stays bounded on an unbounded stream (an
+    * equi-only condition would buffer both streams forever). Both
+    * sides filter the SAME stream source: one file source and one
+    * staging dir, not two. `user_id` is `coalesce(click user, purchase
+    * user)`, which is the click's user under inner and left joins. */
+  private def clickPurchaseJoin(spark: SparkSession, dir: String,
+                                joinType: String): DataFrame = {
     val ev = eventsStream(spark, dir)
-    val clicks = ev
-      .filter(col("event_type") === "click")
-      .select(col("user_id").cast("long").as("user_id"),
-        col("ts").as("ts_c"), col("event_id").as("click_id"))
-      .withWatermark("ts_c", "1 hour")
-    val purchases = ev
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").cast("long").as("u2"),
-        col("ts").as("ts_p"), col("event_id").as("purchase_id"))
-      .withWatermark("ts_p", "1 hour")
-    clicks.join(purchases,
-        col("user_id") === col("u2")
+    def side(kind: String, user: String, ts: String, id: String): DataFrame = ev
+      .filter(col("event_type") === kind)
+      .select(col("user_id").cast("long").as(user), col("ts").as(ts),
+        col("event_id").as(id))
+      .withWatermark(ts, "1 hour")
+    side("click", "uc", "ts_c", "click_id")
+      .join(side("purchase", "up", "ts_p", "purchase_id"),
+        col("uc") === col("up")
           && col("ts_p") >= col("ts_c")
-          && col("ts_p") <= col("ts_c") + expr("INTERVAL 1 HOUR"))
-      .select(col("user_id"), col("click_id"), col("purchase_id"))
+          && col("ts_p") <= col("ts_c") + expr("INTERVAL 1 HOUR"),
+        joinType)
+      .select(coalesce(col("uc"), col("up")).as("user_id"),
+        col("click_id"), col("purchase_id"))
   }
+
+  /** INNER [[clickPurchaseJoin]]: one output row per qualifying
+    * (click, purchase) pair. */
+  def clickPurchasePairs(spark: SparkSession, dir: String): DataFrame =
+    clickPurchaseJoin(spark, dir, "inner")
 
   /** Drain [[clickPurchasePairs]] in APPEND mode (the only mode
     * stream-stream joins support); the sink accumulates the full pair
     * set once the stream is exhausted. */
   def runJoinOnce(spark: SparkSession, dir: String,
                   name: String = "graft_stream_join"): DataFrame =
-    drain(spark, clickPurchasePairs(spark, dir), name, mode = "append")
+    drainToMemory(spark, clickPurchasePairs(spark, dir), name, mode = "append")
 
-  /** Stream-stream LEFT OUTER join — [[clickPurchasePairs]] with
-    * unconverted clicks retained (the funnel/abandonment shape inner
-    * joins cannot express). Outer semantics on unbounded streams are
-    * WATERMARK-GATED: a click's null-extended row is emitted only when
-    * the global watermark passes its match horizon (ts_c + 1 h) — only
-    * then can no future purchase legally match it — so clicks whose
-    * horizon the FINAL watermark never passes are not emitted at all
-    * (they are still provisional when the replay ends). That cutoff is
-    * a pure function of the data (final wm = min(max click ts, max
-    * purchase ts) − 1 h under the default min-policy across the two
-    * watermark nodes), which is what makes the drained result exactly
-    * reproducible by the batch oracle. Matched pairs emit immediately,
-    * identical to the inner form. */
-  def clickPurchaseLeftPairs(spark: SparkSession, dir: String): DataFrame = {
-    val ev = eventsStream(spark, dir)
-    val clicks = ev
-      .filter(col("event_type") === "click")
-      .select(col("user_id").cast("long").as("user_id"),
-        col("ts").as("ts_c"), col("event_id").as("click_id"))
-      .withWatermark("ts_c", "1 hour")
-    val purchases = ev
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").cast("long").as("u2"),
-        col("ts").as("ts_p"), col("event_id").as("purchase_id"))
-      .withWatermark("ts_p", "1 hour")
-    clicks.join(purchases,
-        col("user_id") === col("u2")
-          && col("ts_p") >= col("ts_c")
-          && col("ts_p") <= col("ts_c") + expr("INTERVAL 1 HOUR"),
-        "leftOuter")
-      .select(col("user_id"), col("click_id"), col("purchase_id"))
-  }
+  /** LEFT OUTER [[clickPurchaseJoin]] — unconverted clicks retained
+    * (the funnel/abandonment shape inner joins cannot express). Outer
+    * semantics on unbounded streams are WATERMARK-GATED: a click's
+    * null-extended row is emitted only when the global watermark
+    * passes its match horizon (ts_c + 1 h) — only then can no future
+    * purchase legally match it — so clicks whose horizon the FINAL
+    * watermark never passes are not emitted at all (they are still
+    * provisional when the replay ends). That cutoff is a pure function
+    * of the data (final wm = min(max click ts, max purchase ts) − 1 h
+    * under the default min-policy across the two watermark nodes),
+    * which is what makes the drained result exactly reproducible by
+    * the batch oracle. Matched pairs emit immediately, identical to
+    * the inner form. */
+  def clickPurchaseLeftPairs(spark: SparkSession, dir: String): DataFrame =
+    clickPurchaseJoin(spark, dir, "leftOuter")
 
-  /** [[clickPurchaseLeftPairs]] with FULL OUTER semantics — both
-    * funnel directions at once: unconverted clicks AND orphan
-    * purchases (conversions whose attributing click is missing or out
-    * of window). Null emission is watermark-gated on BOTH sides; each
-    * side's cutoff is the same pure function of the data as the left
-    * form's (a side's row is closed when the final global watermark
-    * passes the latest event time that could still match it — click:
-    * ts_c + 1 h; purchase: ts_p, since matching clicks satisfy
-    * ts_c ≥ ts_p − 1 h and the engine holds the row until the
-    * watermark passes its own join window). */
-  def clickPurchaseFullPairs(spark: SparkSession, dir: String): DataFrame = {
-    val ev = eventsStream(spark, dir)
-    val clicks = ev
-      .filter(col("event_type") === "click")
-      .select(col("user_id").cast("long").as("uc"),
-        col("ts").as("ts_c"), col("event_id").as("click_id"))
-      .withWatermark("ts_c", "1 hour")
-    val purchases = ev
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").cast("long").as("up"),
-        col("ts").as("ts_p"), col("event_id").as("purchase_id"))
-      .withWatermark("ts_p", "1 hour")
-    clicks.join(purchases,
-        col("uc") === col("up")
-          && col("ts_p") >= col("ts_c")
-          && col("ts_p") <= col("ts_c") + expr("INTERVAL 1 HOUR"),
-        "fullOuter")
-      .select(coalesce(col("uc"), col("up")).as("user_id"),
-        col("click_id"), col("purchase_id"))
-  }
+  /** FULL OUTER [[clickPurchaseJoin]] — both funnel directions at
+    * once: unconverted clicks AND orphan purchases (conversions whose
+    * attributing click is missing or out of window). Null emission is
+    * watermark-gated on BOTH sides; each side's cutoff is the same
+    * pure function of the data as the left form's (a side's row is
+    * closed when the final global watermark passes the latest event
+    * time that could still match it — click: ts_c + 1 h; purchase:
+    * ts_p, since matching clicks satisfy ts_c ≥ ts_p − 1 h and the
+    * engine holds the row until the watermark passes its own join
+    * window). */
+  def clickPurchaseFullPairs(spark: SparkSession, dir: String): DataFrame =
+    clickPurchaseJoin(spark, dir, "fullOuter")
 
-  /** Drain [[clickPurchaseLeftPairs]] in APPEND mode. Null-extended
-    * rows are emitted by the state-cleanup pass of the batch that RUNS
-    * WITH the final watermark — a no-data batch after the last data
-    * batch, which `processAllAvailable` does not wait for. The drain
-    * exits on an EXPLICIT SIGNAL (r15, replacing the r14 sink-count
-    * stability poll the ADVICE flagged as hash-flaky under load): the
-    * final watermark is a pure function of the data
-    * ([[outerHorizonMs]]), and a listener latch fires when a committed
-    * progress reports it. */
+  /** Drain [[clickPurchaseLeftPairs]] in APPEND mode, exiting on the
+    * final-watermark signal ([[drain]]'s `horizonMs`): the
+    * null-extended rows land only in the cleanup batch that runs with
+    * that watermark. */
   def runLeftJoinOnce(spark: SparkSession, dir: String,
                       name: String = "graft_stream_left_join"): DataFrame =
-    drainOuter(spark, clickPurchaseLeftPairs(spark, dir), name,
-      outerHorizonMs(spark, dir))
+    drainToMemory(spark, clickPurchaseLeftPairs(spark, dir), name,
+      mode = "append", horizonMs = outerHorizonMs(spark, dir))
 
   /** Drain [[clickPurchaseFullPairs]] — same signal-gated exit. */
   def runFullJoinOnce(spark: SparkSession, dir: String,
                       name: String = "graft_stream_full_join"): DataFrame =
-    drainOuter(spark, clickPurchaseFullPairs(spark, dir), name,
-      outerHorizonMs(spark, dir))
+    drainToMemory(spark, clickPurchaseFullPairs(spark, dir), name,
+      mode = "append", horizonMs = outerHorizonMs(spark, dir))
 
   /** The final global watermark of the click/purchase outer joins, in
     * epoch millis — computable BEFORE the stream runs because it is a
@@ -777,67 +782,19 @@ object EventStream {
     * their min under Spark's default multi-watermark policy. Both
     * sides floor micros→millis exactly as Spark's event-time stats do
     * (integer division), so the equality test against the reported
-    * watermark is exact, not approximate. Returns Long.MinValue (the
-    * wait degenerates to a no-op) when either side is empty — then the
-    * watermark never advances and no null row is ever emitted, which
-    * the gated semantics define as the correct final relation. */
-  private[graft] def outerHorizonMs(spark: SparkSession, dir: String): Long = {
+    * watermark is exact, not approximate. None when either side is
+    * empty — then the watermark never advances and no null row is
+    * ever emitted, which the gated semantics define as the correct
+    * final relation, so there is nothing to wait for. */
+  private[graft] def outerHorizonMs(spark: SparkSession, dir: String): Option[Long] = {
     val mx = graft.Tables.events(spark, dir)
       .filter(col("event_type").isin("click", "purchase"))
       .groupBy(col("event_type"))
       .agg((max(expr("unix_micros(ts)")).cast("long") / lit(1000L))
         .cast("long").as("mx_ms"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    (for { c <- mx.get("click"); p <- mx.get("purchase") }
-      yield math.min(c, p) - 3600000L).getOrElse(Long.MinValue)
-  }
-
-  /** Drain an append-mode outer join and exit when the state-cleanup
-    * batch carrying the FINAL watermark has committed. The listener is
-    * registered before `start()`, so the signal cannot be missed; a
-    * progress event is posted only after its batch (including the sink
-    * write) commits, so once the latch fires the null-extended rows
-    * are in the sink. A drain that never sees the signal throws
-    * instead of returning a possibly-nulls-missing relation — loud
-    * beats silently nondeterministic (the r14 failure mode). */
-  private def drainOuter(spark: SparkSession, df: DataFrame,
-                         name: String, horizonMs: Long): DataFrame = {
-    withDrainPartitions(spark) {
-      val ckpt = newCheckpointDir(spark)
-      val latch = new java.util.concurrent.CountDownLatch(1)
-      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-        import org.apache.spark.sql.streaming.StreamingQueryListener._
-        override def onQueryStarted(e: QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(e: QueryProgressEvent): Unit =
-          if (e.progress.name == name) {
-            val w = e.progress.eventTime.get("watermark")
-            if (w != null &&
-                java.time.Instant.parse(w).toEpochMilli >= horizonMs)
-              latch.countDown()
-          }
-      }
-      spark.streams.addListener(listener)
-      val q = df
-        .writeStream.outputMode("append")
-        .format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-      try {
-        q.processAllAvailable()
-        if (horizonMs > Long.MinValue &&
-            !latch.await(120, java.util.concurrent.TimeUnit.SECONDS))
-          throw new IllegalStateException(
-            s"outer-join drain '$name': no committed batch reached the " +
-              s"final watermark ($horizonMs ms) within 120 s — refusing " +
-              "to return a provisional (nulls-missing) relation")
-      } finally {
-        q.stop()
-        spark.streams.removeListener(listener)
-        graft.TempDirs.deleteRecursively(ckpt)
-      }
-    }
-    spark.table(name)
+    for { c <- mx.get("click"); p <- mx.get("purchase") }
+      yield math.min(c, p) - 3600000L
   }
 
   /** Stream-static ENRICHMENT join — the canonical production shape
@@ -864,7 +821,7 @@ object EventStream {
   /** Drain [[enrichedSegmentTotals]] synchronously (complete mode). */
   def runEnrichOnce(spark: SparkSession, dir: String,
                     name: String = "graft_stream_enrich"): DataFrame =
-    drain(spark, enrichedSegmentTotals(spark, dir), name)
+    drainToMemory(spark, enrichedSegmentTotals(spark, dir), name)
 
   /** STREAMING MERGE sink — the "streaming upsert into a warehouse
     * table" shape (the foreachBatch pattern table formats market as
@@ -887,37 +844,27 @@ object EventStream {
     val tmp = graft.TempDirs.create("graft_stream_upsert")
     @volatile var snap: Option[String] = None
     val ver = new java.util.concurrent.atomic.AtomicInteger(0)
-    withDrainPartitions(spark) {
-      val ckpt = newCheckpointDir(spark)
-      val q = agg.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          val delta = batch.withColumn("op", lit("U"))
-          val base = snap.map(p => spark.read.parquet(p))
-            .getOrElse(batch.filter(lit(false)))
-          val next = graft.operators.MergeOps.applyChanges(base, delta, key)
-          val out = tmp.resolve(s"v${ver.incrementAndGet()}").toString
-          next.write.mode("overwrite").parquet(out)
-          // the previous version is fully consumed once this write
-          // commits; prune it so a long drain holds ONE snapshot,
-          // not the whole version history
-          snap.foreach(p => graft.TempDirs.deleteRecursively(
-            java.nio.file.Paths.get(p)))
-          snap = Some(out)
-          ()
-        }
-        .start()
-      try q.processAllAvailable() finally {
-        q.stop()
-        graft.TempDirs.deleteRecursively(ckpt)
-      }
-    }
+    drain(spark, agg, "update", _.foreachBatch {
+      (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
+        val delta = batch.withColumn("op", lit("U"))
+        val base = snap.map(p => spark.read.parquet(p))
+          .getOrElse(batch.filter(lit(false)))
+        val next = graft.operators.MergeOps.applyChanges(base, delta, key)
+        val out = tmp.resolve(s"v${ver.incrementAndGet()}").toString
+        next.write.mode("overwrite").parquet(out)
+        // the previous version is fully consumed once this write
+        // commits; prune it so a long drain holds ONE snapshot, not
+        // the whole version history
+        snap.foreach(p => graft.TempDirs.deleteRecursively(
+          java.nio.file.Paths.get(p)))
+        snap = Some(out)
+    })
     // schema-preserving empty fallback: a zero-batch stream must
     // still return the aggregate's columns, not a schemaless frame
     // that breaks downstream column references
     snap.map(spark.read.parquet).getOrElse(
       spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], agg.schema))
+        spark.sparkContext.emptyRDD[Row], agg.schema))
   }
 
   /** Per-user cumulative totals as an update-mode streaming aggregate
@@ -1004,7 +951,7 @@ object EventStream {
     * last emission per touched key per micro-batch). */
   def runUserStatsOnce(spark: SparkSession, dir: String,
                        name: String = "graft_stream"): DataFrame =
-    drain(spark, runningUserStats(spark, dir).toDF(), name, mode = "update")
+    drainToMemory(spark, runningUserStats(spark, dir).toDF(), name, mode = "update")
 
   /** The schema'd events stream with ts normalized — shared by the
     * windowed/stateful queries, and public so tests and custom
@@ -1030,7 +977,7 @@ object EventStream {
   /** Drain the stream synchronously into a memory sink and return the
     * completed result (test/driver harness helper). */
   def runOnce(spark: SparkSession, dir: String, name: String = "graft_stream"): DataFrame =
-    drain(spark, windowedAgg(spark, dir), name)
+    drainToMemory(spark, windowedAgg(spark, dir), name)
 
   case class SessionOut(user_id: Long, start_us: Long, end_us: Long, n: Long)
   case class OpenSession(start_us: Long, last_us: Long, n: Long)
@@ -1188,7 +1135,7 @@ object EventStream {
     * key; this operator keeps the proven earliest-horizon single-timer
     * discipline, so firing order questions never arise). Requires the
     * RocksDB state store provider (the API's multi-column-family
-    * layout; see [[runClosedSessionsTwsOnce]]) — which is also the
+    * layout; see [[RocksDb]]) — which is also the
     * store that holds 100 TB-scale state off-heap with changelog
     * checkpointing, so the TWS form is the one a large deployment
     * runs. `TwsSessionSpec` pins full row equality to
@@ -1369,17 +1316,13 @@ object EventStream {
       case None =>
         // DEGENERATE INPUTS fall back to the plain full-history stream
         // (semantically what a migration with nothing to migrate is)
-        withRocksDbProvider(spark) {
-          drain(spark, closedSessionsTws(eventsStream(spark, dir)).toDF(),
-            name, mode = "append")
-        }.orderBy(col("user_id"), col("start_us"))
+        drainToMemory(spark, closedSessionsTws(eventsStream(spark, dir)).toDF(),
+          name, mode = "append", conf = Seq(RocksDb))
+          .orderBy(col("user_id"), col("start_us"))
       case Some((batchClosed, openInit, live, wm1)) =>
-        val streamed = withRocksDbProvider(spark) {
-          drain(spark,
-            closedSessionsTwsFromSnapshot(live, openInit,
-              wmMs = Some(wm1)).toDF(),
-            name, mode = "append")
-        }
+        val streamed = drainToMemory(spark,
+          closedSessionsTwsFromSnapshot(live, openInit, wmMs = Some(wm1)).toDF(),
+          name, mode = "append", conf = Seq(RocksDb))
         batchClosed.unionByName(streamed)
           .orderBy(col("user_id"), col("start_us"))
     }
@@ -1439,48 +1382,22 @@ object EventStream {
   def probeWarmSessions(spark: SparkSession, dir: String): Unit =
     warmHalves(spark, dir).foreach { case (batchClosed, openInit, live, wm1) =>
       batchClosed.write.mode("overwrite").format("noop").save()
-      withRocksDbProvider(spark) {
-        drainNoop(spark,
-          closedSessionsTwsFromSnapshot(live, openInit,
-            wmMs = Some(wm1)).toDF(),
-          mode = "append")
-      }
+      drain(spark,
+        closedSessionsTwsFromSnapshot(live, openInit, wmMs = Some(wm1)).toDF(),
+        "append", _.format("noop"), Seq(RocksDb))
     }
 
   /** Drain [[closedSessions]] over the fixture replay (append mode —
     * closed sessions are final by construction). */
   def runClosedSessionsOnce(spark: SparkSession, dir: String,
                             name: String = "graft_stream_closed"): DataFrame =
-    drain(spark, closedSessions(eventsStream(spark, dir)).toDF(), name,
+    drainToMemory(spark, closedSessions(eventsStream(spark, dir)).toDF(), name,
       mode = "append")
 
-  /** Drain [[closedSessionsTws]] under the RocksDB state store
-    * provider, which `transformWithState` requires (its named states
-    * and timers each live in their own column family — the HDFS-backed
-    * store is single-family). Provider choice is start-time per query,
-    * so it is pinned for this drain and restored after; every other
-    * harness stream keeps the session default. RocksDB is also the
-    * honest scale configuration: state lives off-heap on local disk
-    * with changelog checkpointing, the shape that holds 100 TB-scale
-    * keyed state per executor. */
+  /** Drain [[closedSessionsTws]] under the [[RocksDb]] state store
+    * provider, which `transformWithState` requires. */
   def runClosedSessionsTwsOnce(spark: SparkSession, dir: String,
                                name: String = "graft_stream_tws"): DataFrame =
-    withRocksDbProvider(spark) {
-      drain(spark, closedSessionsTws(eventsStream(spark, dir)).toDF(), name,
-        mode = "append")
-    }
-
-  /** Pin the RocksDB state store provider for queries STARTED inside
-    * `body`, restore after (provider choice is start-time per query;
-    * every other harness stream keeps the session default). */
-  private[graft] def withRocksDbProvider[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+    drainToMemory(spark, closedSessionsTws(eventsStream(spark, dir)).toDF(), name,
+      mode = "append", conf = Seq(RocksDb))
 }

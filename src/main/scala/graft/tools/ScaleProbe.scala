@@ -269,6 +269,9 @@ object ScaleProbe {
     * that actually scales to a cluster. */
   private val streamProbes: Map[String, (SparkSession, String) => Unit] = {
     import graft.streaming.EventStream
+    def noop(s: SparkSession, df: DataFrame, mode: String,
+             conf: Seq[(String, String)] = Nil): Unit =
+      EventStream.drain(s, df, mode, _.format("noop"), conf)
     Map(
       // batch override (not a stream): the gated q_knn_join pins k=16
       // for its static oracle; the probe wants the adaptive width so
@@ -286,14 +289,11 @@ object ScaleProbe {
           useShared = false)
           .write.mode("overwrite").format("noop").save()),
       "q_stream_tumbling" ->
-        ((s, d) => EventStream.drainNoop(s, EventStream.windowedAgg(s, d),
-          mode = "complete")),
+        ((s, d) => noop(s, EventStream.windowedAgg(s, d), "complete")),
       "q_stream_user_totals" ->
-        ((s, d) => EventStream.drainNoop(s,
-          EventStream.runningUserTotals(s, d).toDF(), mode = "update")),
+        ((s, d) => noop(s, EventStream.runningUserTotals(s, d).toDF(), "update")),
       "q_stream_dedup_wm" ->
-        ((s, d) => EventStream.drainNoop(s,
-          EventStream.dedupWithinWatermark(s, d), mode = "append")),
+        ((s, d) => noop(s, EventStream.dedupWithinWatermark(s, d), "append")),
       // probe-only store comparison on the one stream whose state
       // actually grows with the corpus (every in-flight key): the
       // same watermarked dedup under RocksDB instead of the default
@@ -301,10 +301,8 @@ object ScaleProbe {
       // ~20M union keys on one box — exactly the regime RocksDB's
       // off-heap layout exists for
       "q_stream_dedup_wm_rocksdb" ->
-        ((s, d) => EventStream.withRocksDbProvider(s) {
-          EventStream.drainNoop(s,
-            EventStream.dedupWithinWatermark(s, d), mode = "append")
-        }),
+        ((s, d) => noop(s, EventStream.dedupWithinWatermark(s, d), "append",
+          Seq(EventStream.RocksDb))),
       // the sessionization pair: identical close semantics (shared
       // merge/close kernel), different state plumbing — fmgws on the
       // default HDFS-backed store vs transformWithState on RocksDB.
@@ -312,26 +310,22 @@ object ScaleProbe {
       // head on the same workload (state ~ open intervals per
       // in-flight user, bounded by the watermark window per key)
       "q_stream_sessions_closed" ->
-        ((s, d) => EventStream.drainNoop(s,
+        ((s, d) => noop(s,
           EventStream.closedSessions(EventStream.eventsStream(s, d)).toDF(),
-          mode = "append")),
+          "append")),
       "q_stream_tws_sessions" ->
-        ((s, d) => EventStream.withRocksDbProvider(s) {
-          EventStream.drainNoop(s,
-            EventStream.closedSessionsTws(EventStream.eventsStream(s, d)).toDF(),
-            mode = "append")
-        }),
+        ((s, d) => noop(s,
+          EventStream.closedSessionsTws(EventStream.eventsStream(s, d)).toDF(),
+          "append", Seq(EventStream.RocksDb))),
       // r14 warm-start migration: batch half through the noop batch
       // sink, seeded TWS stream through the noop streaming sink — the
       // timed path includes the initial-state distribution per key
       "q_stream_warm_sessions" ->
         ((s, d) => EventStream.probeWarmSessions(s, d)),
       "q_stream_left_join" ->
-        ((s, d) => EventStream.drainNoop(s,
-          EventStream.clickPurchaseLeftPairs(s, d), mode = "append")),
+        ((s, d) => noop(s, EventStream.clickPurchaseLeftPairs(s, d), "append")),
       "q_stream_full_join" ->
-        ((s, d) => EventStream.drainNoop(s,
-          EventStream.clickPurchaseFullPairs(s, d), mode = "append")),
+        ((s, d) => noop(s, EventStream.clickPurchaseFullPairs(s, d), "append")),
       // r15 quality gate: stateless broadcast scorer — the timed path
       // is model fit + silver write + collect/broadcast + stream
       // scoring; the model is vocabulary-sized (word-salted copies
@@ -341,8 +335,7 @@ object ScaleProbe {
           val silver = graft.TempDirs.create("graft_probe_qgate")
           try {
             val (model, thr) = EventStream.writeQualityModel(s, d, silver.toString)
-            EventStream.drainNoop(s, EventStream.qualityGate(s, d, model, thr),
-              mode = "append")
+            noop(s, EventStream.qualityGate(s, d, model, thr), "append")
           } finally graft.TempDirs.deleteRecursively(silver)
         }),
       "q_stream_ann" ->
@@ -350,9 +343,7 @@ object ScaleProbe {
           val silver = graft.TempDirs.create("graft_probe_ann")
           try {
             val ix = graft.streaming.EventStream.writeAnnIndex(s, d, silver.toString)
-            graft.streaming.EventStream.drainNoop(s,
-              graft.streaming.EventStream.annAgainstHistory(s, d, ix),
-              mode = "append")
+            noop(s, graft.streaming.EventStream.annAgainstHistory(s, d, ix), "append")
           } finally graft.TempDirs.deleteRecursively(silver)
         }),
       "q_stream_neardup" ->
@@ -363,8 +354,8 @@ object ScaleProbe {
           val silver = graft.TempDirs.create("graft_probe_silver")
           try {
             val hist = EventStream.writeNeardupIndex(s, d, silver.toString)
-            EventStream.drainNoop(s,
-              EventStream.neardupAgainstHistory(s, d, Some(hist)), mode = "append")
+            noop(s,
+              EventStream.neardupAgainstHistory(s, d, Some(hist)), "append")
           } finally graft.TempDirs.deleteRecursively(silver)
         }))
   }
@@ -375,20 +366,12 @@ object ScaleProbe {
     // comma-separated probe subset (e.g. for a targeted 100x rerun of
     // one family); default = the full battery
     val only = sys.env.get("SPARK_GRAFT_PROBE_ONLY").map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
+    val spark = graft.Sessions.create(graft.Sessions.conf() ++ Seq(
+      "spark.sql.codegen.cache.maxEntries" -> "5000",
       // stream drains get full parallelism here (EventStream's
       // fixture-scale default is 4: right for Verify/Bench where
       // state-store init dominates, a 4-way ceiling at 100x data)
-      .config("spark.graft.stream.drainPartitions", cpus)
-      .getOrCreate()
+      "spark.graft.stream.drainPartitions" -> graft.Sessions.cpus))
     spark.sparkContext.setLogLevel("ERROR")
 
     val big = TempDirs.create("graft_scale_").toAbsolutePath.toString

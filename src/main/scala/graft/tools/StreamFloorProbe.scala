@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Throwaway measurement harness for the streaming bench floor: times
   * repeated no-op drains of the simplest stateful stream under
   * candidate knobs, phase by phase (start / processAllAvailable /
@@ -9,15 +7,7 @@ import org.apache.spark.sql.SparkSession
 object StreamFloorProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.Sessions.create(graft.Sessions.conf())
     spark.sparkContext.setLogLevel("ERROR")
 
     def ms(t0: Long): Long = (System.nanoTime() - t0) / 1000000L

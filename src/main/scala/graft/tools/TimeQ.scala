@@ -1,13 +1,11 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query timing harness for optimization work: runs the named
   * queries through the same noop-sink protocol as graft.Bench (same
   * session config, same clearCache between samples), printing every
   * sample plus the min — so a candidate change can be A/B-measured in
   * seconds instead of a full-battery run. Usage:
-  *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=32 \
+  *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=4 \
   *     sbt "runMain graft.tools.TimeQ <reps> name [name...]"
   * Shared silver tables are prepared (untimed) iff any named query
   * consumes them, mirroring the bench's prepareShared split. */
@@ -19,19 +17,7 @@ object TimeQ {
         graft.SparkEntry.queries.keys.toSeq.sorted
       else args.drop(1).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-    val spark =
-      (if (new java.io.File("/dev/shm").isDirectory)
-        b0.config("spark.graft.stream.checkpointDir", "/dev/shm/graft_ckpt")
-      else b0).getOrCreate()
+    val spark = graft.Sessions.create(graft.Bench.sessionConf(localDir = None))
     spark.sparkContext.setLogLevel("ERROR")
     ExtraConf.applyTo(spark).foreach { case (k, v) => println(s"[timeq] conf $k=$v") }
     // same warm-up as Bench: JIT/codegen the common paths untimed

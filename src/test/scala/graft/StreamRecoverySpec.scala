@@ -170,7 +170,7 @@ class StreamRecoverySpec extends AnyFunSuite {
           .select(col("user_id"), col("ts").cast("timestamp").as("ts")))
         .toDF()
     def runOnce(srcDir: String, outDir: String, ckDir: String): Unit =
-      EventStream.withRocksDbProvider(spark) {
+      EventStream.withConf(spark, EventStream.RocksDb) {
         val q = sessions(srcDir).writeStream
           .outputMode("append").format("parquet")
           .option("path", outDir).option("checkpointLocation", ckDir)

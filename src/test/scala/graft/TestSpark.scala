@@ -6,14 +6,8 @@ import org.apache.spark.sql.SparkSession
   * lazy val; sharing across suites is fine since config is identical). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = Sessions.create(
+      Sessions.conf(cpus = "4") :+ ("spark.app.name" -> "graft-test"))
     s.sparkContext.setLogLevel("WARN")
     s
   }

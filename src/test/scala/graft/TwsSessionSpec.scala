@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.EventStream
-import graft.streaming.EventStream.SessionOut
+import graft.streaming.EventStream.{RocksDb, SessionOut, withConf}
 
 /** The transformWithState sessionizer must be semantically
   * indistinguishable from its flatMapGroupsWithState sibling: the
@@ -20,20 +20,6 @@ class TwsSessionSpec extends AnyFunSuite {
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
   private def us(s: String): Long = ts(s).getTime * 1000L
 
-  /** transformWithState queries need the RocksDB state store; pin it
-    * for the started query, restore after (provider choice is
-    * start-time per query). */
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("timer close and re-arm: watermark closes both sessions, open stays silent") {
     implicit val sq = spark.sqlContext
     import spark.implicits._
@@ -42,7 +28,7 @@ class TwsSessionSpec extends AnyFunSuite {
       input.toDS().toDF("user_id", "ts"), gapMinutes = 30)
 
     val name = "graft_tws_session_spec"
-    withRocksDb {
+    withConf(spark, RocksDb) {
       val q = sessions.toDF().writeStream
         .outputMode("append").format("memory").queryName(name).start()
       try {
@@ -78,7 +64,7 @@ class TwsSessionSpec extends AnyFunSuite {
       input.toDS().toDF("user_id", "ts"), gapMinutes = 30)
 
     val name = "graft_tws_session_spec2"
-    withRocksDb {
+    withConf(spark, RocksDb) {
       val q = sessions.toDF().writeStream
         .outputMode("append").format("memory").queryName(name).start()
       try {
@@ -127,7 +113,7 @@ class TwsSessionSpec extends AnyFunSuite {
     def drainBatches(batches: Seq[Seq[(Long, java.sql.Timestamp)]],
                      mk: org.apache.spark.sql.DataFrame =>
                        org.apache.spark.sql.Dataset[SessionOut],
-                     name: String): Set[SessionOut] = withRocksDb {
+                     name: String): Set[SessionOut] = withConf(spark, RocksDb) {
       val input = MemoryStream[(Long, java.sql.Timestamp)]
       val q = mk(input.toDS().toDF("user_id", "ts")).toDF()
         .writeStream.outputMode("append").format("memory")
@@ -186,7 +172,7 @@ class TwsSessionSpec extends AnyFunSuite {
     def drainBatches(batches: Seq[Seq[(Long, java.sql.Timestamp)]],
                      mk: org.apache.spark.sql.DataFrame =>
                        org.apache.spark.sql.Dataset[SessionOut],
-                     name: String): Set[SessionOut] = withRocksDb {
+                     name: String): Set[SessionOut] = withConf(spark, RocksDb) {
       val input = MemoryStream[(Long, java.sql.Timestamp)]
       val q = mk(input.toDS().toDF("user_id", "ts")).toDF()
         .writeStream.outputMode("append").format("memory")
