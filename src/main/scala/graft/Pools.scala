@@ -1,14 +1,26 @@
 package graft
 
-/** Sizing for the driver-side concurrency pools (CrossVal fold fits,
-  * Reduction candidate scans, TextPack shared-table builds). Each pool
-  * runs independent Spark actions concurrently but joins its futures
-  * in a FIXED submission order, so the output is byte-identical to the
-  * sequential loop at ANY pool size — `ConcurrencySpec` enforces that
-  * invariant in-tree by running the same operation at size 1 and at
-  * full width and asserting identical results. The `graft.pool.size`
-  * system property caps the width (the spec's lever; also an operator
-  * escape hatch on a driver with tight thread budgets); unset means
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+/** The driver-side fan-out: independent Spark actions run concurrently
+  * on a thread pool, the way the reference submits folds, candidates
+  * and brackets as Dask futures and gathers them (`tuners.py:100-146`,
+  * `tuners.py:376-509`). Users of [[inOrder]]:
+  *  - `CrossVal` fold fits;
+  *  - `Reduction.tuneOverKs` candidates (each nesting the fold pool);
+  *  - `Reduction.tuneOverKsSharedFit` fold fits, then candidates;
+  *  - `FeatureSelection.mda` folds;
+  *  - `Tuning.hyperbandBatchTagged` brackets;
+  *  - `TextPack.prepareShared` silver-table builds.
+  *
+  * Contract: every task is submitted before any is joined; results are
+  * joined in SUBMISSION order, so the output is byte-identical to the
+  * sequential loop at any pool width (`ConcurrencySpec` runs each user
+  * at width 1 and at full width and compares exactly). A failing task
+  * rethrows its own exception, not the `ExecutionException` wrapper;
+  * the first failure in submission order wins. The `graft.pool.size`
+  * system property caps every pool's width (the spec's lever; also an
+  * escape hatch on a driver with a tight thread budget); unset means
   * full width.
   */
 object Pools {
@@ -18,6 +30,23 @@ object Pools {
       .map(n => math.max(1, math.min(n, default)))
       .getOrElse(default)
 
-  def newPool(default: Int): java.util.concurrent.ExecutorService =
-    java.util.concurrent.Executors.newFixedThreadPool(size(default))
+  /** Runs `tasks` on a pool of `size(width)` threads and returns their
+    * results in submission order. With one task, or a width of 1
+    * after the cap, the tasks run on the calling thread. Each call
+    * owns its pool, so a task may itself call [[inOrder]] (nested
+    * pools cannot starve each other). */
+  def inOrder[A](width: Int)(tasks: Seq[() => A]): Seq[A] = {
+    val ts = tasks.toVector
+    val n = size(width)
+    if (ts.size <= 1 || n <= 1) ts.map(_())
+    else {
+      val pool = Executors.newFixedThreadPool(n)
+      try {
+        val futs = ts.map(t => pool.submit(new Callable[A] { def call(): A = t() }))
+        futs.map(f =>
+          try f.get()
+          catch { case e: ExecutionException => throw e.getCause })
+      } finally pool.shutdown()
+    }
+  }
 }

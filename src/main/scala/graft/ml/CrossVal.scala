@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Folds
@@ -63,39 +63,16 @@ object CrossVal {
   private def kfoldCore(withFold: DataFrame, k: Int,
                         fit: DataFrame => (DataFrame => DataFrame),
                         score: (DataFrame, DataFrame, DataFrame) => DataFrame): DataFrame = {
-    // folds fit CONCURRENTLY: `fit` runs its MLlib jobs eagerly, and
-    // the k fits are independent — a thread per fold overlaps their
-    // driver-side planning and job gaps (the prepareShared trick).
-    // Futures are joined in fold order, so the unioned result and
-    // every seeded fit are byte-identical to the sequential loop at
-    // any pool width (ConcurrencySpec pins width-1 vs width-k).
-    val pool = graft.Pools.newPool(k)
-    val perFold =
-      try {
-        val futs = (0 until k).map { f =>
-          pool.submit(new java.util.concurrent.Callable[DataFrame] {
-            def call(): DataFrame = {
-              val train = withFold.filter(col("fold") =!= f).drop("fold")
-              val test = withFold.filter(col("fold") === f).drop("fold")
-              val predict = fit(train)
-              score(train, test, predict(test)).withColumn("fold", lit(f.toLong))
-            }
-          })
-        }
-        futs.map(f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
-      } finally pool.shutdown()
+    // folds fit concurrently: `fit` runs its MLlib jobs eagerly, and
+    // the k fits are independent
+    val perFold = graft.Pools.inOrder(k)((0 until k).map { f => () =>
+      val train = withFold.filter(col("fold") =!= f).drop("fold")
+      val test = withFold.filter(col("fold") === f).drop("fold")
+      val predict = fit(train)
+      score(train, test, predict(test)).withColumn("fold", lit(f.toLong))
+    })
     val all = perFold.reduce(_ unionByName _)
     val metrics = all.columns.filterNot(_ == "fold")
     all.select((col("fold") +: metrics.map(col)): _*).orderBy(col("fold"))
   }
-
-  /** A3/A4 summary over per-fold scores (`tuners.py:144-145`): mean and
-    * exact quartiles of a metric column. */
-  def summarize(perFold: DataFrame, metric: String): DataFrame =
-    perFold.agg(
-      round(avg(col(metric)), 6).as(s"mean_$metric"),
-      round(expr(s"percentile($metric, 0.25)"), 6).as(s"q25_$metric"),
-      round(expr(s"percentile($metric, 0.75)"), 6).as(s"q75_$metric"))
 }

@@ -54,86 +54,77 @@ object FeatureSelection {
     val spark = df.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val folds = Folds.foldAssignment(df.select(col(eraCol)).distinct(), eraCol, k)
-    val withFold = df.join(broadcast(folds), eraCol).persist()
-    // ONE upfront aggregate replaces a per-fold maxEraRows action (the
-    // dispatch statistic below) AND materializes the persisted base
-    // before the fold threads start — two concurrent first-touch
-    // actions would otherwise both compute it (guide §1.2)
-    val maxEraByFold = withFold.groupBy(col("fold"), col(eraCol))
-      .agg(count(lit(1)).as("graft_n"))
-      .groupBy(col("fold")).agg(max(col("graft_n")).as("graft_m"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // per-fold fit + permutation scoring run CONCURRENTLY (the
-    // kfoldScores pattern): each fold's RF fit and collect are
-    // independent jobs; futures joined in fold order keep the output
-    // rows and every seeded permutation identical to the sequential
-    // loop
-    def foldRows(f: Int): Seq[(String, Long, Double)] = {
-      val train = withFold.filter(col("fold") =!= f).drop("fold")
-      val test = withFold.filter(col("fold") === f).drop("fold").persist()
-      val predict = fit(train)
-      // one permutation join yields every feature's permuted copy;
-      // per-feature variants are then pure projections over it.
-      // permKeyFor lets the deterministic-fitter oracle twin swap the
-      // xxhash64 deal for an ANSI-SQL-expressible arithmetic hash.
-      val permKey = permKeyFor.map(_(f))
-        .getOrElse(xxhash64(idCols.map(col) :+ lit(seed + f): _*))
-      val permuted = Folds.permuteManyWithinEra(test, featCols, eraCol, idCols,
-        permKey).persist()
-      val variants = ("__base__", test) +: featCols.map { ft =>
-        ft -> permuted.select(test.columns.map(c =>
-          if (c == ft) col(s"${ft}_perm").as(ft) else col(c)): _*)
+    // every action finishes before this returns (the result is a local
+    // relation), so the fold split and each fold's persists are
+    // released here, not left to a caller's clearCache()
+    val rows = Folds.withFoldSplit(df, eraCol, k) { withFold =>
+      // ONE upfront aggregate replaces a per-fold maxEraRows action (the
+      // dispatch statistic below) AND materializes the persisted base
+      // before the fold threads start — two concurrent first-touch
+      // actions would otherwise both compute it (guide §1.2)
+      val maxEraByFold = withFold.groupBy(col("fold"), col(eraCol))
+        .agg(count(lit(1)).as("graft_n"))
+        .groupBy(col("fold")).agg(max(col("graft_n")).as("graft_m"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // per-fold fit + permutation scoring run concurrently: each fold's
+      // fit and collect are independent jobs
+      def foldRows(f: Int): Seq[(String, Long, Double)] = {
+        val train = withFold.filter(col("fold") =!= f).drop("fold")
+        val test = withFold.filter(col("fold") === f).drop("fold").persist()
+        // one permutation join yields every feature's permuted copy;
+        // per-feature variants are then pure projections over it.
+        // permKeyFor lets the deterministic-fitter oracle twin swap the
+        // xxhash64 deal for an ANSI-SQL-expressible arithmetic hash.
+        val permKey = permKeyFor.map(_(f))
+          .getOrElse(xxhash64(idCols.map(col) :+ lit(seed + f): _*))
+        val permuted = Folds.permuteManyWithinEra(test, featCols, eraCol, idCols,
+          permKey).persist()
+        try {
+          val predict = fit(train)
+          val variants = ("__base__", test) +: featCols.map { ft =>
+            ft -> permuted.select(test.columns.map(c =>
+              if (c == ft) col(s"${ft}_perm").as(ft) else col(c)): _*)
+          }
+          val tagged = variants.map { case (tag, fr) =>
+            fr.select(test.columns.map(col): _*).withColumn("graft_feat", lit(tag))
+          }.reduce(_ unionByName _)
+          val scored = predict(tagged)
+          // r14: era-size-adaptive rank dispatch, measured on the PERSISTED
+          // test frame (cheap) — the variant tag multiplies window-partition
+          // COUNT by features+1 while each (variant, era) partition stays
+          // one era of test rows, so the test frame's largest era is the
+          // honest dispatch statistic for the tagged union. Past the
+          // ceiling, the rank rides the two-pass form with a composite
+          // (variant, era) key — bit-identical values, no window partition
+          // spans an era (the same hazard SCALE.md's permutation pair
+          // quantifies: 23.7x vs 5.5x wall at 100x).
+          val twoPass = maxEraByFold.getOrElse(f.toLong, 0L) >
+            graft.operators.EraRank.onePassCeiling(test)
+          val ranked =
+            if (!twoPass) {
+              val order = Window.partitionBy(col("graft_feat"), col(eraCol))
+                .orderBy((col("pred") +: idCols.map(col)).map(_.asc): _*)
+              val whole = Window.partitionBy(col("graft_feat"), col(eraCol))
+              scored.withColumn("graft_r",
+                row_number().over(order).cast("double") / count(lit(1)).over(whole))
+            } else {
+              graft.operators.EraRank.withPctRankFirstTwoPass(scored, "graft_r", 32,
+                struct(col("graft_feat"), col(eraCol)), col("pred"), idCols.map(col): _*)
+            }
+          val sp = ranked
+            .groupBy(col("graft_feat"))
+            .agg(corr(col(targetCol), col("graft_r")).as("spearman"))
+            .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+          val base = sp("__base__")
+          featCols.map { feat =>
+            val shuff = sp(feat)
+            val imp = if (shuff >= 1.0) 0.0 else (base - shuff) / (1.0 - shuff)
+            (feat, f.toLong, imp)
+          }
+        } finally { permuted.unpersist(); test.unpersist() }
       }
-      val tagged = variants.map { case (tag, fr) =>
-        fr.select(test.columns.map(col): _*).withColumn("graft_feat", lit(tag))
-      }.reduce(_ unionByName _)
-      val scored = predict(tagged)
-      // r14: era-size-adaptive rank dispatch, measured on the PERSISTED
-      // test frame (cheap) — the variant tag multiplies window-partition
-      // COUNT by features+1 while each (variant, era) partition stays
-      // one era of test rows, so the test frame's largest era is the
-      // honest dispatch statistic for the tagged union. Past the
-      // ceiling, the rank rides the two-pass form with a composite
-      // (variant, era) key — bit-identical values, no window partition
-      // spans an era (the same hazard SCALE.md's permutation pair
-      // quantifies: 23.7x vs 5.5x wall at 100x).
-      val twoPass = maxEraByFold.getOrElse(f.toLong, 0L) >
-        graft.operators.EraRank.onePassCeiling(test)
-      val ranked =
-        if (!twoPass) {
-          val order = Window.partitionBy(col("graft_feat"), col(eraCol))
-            .orderBy((col("pred") +: idCols.map(col)).map(_.asc): _*)
-          val whole = Window.partitionBy(col("graft_feat"), col(eraCol))
-          scored.withColumn("graft_r",
-            row_number().over(order).cast("double") / count(lit(1)).over(whole))
-        } else {
-          graft.operators.EraRank.withPctRankFirstTwoPass(scored, "graft_r", 32,
-            struct(col("graft_feat"), col(eraCol)), col("pred"), idCols.map(col): _*)
-        }
-      val sp = ranked
-        .groupBy(col("graft_feat"))
-        .agg(corr(col(targetCol), col("graft_r")).as("spearman"))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      val base = sp("__base__")
-      featCols.map { feat =>
-        val shuff = sp(feat)
-        val imp = if (shuff >= 1.0) 0.0 else (base - shuff) / (1.0 - shuff)
-        (feat, f.toLong, imp)
-      }
+      graft.Pools.inOrder(k)((0 until k).map(f => () => foldRows(f))).flatten
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(k)
-    val rows =
-      try {
-        val futs = (0 until k).map { f =>
-          pool.submit(new java.util.concurrent.Callable[Seq[(String, Long, Double)]] {
-            def call(): Seq[(String, Long, Double)] = foldRows(f)
-          })
-        }
-        futs.flatMap(fu =>
-          try fu.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
-      } finally pool.shutdown()
     rows.toDF("feature", "fold", "importance")
       .groupBy(col("feature"))
       .agg(round(avg(col("importance")), 6).as("importance"))

@@ -104,52 +104,26 @@ object Reduction {
                           score: DataFrame => DataFrame,
                           metric: String = "spearman"): Seq[(Int, Double)] = {
     if (ks.isEmpty) return Seq.empty
-    val foldRel = graft.operators.Folds.foldAssignment(
-      reduced.select(col(eraCol)).distinct(), eraCol, folds)
-    val cached = reduced.join(broadcast(foldRel), eraCol).persist()
-    try {
+    graft.operators.Folds.withFoldSplit(reduced, eraCol, folds) { cached =>
       val fitAll = fitAllFor(colsFor(ks.max))
       // one fit per fold (each collects its model row at the driver
-      // edge); the fold fits are independent, so they overlap on a
-      // pool exactly like kfoldScores' fold threads
-      val pool = graft.Pools.newPool(folds)
-      val predictors =
-        try {
-          val futs = (0 until folds).map { f =>
-            pool.submit(new java.util.concurrent.Callable[Seq[String] => DataFrame => DataFrame] {
-              def call(): Seq[String] => DataFrame => DataFrame =
-                fitAll(cached.filter(col("fold") =!= f).drop("fold"))
-            })
-          }
-          futs.map(f =>
-            try f.get()
-            catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
-        } finally pool.shutdown()
-      // candidates still score CONCURRENTLY (one action per k over the
+      // edge); the fold fits are independent, so they overlap
+      val predictors = graft.Pools.inOrder(folds)((0 until folds).map { f => () =>
+        fitAll(cached.filter(col("fold") =!= f).drop("fold"))
+      })
+      // candidates still score concurrently (one action per k over the
       // shared persisted frame — a single all-k union action was
       // measured ~0.5 s slower at fixture scale than the overlapped
       // per-k actions, despite fewer jobs); the win kept here is the
       // 6 fit collects folded into `folds`
-      val kPool = graft.Pools.newPool(ks.length)
-      val scored =
-        try {
-          val futs = ks.map { k =>
-            kPool.submit(new java.util.concurrent.Callable[(Int, Double)] {
-              def call(): (Int, Double) = {
-                val perFold = (0 until folds).map { f =>
-                  val test = cached.filter(col("fold") === f).drop("fold")
-                  score(predictors(f)(colsFor(k))(test))
-                }.reduce(_ unionByName _)
-                k -> perFold.agg(avg(col(metric))).head().getDouble(0)
-              }
-            })
-          }
-          futs.map(f =>
-            try f.get()
-            catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
-        } finally kPool.shutdown()
-      scored.sortBy(-_._2)
-    } finally cached.unpersist()
+      graft.Pools.inOrder(ks.length)(ks.map { k => () =>
+        val perFold = (0 until folds).map { f =>
+          val test = cached.filter(col("fold") === f).drop("fold")
+          score(predictors(f)(colsFor(k))(test))
+        }.reduce(_ unionByName _)
+        k -> perFold.agg(avg(col(metric))).head().getDouble(0)
+      }).sortBy(-_._2)
+    }
   }
 
   /** The candidate-scan/CV/leaderboard loop of [[tuneReduction]],
@@ -172,31 +146,14 @@ object Reduction {
     // per-candidate kfoldScores form re-derived the fold-assignment
     // aggregate and re-persisted an identical join plan per candidate
     // (one redundant pass per k, plus a CacheManager warn per extra)
-    val foldRel = graft.operators.Folds.foldAssignment(
-      reduced.select(col(eraCol)).distinct(), eraCol, folds)
-    val cached = reduced.join(broadcast(foldRel), eraCol).persist()
-    try {
-      // candidates score CONCURRENTLY over the shared persisted frame
-      // (each spawns its own per-fold fit threads inside kfoldScores);
-      // futures join in ks order, so the leaderboard is identical to
-      // the sequential scan
-      val pool = graft.Pools.newPool(ks.length)
-      val scored =
-        try {
-          val futs = ks.map { k =>
-            pool.submit(new java.util.concurrent.Callable[(Int, Double)] {
-              def call(): (Int, Double) = {
-                val perFold = CrossVal.kfoldScoresPrejoined(cached, folds,
-                  fitterFor(colsFor(k)), score)
-                k -> perFold.agg(avg(col(metric))).head().getDouble(0)
-              }
-            })
-          }
-          futs.map(f =>
-            try f.get()
-            catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
-        } finally pool.shutdown()
-      scored.sortBy(-_._2)
-    } finally cached.unpersist()
+    graft.operators.Folds.withFoldSplit(reduced, eraCol, folds) { cached =>
+      // candidates score concurrently over the shared persisted frame,
+      // each running its own fold pool inside kfoldScoresPrejoined
+      graft.Pools.inOrder(ks.length)(ks.map { k => () =>
+        val perFold = CrossVal.kfoldScoresPrejoined(cached, folds,
+          fitterFor(colsFor(k)), score)
+        k -> perFold.agg(avg(col(metric))).head().getDouble(0)
+      }).sortBy(-_._2)
+    }
   }
 }

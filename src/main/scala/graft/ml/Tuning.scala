@@ -53,13 +53,12 @@ object Tuning {
     * Spark side: `df.sample`/`limit` pushed into the scan).
     * Returns all surviving trials of the final rung, best first.
     *
-    * CONCURRENCY CONTRACT (r17): brackets run on a thread pool, so
-    * `evaluate` is invoked CONCURRENTLY from several driver threads
-    * (one per bracket; rungs within a bracket stay sequential). The
-    * callback must be thread-safe — pure functions and Spark actions
-    * are; un-synchronized mutable accumulators are not. Results are
-    * identical to the sequential control flow (futures join in
-    * bracket order). */
+    * CONCURRENCY CONTRACT (r17): brackets run on a [[graft.Pools]]
+    * pool, so `evaluate` is invoked CONCURRENTLY from several driver
+    * threads (one per bracket; rungs within a bracket stay
+    * sequential). The callback must be thread-safe — pure functions
+    * and Spark actions are; un-synchronized mutable accumulators are
+    * not. Results are identical to the sequential control flow. */
   def hyperband(params: Seq[Param], maxResource: Double, eta: Int, seed: Long)
                (evaluate: (Map[String, Double], Double) => Double): Seq[Trial] =
     hyperbandBatch(params, maxResource, eta, seed)(
@@ -108,26 +107,10 @@ object Tuning {
     }
     // brackets are INDEPENDENT (each seeds its own configs and halves
     // within itself) — only the rungs inside a bracket are sequential.
-    // Run them concurrently (the MDA/kfold fold-pool pattern): each
-    // rung's Spark action leaves driver-side gaps (planning, collect)
-    // the other brackets fill (guide §2.6). Futures joined in bracket
-    // order keep the trial list identical to the sequential loop.
+    // Run them concurrently: each rung's Spark action leaves driver-side
+    // gaps (planning, collect) the other brackets fill (guide §2.6).
     val order = (sMax to 0 by -1).toSeq
-    val brackets =
-      if (order.size <= 1) order.map(runBracket)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(order.size)
-        try {
-          val futs = order.map { s =>
-            pool.submit(new java.util.concurrent.Callable[Seq[Trial]] {
-              def call(): Seq[Trial] = runBracket(s)
-            })
-          }
-          futs.map(f =>
-            try f.get()
-            catch { case e: java.util.concurrent.ExecutionException => throw e.getCause })
-        } finally pool.shutdown()
-      }
+    val brackets = graft.Pools.inOrder(order.size)(order.map(s => () => runBracket(s)))
     brackets.flatten.sortBy(-_.score)
   }
 }

@@ -70,21 +70,6 @@ object EraRank {
       .select((keep :+ col(out)): _*)
   }
 
-  /** The integer core of [[withPctRankFirstTwoPass]]: global per-era
-    * ROW NUMBER over (pred, tie…), computed without any
-    * one-task-per-era window. Exposed for consumers that JOIN on the
-    * rank — the positional-join permutation primitive
-    * ([[Folds.permuteWithinEraTwoPass]]), where the rank is the join
-    * key rather than a quantile. `pred` (the primary order column)
-    * must be sketchable (numeric): it feeds `percentile_approx`. */
-  def withRowNumberTwoPass(df: DataFrame, out: String, buckets: Int,
-                           era: Column, pred: Column, tie: Column*): DataFrame = {
-    val keep = df.columns.map(col)
-    twoPassRank(df, buckets, era, pred, tie)
-      .withColumn(out, col("graft_rn"))
-      .select((keep :+ col(out)): _*)
-  }
-
   /** [[graft.Frozen.copy]] — every consumer provably shares one value
     * set. Only for calendar-bounded relations (the per-era edge
     * arrays: #eras x (buckets-1) doubles). */
@@ -92,7 +77,7 @@ object EraRank {
 
   /** BOTH orderings' global per-era row numbers in ONE shared pass —
     * the positional-permutation cost cut (VERDICT r11 measured the
-    * two independent [[withRowNumberTwoPass]] calls at ~8x the
+    * two independent single-ordering two-pass rankings at ~8x the
     * one-pass form; they re-derived the same base once per ordering
     * across sketch, offset, and rank stages). Here: one fused sketch
     * aggregate fits both orderings' edges (the B sketch rides the A
@@ -103,7 +88,8 @@ object EraRank {
     * Returns the pair (rankedA, rankedB): each is df's columns plus
     * `out` = the global per-era row number over its ordering, each
     * window computed exactly ONCE (no diamond), both bit-identical to
-    * independent [[withRowNumberTwoPass]] calls (FoldsSpec pins the
+    * the row number of an independent single-ordering two-pass rank
+    * (the integer core of [[withPctRankFirstTwoPass]]; FoldsSpec pins the
     * permutation built on this against the one-pass form
     * row-for-row).
     *
@@ -349,12 +335,6 @@ object EraRank {
       .groupBy(col("graft_era").as("era"))
       .agg(round(corr(truth, col("graft_r")), 6).as("spearman"))
   }
-
-  /** A5 quartic mean error (`metrics.py:25-33`):
-    * mean((y_true - y_pred)^4), rank-normalized inputs upstream.
-    */
-  def quarticMeanError(df: DataFrame, truth: Column, pred: Column): DataFrame =
-    df.agg(round(avg(pow(truth - pred, 4)), 6).as("qme"))
 
   /** P8 payout clip (`utils.py:55`): ((s-0)/0.2) clamped to [-1, 1]. */
   def payoutClip(score: Column): Column =

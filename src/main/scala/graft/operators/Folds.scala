@@ -24,6 +24,18 @@ object Folds {
       .withColumn("fold",
         ((row_number().over(Window.orderBy(col(eraCol))) - 1) % k).cast("long"))
 
+  /** Scoped fold split: `df` broadcast-joined to the [[foldAssignment]]
+    * of its distinct eras, persisted, handed to `body`, and unpersisted
+    * when `body` returns or throws. Every fold branch (and every
+    * candidate scored against the same split) re-reads the one
+    * persisted join. `body` must finish every action on the frame
+    * before it returns. */
+  def withFoldSplit[A](df: DataFrame, eraCol: String, k: Int)(body: DataFrame => A): A = {
+    val folds = foldAssignment(df.select(col(eraCol)).distinct(), eraCol, k)
+    val withFold = df.join(broadcast(folds), eraCol).persist()
+    try body(withFold) finally withFold.unpersist()
+  }
+
   /** M1 seeded-random variant (`utils.py:26-29`: np.random.shuffle of
     * unique eras + array_split). Distinct eras are few by construction
     * (they are time buckets), so the shuffle runs driver-side on the
@@ -112,10 +124,11 @@ object Folds {
   /** TWO-PASS form of [[permuteWithinEra]] — the 100x-scale path the
     * probe motivated: one-pass `q_permute_era` measured 23x wall for
     * 100x data because BOTH its ranking windows partition by era
-    * alone (one task per era, the W1 hazard again). Here each
-    * ordering's per-era row number comes from
-    * [[EraRank.withRowNumberTwoPass]] (sketch-bucketed offsets +
-    * (era, bucket) windows — no window partition ever spans an era),
+    * alone (one task per era, the W1 hazard again). Here both
+    * orderings' per-era row numbers come from
+    * [[EraRank.withRowNumberTwoPassPairManaged]] (sketch-bucketed
+    * offsets + (era, bucket) windows — no window partition ever spans
+    * an era),
     * and the positional join keys on (era, rn), which is unique per
     * era — no skew. Requires numeric id-head and orderKey columns
     * (they feed the bucket sketch). Row-identical to the one-pass

@@ -1,28 +1,22 @@
 package graft.plans
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, ExperimentalMethods}
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 
 import org.apache.spark.sql.graftshim.ColumnBridge
 
 /** User-facing entry for the custom as-of plan node: resolves the
   * column references against the analyzed children, registers the
-  * planner strategy (public `spark.experimental.extraStrategies`
-  * hook), and returns a DataFrame over the custom logical node.
+  * planner strategy and the filter-pushdown rule once per session
+  * (public `spark.experimental` hooks, so no session extension is
+  * needed), and returns a DataFrame over the custom logical node.
   */
 object AsOfApi {
 
   def asOfJoinPlanned(left: DataFrame, right: DataFrame, key: String,
                       timeCol: String, idCol: String, payload: String): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfStrategy
-    }
-    if (!spark.experimental.extraOptimizations.contains(PushFilterThroughAsOf)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ PushFilterThroughAsOf
-    }
+    install(spark.experimental)
     val lp = ColumnBridge.analyzed(left)
     // rename right columns behind fresh aliases: keeps this node's
     // captured references valid even when left/right share lineage
@@ -43,4 +37,16 @@ object AsOfApi {
       attr(lp, idCol), attr(rp, s"graft_r_$idCol"), pay, out)
     ColumnBridge.ofRows(spark, node)
   }
+
+  /** Appends the strategy and the rule to the session's hooks at most
+    * once. The check and the append hold the session's
+    * `ExperimentalMethods` lock, so concurrent callers can neither
+    * both append nor drop each other's append. */
+  private def install(ex: ExperimentalMethods): Unit =
+    ex.synchronized {
+      if (!ex.extraStrategies.contains(AsOfStrategy))
+        ex.extraStrategies = ex.extraStrategies :+ AsOfStrategy
+      if (!ex.extraOptimizations.contains(PushFilterThroughAsOf))
+        ex.extraOptimizations = ex.extraOptimizations :+ PushFilterThroughAsOf
+    }
 }

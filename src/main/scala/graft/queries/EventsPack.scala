@@ -157,8 +157,8 @@ object EventsPack extends QueryPack {
   }
 
   /** A3/A4 summary over the relational CV's per-fold scores
-    * (`tuners.py:144-145`: mean + quartile CI bounds), through the
-    * CrossVal.summarize macro shape. */
+    * (`tuners.py:144-145`: mean + exact quartile CI bounds), plus the
+    * mean fold RMSE. */
   def qCvSummary(s: SparkSession, d: String): DataFrame = {
     val perFold = qCvGroupMean(s, d)
     perFold.agg(

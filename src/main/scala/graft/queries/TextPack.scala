@@ -363,30 +363,15 @@ object TextPack extends QueryPack {
       b
     }
     val baseRef = Some(() => base)
-    val pool = graft.Pools.newPool(math.max(1, math.min(4, concurrency)))
-    try {
-      val fJac = pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = { sharedJaccardPairs(s, d, tagSuffix, baseRef); () }
-      })
-      val fMh = pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = { sharedMinhashCandidates(s, d, tagSuffix, baseRef); () }
-      })
-      // unwrap so callers (Bench's try/catch) see the real cause
-      def join(f: java.util.concurrent.Future[Unit]): Unit =
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      // no shdf task: the pair-table build materializes the df index
-      // from its own one groupBy(sh) aggregate (one corpus scan AND
-      // one aggregate for both tables — r17/r18); a separate pool task
-      // would race it into a second scan
-      val fWf = pool.submit(new java.util.concurrent.Callable[Unit] {
-        def call(): Unit = { sharedWinnowFps(s, d, tagSuffix, baseRef); () }
-      })
-      join(fJac); join(fMh); join(fWf)
-    } finally {
-      pool.shutdown()
-      Option(materialized.get()).foreach(_.unpersist())
-    }
+    // no shdf task: the pair-table build materializes the df index
+    // from its own one groupBy(sh) aggregate (one corpus scan AND
+    // one aggregate for both tables — r17/r18); a separate pool task
+    // would race it into a second scan
+    try graft.Pools.inOrder(math.min(4, concurrency))(Seq(
+      () => { sharedJaccardPairs(s, d, tagSuffix, baseRef); () },
+      () => { sharedMinhashCandidates(s, d, tagSuffix, baseRef); () },
+      () => { sharedWinnowFps(s, d, tagSuffix, baseRef); () }))
+    finally Option(materialized.get()).foreach(_.unpersist())
   }
 
   /** n-gram Jaccard near-dup: distinct 3-word shingles per doc, pairs

@@ -12,6 +12,42 @@ class AsOfSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  // first in the suite: when this is the JVM's first as-of call, class
+  // initialization holds all 8 threads at the install, which is what
+  // lets a check-then-set race show (warm calls rarely overlap there)
+  test("planned as-of installs its strategy and rule exactly once under concurrent callers") {
+    for (_ <- 0 until 10) {
+      // a fresh session: its experimental hooks start empty
+      val ns = spark.newSession()
+      val probe = ns.range(0, 20).select(
+        (col("id") % 3).as("k"), col("id").as("t"), col("id").as("id"))
+      val ref = probe.select(col("k"), col("t"), (col("id") + 100).as("id"))
+      val start = new java.util.concurrent.CyclicBarrier(8)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val threads = (0 until 8).map { _ =>
+        new Thread(() =>
+          try {
+            start.await()
+            graft.plans.AsOfApi.asOfJoinPlanned(probe, ref, "k", "t", "id", "id")
+            ()
+          } catch { case e: Throwable => errors.add(e); () })
+      }
+      threads.foreach(_.start())
+      threads.foreach(_.join(60000))
+      assert(errors.isEmpty, errors)
+      assert(ns.experimental.extraStrategies.count(_ == graft.plans.AsOfStrategy) === 1)
+      assert(ns.experimental.extraOptimizations
+        .count(_ == graft.plans.PushFilterThroughAsOf) === 1)
+    }
+    // the install keeps working on a session built without GraftExtensions
+    val ns = spark.newSession()
+    val probe = ns.range(0, 4).select(lit(1L).as("k"), col("id").as("t"), col("id").as("id"))
+    val planned = graft.plans.AsOfApi.asOfJoinPlanned(probe, probe, "k", "t", "id", "id")
+    assert(planned.queryExecution.executedPlan.toString.contains("AsOfJoin"))
+    assert(planned.select(col("id"), col("id_asof")).orderBy(col("id")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq === (0L until 4L).map(i => (i, i)))
+  }
+
   test("asOfJoin picks latest at-or-before, right wins ties, null before first") {
     val probe = Seq((1L, 5L, 100L), (1L, 15L, 101L), (1L, 25L, 102L), (2L, 9L, 103L))
       .toDF("k", "t", "id")

@@ -80,4 +80,14 @@ class SelectionSpec extends AnyFunSuite {
     }
     assert(scores.maxBy(_._2)._1 == 1) // adding noise does not help
   }
+
+  test("MDA releases every frame it persists: q_mda_ols leaves the cache empty") {
+    val cache = spark.sharedState.cacheManager
+    // start from an empty cache; nothing clears it after the query
+    spark.catalog.clearCache()
+    assert(cache.isEmpty)
+    val rows = queries.MlPack.qMdaOls(spark, TestSpark.sf).collect()
+    assert(rows.nonEmpty)
+    assert(cache.isEmpty)
+  }
 }
