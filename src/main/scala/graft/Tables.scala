@@ -13,18 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Tables {
 
-  /** Per-fixture schema memo: `spark.read.parquet` with no schema
-    * reads a footer and infers EAGERLY at every DataFrame creation —
-    * a driver-side file read the bench battery repeats ~750 times
-    * (each sweep re-builds each query's plan). The memo key is the
-    * same [[fingerprintKey]] the other derived caches use, so a
-    * fixture regeneration misses instead of serving a stale schema.
-    * Supplying the (self-described, unmodified) schema back to the
-    * reader changes nothing about the scan — pruning and pushdown are
-    * unaffected. */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
   /** Parquet reader confs that change what schema inference RETURNS
     * for the same footer bytes: under `nanosAsLong` a TIMESTAMP(NANOS)
     * column infers as LONG (the events loader's dispatch relies on
@@ -38,22 +26,16 @@ object Tables {
       .map(k => try spark.conf.get(k)
         catch { case _: Exception => "<unset>" }).mkString("|")
 
-  /** Fingerprint-memoized schema peek for a fixture path — ONE memo
-    * for both the batch loaders here and the streaming sources
-    * (EventStream delegates), so the invalidation story lives in one
-    * place. Driver-local paths fingerprint via the java.io walk;
-    * remote (S3/HDFS) paths via the Hadoop-FS twin (r15 — previously
-    * they skipped the memo and paid the footer read every call). A
-    * path that exists nowhere skips the memo so the PARQUET reader's
-    * error, not a stat error, is what the caller sees. */
+  /** Schema peek for a fixture path, through [[Memo]]: the batch
+    * loaders here and the streaming sources share it. `spark.read
+    * .parquet` with no schema reads a footer and infers at every
+    * DataFrame creation, which each sweep of the bench repeats for
+    * each query's plan; supplying the same schema back to the reader
+    * changes nothing about the scan (pruning and pushdown are
+    * unaffected). A path that exists nowhere raises the parquet
+    * reader's error. */
   def schemaOf(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType =
-    (try Some(fingerprintKeyAny(spark, path))
-     catch { case _: java.io.IOException => None }) match {
-      case Some(key) =>
-        schemaCache.computeIfAbsent(key + "#" + schemaConfKey(spark),
-          _ => spark.read.parquet(path).schema)
-      case None => spark.read.parquet(path).schema
-    }
+    Memo(spark, "schema#" + schemaConfKey(spark), path)(spark.read.parquet(path).schema)
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
@@ -92,10 +74,9 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
   /** Recursive per-file fingerprint of a fixture file or directory —
-    * the memo-key component that lets derived-layout caches
-    * (z-order/CSV/partitioned/evolution copies, stream schema peeks,
-    * SHAP fits) MISS after a fixture regeneration instead of silently
-    * serving state built from the old data (the test driver has
+    * the key component that lets [[Memo]] MISS after a fixture
+    * regeneration instead of silently serving state built from the
+    * old data (the test driver has
     * rewritten /root/testdata mid-session before, flipping parquet
     * physical types). A directory's own stat is not enough: rewriting
     * a part file in place leaves the dir mtime/size unchanged, so the
@@ -106,7 +87,7 @@ object Tables {
     *
     * LOCAL-FILESYSTEM ONLY: the walk stats via java.io.File, so a
     * path on a remote FS (S3/HDFS) yields one constant digest per
-    * path — valid as a cache key never. Callers should use
+    * path — valid as a memo key never. Callers use
     * [[fingerprintKeyAny]], which dispatches here for driver-local
     * paths and to the Hadoop-FS twin ([[fingerprintKeyHadoop]]) for
     * every other Spark-visible filesystem. */

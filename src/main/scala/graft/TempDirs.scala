@@ -1,12 +1,10 @@
 package graft
 
-/** JVM-lifetime temp directories for memoized derived layouts (the
-  * z-ordered copy, the day-partitioned copy, the CSV round-trip copy,
-  * streaming-MERGE snapshots). One shared shutdown hook deletes every
-  * registered dir — previously each site re-implemented the
-  * createTempDirectory + addShutdownHook + recursive-rm block and the
-  * copies had diverged (one missed the null-guard on `listFiles`,
-  * which NPEs in the hook on an already-deleted dir). */
+/** JVM-lifetime temp directories on the driver's local disk: scratch
+  * output, stream checkpoints and streaming-MERGE snapshots. One shared
+  * shutdown hook deletes every registered dir. Derived tables that
+  * queries reuse live in [[Memo.table]] instead, under the warehouse
+  * dir. */
 object TempDirs {
   private val dirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   private lazy val hookInstalled: Boolean = {
@@ -33,6 +31,13 @@ object TempDirs {
     val p = java.nio.file.Files.createTempDirectory(parent, prefix)
     dirs.add(p)
     p
+  }
+
+  /** Runs `body` on a fresh [[create]]d dir and deletes the dir when
+    * `body` returns or throws. */
+  def scoped[A](prefix: String)(body: java.nio.file.Path => A): A = {
+    val dir = create(prefix)
+    try body(dir) finally deleteRecursively(dir)
   }
 
   /** Best-effort recursive delete (also used to prune superseded

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.operators.EraRank
 
 /** Core relational battery (SURVEY §2.2-§2.7) on the TPC-H-ish star
@@ -1005,33 +1005,16 @@ object CorePack extends QueryPack {
     * only serves its leading column), which `ZOrderSpec` proves from
     * the written parquet footers. Quantities are integer-valued
     * doubles summed as BIGINT — exact on both engines. */
-  /** Per-source memo of the one-time z-ordered copy, keyed on the
-    * lineitem fingerprint (r10): a regenerated fixture misses the
-    * memo and rebuilds instead of serving the old data's layout.
-    * ConcurrentHashMap.computeIfAbsent (NOT TrieMap.getOrElseUpdate,
-    * which may run the thunk twice under a concurrent first call):
-    * the thunk is a full z-ordered write of lineitem, so a duplicate
-    * evaluation would burn a redundant write job and leak a temp dir
-    * until JVM shutdown. computeIfAbsent blocks the second caller
-    * until the first write finishes — at-most-once by contract. */
-  private val zorderDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def zorderedLineitem(s: SparkSession, d: String): DataFrame = {
-    val path = zorderDirs.computeIfAbsent(
-      Tables.fingerprintKey(s"$d/lineitem.parquet"), _ => {
-      val out = graft.TempDirs.create("graft_zorder_")
-      val p = out.toAbsolutePath.toString
+  private def zorderedLineitem(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Memo.table(s, "zorder", s"$d/lineitem.parquet") { out =>
       graft.operators.ZOrder.writeZOrdered(
-        Tables.lineitem(s, d), "l_partkey", "l_suppkey", p,
+        Tables.lineitem(s, d), "l_partkey", "l_suppkey", out,
         bits = 12, blockSize = 128 * 1024)
-      p
     })
-    s.read.parquet(path)
-  }
 
   /** S1/S2 under the driver gate — CSV sink + scan round-trip: the
-    * customer projection is written ONCE per dir as header CSV (memo
-    * + shutdown-hook cleanup, the z-order convention), read back with
+    * customer projection is written ONCE per dir as header CSV
+    * ([[Memo.table]]), read back with
     * an explicit schema (production contract: never infer on a
     * 100 TB scan — inference is a full extra pass), and aggregated;
     * the oracle runs the same aggregate on the original parquet, so
@@ -1040,20 +1023,12 @@ object CorePack extends QueryPack {
     * is 2-decimal so the rounded sum is grid-exact on both engines.
     * At scale the same pair is a partitioned multi-file write and a
     * schema'd parallel scan — same code, no `coalesce(1)`. */
-  private val csvDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   def qCsvRoundtrip(s: SparkSession, d: String): DataFrame = {
-    // fingerprint-keyed (not path-keyed) so a regenerated fixture
-    // misses the memo instead of serving a copy of the old data —
-    // the schemaOf/memoizedTable convention
-    val path = csvDirs.computeIfAbsent(
-      Tables.fingerprintKey(s"$d/customer.parquet"), _ => {
-      val out = graft.TempDirs.create("graft_csv_rt_")
+    val path = Memo.table(s, "csv_rt", s"$d/customer.parquet") { out =>
       Tables.customer(s, d)
         .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-        .write.option("header", "true").mode("overwrite")
-        .csv(out.toAbsolutePath.toString)
-      out.toAbsolutePath.toString
-    })
+        .write.option("header", "true").mode("overwrite").csv(out)
+    }
     s.read.option("header", "true")
       .schema("c_custkey LONG, c_mktsegment STRING, c_acctbal DOUBLE")
       .csv(path)
@@ -1067,8 +1042,7 @@ object CorePack extends QueryPack {
     * shards, annotation dumps, eval sets are JSONL before they are
     * anything else). Same contract as [[qCsvRoundtrip]]: the
     * documents projection is written ONCE per dir as JSONL
-    * (fingerprint-memoized via the r15 local/remote dispatcher +
-    * shutdown-hook cleanup), read back with an EXPLICIT schema
+    * ([[Memo.table]]), read back with an EXPLICIT schema
     * (never infer on a 100 TB scan — JSON inference is a full extra
     * pass over every byte), and aggregated; the oracle runs the same
     * aggregate on the original parquet, so the writer→reader path
@@ -1077,16 +1051,12 @@ object CorePack extends QueryPack {
     * pair is a partitioned multi-file write and a schema'd parallel
     * scan of splittable line-delimited text — same code, no
     * `coalesce(1)`. */
-  private val jsonlDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   def qJsonlRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val path = jsonlDirs.computeIfAbsent(
-      Tables.fingerprintKeyAny(s, s"$d/documents.parquet"), _ => {
-      val out = graft.TempDirs.create("graft_jsonl_rt_")
+    val path = Memo.table(s, "jsonl_rt", s"$d/documents.parquet") { out =>
       Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        .write.mode("overwrite").json(out.toAbsolutePath.toString)
-      out.toAbsolutePath.toString
-    })
+        .write.mode("overwrite").json(out)
+    }
     s.read
       .schema("doc_id LONG, lang STRING, source STRING, n_chars LONG")
       .json(path)
@@ -1099,8 +1069,8 @@ object CorePack extends QueryPack {
     * format after Parquet and the text formats (warehouses migrating
     * from Hive ecosystems still hand ORC to ingest pipelines). Same
     * contract as [[qCsvRoundtrip]]/[[qJsonlRoundtrip]]: a lineitem
-    * projection written ONCE per dir as ORC (fingerprint-memoized +
-    * shutdown-hook cleanup), read back, aggregated; the oracle runs
+    * projection written ONCE per dir as ORC ([[Memo.table]]),
+    * read back, aggregated; the oracle runs
     * the same aggregate on the original parquet, so the ORC
     * writer→reader path must be value-exact (ORC is typed — longs
     * and doubles survive bit-exactly; the 2-decimal quantity sum is
@@ -1108,16 +1078,12 @@ object CorePack extends QueryPack {
     * 100 TB the read parallelizes exactly like Parquet — predicate
     * pushdown and column pruning included (Spark's native
     * OrcFileFormat). */
-  private val orcDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   def qOrcRoundtrip(s: SparkSession, d: String): DataFrame = {
-    val path = orcDirs.computeIfAbsent(
-      Tables.fingerprintKeyAny(s, s"$d/lineitem.parquet"), _ => {
-      val out = graft.TempDirs.create("graft_orc_rt_")
+    val path = Memo.table(s, "orc_rt", s"$d/lineitem.parquet") { out =>
       Tables.lineitem(s, d)
         .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
-        .write.mode("overwrite").orc(out.toAbsolutePath.toString)
-      out.toAbsolutePath.toString
-    })
+        .write.mode("overwrite").orc(out)
+    }
     s.read.orc(path)
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"), round(sum(col("l_quantity")), 2).as("sum_qty"),
@@ -1140,20 +1106,16 @@ object CorePack extends QueryPack {
     * default state of any long-lived dataset; the scan stays fully
     * parallel — schema reconciliation is a footer-only planning
     * step, not a data pass. */
-  private val evoDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
   def qSchemaEvolution(s: SparkSession, d: String): DataFrame = {
-    val path = evoDirs.computeIfAbsent(
-      Tables.fingerprintKey(s"$d/orders.parquet"), _ => {
-      val out = graft.TempDirs.create("graft_evo_").toAbsolutePath.toString
+    val path = Memo.table(s, "evo", s"$d/orders.parquet") { out =>
       val o = Tables.orders(s, d)
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_totalprice"))
-        .write.parquet(s"$out/g1")
+        .write.mode("overwrite").parquet(s"$out/g1")
       o.filter(col("o_orderkey") % 2 === 1)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-        .write.parquet(s"$out/g2")
-      out
-    })
+        .write.mode("overwrite").parquet(s"$out/g2")
+    }
     // bucket on the GENERATION (key parity is the g1/g2 split marker),
     // not on null-ness of the evolved column: a genuinely-null status
     // on a g2 row must land in its own null group exactly as the

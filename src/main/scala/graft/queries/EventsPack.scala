@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Memo, Tables}
 
 /** Event-table coverage: JSON props (F-json), date bucketing (the era
   * generalization, SURVEY §1.1), tumbling windows (§2.10 batch form),
@@ -641,17 +641,13 @@ object EventsPack extends QueryPack {
     * important scan optimization at 100 TB (a day-partitioned event
     * lake answers a one-day query by listing one directory, not
     * scanning the fleet). The events table is written ONCE per dir
-    * partitioned by day (memo + shutdown-hook cleanup, the z-order
-    * convention), then scanned with a `day = 5` filter that Catalyst
-    * resolves against the partition column — zero data files outside
-    * `day=5` are opened (`PartitionPruneSpec` asserts it from
-    * `inputFiles`). The oracle runs the same day filter on the
+    * partitioned by day ([[Memo.table]]), then scanned with a
+    * `day = 5` filter that Catalyst resolves against the partition
+    * column — zero data files outside `day=5` are opened
+    * (`PartitionPruneSpec` asserts it from `inputFiles`). The oracle runs the same day filter on the
     * original table, so layout changes can never change answers. */
-  private val dayPartDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private[graft] def dayPartitionedEvents(s: SparkSession, d: String): DataFrame = {
-    val path = dayPartDirs.computeIfAbsent(
-      Tables.fingerprintKey(s"$d/events.parquet"), _ => {
-      val out = graft.TempDirs.create("graft_daypart_")
+  private[graft] def dayPartitionedEvents(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Memo.table(s, "daypart", s"$d/events.parquet") { out =>
       Tables.events(s, d)
         // no cast on the partition column: partitionBy stores values
         // in directory names and read-back inference yields int
@@ -659,12 +655,8 @@ object EventsPack extends QueryPack {
         .select(col("user_id").cast("long").as("user_id"),
           col("event_type"), col("value"),
           dayofmonth(col("ts")).as("day"))
-        .write.partitionBy("day").mode("overwrite")
-        .parquet(out.toAbsolutePath.toString)
-      out.toAbsolutePath.toString
+        .write.partitionBy("day").mode("overwrite").parquet(out)
     })
-    s.read.parquet(path)
-  }
 
   def qPartitionScan(s: SparkSession, d: String): DataFrame =
     dayPartitionedEvents(s, d)

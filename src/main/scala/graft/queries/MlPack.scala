@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.ml.{Clustering, CrossVal, FeatureSelection, Scoring, Transform, TreeShap}
 
 /** The compound ML macros (SURVEY §2.9) surfaced as driver-checkable
@@ -97,34 +97,29 @@ object MlPack extends QueryPack {
     * so `q_shap_rf` and its oracle twin `q_shap_local_accuracy` can
     * never drift apart on sample cap, seed, or tree shape — the
     * twin's oracle contract is that it checks THIS fit's explainer. */
-  private val shapFitCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[(Long, Array[Double])], org.apache.spark.ml.regression.RandomForestRegressionModel)]()
   private def shapFit(s: SparkSession, d: String): (Array[(Long, Array[Double])], org.apache.spark.ml.regression.RandomForestRegressionModel) =
-    // fingerprint-keyed memo: both SHAP queries run per bench sweep,
-    // and the fit is deterministic (seeded) — one RF fit per fixture
-    // generation instead of one per query execution; a regenerated
-    // fixture misses the key and refits. The memoized VALUE is
-    // session-independent (the collected 1000-row sample + the fitted
-    // model, both plain driver objects) — an earlier version cached
-    // the sample DataFrame, which a restarted/second SparkSession
-    // would have choked on
-    shapFitCache.computeIfAbsent(
-      graft.Tables.fingerprintKey(s"$d/embeddings.parquet"), _ => {
-        import org.apache.spark.ml.feature.VectorAssembler
-        import org.apache.spark.ml.regression.RandomForestRegressor
-        val ff = featureFrame(s, d).orderBy(col("vec_id")).limit(1000)
-        // single bounded collect keeps ids and feature rows aligned
-        val rows = ff.select((col("vec_id").cast("long") +: featCols.map(col)): _*)
-          .collect()
-          .map(r => (r.getLong(0), Array.tabulate(featCols.length)(i => r.getDouble(i + 1))))
-        val va = new VectorAssembler()
-          .setInputCols(featCols.toArray).setOutputCol("graft_fv")
-        val model = new RandomForestRegressor()
-          .setFeaturesCol("graft_fv").setLabelCol("target")
-          .setNumTrees(10).setMaxDepth(4).setSeed(42)
-          .fit(va.transform(ff))
-        (rows, model)
-      })
+    // both SHAP queries run per bench sweep, and the fit is
+    // deterministic (seeded): one RF fit per fixture generation. The
+    // memoized VALUE is session-independent (the collected 1000-row
+    // sample + the fitted model, both plain driver objects) — an
+    // earlier version cached the sample DataFrame, which a
+    // restarted/second SparkSession would have choked on
+    Memo(s, "shap_fit", s"$d/embeddings.parquet") {
+      import org.apache.spark.ml.feature.VectorAssembler
+      import org.apache.spark.ml.regression.RandomForestRegressor
+      val ff = featureFrame(s, d).orderBy(col("vec_id")).limit(1000)
+      // single bounded collect keeps ids and feature rows aligned
+      val rows = ff.select((col("vec_id").cast("long") +: featCols.map(col)): _*)
+        .collect()
+        .map(r => (r.getLong(0), Array.tabulate(featCols.length)(i => r.getDouble(i + 1))))
+      val va = new VectorAssembler()
+        .setInputCols(featCols.toArray).setOutputCol("graft_fv")
+      val model = new RandomForestRegressor()
+        .setFeaturesCol("graft_fv").setLabelCol("target")
+        .setNumTrees(10).setMaxDepth(4).setSeed(42)
+        .fit(va.transform(ff))
+      (rows, model)
+    }
 
   def qShapRf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.operators.Multimodal
 import graft.operators.Multimodal.MediaPayload
 
@@ -22,45 +22,29 @@ import graft.operators.Multimodal.MediaPayload
   */
 object MultimodalPack extends QueryPack {
 
-  /** Memoized binary-fixture tables: PNG-encoding 6k images per query
-    * PER SWEEP was fixture GENERATION billed to the operator under
-    * test (r14 bench: the family cost 21 s, mostly `ImageIO.write`).
-    * A real pipeline reads image bytes from storage, so each payload
-    * kind is synthesized ONCE per data dir into a TempDirs parquet
-    * (the zorderDirs/pairTableDirs derived-layout pattern, fingerprint
-    * keyed so a fixture rewrite misses) and every query reads the
-    * binary column back — the DECODE kernels, the thing the queries
-    * actually check, still run on every execution. */
-  private val payloadDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  /** Binary-fixture tables: PNG-encoding 6k images per query PER
+    * SWEEP was fixture GENERATION billed to the operator under test
+    * (r14 bench: the family cost 21 s, mostly `ImageIO.write`). A real
+    * pipeline reads image bytes from storage, so each payload kind is
+    * synthesized ONCE per data dir ([[Memo.table]]) and every query
+    * reads the binary column back — the DECODE kernels, the thing the
+    * queries actually check, still run on every execution. */
   private def memoizedPayloads(s: SparkSession, d: String, kind: String)
-                              (build: => Dataset[MediaPayload]): DataFrame =
-    // fingerprintKeyAny: local walk for driver-local dirs, Hadoop-FS
-    // stat for remote ones (a remote dir previously degenerated to one
-    // constant digest — stale payloads across fixture rewrites, r15
-    // ADVICE). A path that stats nowhere skips the memo entirely so
-    // the documents reader's own error surfaces from `build`.
-    (try Some(Tables.fingerprintKeyAny(s, s"$d/documents.parquet"))
-     catch { case _: java.io.IOException => None }) match {
-      case Some(fp) =>
-        val dir = payloadDirs.computeIfAbsent(s"$fp#$kind", _ => {
-          val out = graft.TempDirs.create(s"graft_media_$kind").toString
-          build.toDF().write.mode("overwrite").parquet(out)
-          out
-        })
-        // r17: spread the read-back before the decode kernels (the
-        // docsSpread rule): the memoized table is a handful of files,
-        // and file-split packing (openCostInBytes) lands them in 2-4
-        // scan tasks — serializing the per-row codec work, the actual
-        // cost of every query in this pack. One tiny payload shuffle
-        // buys full decode parallelism; decode stays row-local.
-        // r18: explicit 8 KB/task target — codec kernels cost far
-        // more per byte than the hash kernels the adaptive default is
-        // sized for, so the decode keeps (near-)full width at any
-        // payload size.
-        Tables.spread(s, s.read.parquet(dir), targetBytesPerTask = 8192L)
-      case None => build.toDF()
+                              (build: => Dataset[MediaPayload]): DataFrame = {
+    val dir = Memo.table(s, s"media_$kind", s"$d/documents.parquet") { out =>
+      build.toDF().write.mode("overwrite").parquet(out)
     }
+    // r17: spread the read-back before the decode kernels (the
+    // docsSpread rule): the memoized table is a handful of files, and
+    // file-split packing (openCostInBytes) lands them in 2-4 scan
+    // tasks — serializing the per-row codec work, the actual cost of
+    // every query in this pack. One tiny payload shuffle buys full
+    // decode parallelism; decode stays row-local. r18: explicit
+    // 8 KB/task target — codec kernels cost far more per byte than the
+    // hash kernels the adaptive default is sized for, so the decode
+    // keeps (near-)full width at any payload size.
+    Tables.spread(s, s.read.parquet(dir), targetBytesPerTask = 8192L)
+  }
 
   /** Synthesized single-image fixture: one real PNG per doc. Built in
     * a typed map (partition-local; only `doc_id` is scanned). */

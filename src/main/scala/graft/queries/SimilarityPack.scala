@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.operators.{Ann, Pq}
 
 /** Similarity search over the `embeddings` table (north-star ANN
@@ -43,15 +43,12 @@ object SimilarityPack extends QueryPack {
     b
   }
 
-  /** Per-dir embedding-count memo for the scale-relative LSH width
-    * (same same-JVM dir-immutability assumption as
-    * [[TextPack]]'s docCounts memo). */
-  private val embCounts =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** Embedding count of a data dir: sizes the LSH width, the cell cap
+    * and the IVF k. */
+  private def embCount(s: SparkSession, d: String): Long =
+    Memo(s, "emb_count", s"$d/embeddings.parquet")(Tables.embeddings(s, d).count())
 
-  private def bitsFor(s: SparkSession, d: String): Int =
-    lshBitsFor(embCounts.computeIfAbsent(d,
-      _ => Tables.embeddings(s, d).count()))
+  private def bitsFor(s: SparkSession, d: String): Int = lshBitsFor(embCount(s, d))
 
   /** Deterministic scrambled-hash hyperplane weight, plane index q:
     * w_q(pos) = (((pos*1000003 + q) * 2654435761) mod 2^32) mod 7 - 3.
@@ -419,8 +416,7 @@ object SimilarityPack extends QueryPack {
       .withColumn("graft_bkts", signBuckets(col("v"), bits, 4))
       .select(col("vec_id"),
         posexplode(col("graft_bkts")).as(Seq("graft_band", "graft_bkt")))
-    val cap = maxCellFor(embCounts.computeIfAbsent(d,
-      _ => Tables.embeddings(s, d).count()), bits)
+    val cap = maxCellFor(embCount(s, d), bits)
     val cells = bk.groupBy(col("graft_band"), col("graft_bkt"))
       .agg(count(lit(1)).as("graft_cn"))
       .filter(col("graft_cn") <= cap)
@@ -563,9 +559,9 @@ object SimilarityPack extends QueryPack {
     * at sf0.1. */
   private def ivfPqSeededAdc(s: SparkSession, d: String,
                              tagSuffix: String = ""): DataFrame =
-    SilverTables.memoized(s, "adc" + tagSuffix, d + "@" + embFingerprint(s, d)) { out =>
+    s.read.parquet(Memo.table(s, "adc" + tagSuffix, s"$d/embeddings.parquet") { out =>
       ivfPqSeededAdcBuild(s, d).write.mode("overwrite").parquet(out)
-    }
+    })
 
   /** Bench hook: materialize the shared ADC candidate table so its
     * cost is a visible line item (`_shared_adc`), not silently folded
@@ -844,9 +840,6 @@ object SimilarityPack extends QueryPack {
     * both sides); `requireK` pins the width the static oracle
     * hardcodes — ScaleProbe passes None and gets the adaptive,
     * two-level form. */
-  private def embFingerprint(s: SparkSession, d: String): String =
-    graft.Tables.fingerprintKeyAny(s, s"$d/embeddings.parquet")
-
   /** The FLAT candidate relation (q_id, n_id, cos) — pure Catalyst:
     * streams need the per-row probe kernel (no windows on a stream),
     * but a batch self-join ranks relationally — ONE
@@ -896,8 +889,7 @@ object SimilarityPack extends QueryPack {
     * where each cell must pay its own build. */
   private def sharedKnnCandidates(s: SparkSession, d: String, k: Int,
                                   tagSuffix: String = ""): DataFrame =
-    SilverTables.memoized(s, "knncand" + tagSuffix,
-      d + "@" + embFingerprint(s, d)) { out =>
+    s.read.parquet(Memo.table(s, "knncand" + tagSuffix, s"$d/embeddings.parquet") { out =>
       // persist scoped to the one materializing write: both rank
       // subsets read the same candidate relation, and unpersisted the
       // crossJoin+window pipeline would execute twice
@@ -919,7 +911,7 @@ object SimilarityPack extends QueryPack {
         .unionAll(seedTop)
         .write.mode("overwrite").parquet(out)
       cand.unpersist()
-    }
+    })
 
   /** Bench hook: materialize the shared kNN candidate table so its
     * cost is a visible line item, not silently folded into whichever
@@ -942,8 +934,7 @@ object SimilarityPack extends QueryPack {
   private def resolveK(s: SparkSession, d: String,
                        requireK: Option[Int] = None,
                        queryName: String = "knn"): Int = {
-    val k = graft.streaming.EventStream.ivfKFor(embCounts.computeIfAbsent(d,
-      _ => Tables.embeddings(s, d).count()))
+    val k = graft.streaming.EventStream.ivfKFor(embCount(s, d))
     requireK.foreach { want =>
       require(k == want, s"$queryName oracle pins k=$want centroids but " +
         s"ivfKFor resolved k=$k; parameterize the oracle before gating this SF")

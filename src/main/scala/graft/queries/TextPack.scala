@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Memo, Tables}
 import graft.operators.TextOps
 
 /** Deduplication + text analysis over `documents` — the
@@ -96,18 +96,10 @@ object TextPack extends QueryPack {
     * [[maxShingleDfFor]] of the corpus doc count at call time. */
   val ScaleRelativeDf: Long = -1L
 
-  /** Per-dir doc-count memo for the scale-relative df floor. SAME-JVM
-    * IMMUTABILITY ASSUMPTION: like the memoized pair tables
-    * ([[memoizedTable]]), a data dir is assumed not to be overwritten
-    * or appended within one JVM — the memo would otherwise keep a
-    * stale corpus size. Rewriting a dir in-session requires a new dir
-    * name (the fixture suites' convention) or a JVM restart. */
-  private val docCounts = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
   private def resolveMaxDf(s: SparkSession, d: String, maxDf: Long): Long =
     if (maxDf != ScaleRelativeDf) maxDf
-    else maxShingleDfFor(
-      docCounts.computeIfAbsent(d, _ => Tables.documents(s, d).count()))
+    else maxShingleDfFor(Memo(s, "doc_count", s"$d/documents.parquet")(
+      Tables.documents(s, d).count()))
 
   /** Bucket size above which an LSH bucket (band signature) is
     * dropped before the candidate self-join: a degenerate bucket
@@ -199,35 +191,18 @@ object TextPack extends QueryPack {
                    maxDf: Long = ScaleRelativeDf): DataFrame =
     jaccardPairsFrom(shingleRelation(s, d, maxDf), minJac)
 
-  /** Content fingerprint of the `documents` table backing a data dir,
-    * via [[graft.Tables.fingerprintKeyAny]] (r15: the shared per-file
-    * tuple fold — local walk or Hadoop-FS stat — replaces this file's
-    * own conflated count+bytes+max-mtime digest, which could false-hit
-    * on a same-sized rewrite within one mtime tick): a rewritten
-    * dataset at the same path invalidates the memoized pair table
-    * instead of silently serving stale results. */
-  private def docsFingerprint(s: SparkSession, d: String): String =
-    graft.Tables.fingerprintKeyAny(s, s"$d/documents.parquet")
-
   /** The candidate-pair relation SHARED by `q_ngram_jaccard` and
     * `q_dedup_apply`: the first query to run materializes it once as
-    * a parquet table (pipeline-style checkpoint, keyed on data dir +
-    * content fingerprint per JVM); both queries derive from that table
-    * instead of each re-running the shingle → self-join pipeline — the
-    * twice-paid cost a real pipeline would never pay. Survives
-    * `catalog.clearCache()` because it is a table, not a cached plan.
-    * The table lives under the Spark warehouse dir (executor-visible
-    * on a real cluster, unlike a driver-local java.io tempdir) and is
-    * deleted by a JVM shutdown hook. Bench times the materialization
-    * as its own line item via [[prepareShared]]. */
-  private def memoizedTable(s: SparkSession, d: String, tag: String)
-                           (build: String => Unit): DataFrame =
-    SilverTables.memoized(s, tag, d + "@" + docsFingerprint(s, d))(build)
-
+    * a parquet table ([[Memo.table]]); both queries derive from that
+    * table instead of each re-running the shingle → self-join
+    * pipeline — the twice-paid cost a real pipeline would never pay.
+    * Survives `catalog.clearCache()` because it is a table, not a
+    * cached plan. Bench times the materialization as its own line
+    * item via [[prepareShared]]. */
   private def sharedJaccardPairs(s: SparkSession, d: String,
                                  tagSuffix: String = "",
                                  base: Option[() => DataFrame] = None): DataFrame =
-    memoizedTable(s, d, "pairs" + tagSuffix) { out =>
+    s.read.parquet(Memo.table(s, "pairs" + tagSuffix, s"$d/documents.parquet") { out =>
       // r18 build shape: ONE corpus hashing pass (the shared
       // [[hashedDocs]] base when prepareShared supplies it, an owned
       // persisted copy otherwise), and ONE groupBy(sh) aggregate whose
@@ -254,7 +229,7 @@ object TextPack extends QueryPack {
       rep.unpersist()
       dsh.unpersist()
       if (owned) { b.unpersist(); () }
-    }
+    })
 
   /** The repeated-shingle DOCUMENT-FREQUENCY table — (sh, graft_df,
     * graft_first_doc) for the df > 1 minority only (a natural-text
@@ -279,13 +254,13 @@ object TextPack extends QueryPack {
   private def sharedShingleDfFrom(s: SparkSession, d: String,
                                   raw: => DataFrame,
                                   tagSuffix: String = ""): DataFrame =
-    memoizedTable(s, d, "shdf" + tagSuffix) { out =>
+    s.read.parquet(Memo.table(s, "shdf" + tagSuffix, s"$d/documents.parquet") { out =>
       raw
         .groupBy(col("sh")).agg(count(lit(1)).as("graft_df"),
           min(col("doc_id")).as("graft_first_doc"))
         .filter(col("graft_df") > 1L)
         .write.mode("overwrite").parquet(out)
-    }
+    })
 
   /** Write-or-skip of the df index from the pair build's ALREADY
     * AGGREGATED (and persisted) repeated-shingle relation — the r18
@@ -295,10 +270,10 @@ object TextPack extends QueryPack {
   private def sharedShingleDfFromRep(s: SparkSession, d: String,
                                      rep: DataFrame,
                                      tagSuffix: String = ""): DataFrame =
-    memoizedTable(s, d, "shdf" + tagSuffix) { out =>
+    s.read.parquet(Memo.table(s, "shdf" + tagSuffix, s"$d/documents.parquet") { out =>
       rep.select(col("sh"), col("graft_df"), col("graft_first_doc"))
         .write.mode("overwrite").parquet(out)
-    }
+    })
 
   /** The minhash CANDIDATE table shared by `q_minhash_lsh`,
     * `q_minhash_est` and `q_lsh_recall` — same checkpoint rationale
@@ -306,7 +281,7 @@ object TextPack extends QueryPack {
   private def sharedMinhashCandidates(s: SparkSession, d: String,
                                       tagSuffix: String = "",
                                       base: Option[() => DataFrame] = None): DataFrame =
-    memoizedTable(s, d, "mhcand" + tagSuffix) { out =>
+    s.read.parquet(Memo.table(s, "mhcand" + tagSuffix, s"$d/documents.parquet") { out =>
       // the persist is scoped to this one materializing action: the
       // stacked relation feeds the hot-bucket aggregate and both
       // self-join sides, then unpersists (no leaked cached relation
@@ -321,7 +296,7 @@ object TextPack extends QueryPack {
         .write.mode("overwrite").parquet(out)
       stacked.unpersist()
       ()
-    }
+    })
 
   /** Force the shared tables for `d` to exist. Bench calls this
     * before timing queries so the shared materialization cost shows
@@ -1266,11 +1241,11 @@ object TextPack extends QueryPack {
   private def sharedWinnowFps(s: SparkSession, d: String,
                               tagSuffix: String = "",
                               base: Option[() => DataFrame] = None): DataFrame =
-    memoizedTable(s, d, "wfps" + tagSuffix) { out =>
+    s.read.parquet(Memo.table(s, "wfps" + tagSuffix, s"$d/documents.parquet") { out =>
       base.map(b => winnowFpsOfHashed(b()))
         .getOrElse(winnowFpsOf(docsSpread(s, d)))
         .write.mode("overwrite").parquet(out)
-    }
+    })
 
   private def winnowFpsOf(docs: DataFrame): DataFrame =
     winnowFpsFrom(winnowFingerprints(docs))

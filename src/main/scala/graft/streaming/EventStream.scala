@@ -12,33 +12,24 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Streami
   */
 object EventStream {
 
-  /** The file stream source requires a directory; the fixtures are
-    * single files, so stage each behind a symlink in a temp dir (in
-    * production the source is already a directory of arriving files).
-    * Memoized per path — the 8-query × 2-pass bench otherwise creates
-    * 16 identical staging dirs; computeIfAbsent for at-most-once
-    * creation (same JVM-lifetime immutability convention as the
-    * TextPack/zorder memos). */
-  private val stagedDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def stagedStreamPath(path: String): String =
-    stagedDirs.computeIfAbsent(path, _ => {
+  /** A file stream over a fixture table. The file stream source needs
+    * a directory and an explicit schema; the fixtures are single files,
+    * so each is staged behind a symlink in a temp dir, once per fixture
+    * content (in production the source is already a directory of
+    * arriving files), and the schema comes from
+    * [[graft.Tables.schemaOf]]. */
+  private def fixtureStream(spark: SparkSession, path: String): DataFrame = {
+    val staged = graft.Memo(spark, "stream_src", path) {
       val src = new java.io.File(path)
       if (src.isFile) {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_stream_src")
+        val tmp = graft.TempDirs.create("graft_stream_src")
         java.nio.file.Files.createSymbolicLink(
           tmp.resolve(src.getName), src.toPath.toAbsolutePath)
         tmp.toString
       } else path
-    })
-
-  /** Schema peek for a streaming source (which needs an explicit
-    * schema): delegates to the engine's ONE fingerprint-keyed memo,
-    * [[graft.Tables.schemaOf]] — its recursive per-file fingerprint is
-    * what lets a mid-session fixture rewrite miss the cache instead of
-    * feeding readStream a stale schema (r13 consolidated the two
-    * previously-duplicated caches). */
-  private def schemaOf(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType =
-    graft.Tables.schemaOf(spark, path)
+    }
+    spark.readStream.schema(graft.Tables.schemaOf(spark, path)).parquet(staged)
+  }
 
   /** Streaming plan over the events fixture directory. The file source
     * replays the parquet as a stream; schema comes from a batch peek
@@ -74,9 +65,7 @@ object EventStream {
                             index: Option[DataFrame] = None): DataFrame = {
     val hist = index.getOrElse(
       graft.queries.TextPack.minhashIndex(spark, dir, col("doc_id") % 5 =!= 0))
-    val path = s"$dir/documents.parquet"
-    val schema = schemaOf(spark, path)
-    val live = spark.readStream.schema(schema).parquet(stagedStreamPath(path))
+    val live = fixtureStream(spark, s"$dir/documents.parquet")
       .filter(col("doc_id") % 5 === 0)
     neardupJoin(live, hist)
   }
@@ -130,12 +119,11 @@ object EventStream {
     * exactly what production runs. */
   def runNeardupOnce(spark: SparkSession, dir: String,
                      name: String = "graft_stream_neardup"): DataFrame = {
-    val silver = graft.TempDirs.create("graft_neardup_silver")
-    val sink = try {
+    val sink = graft.TempDirs.scoped("graft_neardup_silver") { silver =>
       val hist = writeNeardupIndex(spark, dir, silver.toString)
       drainToMemory(spark, neardupAgainstHistory(spark, dir, Some(hist)), name,
         mode = "append")
-    } finally graft.TempDirs.deleteRecursively(silver)
+    }
     sink.select(col("doc_id"), col("hist_id"), col("n_match")).distinct()
       .groupBy(col("doc_id"))
       .agg(min(col("hist_id")).as("rep"), count(lit(1)).as("n_cand"),
@@ -333,17 +321,14 @@ object EventStream {
 
   def annAgainstHistory(spark: SparkSession, dir: String,
                         index: (DataFrame, DataFrame)): DataFrame = {
-    val path = s"$dir/embeddings.parquet"
-    val schema = schemaOf(spark, path)
-    val live = spark.readStream.schema(schema).parquet(stagedStreamPath(path))
+    val live = fixtureStream(spark, s"$dir/embeddings.parquet")
       .filter(col("vec_id") % 5 === 0)
     annProbeJoin(live, index._1, index._2)
   }
 
   def runAnnOnce(spark: SparkSession, dir: String,
-                 name: String = "graft_stream_ann"): DataFrame = {
-    val silver = graft.TempDirs.create("graft_ann_silver")
-    try {
+                 name: String = "graft_stream_ann"): DataFrame =
+    graft.TempDirs.scoped("graft_ann_silver") { silver =>
       // oracle-gated path: the DuckDB oracle seeds exactly 16
       // centroids, so pin k=16 here (see writeAnnIndex scaladoc)
       val ix = writeAnnIndex(spark, dir, silver.toString, requireK = Some(16))
@@ -355,13 +340,12 @@ object EventStream {
         .filter(col("rank") <= 5)
         .orderBy(col("q_id"), col("rank"))
         // the reduction reads the memory sink, but the plan's SILVER
-        // scans die with the temp dir below — materialize eagerly
+        // scans die with the scoped dir — materialize eagerly
         // (runNeardupOnce's reduction touches only the sink, so it
         // skips this; here `posting` feeds nothing post-drain, but
         // localCheckpoint also guards the sink against name reuse)
         .localCheckpoint(true)
-    } finally graft.TempDirs.deleteRecursively(silver)
-  }
+    }
 
   /** STREAMING QUALITY GATE — score an arriving document stream
     * against a BATCH-FITTED per-language unigram LM and keep/drop by
@@ -384,9 +368,7 @@ object EventStream {
     * mirroring production routing to a manual queue. */
   def qualityGate(spark: SparkSession, dir: String,
                   model: DataFrame, thr: DataFrame): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val schema = schemaOf(spark, path)
-    val live = spark.readStream.schema(schema).parquet(stagedStreamPath(path))
+    val live = fixtureStream(spark, s"$dir/documents.parquet")
       .filter(col("doc_id") % 5 === 0)
     qualityScore(live, collectModel(model), collectThresholds(thr))
   }
@@ -471,11 +453,10 @@ object EventStream {
     * mode — stateless, every row final when emitted). */
   def runQualityGateOnce(spark: SparkSession, dir: String,
                          name: String = "graft_stream_qgate"): DataFrame = {
-    val silver = graft.TempDirs.create("graft_qgate_silver")
-    val sink = try {
+    val sink = graft.TempDirs.scoped("graft_qgate_silver") { silver =>
       val (model, thr) = writeQualityModel(spark, dir, silver.toString)
       drainToMemory(spark, qualityGate(spark, dir, model, thr), name, mode = "append")
-    } finally graft.TempDirs.deleteRecursively(silver)
+    }
     sink.orderBy(col("doc_id"))
   }
 
@@ -487,9 +468,7 @@ object EventStream {
     * hash state otherwise grows with the corpus); the drain-once
     * harness form keeps full state, which the fixture bounds. */
   def dedupCounts(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val schema = schemaOf(spark, path)
-    spark.readStream.schema(schema).parquet(stagedStreamPath(path))
+    fixtureStream(spark, s"$dir/documents.parquet")
       .select(col("lang"), sha2(col("text"), 256).as("h"))
       .dropDuplicates("lang", "h")
       .groupBy(col("lang")).agg(count(lit(1)).as("n_distinct"))
@@ -960,10 +939,8 @@ object EventStream {
     * state stays finite at 100 TB where plain dropDuplicates grows
     * with the corpus; pinned by EngineSpec). */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/events.parquet"
-    val schema = schemaOf(spark, path)
-    val raw = spark.readStream.schema(schema).parquet(stagedStreamPath(path))
-    schema("ts").dataType match {
+    val raw = fixtureStream(spark, s"$dir/events.parquet")
+    raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case org.apache.spark.sql.types.TimestampNTZType =>

@@ -331,32 +331,22 @@ object ScaleProbe {
       // scoring; the model is vocabulary-sized (word-salted copies
       // grow it linearly), the scoring pass is linear in docs
       "q_stream_quality_gate" ->
-        ((s, d) => {
-          val silver = graft.TempDirs.create("graft_probe_qgate")
-          try {
-            val (model, thr) = EventStream.writeQualityModel(s, d, silver.toString)
-            noop(s, EventStream.qualityGate(s, d, model, thr), "append")
-          } finally graft.TempDirs.deleteRecursively(silver)
+        ((s, d) => TempDirs.scoped("graft_probe_qgate") { silver =>
+          val (model, thr) = EventStream.writeQualityModel(s, d, silver.toString)
+          noop(s, EventStream.qualityGate(s, d, model, thr), "append")
         }),
       "q_stream_ann" ->
-        ((s, d) => {
-          val silver = graft.TempDirs.create("graft_probe_ann")
-          try {
-            val ix = graft.streaming.EventStream.writeAnnIndex(s, d, silver.toString)
-            noop(s, graft.streaming.EventStream.annAgainstHistory(s, d, ix), "append")
-          } finally graft.TempDirs.deleteRecursively(silver)
+        ((s, d) => TempDirs.scoped("graft_probe_ann") { silver =>
+          val ix = EventStream.writeAnnIndex(s, d, silver.toString)
+          noop(s, EventStream.annAgainstHistory(s, d, ix), "append")
         }),
       "q_stream_neardup" ->
-        ((s, d) => {
-          // r14: through the real silver-table path — index WRITTEN to
-          // parquet and read back; the timed path is index build +
-          // silver write + live sketch + stream-static banded join
-          val silver = graft.TempDirs.create("graft_probe_silver")
-          try {
-            val hist = EventStream.writeNeardupIndex(s, d, silver.toString)
-            noop(s,
-              EventStream.neardupAgainstHistory(s, d, Some(hist)), "append")
-          } finally graft.TempDirs.deleteRecursively(silver)
+        // r14: through the real silver-table path — index WRITTEN to
+        // parquet and read back; the timed path is index build + silver
+        // write + live sketch + stream-static banded join
+        ((s, d) => TempDirs.scoped("graft_probe_silver") { silver =>
+          val hist = EventStream.writeNeardupIndex(s, d, silver.toString)
+          noop(s, EventStream.neardupAgainstHistory(s, d, Some(hist)), "append")
         }))
   }
 
