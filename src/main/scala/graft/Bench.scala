@@ -4,7 +4,8 @@ object Bench {
   /** The bench session's conf: [[Sessions.conf]] plus
     *  - stream-drain checkpoints on RAM when the host has /dev/shm:
     *    the offset/commit WAL fsyncs per micro-batch and /tmp is
-    *    disk-backed here (~100 ms/drain measured by StreamFloorProbe);
+    *    disk-backed here (~100 ms/drain; perfbench `--trace 1`
+    *    reports it as `streaming.wal_commit_s`);
     *    durability across JVMs is meaningless for these
     *    drain-to-completion harness streams;
     *  - `localDir` (`SPARK_GRAFT_LOCAL_DIR`): shuffle/spill scratch,

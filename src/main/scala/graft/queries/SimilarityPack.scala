@@ -397,7 +397,8 @@ object SimilarityPack extends QueryPack {
     * near-dups (max pairwise cosine ~0.51), so the threshold sits
     * below that to exercise the verify stage. */
   /** Hot-cell cap for the banded candidate join (the embedding twin
-    * of [[TextPack.DefaultMaxBucket]]): a (band, bucket) cell of n
+    * of [[TextPack.DefaultMaxBucket]], the text-bucket cap of
+    * [[graft.operators.Dedup.candidates]]): a (band, bucket) cell of n
     * members yields n^2/2 candidates, and sign-LSH cells are heavily
     * skewed on clustered corpora (measured at 30x: top cell ~1000 vs
     * average 7 — 182 capped cells cut candidates 19.5M → 4.0M, back

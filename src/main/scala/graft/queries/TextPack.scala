@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Memo, Tables}
-import graft.operators.TextOps
+import graft.operators.{Dedup, TextOps}
 
 /** Deduplication + text analysis over `documents` — the
   * training-data-pipeline operators the north star adds beyond the
@@ -107,247 +107,170 @@ object TextPack extends QueryPack {
     * pairs. Default is a no-op at fixture scale (ShingleGuardSpec). */
   val DefaultMaxBucket: Long = 100000L
 
-  /** Distinct 60-bit shingle hashes per doc — the dedup pipeline's
-    * base relation — with the hot-shingle idf floor applied. Joining
-    * on 60-bit hashes, not strings: same counts (collision odds ~
-    * |shingles|^2 / 2^61), far cheaper shuffle keys. */
   /** The documents scan re-spread for compute-heavy kernels — see
     * [[graft.Tables.spread]] for the rationale and safety rules. */
   private def docsSpread(s: SparkSession, d: String): DataFrame =
     Tables.spread(s, Tables.documents(s, d))
 
-  /** (doc_id, graft_hs = positional 3-gram shingle-hash array) — the
-    * ONE corpus hashing pass every shared dedup index derives from
-    * (r18): the jaccard/containment relation explodes its distinct
-    * set, the minhash signature min-reduces it, the winnow sketch
-    * window-selects over it. [[prepareShared]] persists this base so
-    * the three builds pay the docs scan + md5 kernel once, not thrice. */
-  private def hashedDocs(s: SparkSession, d: String): DataFrame =
-    docsSpread(s, d)
-      .select(col("doc_id"),
-        graft.functions.ShingleHash.shingle_hash60(col("text"), 3).as("graft_hs"))
-
-  /** (doc_id, 60-bit shingle hash) before the idf floor, from a
-    * [[hashedDocs]]-shaped base. distinct runs on the HASHES, matching
-    * the oracle's `SELECT DISTINCT doc_id, hash` exactly. */
-  private def rawShinglesFrom(base: DataFrame): DataFrame =
-    base.select(col("doc_id"), explode(array_distinct(col("graft_hs"))).as("sh"))
-
-  /** The fused one-pass form (ShingleHashSpec pins kernel equality
-    * with the HOF composition). */
-  private def rawShingles(s: SparkSession, d: String): DataFrame =
-    rawShinglesFrom(hashedDocs(s, d))
-
-  /** The hot-shingle idf floor. The HOT set (df > maxDf) is by
-    * definition tiny or empty — at any scale only boilerplate shingles
-    * exceed the floor — so the guard is a broadcast anti-join against
-    * the hot list, never a shuffle join re-attaching the
-    * (~everything) keep set. */
-  private def dfFloor(dsh: DataFrame, maxDf: Long): DataFrame = {
-    val hot = dsh.groupBy(col("sh")).agg(count(lit(1)).as("graft_df"))
-      .filter(col("graft_df") > maxDf)
-      .select(col("sh"))
-    dsh.join(broadcast(hot), Seq("sh"), "left_anti")
-      .select(col("doc_id"), col("sh"))
-  }
-
+  /** Distinct 60-bit shingle hashes per doc — the dedup pipeline's
+    * base relation ([[Dedup.shingles]]) — with the hot-shingle idf
+    * floor applied. For any floor >= 1 the hot set (df > maxDf) is a
+    * subset of the maintained repeated-shingle index's df > 1 rows,
+    * whose counts are the raw df the floor is defined over, so the cap
+    * reads that index ([[sharedShingleDf]]) instead of re-running a
+    * groupBy(sh) over the corpus shingles per execution. */
   def shingleRelation(s: SparkSession, d: String,
                       maxDf: Long = ScaleRelativeDf): DataFrame = {
     val resolved = resolveMaxDf(s, d, maxDf)
-    // r18: for any floor >= 1 the hot set (df > maxDf) is a subset of
-    // the memoized repeated-shingle index's df > 1 rows, whose counts
-    // are the same raw df this floor is defined over — so filter the
-    // maintained index instead of re-running a full groupBy(sh)
-    // aggregate over the corpus shingles per execution (guide §1.2;
-    // the same raw-df == post-floor-df argument qContainment's anchor
-    // join documents). maxDf = 0 would need the df = 1 majority the
-    // index deliberately omits; that degenerate floor (drop every
-    // shingle) keeps the inline aggregate.
-    if (resolved >= 1L) {
-      val hot = sharedShingleDf(s, d)
-        .filter(col("graft_df") > resolved).select(col("sh"))
-      rawShingles(s, d).join(broadcast(hot), Seq("sh"), "left_anti")
-        .select(col("doc_id"), col("sh"))
-    } else dfFloor(rawShingles(s, d), resolved)
+    require(resolved >= 1L,
+      s"maxDf must resolve to >= 1: the df index holds only df > 1 shingles, got $resolved")
+    Dedup.cap(Dedup.shingles(Dedup.base(docsSpread(s, d))), Seq("sh"), resolved,
+      sharedShingleDf(s, d))
   }
 
-  /** Candidate near-dup pairs (a < b) with raw Jaccard `jacv`:
-    * pairs exist only via a shared shingle (never all-pairs),
-    * Jaccard = |∩| / (|A|+|B|-|∩|) over the kept-shingle universe. */
-  private[graft] def jaccardPairsFrom(dsh: DataFrame, minJac: Double): DataFrame = {
-    val sizes = dsh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
-    val x = dsh.select(col("doc_id").as("a"), col("sh"))
-    val y = dsh.select(col("doc_id").as("b"), col("sh").as("sh_b"))
-    val common = x.join(y, col("sh") === col("sh_b") && col("a") < col("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
-    common
-      .join(sizes.toDF("a", "na"), "a").join(sizes.toDF("b", "nb"), "b")
-      .withColumn("jacv", col("c") / (col("na") + col("nb") - col("c")))
-      .filter(col("jacv") >= minJac)
+  /** Candidate near-dup pairs (a < b) with raw Jaccard `jacv` >=
+    * `minJac`: pairs exist only via a shared kept shingle (never
+    * all-pairs), Jaccard = |∩| / (|A|+|B|-|∩|) over the kept-shingle
+    * universe ([[Dedup.overlap]]). */
+  def jaccardPairs(s: SparkSession, d: String, minJac: Double = 0.05,
+                   maxDf: Long = ScaleRelativeDf): DataFrame = {
+    val dsh = shingleRelation(s, d, maxDf)
+    Dedup.overlap(dsh, "sh", dsh).filter(col("jacv") >= minJac)
       .select(col("a"), col("b"), col("jacv"))
   }
 
-  def jaccardPairs(s: SparkSession, d: String, minJac: Double = 0.05,
-                   maxDf: Long = ScaleRelativeDf): DataFrame =
-    jaccardPairsFrom(shingleRelation(s, d, maxDf), minJac)
+  /** Runs `body` with a thunk for the shared [[Dedup.base]] of `d`'s
+    * documents, built lazily: the first call persists it (with `warm`,
+    * also materializing it through the noop sink, so concurrent builds
+    * read the cache instead of racing to compute its partitions), and
+    * `finally` releases it. A body that never calls the thunk — every
+    * memo hit — runs no job. */
+  private def withBase[A](s: SparkSession, d: String, warm: Boolean)(
+      body: (() => DataFrame) => A): A = {
+    var persisted = Option.empty[DataFrame]
+    lazy val base = {
+      val b = Dedup.base(docsSpread(s, d)).persist()
+      persisted = Some(b)
+      if (warm) b.write.mode("overwrite").format("noop").save()
+      b
+    }
+    try body(() => base) finally persisted.foreach(_.unpersist())
+  }
 
-  /** The candidate-pair relation SHARED by `q_ngram_jaccard` and
-    * `q_dedup_apply`: the first query to run materializes it once as
-    * a parquet table ([[Memo.table]]); both queries derive from that
-    * table instead of each re-running the shingle → self-join
-    * pipeline — the twice-paid cost a real pipeline would never pay.
-    * Survives `catalog.clearCache()` because it is a table, not a
-    * cached plan. Bench times the materialization as its own line
-    * item via [[prepareShared]]. */
-  private def sharedJaccardPairs(s: SparkSession, d: String,
-                                 tagSuffix: String = "",
-                                 base: Option[() => DataFrame] = None): DataFrame =
+  /** `body` over `df` persisted, released in `finally`. */
+  private def withPersisted[A](df: DataFrame)(body: DataFrame => A): A = {
+    val p = df.persist()
+    try body(p) finally p.unpersist()
+  }
+
+  /** The candidate-pair table (Jaccard >= 0.05) SHARED by
+    * `q_ngram_jaccard`, `q_dedup_apply` and every >= 0.5 consumer: the
+    * first query to run materializes it once as a parquet table
+    * ([[Memo.table]]) and every consumer derives from that table
+    * instead of re-running the shingle → self-join pipeline. Survives
+    * `catalog.clearCache()` because it is a table, not a cached plan.
+    * One groupBy(sh) aggregate serves both the idf-floor hot set
+    * (df > maxDf ⊆ df > 1 for any floor >= 1) and the [[sharedShingleDf]]
+    * index; the floored relation persists for its three readers (sizes
+    * and both self-join sides). */
+  private[graft] def pairsTable(s: SparkSession, d: String, tagSuffix: String,
+                                base: () => DataFrame): DataFrame =
     s.read.parquet(Memo.table(s, "pairs" + tagSuffix, s"$d/documents.parquet") { out =>
-      // r18 build shape: ONE corpus hashing pass (the shared
-      // [[hashedDocs]] base when prepareShared supplies it, an owned
-      // persisted copy otherwise), and ONE groupBy(sh) aggregate whose
-      // df > 1 rows serve BOTH the idf-floor hot set (df > maxDf ⊆
-      // df > 1 for any floor >= 1) and the repeated-shingle df index —
-      // previously two full aggregates over the raw shingle relation.
-      // The floored relation still persists for its three consumers
-      // (sizes + both self-join sides).
-      val owned = base.isEmpty
-      val b = base.map(_()).getOrElse(hashedDocs(s, d).persist())
-      val raw = rawShinglesFrom(b)
-      val rep = raw.groupBy(col("sh"))
-        .agg(count(lit(1)).as("graft_df"),
-          min(col("doc_id")).as("graft_first_doc"))
-        .filter(col("graft_df") > 1L)
-        .persist()
-      val maxDf = resolveMaxDf(s, d, ScaleRelativeDf)
-      val hot = rep.filter(col("graft_df") > maxDf).select(col("sh"))
-      val dsh = raw.join(broadcast(hot), Seq("sh"), "left_anti")
-        .select(col("doc_id"), col("sh")).persist()
-      jaccardPairsFrom(dsh, minJac = 0.05)
-        .write.mode("overwrite").parquet(out)
-      sharedShingleDfFromRep(s, d, rep, tagSuffix)
-      rep.unpersist()
-      dsh.unpersist()
-      if (owned) { b.unpersist(); () }
+      val raw = Dedup.shingles(base())
+      withPersisted(repeatedShingles(raw)) { rep =>
+        val maxDf = resolveMaxDf(s, d, ScaleRelativeDf)
+        withPersisted(Dedup.cap(raw, Seq("sh"), maxDf, rep)) { dsh =>
+          Dedup.overlap(dsh, "sh", dsh).filter(col("jacv") >= 0.05)
+            .select(col("a"), col("b"), col("jacv"))
+            .write.mode("overwrite").parquet(out)
+          sharedShingleDf(s, d, tagSuffix, Some(rep))
+        }
+      }
     })
 
-  /** The repeated-shingle DOCUMENT-FREQUENCY table — (sh, graft_df,
+  /** [[pairsTable]] under the default tag; a standalone build persists
+    * its own base. */
+  private def sharedJaccardPairs(s: SparkSession, d: String): DataFrame =
+    withBase(s, d, warm = false)(pairsTable(s, d, "", _))
+
+  /** The repeated-shingle DOCUMENT-FREQUENCY index — (sh, graft_df,
     * graft_first_doc) for the df > 1 minority only (a natural-text
     * corpus's shingles are overwhelmingly unique, so this is tiny
     * relative to the corpus; every absent shingle has df = 1 by
-    * definition — and its only occurrence is trivially its first).
-    * A real pipeline maintains this index alongside its
-    * pair/candidate tables instead of recounting the corpus per
-    * consumer — the r15 `q_containment` rewrite already established
-    * that only the repeated rows are ever needed; r17 added the
-    * first-occurrence doc so `q_shingle_novelty` reads the same
-    * index instead of paying the corpus-tokens min-agg shuffle a
-    * second time. */
-  private[graft] def sharedShingleDf(s: SparkSession, d: String,
-                                     tagSuffix: String = ""): DataFrame =
-    sharedShingleDfFrom(s, d, rawShingles(s, d), tagSuffix)
-
-  /** Build-or-read of the df index from a CALLER-SUPPLIED shingle
-    * relation: standalone consumers pass a fresh [[rawShingles]] (only
-    * evaluated if the memo misses); the pair-table build goes through
-    * [[sharedShingleDfFromRep]] with its already-aggregated relation. */
-  private def sharedShingleDfFrom(s: SparkSession, d: String,
-                                  raw: => DataFrame,
-                                  tagSuffix: String = ""): DataFrame =
+    * definition, and its only occurrence is trivially its first). A
+    * real pipeline maintains this index alongside its pair and
+    * candidate tables instead of recounting the corpus per consumer:
+    * `q_containment` reads its df, `q_shingle_novelty` its first doc.
+    * Written from the pair build's aggregate (`rep`) or, when a
+    * consumer runs first, from its own corpus pass. */
+  private[graft] def sharedShingleDf(s: SparkSession, d: String, tagSuffix: String = "",
+                                     rep: Option[DataFrame] = None): DataFrame =
     s.read.parquet(Memo.table(s, "shdf" + tagSuffix, s"$d/documents.parquet") { out =>
-      raw
-        .groupBy(col("sh")).agg(count(lit(1)).as("graft_df"),
-          min(col("doc_id")).as("graft_first_doc"))
-        .filter(col("graft_df") > 1L)
+      rep.getOrElse(repeatedShingles(Dedup.shingles(Dedup.base(docsSpread(s, d)))))
         .write.mode("overwrite").parquet(out)
     })
 
-  /** Write-or-skip of the df index from the pair build's ALREADY
-    * AGGREGATED (and persisted) repeated-shingle relation — the r18
-    * form of the shared corpus scan: the pair build computes the one
-    * groupBy(sh) aggregate, and this just lands its rows as the memo
-    * table (schema identical to [[sharedShingleDfFrom]]'s). */
-  private def sharedShingleDfFromRep(s: SparkSession, d: String,
-                                     rep: DataFrame,
-                                     tagSuffix: String = ""): DataFrame =
-    s.read.parquet(Memo.table(s, "shdf" + tagSuffix, s"$d/documents.parquet") { out =>
-      rep.select(col("sh"), col("graft_df"), col("graft_first_doc"))
-        .write.mode("overwrite").parquet(out)
-    })
+  private def repeatedShingles(raw: DataFrame): DataFrame =
+    raw.groupBy(col("sh"))
+      .agg(count(lit(1)).as("graft_df"), min(col("doc_id")).as("graft_first_doc"))
+      .filter(col("graft_df") > 1L)
 
   /** The minhash CANDIDATE table shared by `q_minhash_lsh`,
-    * `q_minhash_est` and `q_lsh_recall` — same checkpoint rationale
-    * as the pair table: three consumers, one banded self-join. */
-  private def sharedMinhashCandidates(s: SparkSession, d: String,
-                                      tagSuffix: String = "",
-                                      base: Option[() => DataFrame] = None): DataFrame =
+    * `q_minhash_est` and `q_lsh_recall` — same rationale as the pair
+    * table: three consumers, one banded self-join. The band stack
+    * persists for its three readers (the hot-bucket aggregate and both
+    * self-join sides). */
+  private[graft] def minhashTable(s: SparkSession, d: String, tagSuffix: String,
+                                  base: () => DataFrame): DataFrame =
     s.read.parquet(Memo.table(s, "mhcand" + tagSuffix, s"$d/documents.parquet") { out =>
-      // the persist is scoped to this one materializing action: the
-      // stacked relation feeds the hot-bucket aggregate and both
-      // self-join sides, then unpersists (no leaked cached relation
-      // per JVM — the pairs-table build does the same). With a shared
-      // base the signatures are the min reduction over the already
-      // hashed shingle arrays (kernel-identical by construction —
-      // MinHashSig.compute delegates to fromHashes).
-      val sigs = base.map(b => minhashSignaturesFromHashes(b()))
-        .getOrElse(minhashSignatures(s, d))
-      val stacked = bandedStack(sigs).persist()
-      minhashBandedPairs(stacked, DefaultMaxBucket)
-        .write.mode("overwrite").parquet(out)
-      stacked.unpersist()
-      ()
+      withPersisted(Dedup.bands(Dedup.minhash(base()), Dedup.MinhashBands)) { st =>
+        Dedup.candidates(st, DefaultMaxBucket).write.mode("overwrite").parquet(out)
+      }
+    })
+
+  private def sharedMinhashCandidates(s: SparkSession, d: String): DataFrame =
+    minhashTable(s, d, "", () => Dedup.base(docsSpread(s, d)))
+
+  /** The distinct (doc_id, h) winnow-fingerprint relation as a
+    * memoized pipeline index: the sketch a MOSS deployment maintains
+    * alongside its corpus rather than recomputes per consumer. */
+  private[graft] def winnowTable(s: SparkSession, d: String, tagSuffix: String,
+                                 base: () => DataFrame): DataFrame =
+    s.read.parquet(Memo.table(s, "wfps" + tagSuffix, s"$d/documents.parquet") { out =>
+      Dedup.fingerprints(Dedup.winnow(base())).write.mode("overwrite").parquet(out)
     })
 
   /** Force the shared tables for `d` to exist. Bench calls this
     * before timing queries so the shared materialization cost shows
     * up as its own entry instead of hiding inside whichever consumer
-    * happens to run first. The two builds are independent pipelines
-    * (shingle self-join vs banded minhash self-join), so they run as
-    * CONCURRENT Spark actions: each has driver-side stage gaps
-    * (planning, file commit) the other fills — same wall-clock trick
-    * a multi-tenant cluster plays, safe because the memo keys differ
-    * and each build persists/unpersists only its own frames.
-    * `tagSuffix` keys the memo under a distinct tag: Bench passes
-    * "_probe" to time a SECOND full build spaced a whole sweep from
-    * the first, so `_shared_pairs` gets the same min-of-2 contention
-    * defense as every query (consumers always use the default).
-    * `concurrency` (r17): the 4-way pool build is a calm-host win
-    * (each build's driver-side stage gaps absorb the others' work)
-    * but the battery's most contention-SENSITIVE entry when the box
-    * is already loaded — the r16 driver window measured 6.40 s vs
-    * the calm 3.67 s, pure oversubscription. Bench probes the host
-    * with its pinned mini-canary first and passes 1 (sequential)
-    * when the probe reads hot, so a contended build degrades to the
-    * serial cost instead of multiplying thread demand against a busy
-    * box. */
+    * happens to run first. The three builds (shingle self-join, banded
+    * minhash self-join, winnow fingerprints) share ONE corpus hashing
+    * pass — the base is persisted on first use and released when all
+    * three have joined — and run as CONCURRENT Spark actions: each has
+    * driver-side stage gaps (planning, file commit) the others fill,
+    * safe because the memo keys differ and each build releases only
+    * its own persists. The pair build also writes the [[sharedShingleDf]]
+    * index from its own aggregate; a separate task would race it into
+    * a second scan. `tagSuffix` keys the memo under a distinct tag:
+    * Bench passes "_probe" to time a SECOND full build spaced a whole
+    * sweep from the first, so `_shared_pairs` gets the same min-of-2
+    * contention defense as every query (consumers always use the
+    * default). `concurrency`: the pool build is a calm-host win but
+    * the battery's most contention-SENSITIVE entry when the box is
+    * already loaded, so Bench probes the host with its pinned
+    * mini-canary first and passes 1 (sequential) when the probe reads
+    * hot, degrading a contended build to the serial cost instead of
+    * multiplying thread demand against a busy box. */
   def prepareShared(s: SparkSession, d: String,
                     tagSuffix: String = "",
-                    concurrency: Int = 4): Unit = {
-    // ONE corpus hashing pass for all three builds (r18): the shared
-    // (doc_id, shingle-hash array) base is computed lazily — only if
-    // at least one memo actually misses — persisted, and eagerly
-    // materialized through the noop sink so concurrent builds read the
-    // cache instead of racing to compute its partitions. A thread-safe
-    // local lazy val gives at-most-once materialization under the
-    // 4-way pool; the base unpersists when every build has joined.
-    val materialized = new java.util.concurrent.atomic.AtomicReference[DataFrame]()
-    lazy val base: DataFrame = {
-      val b = hashedDocs(s, d).persist()
-      b.write.mode("overwrite").format("noop").save()
-      materialized.set(b)
-      b
+                    concurrency: Int = 4): Unit =
+    withBase(s, d, warm = true) { base =>
+      graft.Pools.inOrder(math.min(4, concurrency))(Seq(
+        () => { pairsTable(s, d, tagSuffix, base); () },
+        () => { minhashTable(s, d, tagSuffix, base); () },
+        () => { winnowTable(s, d, tagSuffix, base); () }))
+      ()
     }
-    val baseRef = Some(() => base)
-    // no shdf task: the pair-table build materializes the df index
-    // from its own one groupBy(sh) aggregate (one corpus scan AND
-    // one aggregate for both tables — r17/r18); a separate pool task
-    // would race it into a second scan
-    try graft.Pools.inOrder(math.min(4, concurrency))(Seq(
-      () => { sharedJaccardPairs(s, d, tagSuffix, baseRef); () },
-      () => { sharedMinhashCandidates(s, d, tagSuffix, baseRef); () },
-      () => { sharedWinnowFps(s, d, tagSuffix, baseRef); () }))
-    finally Option(materialized.get()).foreach(_.unpersist())
-  }
 
   /** n-gram Jaccard near-dup: distinct 3-word shingles per doc, pairs
     * via shingle-equality join (only docs sharing a shingle are ever
@@ -366,26 +289,6 @@ object TextPack extends QueryPack {
   def qMinhashLsh(s: SparkSession, d: String): DataFrame =
     sharedMinhashCandidates(s, d).orderBy(col("a"), col("b"))
 
-  /** (doc_id, mh = the 16 minhash components) via the fused
-    * [[graft.functions.MinHashSig]] kernel. Docs with fewer words than
-    * the shingle size have no shingles and are dropped — the same
-    * absent rows the old explode+groupBy produced. */
-  private def minhashSignatures(s: SparkSession, d: String): DataFrame =
-    docsSpread(s, d)
-      .select(col("doc_id"),
-        graft.functions.MinHashSig.minhash_sig(col("text"), 3, 16).as("mh"))
-      .filter(size(col("mh")) > 0)
-
-  /** [[minhashSignatures]] over a [[hashedDocs]]-shaped base: the min
-    * reduction alone ([[graft.functions.MinHashFromHashes]]) — equal
-    * by construction since the fused text kernel composes the same
-    * two steps. */
-  private def minhashSignaturesFromHashes(base: DataFrame): DataFrame =
-    base
-      .select(col("doc_id"),
-        graft.functions.MinHashSig.minhash_from_hashes(col("graft_hs"), 16).as("mh"))
-      .filter(size(col("mh")) > 0)
-
   /** MinHash-LSH candidate pairs, with the hot-bucket cap applied
     * before the self-join (`maxBucket` members per (band, signature)
     * bucket; default no-op at fixture scale). Unpersisted plan — the
@@ -394,27 +297,9 @@ object TextPack extends QueryPack {
     * take the recompute instead of leaking a cached relation. */
   def minhashCandidates(s: SparkSession, d: String,
                         maxBucket: Long = DefaultMaxBucket): DataFrame =
-    minhashBandedPairs(bandedStack(minhashSignatures(s, d)), maxBucket)
+    Dedup.candidates(Dedup.bands(Dedup.minhash(Dedup.base(docsSpread(s, d))),
+      Dedup.MinhashBands), maxBucket)
       .orderBy(col("a"), col("b"))
-
-  /** The (doc_id, band, sg) unpivot of the 8 band signatures — read by
-    * the hot-bucket aggregate and both self-join sides, so eager
-    * callers persist it for the duration of their one action. `carry`
-    * names extra input columns to ride along on every band row (the
-    * streaming near-dup index carries the full 16-component signature
-    * for its verify step). */
-  private[graft] def bandedStack(sigs: DataFrame,
-                                 carry: Seq[String] = Seq.empty): DataFrame = {
-    val bandCols = (0 until 8).map(b =>
-      concat_ws(",", element_at(col("mh"), 2 * b + 1).cast("string"),
-        element_at(col("mh"), 2 * b + 2).cast("string")).as(s"sg_$b"))
-    // Unpivot the 8 band signatures to (doc_id, band, sg) rows; find
-    // candidates with ONE equi-join on (band, sg).
-    val stackExpr = "stack(8, " +
-      (0 until 8).map(b => s"$b, sg_$b").mkString(", ") + ") AS (band, sg)"
-    sigs.select((col("doc_id") +: carry.map(col)) ++ bandCols: _*)
-      .selectExpr(("doc_id" +: carry) :+ stackExpr: _*)
-  }
 
   /** Banded MinHash INDEX over a subset of the corpus — the static
     * half of the streaming incremental near-dup
@@ -425,35 +310,10 @@ object TextPack extends QueryPack {
     * against; here it is built inline from the history predicate. */
   private[graft] def minhashIndex(s: SparkSession, d: String,
                                   pred: Column): DataFrame =
-    bandedStack(minhashSignatures(s, d).filter(pred), carry = Seq("mh"))
+    Dedup.bands(Dedup.minhash(Dedup.base(docsSpread(s, d))).filter(pred),
+      Dedup.MinhashBands, carry = Seq("mh"))
       .select(col("band"), col("sg"), col("doc_id").as("hist_id"),
         col("mh").as("sig_h"))
-
-  /** Distinct candidate pairs (a < b) from a banded stack — the ONE
-    * banded equi-join both [[qMinhashLsh]] and [[qMinhashEst]] use
-    * (DOC-LOCAL signatures from the fused MinHashSig kernel; the old
-    * explode(shingles) → groupBy(doc) 16-min-column agg shuffled every
-    * shingle hash). Shuffle keys are bucket ids, never doc pairs, and
-    * the hot-bucket cap rides along (the 100 TB-safe shape). */
-  private def minhashBandedPairs(stacked: DataFrame, maxBucket: Long): DataFrame = {
-    // hot-bucket cap: a degenerate (band, sg) bucket of n members
-    // would emit n^2/2 candidate rows. The HOT bucket list (count >
-    // maxBucket) is tiny-or-empty by definition, so the cap is a
-    // broadcast anti-join against it — same 100 TB guarantee as
-    // re-joining the ok set, at near-zero fixture cost (no extra
-    // shuffle on the hot path).
-    val hotBuckets = stacked.groupBy(col("band"), col("sg"))
-      .agg(count(lit(1)).as("graft_n"))
-      .filter(col("graft_n") > maxBucket)
-      .select(col("band"), col("sg"))
-    val bounded = stacked.join(broadcast(hotBuckets), Seq("band", "sg"), "left_anti")
-    val left = bounded.select(col("doc_id").as("a"), col("band"), col("sg"))
-    val right = bounded.select(col("doc_id").as("b"), col("band").as("band_r"),
-      col("sg").as("sg_r"))
-    left.join(right, col("band") === col("band_r") && col("sg") === col("sg_r")
-        && col("a") < col("b"))
-      .select(col("a"), col("b")).distinct()
-  }
 
   /** The end-to-end corpus-curation MACRO — the composition a real
     * training-data pipeline runs as one job: exact dedup (keep the
@@ -785,13 +645,11 @@ object TextPack extends QueryPack {
     * benchmark hash set — the training scan is never shuffled. Counts
     * DISTINCT overlapping 4-grams per contaminated doc. */
   def qDecontaminate(s: SparkSession, d: String): DataFrame = {
-    val grams = docsSpread(s, d)
-      .select(col("doc_id"), explode(array_distinct(
-        graft.functions.ShingleHash.shingle_hash60(col("text"), 4))).as("h"))
+    val grams = Dedup.shingles(Dedup.base(docsSpread(s, d), k = 4))
     val bench = grams.filter(pmod(col("doc_id"), lit(50L)) === 0)
-      .select(col("h")).distinct()
+      .select(col("sh")).distinct()
     grams.filter(pmod(col("doc_id"), lit(50L)) =!= 0)
-      .join(broadcast(bench), Seq("h"), "left_semi")
+      .join(broadcast(bench), Seq("sh"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
       .orderBy(col("doc_id"))
   }
@@ -986,19 +844,18 @@ object TextPack extends QueryPack {
     // between queries)
     val dsh = shingleRelation(s, d).persist()
     // rarest-shingle anchors WITHOUT a corpus-scale×corpus-scale join
-    // (r15 — the pre-r15 form joined the full shingle relation to the
-    // full df relation on sh, a sort-merge of two ~|corpus shingles|
-    // relations that dominated the probe's 10× cell): a doc's rarest
+    // (the full shingle relation joined to a full df relation on sh is
+    // a sort-merge of two ~|corpus shingles| relations): a doc's rarest
     // shingle only needs EXACT df for shingles that repeat — for
     // natural text a small minority — and every other shingle has
     // df = 1 by definition. So broadcast only the df > 1 rows
     // (AQE sizes the post-filter relation at runtime) and coalesce
     // the misses to 1: identical (df, sh) ordering, so min_by picks
     // the identical anchor, and a degenerate everything-repeats
-    // corpus merely degrades to the old sort-merge join.
+    // corpus merely degrades to that sort-merge join.
     //
     // The df > 1 rows come from the memoized [[sharedShingleDf]]
-    // index (r15, the round-16 builder note): the pipeline's own
+    // index: the pipeline's own
     // maintained relation, not a per-query recount of the corpus. It
     // is computed on RAW shingles, but for every shingle surviving
     // the idf floor raw df == post-floor df (the floor removes whole
@@ -1031,18 +888,13 @@ object TextPack extends QueryPack {
       .orderBy(col("a"), col("b"))
   }
 
-  /** The pre-r14 exhaustive containment form — full shingle self-join
+  /** The exhaustive containment form — full shingle self-join
     * then the `c = min(na, nb)` filter. Kept as the reference
     * implementation for `ContainmentSpec`'s row-equality pin on the
     * anchor-probe rewrite above; not registered as a driver query. */
   private[graft] def qContainmentExhaustive(s: SparkSession, d: String): DataFrame = {
     val dsh = shingleRelation(s, d)
-    val sizes = dsh.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
-    val x = dsh.select(col("doc_id").as("a"), col("sh"))
-    val y = dsh.select(col("doc_id").as("b"), col("sh").as("sh_b"))
-    x.join(y, col("sh") === col("sh_b") && col("a") < col("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
-      .join(sizes.toDF("a", "na"), "a").join(sizes.toDF("b", "nb"), "b")
+    Dedup.overlap(dsh, "sh", dsh)
       .filter(col("c") === least(col("na"), col("nb")))
       .select(col("a"), col("b"), col("na"), col("nb"),
         when(col("na") <= col("nb"), "a").otherwise("b").as("contained"))
@@ -1077,13 +929,13 @@ object TextPack extends QueryPack {
     * unbiased estimate of their Jaccard similarity — the cheap scorer
     * a 100 TB dedup runs INSTEAD of exact shingle-intersection
     * (signatures are 128 bytes/doc; the shingle sets they stand in for
-    * are unbounded). Candidates come from [[minhashBandedPairs]] — the
+    * are unbounded). Candidates come from [[Dedup.candidates]] — the
     * SAME banded equi-join (hot-bucket cap included) as
     * [[qMinhashLsh]], so the two can never diverge — and the signature
     * frame joins back doc-keyed to both pair sides (at scale it is the
     * materialized signature store every LSH system keeps anyway). */
   def qMinhashEst(s: SparkSession, d: String): DataFrame = {
-    val sig = minhashSignatures(s, d)
+    val sig = Dedup.minhash(Dedup.base(docsSpread(s, d)))
       .select(col("doc_id"), col("mh").as("sig"))
     sharedMinhashCandidates(s, d)
       .join(sig.select(col("doc_id").as("a"), col("sig").as("sig_a")), Seq("a"))
@@ -1112,11 +964,8 @@ object TextPack extends QueryPack {
     * LSH dedup makes — the dropped buckets are degenerate content). */
   def simhashPairs(s: SparkSession, d: String,
                    maxBucket: Long = DefaultMaxBucket): DataFrame = {
-    // DOC-LOCAL signature via the fused SimHash kernel: the old
-    // explode(words) → 48-vote-column aggregation shuffled every word
-    // hash through a partial+final agg; the expression computes the
-    // same signature inside the scan, so the only shuffled relation
-    // is the (doc_id, band) banding below.
+    // DOC-LOCAL signature via the fused SimHash kernel: the only
+    // shuffled relation is the (band, bucket) banding below
     val sigDf = docsSpread(s, d)
       .select(col("doc_id"),
         graft.functions.SimHash.sim_hash48(col("text")).as("simhash"))
@@ -1124,30 +973,11 @@ object TextPack extends QueryPack {
     // differs in at most 3 bands, so it matches on at least one —
     // banding is EXACT here, and replaces the all-pairs scan with 4
     // equi-joins on band values (the 100 TB-safe shape).
-    val bandCols = (0 until 4).map(b =>
-      (shiftright(col("simhash"), 12 * b).bitwiseAND(lit(0xFFFL))).as(s"band_$b"))
-    val stackExpr = "stack(4, " +
-      (0 until 4).map(b => s"$b, band_$b").mkString(", ") + ") AS (band, bv)"
-    val stacked = sigDf
-      .select((col("doc_id") +: col("simhash") +: bandCols): _*)
-      .selectExpr("doc_id", "simhash", stackExpr)
-      .persist() // reused by both self-join sides
-    // hot-bucket cap as a broadcast anti-join against the (tiny) hot
-    // list — see minhashCandidates for the shape rationale
-    val hotBuckets = stacked.groupBy(col("band"), col("bv"))
-      .agg(count(lit(1)).as("graft_n"))
-      .filter(col("graft_n") > maxBucket)
-      .select(col("band"), col("bv"))
-    val bounded = stacked.join(broadcast(hotBuckets), Seq("band", "bv"), "left_anti")
-    val left = bounded.select(col("doc_id").as("a"), col("simhash").as("sa"),
-      col("band"), col("bv"))
-    val right = bounded.select(col("doc_id").as("b"), col("simhash").as("sb"),
-      col("band").as("band_r"), col("bv").as("bv_r"))
-    val cands = left.join(right, col("band") === col("band_r")
-        && col("bv") === col("bv_r") && col("a") < col("b"))
-      .select(col("a"), col("b"), col("sa"), col("sb"))
-    cands.distinct()
-      .withColumn("hd", expr("bit_count(sa ^ sb)").cast("long"))
+    val banded = Dedup.bands(sigDf, (0 until 4).map(b =>
+        shiftright(col("simhash"), 12 * b).bitwiseAND(lit(0xFFFL))), carry = Seq("simhash"))
+      .persist() // read by the hot-bucket aggregate and both self-join sides
+    Dedup.candidates(banded, maxBucket, carry = Seq("simhash"))
+      .withColumn("hd", expr("bit_count(simhash_a ^ simhash_b)").cast("long"))
       .filter(col("hd") <= 3)
       .select(col("a"), col("b"), col("hd"))
       .orderBy(col("a"), col("b"))
@@ -1186,23 +1016,7 @@ object TextPack extends QueryPack {
     * Returns (doc_id, m = gram count, nwin = window count, sel =
     * distinct selected (h, p) structs). */
   def winnowFingerprints(docs: DataFrame, k: Int = 3, w: Int = 4): DataFrame =
-    winnowFingerprintsHashed(docs
-      .select(col("doc_id"),
-        graft.functions.ShingleHash.shingle_hash60(col("text"), k).as("graft_hs")), w)
-
-  /** [[winnowFingerprints]] over an already-hashed (doc_id, graft_hs)
-    * base — the window-minimum selection alone, so the shared-table
-    * build can reuse [[hashedDocs]]'s one hashing pass (r18). */
-  private def winnowFingerprintsHashed(hashed: DataFrame, w: Int = 4): DataFrame =
-    hashed
-      .withColumn("m", size(col("graft_hs")).cast("long"))
-      .filter(col("m") > 0L)
-      .withColumn("nwin", greatest(col("m") - (w - 1), lit(1L)))
-      .withColumn("sel", transform(
-        graft.functions.WinnowSelect.winnow_positions(col("graft_hs"), w),
-        p => struct(element_at(col("graft_hs"), p.cast("int")).as("h"),
-          p.as("p"))))
-      .select(col("doc_id"), col("m"), col("nwin"), col("sel"))
+    Dedup.winnow(Dedup.base(docs, k), w)
 
   /** Driver query over [[winnowFingerprints]]: per-doc gram/window
     * counts, fingerprint count, density (≈ 2/(w+1) on natural text),
@@ -1228,62 +1042,28 @@ object TextPack extends QueryPack {
     * buckets, never all-pairs, and the detection guarantee (any
     * shared run of >= w+k-1 tokens shares a fingerprint) survives
     * because selection is window-local. Hot-fingerprint buckets
-    * (boilerplate) are capped by the same broadcast anti-join as
-    * [[minhashBandedPairs]]. */
+    * (boilerplate) are capped by the same broadcast anti-join as the
+    * minhash buckets ([[Dedup.cap]]). The fingerprints are the
+    * [[winnowTable]] index, built with the other shared tables. */
   def qWinnowPairs(s: SparkSession, d: String): DataFrame =
-    winnowPairsFromFps(sharedWinnowFps(s, d)).orderBy(col("a"), col("b"))
-
-  /** The distinct (doc_id, h) winnow-fingerprint relation as a
-    * MEMOIZED pipeline index (built with the other shared tables in
-    * [[prepareShared]], billed to `_shared_pairs`): the sketch a MOSS
-    * deployment maintains alongside its corpus rather than recomputes
-    * per consumer. */
-  private def sharedWinnowFps(s: SparkSession, d: String,
-                              tagSuffix: String = "",
-                              base: Option[() => DataFrame] = None): DataFrame =
-    s.read.parquet(Memo.table(s, "wfps" + tagSuffix, s"$d/documents.parquet") { out =>
-      base.map(b => winnowFpsOfHashed(b()))
-        .getOrElse(winnowFpsOf(docsSpread(s, d)))
-        .write.mode("overwrite").parquet(out)
-    })
-
-  private def winnowFpsOf(docs: DataFrame): DataFrame =
-    winnowFpsFrom(winnowFingerprints(docs))
-
-  private def winnowFpsOfHashed(hashed: DataFrame): DataFrame =
-    winnowFpsFrom(winnowFingerprintsHashed(hashed))
-
-  private def winnowFpsFrom(fps: DataFrame): DataFrame =
-    fps
-      .select(col("doc_id"), explode(col("sel")).as("f"))
-      .select(col("doc_id"), col("f.h").as("h"))
-      .distinct()
+    fingerprintPairs(winnowTable(s, d, "", () => Dedup.base(docsSpread(s, d))))
+      .orderBy(col("a"), col("b"))
 
   /** [[qWinnowPairs]] over any frame with (doc_id, text) — inline
     * fingerprints (the spec path; the driver query goes through the
     * memoized index). */
   def winnowPairs(docs: DataFrame,
                   maxBucket: Long = DefaultMaxBucket): DataFrame =
-    winnowPairsFromFps(winnowFpsOf(docs), maxBucket)
+    fingerprintPairs(Dedup.fingerprints(Dedup.winnow(Dedup.base(docs))), maxBucket)
 
-  /** The fingerprint-bucket join, hot cap, and >= 2-shared threshold
-    * over a distinct (doc_id, h) fingerprint relation. */
-  private def winnowPairsFromFps(fps: DataFrame,
-                                 maxBucket: Long = DefaultMaxBucket): DataFrame = {
-    val sizes = fps.groupBy(col("doc_id")).agg(count(lit(1)).as("nfp"))
-    val hot = fps.groupBy(col("h")).agg(count(lit(1)).as("graft_n"))
-      .filter(col("graft_n") > maxBucket).select(col("h"))
-    val bounded = fps.join(broadcast(hot), Seq("h"), "left_anti")
-    bounded.select(col("doc_id").as("a"), col("h"))
-      .join(bounded.select(col("doc_id").as("b"), col("h").as("h_b")),
-        col("h") === col("h_b") && col("a") < col("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= 2)
-      .join(sizes.toDF("a", "na"), "a").join(sizes.toDF("b", "nb"), "b")
-      .select(col("a"), col("b"), col("n_shared"),
-        round(col("n_shared") / (col("na") + col("nb") - col("n_shared")), 6)
-          .as("sim"))
-  }
+  /** Pairs sharing >= 2 distinct (doc_id, h) fingerprints after the
+    * hot-fingerprint cap, with `sim` = the fingerprint-set Jaccard over
+    * the PRE-cap fingerprint counts. */
+  private def fingerprintPairs(fps: DataFrame,
+                               maxBucket: Long = DefaultMaxBucket): DataFrame =
+    Dedup.overlap(Dedup.cap(fps, Seq("h"), maxBucket, Dedup.docFreq(fps, Seq("h"))), "h", fps)
+      .filter(col("c") >= 2)
+      .select(col("a"), col("b"), col("c").as("n_shared"), round(col("jacv"), 6).as("sim"))
 
   /** Marker-word language scoring + argmax prediction over a frame
     * with a `text` column (factored out so the argmax is unit-testable

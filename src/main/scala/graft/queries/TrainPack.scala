@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.TextOps
+import graft.operators.{Dedup, TextOps}
 
 /** Training-data OUTPUT surface: the operators that sit between a
   * curated corpus and the trainer — mixture reweighting across
@@ -128,7 +128,8 @@ object TrainPack extends QueryPack {
     *
     * Scale shape (r17): first-occurrence facts come from the
     * pipeline's maintained repeated-shingle index
-    * ([[TextPack.sharedShingleDf]] — (sh, df, first_doc) for the
+    * ([[TextPack.sharedShingleDf]], written from the pair build's one
+    * groupBy(sh) aggregate — (sh, df, first_doc) for the
     * df > 1 minority), NOT a per-query min-agg over the corpus
     * tokens: a shingle absent from the index has df = 1, so its only
     * occurrence IS its first and the doc scores it novel without any
@@ -142,9 +143,7 @@ object TrainPack extends QueryPack {
     * one shingle (< 3 words) have no novelty row, matching the
     * oracle's inner join. */
   def qShingleNovelty(s: SparkSession, d: String): DataFrame = {
-    val dsh = docsSpread(s, d)
-      .select(col("doc_id"), explode(array_distinct(
-        graft.functions.ShingleHash.shingle_hash60(col("text"), 3))).as("sh"))
+    val dsh = Dedup.shingles(Dedup.base(docsSpread(s, d)))
     val rep = TextPack.sharedShingleDf(s, d)
       .select(col("sh"), col("graft_first_doc"))
     dsh.join(rep, Seq("sh"), "left")

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, StreamingQueryListener}
 
+import graft.operators.Dedup
+
 /** Structured Streaming surface (SURVEY §2.10 — engine-new, the
   * streaming generalization of the reference's batch era processing):
   * the same tumbling-window aggregation as EventsPack.qTumblingWindow,
@@ -50,7 +52,8 @@ object EventStream {
     * MinHash INDEX (one silver table, built once by the batch dedup
     * job — [[graft.queries.TextPack.minhashIndex]]) and each
     * micro-batch only (1) computes its own doc-local signatures with
-    * the fused kernel, (2) stream-static equi-joins on (band,
+    * the same [[graft.operators.Dedup]] base → minhash → bands stages
+    * the index ran, (2) stream-static equi-joins on (band,
     * signature) — STATELESS: no watermark, no store, state cost zero
     * regardless of corpus size — and (3) verifies candidates by exact
     * signature agreement (>= 8 of 16 components ⇔ est >= 0.5, integer
@@ -71,16 +74,12 @@ object EventStream {
   }
 
   /** The stateless core of the incremental near-dup: sketch the live
-    * (possibly streaming) doc relation scan-local, band it, equi-join
-    * the history index, keep >= 8-of-16 component agreement. Shared
-    * by the file-replay drain and the MemoryStream batch-boundary
-    * spec. */
+    * (possibly streaming) doc relation scan-local ([[Dedup.minhash]]),
+    * band it ([[Dedup.bands]]), equi-join the history index, keep
+    * >= 8-of-16 component agreement. Shared by the file-replay drain
+    * and the MemoryStream batch-boundary spec. */
   private[graft] def neardupJoin(liveDocs: DataFrame, hist: DataFrame): DataFrame = {
-    val live = liveDocs
-      .select(col("doc_id"),
-        graft.functions.MinHashSig.minhash_sig(col("text"), 3, 16).as("mh"))
-      .filter(size(col("mh")) > 0)
-    graft.queries.TextPack.bandedStack(live, carry = Seq("mh"))
+    Dedup.bands(Dedup.minhash(Dedup.base(liveDocs)), Dedup.MinhashBands, carry = Seq("mh"))
       .join(hist, Seq("band", "sg"))
       .withColumn("n_match", aggregate(
         zip_with(col("mh"), col("sig_h"),
@@ -92,9 +91,10 @@ object EventStream {
 
   /** Build the banded history index and WRITE it as a silver table
     * (parquet), returning the read-back relation — the production
-    * contract [[graft.queries.TextPack.minhashIndex]]'s scaladoc
-    * promises: the batch dedup job materializes the index once, and
-    * every stream run joins the on-disk table, never re-sketching the
+    * contract of [[graft.queries.TextPack.minhashIndex]] (the
+    * [[Dedup.bands]] of the history's [[Dedup.minhash]] signatures):
+    * the batch dedup job materializes the index once, and every
+    * stream run joins the on-disk table, never re-sketching the
     * archive (per micro-batch the static side is a columnar re-scan
     * of KB-per-million-docs signature rows, not a text pipeline).
     * Staleness is explicit by design: history rows ingested after the
@@ -547,10 +547,11 @@ object EventStream {
     * `spark.graft.stream.checkpointDir` base: the offset/commit WAL is
     * written and fsynced per micro-batch, and on the bench host /tmp
     * is disk-backed while /dev/shm is RAM — the harness points the
-    * base there (~100 ms/drain measured by StreamFloorProbe; a
-    * checkpoint that survives the JVM is a durability feature these
-    * drain-to-completion harness streams never use). Unset, the JVM
-    * tmpdir default applies — the production-safe choice. */
+    * base there (~100 ms/drain, which perfbench `--trace 1` reports
+    * as `streaming.wal_commit_s`; a checkpoint that survives the JVM
+    * is a durability feature these drain-to-completion harness
+    * streams never use). Unset, the JVM tmpdir default applies — the
+    * production-safe choice. */
   private def newCheckpointDir(spark: SparkSession): java.nio.file.Path =
     spark.conf.getOption("spark.graft.stream.checkpointDir") match {
       case Some(base) => graft.TempDirs.createUnder(base, "graft_stream_ckpt")

@@ -62,7 +62,7 @@ class ContainmentSpec extends AnyFunSuite {
     assert(out.length == 1)
     assert(out.head.getLong(0) == 1L && out.head.getLong(1) == 2L)
     // sanity: the pair's Jaccard really is below the usual 0.05 floor
-    val jac = TextPack.jaccardPairsFrom(dsh, minJac = 0.0)
+    val jac = graft.operators.Dedup.overlap(dsh, "sh", dsh)
       .filter(col("a") === 1L && col("b") === 2L)
       .select(col("jacv")).head().getDouble(0)
     assert(jac < 0.05, s"engineered pair's Jaccard should be tiny, got $jac")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Dedup
 import graft.queries.{MlPack, TextPack}
 
 /** The 100 TB skew guards (hot-shingle idf floor, LSH hot-bucket cap,
@@ -52,13 +53,12 @@ class ShingleGuardSpec extends AnyFunSuite {
       val tail = if (i == 28 || i == 29) "shared dup tail words here" else unique
       (i.toLong, s"common header x $tail")
     }.toDF("doc_id", "text")
-    val dsh = docs.select(col("doc_id"), explode(array_distinct(
-      graft.functions.ShingleHash.shingle_hash60(col("text"), 3))).as("sh"))
-    val hot = dsh.groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .filter(col("df") > 20L).select(col("sh"))
-    val kept = dsh.join(broadcast(hot), Seq("sh"), "left_anti")
+    val dsh = Dedup.shingles(Dedup.base(docs))
+    val df = Dedup.docFreq(dsh, Seq("sh"))
+    val kept = Dedup.cap(dsh, Seq("sh"), 20L, df)
     // the boilerplate prefix shingle (df=30) is gone, unique ones stay
-    assert(hot.count() >= 1)
+    assert(df.filter(col("graft_df") > 20L).count() >= 1)
+    assert(kept.columns.toSeq == dsh.columns.toSeq)
     assert(kept.groupBy(col("sh")).count().agg(max(col("count"))).head().getLong(0) <= 20L)
     // and the dup pair is still discoverable from kept shingles alone
     val x = kept.select(col("doc_id").as("a"), col("sh"))
@@ -75,6 +75,11 @@ class ShingleGuardSpec extends AnyFunSuite {
     val shG = TextPack.simhashPairs(spark, TestSpark.sf)
     val shU = TextPack.simhashPairs(spark, TestSpark.sf, maxBucket = Long.MaxValue)
     assert(shG.except(shU).count() == 0 && shU.except(shG).count() == 0)
+    val docs = Tables.documents(spark, TestSpark.sf)
+    val wpG = TextPack.winnowPairs(docs)
+    val wpU = TextPack.winnowPairs(docs, maxBucket = Long.MaxValue)
+    assert(wpG.count() > 0)
+    assert(wpG.except(wpU).count() == 0 && wpU.except(wpG).count() == 0)
   }
 
   test("a tight bucket cap drops every multi-member bucket") {
@@ -82,6 +87,41 @@ class ShingleGuardSpec extends AnyFunSuite {
     // candidate generation must come up empty
     assert(TextPack.minhashCandidates(spark, TestSpark.sf, maxBucket = 1L).count() == 0)
     assert(TextPack.simhashPairs(spark, TestSpark.sf, maxBucket = 1L).count() == 0)
+    val docs = Tables.documents(spark, TestSpark.sf)
+    assert(TextPack.winnowPairs(docs, maxBucket = 1L).count() == 0)
+  }
+
+  test("winnow hot-fingerprint cap: boilerplate dropped, sim over pre-cap counts") {
+    import spark.implicits._
+    // 30 docs open with the same 16-word boilerplate run, so every doc
+    // selects the same boilerplate fingerprints (df = 30); docs 28 and
+    // 29 also share a 12-word tail. Under maxBucket = 20 only the
+    // planted pair survives, and its sim still divides by each doc's
+    // full fingerprint count, boilerplate included.
+    val boiler = (0 until 16).map(i => s"boiler$i").mkString(" ")
+    val docs = (0 until 30).map { i =>
+      val tail =
+        if (i >= 28) (0 until 12).map(j => s"planted$j").mkString(" ")
+        else (0 until 12).map(j => s"u${i}x$j").mkString(" ")
+      (i.toLong, s"$boiler $tail")
+    }.toDF("doc_id", "text")
+    val uncapped = TextPack.winnowPairs(docs, maxBucket = Long.MaxValue)
+    assert(uncapped.count() > 1, "the boilerplate alone must pair docs when uncapped")
+    val got = TextPack.winnowPairs(docs, maxBucket = 20L).collect()
+    assert(got.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((28L, 29L)))
+    val nShared = got.head.getAs[Long]("n_shared")
+    val nFps = TextPack.winnowFingerprints(docs)
+      .select(col("doc_id"), size(array_distinct(transform(col("sel"), _.getField("h")))))
+      .collect().map(r => r.getLong(0) -> r.getInt(1).toLong).toMap
+    val (na, nb) = (nFps(28L), nFps(29L))
+    // every hot fingerprint is boilerplate, present in all 30 docs
+    val nHot = Dedup.docFreq(Dedup.fingerprints(Dedup.winnow(Dedup.base(docs))), Seq("h"))
+      .filter(col("graft_df") > 20L).count()
+    assert(nHot > 0)
+    def sim(a: Long, b: Long): Double = BigDecimal(nShared.toDouble / (a + b - nShared))
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    assert(got.head.getAs[Double]("sim") == sim(na, nb))
+    assert(sim(na, nb) != sim(na - nHot, nb - nHot))
   }
 
   test("hash-fraction rung sample: no Sort, no GlobalLimit, deterministic") {
