@@ -28,6 +28,27 @@ object Bench {
       localDir.map("spark.local.dir" -> _) ++
       Seq("spark.sql.codegen.cache.maxEntries" -> "5000")
 
+  /** Untimed warm-up: JIT/janino-compile the common codegen paths
+    * (scan, hash agg, window, broadcast join) so per-query timings
+    * measure plan execution, not first-use compiler latency. Also
+    * warms the documents fixture's page cache: the first timed work is
+    * the shared shingle build over documents, and without this read
+    * its first sample pays the cold-file cost the second
+    * (post-two-sweeps) sample never sees — min-of-two would then
+    * systematically select the warm-path time. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    import org.apache.spark.sql.functions._
+    val li = spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
+    li.groupBy(col("l_returnflag")).agg(sum(col("l_quantity"))).count()
+    li.withColumn("rn", row_number().over(
+      org.apache.spark.sql.expressions.Window
+        .partitionBy(col("l_returnflag")).orderBy(col("l_orderkey")))).count()
+    li.join(broadcast(li.select(col("l_orderkey").as("k")).limit(10)),
+      col("l_orderkey") === col("k")).count()
+    spark.read.parquet(s"$sfDir/documents.parquet").count()
+    ()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.create(sessionConf())
@@ -63,26 +84,7 @@ object Bench {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.scheduler.TaskSetManager",
       org.apache.logging.log4j.Level.ERROR)
-    // untimed warm-up: JIT/janino-compile the common codegen paths
-    // (scan, hash agg, window, broadcast join) so per-query timings
-    // measure plan execution, not first-use compiler latency
-    locally {
-      import org.apache.spark.sql.functions._
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
-      li.groupBy(col("l_returnflag")).agg(sum(col("l_quantity"))).count()
-      li.withColumn("rn", org.apache.spark.sql.functions.row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("l_returnflag")).orderBy(col("l_orderkey")))).count()
-      li.join(broadcast(li.select(col("l_orderkey").as("k")).limit(10)),
-        col("l_orderkey") === col("k")).count()
-      // warm the documents fixture's page cache too: the FIRST timed
-      // work below is the shared shingle build over documents, and
-      // without this read its first sample pays the cold-file cost the
-      // second (post-two-sweeps) sample never sees — min-of-two would
-      // then systematically select the warm-path time
-      spark.read.parquet(s"$sfDir/documents.parquet").count()
-      spark.catalog.clearCache()
-    }
+    warmUp(spark, sfDir)
     // in-run host-load probe (r17): the 4-way concurrent shared build
     // is the battery's most contention-sensitive entry — calm 3.67 s
     // vs 6.40 s in the r16 driver window, pure oversubscription of an
@@ -101,11 +103,10 @@ object Bench {
       val t0 = System.nanoTime()
       var failed = false
       probePinned.keys.toSeq.sorted.foreach { n =>
-        try SparkEntry.queries(n)(spark, sfDir)
-          .write.mode("overwrite").format("noop").save()
+        try QueryScope.run(SparkEntry.queries(n)(spark, sfDir)
+          .write.mode("overwrite").format("noop").save())
         catch { case _: Throwable => failed = true }
       }
-      spark.catalog.clearCache()
       // a failed probe query leaves its pin in the denominator but no
       // work in the numerator, deflating the ratio exactly when the
       // probe must not under-read — treat any failure as hot and let
@@ -126,36 +127,25 @@ object Bench {
     // shared pipeline materializations are timed as their own entry so
     // per-query timings stay honest: q_ngram_jaccard / q_dedup_apply
     // read the pair table this step builds instead of one of them
-    // silently paying the whole shingle pipeline
+    // silently paying the whole shingle pipeline. Same protocol for
+    // the kNN candidate table (r17; q_knn_join / q_knn_label /
+    // q_knn_graph) and the ADC candidate table (q_ann_ivfpq_seeded /
+    // q_ann_refine): without it each build's cost hid inside whichever
+    // consumer ran first in sweep A and then vanished from the min.
+    // Each build runs in its own QueryScope; a failed build reads as
+    // (false, seconds until the failure).
+    def timedBuild(build: => Any): (Boolean, Double) = {
+      val t0 = System.nanoTime()
+      val ok = try { QueryScope.run(build); true } catch { case _: Throwable => false }
+      (ok, (System.nanoTime() - t0) / 1e9)
+    }
     val sharedConc1 = sharedConcurrency()
-    val tShared = System.nanoTime()
-    val sharedOk =
-      try { graft.queries.TextPack.prepareShared(spark, sfDir,
-        concurrency = sharedConc1); true }
-      catch { case _: Throwable => false }
-    val sharedSec = (System.nanoTime() - tShared) / 1e9
-    spark.catalog.clearCache()
-    // r17: the kNN candidate silver table (shared by q_knn_join /
-    // q_knn_label / q_knn_graph) — same protocol as _shared_pairs:
-    // timed as its own entry so the first kNN query in sweep order
-    // doesn't silently pay the whole build
-    val tSharedKnn = System.nanoTime()
-    val sharedKnnOk =
-      try { graft.queries.SimilarityPack.prepareSharedKnn(spark, sfDir); true }
-      catch { case _: Throwable => false }
-    val sharedKnnSec = (System.nanoTime() - tSharedKnn) / 1e9
-    spark.catalog.clearCache()
-    // r17 review: the ADC candidate table (shared by
-    // q_ann_ivfpq_seeded / q_ann_refine) gets the same timed-entry
-    // treatment — without it the codebook/encode/LUT pipeline cost
-    // hid inside whichever consumer ran first in sweep A and then
-    // vanished from the min entirely
-    val tSharedAdc = System.nanoTime()
-    val sharedAdcOk =
-      try { graft.queries.SimilarityPack.prepareSharedAdc(spark, sfDir); true }
-      catch { case _: Throwable => false }
-    val sharedAdcSec = (System.nanoTime() - tSharedAdc) / 1e9
-    spark.catalog.clearCache()
+    val (sharedOk, sharedSec) = timedBuild(graft.queries.TextPack.prepareShared(
+      spark, sfDir, concurrency = sharedConc1))
+    val (sharedKnnOk, sharedKnnSec) = timedBuild(
+      graft.queries.SimilarityPack.prepareSharedKnn(spark, sfDir))
+    val (sharedAdcOk, sharedAdcSec) = timedBuild(
+      graft.queries.SimilarityPack.prepareSharedAdc(spark, sfDir))
     // fixed (sorted) query order: Map iteration order reshuffles as
     // queries are added, which moves warm-up costs between rounds and
     // makes per-query timings incomparable round over round
@@ -168,9 +158,9 @@ object Bench {
     // while later queries matched the quiet host to the millisecond.
     // Spacing the two samples a full sweep (~minutes) apart means only
     // a load window spanning the entire run survives the min.
-    // per-query clearCache keeps a later sample from reading an
-    // earlier one's persisted frames; OS page cache stays warm in
-    // both sweeps, as it would be in steady state
+    // each query runs in its own QueryScope, so a later sample never
+    // reads an earlier one's persisted frames; OS page cache stays
+    // warm in both sweeps, as it would be in steady state
     // streaming queries get a third sweep: their per-sweep variance is
     // micro-batch scheduling (start/stop, state-store setup, no-data
     // watermark batches), not cache state, and two samples leave a
@@ -192,12 +182,12 @@ object Bench {
     def sweep(qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)]) =
       qs.map { case (name, fn) =>
         val t0 = System.nanoTime()
+        // the scope drops the query's persisted frames so cache
+        // pressure from one query never skews the next one's timing
         val ok = try {
-          fn(spark, sfDir).write.mode("overwrite").format("noop").save(); true
+          QueryScope.run(fn(spark, sfDir).write.mode("overwrite").format("noop").save())
+          true
         } catch { case _: Throwable => false }
-        // drop per-query persisted frames so cache pressure from one
-        // query never skews the next one's timing
-        spark.catalog.clearCache()
         name -> (ok, (System.nanoTime() - t0) / 1e9)
       }
     // third-sweep set beyond q_stream*: the queries whose r10 driver
@@ -270,27 +260,12 @@ object Bench {
     // the load probe re-runs here: contention two sweeps later is a
     // different window than at run start
     val sharedConc2 = sharedConcurrency()
-    val tShared2 = System.nanoTime()
-    val shared2Ok =
-      try { graft.queries.TextPack.prepareShared(spark, sfDir, "_probe",
-        concurrency = sharedConc2); true }
-      catch { case _: Throwable => false }
-    val shared2Sec = (System.nanoTime() - tShared2) / 1e9
-    spark.catalog.clearCache()
-    val tSharedKnn2 = System.nanoTime()
-    val sharedKnn2Ok =
-      try { graft.queries.SimilarityPack.prepareSharedKnn(spark, sfDir,
-        "_probe"); true }
-      catch { case _: Throwable => false }
-    val sharedKnn2Sec = (System.nanoTime() - tSharedKnn2) / 1e9
-    spark.catalog.clearCache()
-    val tSharedAdc2 = System.nanoTime()
-    val sharedAdc2Ok =
-      try { graft.queries.SimilarityPack.prepareSharedAdc(spark, sfDir,
-        "_probe"); true }
-      catch { case _: Throwable => false }
-    val sharedAdc2Sec = (System.nanoTime() - tSharedAdc2) / 1e9
-    spark.catalog.clearCache()
+    val (shared2Ok, shared2Sec) = timedBuild(graft.queries.TextPack.prepareShared(
+      spark, sfDir, "_probe", concurrency = sharedConc2))
+    val (sharedKnn2Ok, sharedKnn2Sec) = timedBuild(
+      graft.queries.SimilarityPack.prepareSharedKnn(spark, sfDir, "_probe"))
+    val (sharedAdc2Ok, sharedAdc2Sec) = timedBuild(
+      graft.queries.SimilarityPack.prepareSharedAdc(spark, sfDir, "_probe"))
     // the entry's ok flag is the FIRST build's alone — that is the
     // table every consumer query actually read; a probe-only failure
     // is reported as its own entry instead of poisoning this one.

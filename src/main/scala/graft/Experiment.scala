@@ -31,7 +31,7 @@ object Experiment {
       (col("vec_id") +: (col("vec_id") % 10).as("era")
         +: col("label").cast("double").as("target")
         +: (0 until 8).map(i => col("embedding").getItem(i).cast("double").as(s"e_$i"))): _*)
-      .persist()
+      .transform(QueryScope.persist)
 
     def score(scored: DataFrame): DataFrame =
       Scoring.scores(scored, col("era"), col("pred"), col("target"), 9.0, col("vec_id"))

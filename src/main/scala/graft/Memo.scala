@@ -57,7 +57,8 @@ object Memo {
 
   /** The path of the table `build` writes, materialized at most once
     * per (tag, source content). `build` must write the table to the
-    * path it is given. */
+    * path it is given; it runs in its own nested [[QueryScope]], so
+    * what it persists is released when it returns. */
   def table(s: SparkSession, tag: String, source: String)(build: String => Unit): String = {
     def materialize(name: String): String = {
       val digest = java.security.MessageDigest.getInstance("MD5")
@@ -65,7 +66,7 @@ object Memo {
       val out = s.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
         s"/graft_${tag}_${digest}_${s.sparkContext.applicationId}"
       register(s, out)
-      build(out)
+      QueryScope.run(build(out))
       out
     }
     keyOf(s, "table:" + tag, source) match {

@@ -21,7 +21,8 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
   * the first failure in submission order wins. The `graft.pool.size`
   * system property caps every pool's width (the spec's lever; also an
   * escape hatch on a driver with a tight thread budget); unset means
-  * full width.
+  * full width. Tasks run in the caller's [[QueryScope]], so what they
+  * persist is released with the caller's scope.
   */
 object Pools {
   def size(default: Int): Int =
@@ -40,9 +41,12 @@ object Pools {
     val n = size(width)
     if (ts.size <= 1 || n <= 1) ts.map(_())
     else {
+      val scope = QueryScope.current
       val pool = Executors.newFixedThreadPool(n)
       try {
-        val futs = ts.map(t => pool.submit(new Callable[A] { def call(): A = t() }))
+        val futs = ts.map(t => pool.submit(new Callable[A] {
+          def call(): A = QueryScope.within(scope)(t())
+        }))
         futs.map(f =>
           try f.get()
           catch { case e: ExecutionException => throw e.getCause })

@@ -43,7 +43,7 @@ object CrossVal {
         df.select(col(eraCol)).distinct(), eraCol, k)
     }
     // persisted: every fold branch re-reads the same fact+fold join
-    val withFold = df.join(broadcast(folds), eraCol).persist()
+    val withFold = df.join(broadcast(folds), eraCol).transform(graft.QueryScope.persist)
     kfoldCore(withFold, k, fit, score)
   }
 

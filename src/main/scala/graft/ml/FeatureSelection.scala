@@ -56,7 +56,7 @@ object FeatureSelection {
     import org.apache.spark.sql.expressions.Window
     // every action finishes before this returns (the result is a local
     // relation), so the fold split and each fold's persists are
-    // released here, not left to a caller's clearCache()
+    // released here, each fold's as soon as that fold is scored
     val rows = Folds.withFoldSplit(df, eraCol, k) { withFold =>
       // ONE upfront aggregate replaces a per-fold maxEraRows action (the
       // dispatch statistic below) AND materializes the persisted base
@@ -68,9 +68,10 @@ object FeatureSelection {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // per-fold fit + permutation scoring run concurrently: each fold's
       // fit and collect are independent jobs
-      def foldRows(f: Int): Seq[(String, Long, Double)] = {
+      def foldRows(f: Int): Seq[(String, Long, Double)] = graft.QueryScope.run {
         val train = withFold.filter(col("fold") =!= f).drop("fold")
-        val test = withFold.filter(col("fold") === f).drop("fold").persist()
+        val test = withFold.filter(col("fold") === f).drop("fold")
+          .transform(graft.QueryScope.persist)
         // one permutation join yields every feature's permuted copy;
         // per-feature variants are then pure projections over it.
         // permKeyFor lets the deterministic-fitter oracle twin swap the
@@ -78,50 +79,48 @@ object FeatureSelection {
         val permKey = permKeyFor.map(_(f))
           .getOrElse(xxhash64(idCols.map(col) :+ lit(seed + f): _*))
         val permuted = Folds.permuteManyWithinEra(test, featCols, eraCol, idCols,
-          permKey).persist()
-        try {
-          val predict = fit(train)
-          val variants = ("__base__", test) +: featCols.map { ft =>
-            ft -> permuted.select(test.columns.map(c =>
-              if (c == ft) col(s"${ft}_perm").as(ft) else col(c)): _*)
+          permKey).transform(graft.QueryScope.persist)
+        val predict = fit(train)
+        val variants = ("__base__", test) +: featCols.map { ft =>
+          ft -> permuted.select(test.columns.map(c =>
+            if (c == ft) col(s"${ft}_perm").as(ft) else col(c)): _*)
+        }
+        val tagged = variants.map { case (tag, fr) =>
+          fr.select(test.columns.map(col): _*).withColumn("graft_feat", lit(tag))
+        }.reduce(_ unionByName _)
+        val scored = predict(tagged)
+        // r14: era-size-adaptive rank dispatch, measured on the PERSISTED
+        // test frame (cheap) — the variant tag multiplies window-partition
+        // COUNT by features+1 while each (variant, era) partition stays
+        // one era of test rows, so the test frame's largest era is the
+        // honest dispatch statistic for the tagged union. Past the
+        // ceiling, the rank rides the two-pass form with a composite
+        // (variant, era) key — bit-identical values, no window partition
+        // spans an era (the same hazard SCALE.md's permutation pair
+        // quantifies: 23.7x vs 5.5x wall at 100x).
+        val twoPass = maxEraByFold.getOrElse(f.toLong, 0L) >
+          graft.operators.EraRank.onePassCeiling(test)
+        val ranked =
+          if (!twoPass) {
+            val order = Window.partitionBy(col("graft_feat"), col(eraCol))
+              .orderBy((col("pred") +: idCols.map(col)).map(_.asc): _*)
+            val whole = Window.partitionBy(col("graft_feat"), col(eraCol))
+            scored.withColumn("graft_r",
+              row_number().over(order).cast("double") / count(lit(1)).over(whole))
+          } else {
+            graft.operators.EraRank.withPctRankFirstTwoPass(scored, "graft_r", 32,
+              struct(col("graft_feat"), col(eraCol)), col("pred"), idCols.map(col): _*)
           }
-          val tagged = variants.map { case (tag, fr) =>
-            fr.select(test.columns.map(col): _*).withColumn("graft_feat", lit(tag))
-          }.reduce(_ unionByName _)
-          val scored = predict(tagged)
-          // r14: era-size-adaptive rank dispatch, measured on the PERSISTED
-          // test frame (cheap) — the variant tag multiplies window-partition
-          // COUNT by features+1 while each (variant, era) partition stays
-          // one era of test rows, so the test frame's largest era is the
-          // honest dispatch statistic for the tagged union. Past the
-          // ceiling, the rank rides the two-pass form with a composite
-          // (variant, era) key — bit-identical values, no window partition
-          // spans an era (the same hazard SCALE.md's permutation pair
-          // quantifies: 23.7x vs 5.5x wall at 100x).
-          val twoPass = maxEraByFold.getOrElse(f.toLong, 0L) >
-            graft.operators.EraRank.onePassCeiling(test)
-          val ranked =
-            if (!twoPass) {
-              val order = Window.partitionBy(col("graft_feat"), col(eraCol))
-                .orderBy((col("pred") +: idCols.map(col)).map(_.asc): _*)
-              val whole = Window.partitionBy(col("graft_feat"), col(eraCol))
-              scored.withColumn("graft_r",
-                row_number().over(order).cast("double") / count(lit(1)).over(whole))
-            } else {
-              graft.operators.EraRank.withPctRankFirstTwoPass(scored, "graft_r", 32,
-                struct(col("graft_feat"), col(eraCol)), col("pred"), idCols.map(col): _*)
-            }
-          val sp = ranked
-            .groupBy(col("graft_feat"))
-            .agg(corr(col(targetCol), col("graft_r")).as("spearman"))
-            .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-          val base = sp("__base__")
-          featCols.map { feat =>
-            val shuff = sp(feat)
-            val imp = if (shuff >= 1.0) 0.0 else (base - shuff) / (1.0 - shuff)
-            (feat, f.toLong, imp)
-          }
-        } finally { permuted.unpersist(); test.unpersist() }
+        val sp = ranked
+          .groupBy(col("graft_feat"))
+          .agg(corr(col(targetCol), col("graft_r")).as("spearman"))
+          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+        val base = sp("__base__")
+        featCols.map { feat =>
+          val shuff = sp(feat)
+          val imp = if (shuff >= 1.0) 0.0 else (base - shuff) / (1.0 - shuff)
+          (feat, f.toLong, imp)
+        }
       }
       graft.Pools.inOrder(k)((0 until k).map(f => () => foldRows(f))).flatten
     }

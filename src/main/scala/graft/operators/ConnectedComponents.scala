@@ -32,11 +32,8 @@ object ConnectedComponents {
   /** (a, b) edge list -> (id, rep) for every node appearing in an
     * edge, rep = min node id of its component. Throws if the graph
     * has not converged within `maxIter` rounds (a silent partial
-    * closure would under-merge clusters).
-    *
-    * The returned relation is PERSISTED — callers that keep the
-    * session alive should `unpersist()` it when done; harness runs
-    * clear the cache per query.
+    * closure would under-merge clusters). The returned relation is
+    * persisted in the caller's [[graft.QueryScope]].
     *
     * KNOWN BOUNDED LEAK: the per-round localCheckpoint blocks bypass
     * the CacheManager, so they linger until RDD GC — ≤ rounds
@@ -105,7 +102,7 @@ object ConnectedComponents {
       val labs = parent.keys.toSeq.map(v => (v, find(v)))
       val spark = edges.sparkSession
       import spark.implicits._
-      return labs.toDF("id", "rep").persist()
+      return labs.toDF("id", "rep").transform(graft.QueryScope.persist)
     }
     var round = 0
     while (round < maxIter) {
@@ -152,7 +149,7 @@ object ConnectedComponents {
         val stars = e.select(col("u").as("id"), col("v").as("rep"))
           .union(e.select(col("v").as("id"), col("v").as("rep")))
           .distinct()
-        return stars.union(selfLoopSingletons(stars)).persist()
+        return stars.union(selfLoopSingletons(stars)).transform(graft.QueryScope.persist)
       }
       round += 1
     }

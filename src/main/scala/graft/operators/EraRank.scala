@@ -91,21 +91,13 @@ object EraRank {
     * the row number of an independent single-ordering two-pass rank
     * (the integer core of [[withPctRankFirstTwoPass]]; FoldsSpec pins the
     * permutation built on this against the one-pass form
-    * row-for-row).
-    *
-    * The third element is an explicit cleanup hook that unpersists
-    * the shared bucketed base. Call it after BOTH returned frames
-    * have been consumed (an eviction before then only costs a
-    * consistent recompute, never a wrong answer). The unmanaged pair
-    * overload (a bounded persist leak by construction — no safe
-    * unpersist point inside a call returning lazy frames) was
-    * deprecated in r14 and removed in r15 so the leak class is
-    * unconstructible. */
-  def withRowNumberTwoPassPairManaged(df: DataFrame, out: String, buckets: Int,
-                                      era: Column,
-                                      predA: Column, tieA: Seq[Column],
-                                      predB: Column, tieB: Seq[Column])
-      : (DataFrame, DataFrame, () => Unit) = {
+    * row-for-row). The base registers to the caller's
+    * [[graft.QueryScope]] and lives until that scope closes. */
+  def withRowNumberTwoPassPair(df: DataFrame, out: String, buckets: Int,
+                               era: Column,
+                               predA: Column, tieA: Seq[Column],
+                               predB: Column, tieB: Seq[Column])
+      : (DataFrame, DataFrame) = {
     require(buckets >= 2, s"need >=2 buckets, got $buckets")
     val keep = df.columns.map(col)
     val base = df.withColumn("graft_e", era)
@@ -125,7 +117,7 @@ object EraRank {
       // the persist-vs-rescan wash the probe measured for two.
       // Recompute after eviction stays consistent: bucketing is a
       // pure function of values and frozen literals.
-      .persist()
+      .transform(graft.QueryScope.persist)
     // BOTH orderings' exclusive offsets in ONE pass over the cached
     // base (r18): the two per-ordering groupBy(e, bkt) aggregates fold
     // into a single GROUPING SETS aggregate — one exchange instead of
@@ -160,8 +152,7 @@ object EraRank {
             .orderBy((pred +: tie).map(_.asc): _*)))
         .select((keep :+ col(out)): _*)
     }
-    (ranked(1, "graft_bkt_a", predA, tieA), ranked(2, "graft_bkt_b", predB, tieB),
-      () => { bucketed.unpersist(); () })
+    (ranked(1, "graft_bkt_a", predA, tieA), ranked(2, "graft_bkt_b", predB, tieB))
   }
 
   private def twoPassRank(df: DataFrame, buckets: Int, era: Column,

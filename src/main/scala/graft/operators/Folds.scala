@@ -25,16 +25,16 @@ object Folds {
         ((row_number().over(Window.orderBy(col(eraCol))) - 1) % k).cast("long"))
 
   /** Scoped fold split: `df` broadcast-joined to the [[foldAssignment]]
-    * of its distinct eras, persisted, handed to `body`, and unpersisted
-    * when `body` returns or throws. Every fold branch (and every
-    * candidate scored against the same split) re-reads the one
-    * persisted join. `body` must finish every action on the frame
-    * before it returns. */
-  def withFoldSplit[A](df: DataFrame, eraCol: String, k: Int)(body: DataFrame => A): A = {
-    val folds = foldAssignment(df.select(col(eraCol)).distinct(), eraCol, k)
-    val withFold = df.join(broadcast(folds), eraCol).persist()
-    try body(withFold) finally withFold.unpersist()
-  }
+    * of its distinct eras, persisted, handed to `body`, and released
+    * with `body`'s own [[graft.QueryScope]] when `body` returns or
+    * throws. Every fold branch (and every candidate scored against the
+    * same split) re-reads the one persisted join. `body` must finish
+    * every action on the frame before it returns. */
+  def withFoldSplit[A](df: DataFrame, eraCol: String, k: Int)(body: DataFrame => A): A =
+    graft.QueryScope.run {
+      val folds = foldAssignment(df.select(col(eraCol)).distinct(), eraCol, k)
+      body(df.join(broadcast(folds), eraCol).transform(graft.QueryScope.persist))
+    }
 
   /** M1 seeded-random variant (`utils.py:26-29`: np.random.shuffle of
     * unique eras + array_split). Distinct eras are few by construction
@@ -126,7 +126,7 @@ object Folds {
     * 100x data because BOTH its ranking windows partition by era
     * alone (one task per era, the W1 hazard again). Here both
     * orderings' per-era row numbers come from
-    * [[EraRank.withRowNumberTwoPassPairManaged]] (sketch-bucketed
+    * [[EraRank.withRowNumberTwoPassPair]] (sketch-bucketed
     * offsets + (era, bucket) windows — no window partition ever spans
     * an era),
     * and the positional join keys on (era, rn), which is unique per
@@ -137,42 +137,24 @@ object Folds {
   def permuteWithinEraTwoPass(df: DataFrame, valueCol: String, eraCol: String,
                               idCols: Seq[String], orderKey: Column,
                               buckets: Int = 32): DataFrame = {
-    // KNOWN BOUNDED LEAK (mirrors the rank pair's contract): the
-    // shared bucketed base stays persisted — the returned frame is
-    // lazy, so there is no safe point here to release it. One entry
-    // per call; the harness clears the cache between queries.
-    // Long-lived sessions: [[permuteWithinEraTwoPassManaged]].
-    val (out, _) = permuteWithinEraTwoPassManaged(
-      df, valueCol, eraCol, idCols, orderKey, buckets)
-    out
-  }
-
-  /** [[permuteWithinEraTwoPass]] plus the cleanup hook that unpersists
-    * the shared bucketed base — call it after the permuted frame has
-    * been consumed (an earlier eviction only costs a consistent
-    * recompute, never a wrong answer). */
-  def permuteWithinEraTwoPassManaged(df: DataFrame, valueCol: String, eraCol: String,
-                                     idCols: Seq[String], orderKey: Column,
-                                     buckets: Int = 32): (DataFrame, () => Unit) = {
     val ids = idCols.map(col)
     val keep = df.columns.filterNot(_ == valueCol).map(col)
     // SHARED-pass form (r12, VERDICT task 7): both orderings' ranks
     // come from ONE fused sketch aggregate and ONE persisted bucketed
-    // base ([[EraRank.withRowNumberTwoPassPairManaged]]) instead of
+    // base ([[EraRank.withRowNumberTwoPassPair]]) instead of
     // two independent two-pass pipelines — the prior form re-derived
     // the same base per ordering and measured ~8x the one-pass at
     // sizes where an era fits one task. Each rank window still
     // computes exactly once. Like the rank form, this is the CEILING
     // REMOVER for eras that outgrow a task, not the small-era default.
-    val (ra, rb, cleanup) = EraRank.withRowNumberTwoPassPairManaged(
+    val (ra, rb) = EraRank.withRowNumberTwoPassPair(
       df, "graft_rn", buckets, col(eraCol), ids.head, ids.tail, orderKey, ids)
     val a = ra.select((keep :+ col("graft_rn")): _*)
     val b = rb.select(col(eraCol).as("graft_era_b"),
       col("graft_rn").as("graft_rn_b"), col(valueCol))
-    val joined = a.join(b, a(eraCol) === col("graft_era_b") &&
+    a.join(b, a(eraCol) === col("graft_era_b") &&
         col("graft_rn") === col("graft_rn_b"))
       .drop("graft_rn", "graft_rn_b", "graft_era_b")
-    (joined, cleanup)
   }
 
   /** Era-size-ADAPTIVE permutation: measures the largest era
@@ -222,13 +204,11 @@ object Folds {
     // a window each (differently-pruned projections defeat exchange
     // reuse otherwise). Ranks are unchanged: each row_number sees the
     // same per-era row set and the same deterministic tie-broken
-    // order. KNOWN BOUNDED LEAK (the permuteWithinEraTwoPass
-    // contract): the returned frame is lazy, so there is no safe
-    // unpersist point here; the harness clears the cache per query.
+    // order.
     val ranked = df
       .withColumn("graft_rn", row_number().over(wId))
       .withColumn("graft_rn_b", row_number().over(wKey))
-      .persist()
+      .transform(graft.QueryScope.persist)
     val a = ranked.select((keep :+ col("graft_rn")): _*)
     val b = ranked.select(col(eraCol).as("graft_era_b"),
       col("graft_rn_b"), col(valueCol))

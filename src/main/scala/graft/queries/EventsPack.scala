@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Memo, Tables}
+import graft.{Memo, QueryScope, Tables}
 
 /** Event-table coverage: JSON props (F-json), date bucketing (the era
   * generalization, SURVEY §1.1), tumbling windows (§2.10 batch form),
@@ -495,13 +495,12 @@ object EventsPack extends QueryPack {
     // obs feeds the boundary aggregate AND the anchor window; marks
     // feeds three branches (anchor spans, head carry-back, no-anchor
     // users) — persist both so the events scan + hourly aggregation
-    // run once per execution, not once per branch (guide §1.2; the
-    // harness clears the cache between queries)
+    // run once per execution, not once per branch (guide §1.2)
     val obs = events
       .select(col("user_id"), expr("unix_micros(ts) div 3600000000").as("t"),
         col("value"))
       .groupBy(col("user_id"), col("t")).agg(avg(col("value")).as("v"))
-      .persist()
+      .transform(QueryScope.persist)
     // ONE tiny per-user aggregate carries every boundary fact: grid
     // bounds over ALL observation hours, plus the first anchor as a
     // null-skipping struct-min (t unique per user, so the struct min
@@ -512,7 +511,7 @@ object EventsPack extends QueryPack {
       .agg(min(col("t")).as("t0"), max(col("t")).as("t1"),
         min(when(col("v").isNotNull,
           struct(col("t").as("fa_t"), col("v").as("fa_v")))).as("fa"))
-      .persist()
+      .transform(QueryScope.persist)
     val w = Window.partitionBy(col("user_id")).orderBy(col("t"))
     val anchors = obs.filter(col("v").isNotNull)
       .withColumn("nt", lead(col("t"), 1).over(w))

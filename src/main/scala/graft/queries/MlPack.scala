@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Memo, Tables}
+import graft.{Memo, QueryScope, Tables}
 import graft.ml.{Clustering, CrossVal, FeatureSelection, Scoring, Transform, TreeShap}
 
 /** The compound ML macros (SURVEY §2.9) surfaced as driver-checkable
@@ -322,13 +322,13 @@ object MlPack extends QueryPack {
     * frac_i = min(1, r0·eta^i/R)) — any drift in the engine's bracket
     * loop, rung sizing, or halving rule is a driver-visible hash
     * failure. */
-  def qHyperband(s: SparkSession, d: String): DataFrame = {
+  def qHyperband(s: SparkSession, d: String): DataFrame = QueryScope.run {
     import s.implicits._
     import graft.ml.Tuning
     val ev = Tables.events(s, d)
       .select(col("event_id"), (Tables.eraOfTs(col("ts")) % 2).as("fold"),
         col("event_type"), col("value"))
-      .persist()
+      .transform(QueryScope.persist)
     // ONE Spark action per RUNG: the rung's alpha configs become a
     // broadcast literal relation cross-joined into a single scored
     // plan (the q_param_sweep shape) instead of a job per config —
@@ -374,7 +374,6 @@ object MlPack extends QueryPack {
     }
     val trials = Tuning.hyperbandBatchTagged(Seq(Tuning.Param("alpha", 0.0, 1.0)),
       maxResource = 4, eta = 2, seed = 42)(instrumented)
-    ev.unpersist()
     require(trials.nonEmpty && trials.head.score >= trials.last.score,
       "hyperband returned an unsorted or empty leaderboard")
     // sequential call order = brackets s descending, rungs ascending
@@ -395,14 +394,14 @@ object MlPack extends QueryPack {
     * literal relation into a single cross-joined scoring plan. The
     * LHS-sampled [[qHyperband]] stays as the reference-faithful API
     * (JVM-RNG configs are inherently rows-only). */
-  def qSuccessiveHalving(s: SparkSession, d: String): DataFrame = {
+  def qSuccessiveHalving(s: SparkSession, d: String): DataFrame = QueryScope.run {
     import s.implicits._
     val ev = Tables.events(s, d)
       .select(col("event_id"), (Tables.eraOfTs(col("ts")) % 2).as("fold"),
         col("event_type"), col("value"),
         pmod(graft.operators.TextOps.hash60(
           concat_ws("#", lit("rung"), col("event_id"))), lit(10000L)).as("coin"))
-      .persist()
+      .transform(QueryScope.persist)
     def rung(alphas: Seq[Double], frac: Double): Seq[(Double, Double)] = {
       val head = if (frac >= 1.0) ev
                  else ev.filter(col("coin") < lit((frac * 10000).toLong))
@@ -432,7 +431,6 @@ object MlPack extends QueryPack {
       board = rung(configs, frac)
       configs = board.take(keep).map(_._1)
     }
-    ev.unpersist()
     board.zipWithIndex.map { case ((a, r), i) =>
       (i + 1L, a, math.rint(r * 1e4) / 1e4)
     }.toDF("rank", "alpha", "rmse")

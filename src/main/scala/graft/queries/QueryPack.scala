@@ -10,14 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * rounding, types aligned: integer outputs cast to BIGINT both sides,
   * money sums rounded to 1 decimal, ratios/corr rounded to 5-6).
   *
-  * HARNESS-MANAGED CACHE CONTRACT: some query builders `persist()`
-  * repeated subtrees and return a lazy frame, so there is no safe
-  * in-function unpersist point — the cached relations are released by
-  * the harness's per-query `spark.catalog.clearCache()` (Bench, Verify
-  * and TimeQ all do this between queries). A caller embedding these
-  * builders in a long-lived session must clear (or individually
-  * unpersist) cached relations between invocations, or they accumulate
-  * across calls (ADVICE r17). */
+  * Run each builder and the action on its frame inside one
+  * [[graft.QueryScope.run]], which releases what the builder persisted. */
 trait QueryPack {
   type Q = (SparkSession, String) => DataFrame
   def queries: Map[String, Q]

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Memo, Tables}
+import graft.{Memo, QueryScope, Tables}
 import graft.operators.{Ann, Pq}
 
 /** Similarity search over the `embeddings` table (north-star ANN
@@ -310,7 +310,7 @@ object SimilarityPack extends QueryPack {
     // final fusion join, and transitively the PRF vector used twice) —
     // persist the 50-row head so the whole lexical scoring pipeline
     // runs once per execution, not once per consumer (guide §1.2:
-    // don't compute things twice; the bench clears the cache per query)
+    // don't compute things twice)
     // coalesce(1) before persist: a KB-sized cached relation otherwise
     // inherits the session's shuffle-partition layout, costing one
     // cached-read task PER PARTITION per consumer (32 at local[32] —
@@ -322,7 +322,7 @@ object SimilarityPack extends QueryPack {
       .withColumn("r_lex", row_number().over(
         Window.orderBy(col("bm25").desc, col("doc_id"))).cast("long"))
       .coalesce(1)
-      .persist()
+      .transform(QueryScope.persist)
     val ex = embSpread(s, d)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("p", "x")))
       .select(col("vec_id"), col("p"), col("x").cast("double").as("x"))
@@ -335,7 +335,7 @@ object SimilarityPack extends QueryPack {
       .join(ex, "vec_id")
       .groupBy(col("p")).agg(avg(col("x")).as("qx"))
       .coalesce(1)
-      .persist()
+      .transform(QueryScope.persist)
     val qn = prf.agg(sqrt(sum(col("qx") * col("qx"))).as("qn"))
     val semTop = ex.join(broadcast(prf), "p")
       .groupBy(col("vec_id"))
@@ -783,12 +783,12 @@ object SimilarityPack extends QueryPack {
     // e feeds the sketch aggregate AND the bucketing join; bucketed
     // (below) feeds the offset rollup AND the final rank — persist
     // both so the embeddings explode runs once per execution (guide
-    // §1.2; the harness clears the cache between queries)
+    // §1.2)
     val e = embSpread(s, d)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .select(col("vec_id"), col("pos").cast("long").as("pos"),
         col("x").cast("double").as("x"))
-      .persist()
+      .transform(QueryScope.persist)
     val pcts = array((1 until 32).map(i => lit(i / 32.0)): _*)
     // low sketch accuracy on purpose: the edges only need to be
     // monotone bucket bounds (exactness comes from the rank phase),
@@ -799,7 +799,7 @@ object SimilarityPack extends QueryPack {
     val bucketed = e.join(broadcast(edges), Seq("pos"))
       .withColumn("bkt", size(filter(col("edges"), ed => ed < col("x"))))
       .drop("edges")
-      .persist()
+      .transform(QueryScope.persist)
     // exclusive per-dim offset: rows in strictly-lower buckets all have
     // strictly smaller x (bucketing is monotone), so offset + local
     // min-rank = global min-rank
@@ -891,10 +891,11 @@ object SimilarityPack extends QueryPack {
   private def sharedKnnCandidates(s: SparkSession, d: String, k: Int,
                                   tagSuffix: String = ""): DataFrame =
     s.read.parquet(Memo.table(s, "knncand" + tagSuffix, s"$d/embeddings.parquet") { out =>
-      // persist scoped to the one materializing write: both rank
-      // subsets read the same candidate relation, and unpersisted the
-      // crossJoin+window pipeline would execute twice
-      val cand = knnCandidatesFlat(s, d, k).persist()
+      // persisted for the one materializing write (released when the
+      // build's scope closes): both rank subsets read the same
+      // candidate relation, and unpersisted the crossJoin+window
+      // pipeline would execute twice
+      val cand = knnCandidatesFlat(s, d, k).transform(QueryScope.persist)
       val globalTop = cand
         .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
           .orderBy(col("cos").desc, col("n_id"))).cast("long"))
@@ -911,7 +912,6 @@ object SimilarityPack extends QueryPack {
           col("rank"), col("seed_rank"))
         .unionAll(seedTop)
         .write.mode("overwrite").parquet(out)
-      cand.unpersist()
     })
 
   /** Bench hook: materialize the shared kNN candidate table so its

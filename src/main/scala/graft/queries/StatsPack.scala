@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{QueryScope, Tables}
 
 /** Higher-order statistics + parsing coverage: era-string parsing
   * (F1), distance correlation on a bounded sample (A11), closed-form
@@ -218,11 +218,11 @@ object StatsPack extends QueryPack {
     // literal map lookup, so every job stays a shallow scan of the
     // cache — the join-chain form paid seconds of codegen compile per
     // ever-deeper plan for the same 10-row broadcasts
-    val binned = base.crossJoin(broadcast(ext))
-      .select(col("y"), bin(col("x"), col("xlo"), col("xhi")).as("bq"),
-        bin(col("y"), col("ylo"), col("yhi")).as("bp"))
-      .persist()
-    try {
+    QueryScope.run {
+      val binned = base.crossJoin(broadcast(ext))
+        .select(col("y"), bin(col("x"), col("xlo"), col("xhi")).as("bq"),
+          bin(col("y"), col("ylo"), col("yhi")).as("bp"))
+        .transform(QueryScope.persist)
       def asMapLookup(rows: Array[org.apache.spark.sql.Row], key: Column): Column = {
         val entries = rows.flatMap(r => Seq(lit(r.getInt(0)), lit(r.getDouble(1))))
         element_at(map(entries.toIndexedSeq: _*), key)
@@ -238,7 +238,7 @@ object StatsPack extends QueryPack {
       val r = binned.agg(round(corr(phi, theta), 6).as("maxcorr"),
         count(lit(1)).as("n")).head()
       Seq((r.getDouble(0), r.getLong(1))).toDF("maxcorr", "n")
-    } finally binned.unpersist()
+    }
   }
 
   /** Session windows over events (gap 30 min): Spark-native

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Memo, Tables}
+import graft.{Memo, QueryScope, Tables}
 import graft.operators.{Dedup, TextOps}
 
 /** Deduplication + text analysis over `documents` — the
@@ -139,36 +139,33 @@ object TextPack extends QueryPack {
       .select(col("a"), col("b"), col("jacv"))
   }
 
-  /** Runs `body` with a thunk for the shared [[Dedup.base]] of `d`'s
-    * documents, built lazily: the first call persists it (with `warm`,
-    * also materializing it through the noop sink, so concurrent builds
-    * read the cache instead of racing to compute its partitions), and
-    * `finally` releases it. A body that never calls the thunk — every
-    * memo hit — runs no job. */
+  /** Runs `body` in its own [[QueryScope]] with a thunk for the
+    * shared [[Dedup.base]] of `d`'s documents, built lazily: the first
+    * call persists it (with `warm`, also materializing it through the
+    * noop sink, so concurrent builds read the cache instead of racing
+    * to compute its partitions). The base registers to this scope,
+    * not to the memo build (on whichever pool thread) that first
+    * calls the thunk, so it outlives every build and is released when
+    * `body` ends. A body that never calls the thunk — every memo hit —
+    * runs no job. */
   private def withBase[A](s: SparkSession, d: String, warm: Boolean)(
-      body: (() => DataFrame) => A): A = {
-    var persisted = Option.empty[DataFrame]
-    lazy val base = {
-      val b = Dedup.base(docsSpread(s, d)).persist()
-      persisted = Some(b)
-      if (warm) b.write.mode("overwrite").format("noop").save()
-      b
+      body: (() => DataFrame) => A): A =
+    QueryScope.run {
+      val scope = QueryScope.current
+      lazy val base = QueryScope.within(scope) {
+        val b = Dedup.base(docsSpread(s, d)).transform(QueryScope.persist)
+        if (warm) b.write.mode("overwrite").format("noop").save()
+        b
+      }
+      body(() => base)
     }
-    try body(() => base) finally persisted.foreach(_.unpersist())
-  }
-
-  /** `body` over `df` persisted, released in `finally`. */
-  private def withPersisted[A](df: DataFrame)(body: DataFrame => A): A = {
-    val p = df.persist()
-    try body(p) finally p.unpersist()
-  }
 
   /** The candidate-pair table (Jaccard >= 0.05) SHARED by
     * `q_ngram_jaccard`, `q_dedup_apply` and every >= 0.5 consumer: the
     * first query to run materializes it once as a parquet table
     * ([[Memo.table]]) and every consumer derives from that table
-    * instead of re-running the shingle → self-join pipeline. Survives
-    * `catalog.clearCache()` because it is a table, not a cached plan.
+    * instead of re-running the shingle → self-join pipeline. It is a
+    * table, not a cached plan, so it outlives every query's scope.
     * One groupBy(sh) aggregate serves both the idf-floor hot set
     * (df > maxDf ⊆ df > 1 for any floor >= 1) and the [[sharedShingleDf]]
     * index; the floored relation persists for its three readers (sizes
@@ -177,15 +174,13 @@ object TextPack extends QueryPack {
                                 base: () => DataFrame): DataFrame =
     s.read.parquet(Memo.table(s, "pairs" + tagSuffix, s"$d/documents.parquet") { out =>
       val raw = Dedup.shingles(base())
-      withPersisted(repeatedShingles(raw)) { rep =>
-        val maxDf = resolveMaxDf(s, d, ScaleRelativeDf)
-        withPersisted(Dedup.cap(raw, Seq("sh"), maxDf, rep)) { dsh =>
-          Dedup.overlap(dsh, "sh", dsh).filter(col("jacv") >= 0.05)
-            .select(col("a"), col("b"), col("jacv"))
-            .write.mode("overwrite").parquet(out)
-          sharedShingleDf(s, d, tagSuffix, Some(rep))
-        }
-      }
+      val rep = repeatedShingles(raw).transform(QueryScope.persist)
+      val maxDf = resolveMaxDf(s, d, ScaleRelativeDf)
+      val dsh = Dedup.cap(raw, Seq("sh"), maxDf, rep).transform(QueryScope.persist)
+      Dedup.overlap(dsh, "sh", dsh).filter(col("jacv") >= 0.05)
+        .select(col("a"), col("b"), col("jacv"))
+        .write.mode("overwrite").parquet(out)
+      sharedShingleDf(s, d, tagSuffix, Some(rep))
     })
 
   /** [[pairsTable]] under the default tag; a standalone build persists
@@ -223,9 +218,8 @@ object TextPack extends QueryPack {
   private[graft] def minhashTable(s: SparkSession, d: String, tagSuffix: String,
                                   base: () => DataFrame): DataFrame =
     s.read.parquet(Memo.table(s, "mhcand" + tagSuffix, s"$d/documents.parquet") { out =>
-      withPersisted(Dedup.bands(Dedup.minhash(base()), Dedup.MinhashBands)) { st =>
-        Dedup.candidates(st, DefaultMaxBucket).write.mode("overwrite").parquet(out)
-      }
+      val st = Dedup.bands(Dedup.minhash(base()), Dedup.MinhashBands).transform(QueryScope.persist)
+      Dedup.candidates(st, DefaultMaxBucket).write.mode("overwrite").parquet(out)
     })
 
   private def sharedMinhashCandidates(s: SparkSession, d: String): DataFrame =
@@ -840,9 +834,8 @@ object TextPack extends QueryPack {
     // selection, the candidate probe's right side, and the per-doc
     // array build) — persist it so the docs-scan → fused shingle hash →
     // explode → df-floor pipeline runs once per execution instead of
-    // once per consumer (guide §1.2; the harness clears the cache
-    // between queries)
-    val dsh = shingleRelation(s, d).persist()
+    // once per consumer (guide §1.2)
+    val dsh = shingleRelation(s, d).transform(QueryScope.persist)
     // rarest-shingle anchors WITHOUT a corpus-scale×corpus-scale join
     // (the full shingle relation joined to a full df relation on sh is
     // a sort-merge of two ~|corpus shingles| relations): a doc's rarest
@@ -975,7 +968,7 @@ object TextPack extends QueryPack {
     // equi-joins on band values (the 100 TB-safe shape).
     val banded = Dedup.bands(sigDf, (0 until 4).map(b =>
         shiftright(col("simhash"), 12 * b).bitwiseAND(lit(0xFFFL))), carry = Seq("simhash"))
-      .persist() // read by the hot-bucket aggregate and both self-join sides
+      .transform(QueryScope.persist) // read by the hot-bucket aggregate and both self-join sides
     Dedup.candidates(banded, maxBucket, carry = Seq("simhash"))
       .withColumn("hd", expr("bit_count(simhash_a ^ simhash_b)").cast("long"))
       .filter(col("hd") <= 3)
@@ -1364,15 +1357,15 @@ object TextPack extends QueryPack {
     // bw feeds the model fit AND the scoring join; cab feeds the
     // context rollup AND the model join — persist both so the docs
     // scan + bigram explode + splits run once per execution (guide
-    // §1.2; the harness clears the cache between queries)
+    // §1.2)
     val bw = docs.select(col("doc_id"), col("lang"), explode(
         graft.functions.ShingleStrings.shingle_strings(col("text"), 2)).as("bg"))
       .withColumn("wa", split(col("bg"), " ").getItem(0))
       .withColumn("wb", split(col("bg"), " ").getItem(1))
-      .persist()
+      .transform(QueryScope.persist)
     val cab = bw.groupBy(col("lang"), col("wa"), col("wb"))
       .agg(count(lit(1)).as("c_ab"))
-      .persist()
+      .transform(QueryScope.persist)
     val ctx = cab.groupBy(col("lang"), col("wa")).agg(sum(col("c_ab")).as("ctx"))
     val uni = docs.select(col("lang"), explode(TextOps.words(col("text"))).as("wb"))
       .groupBy(col("lang"), col("wb")).agg(count(lit(1)).as("c_b"))

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{SparkEntry, Tables, TempDirs}
+import graft.{QueryScope, SparkEntry, Tables, TempDirs}
 
 /** 10x scale probe (empirical backing for SCALE.md): blow the heavy
   * fixtures up `factor`x with key-shifted, content-salted copies, then
@@ -374,29 +374,26 @@ object ScaleProbe {
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    // min of two runs per (query, dir); per-run clearCache like Bench.
+    // min of two runs per (query, dir), each in its own QueryScope
+    // like Bench.
     // Consume through the noop sink, NOT .count(): counting a
     // cardinality-invariant plan lets Catalyst prune the entire
     // window/aggregate pipeline (measured: the one-pass era rank
     // "cost" 0.2 s at 100x under count() vs ~22 s actually executed)
     def best(name: String, dir: String): Double =
       (1 to 2).map { _ =>
-        val t = streamProbes.get(name) match {
-          case Some(drain) => timed(drain(spark, dir))
-          case None => timed(SparkEntry.queries(name)(spark, dir)
-            .write.mode("overwrite").format("noop").save())
-        }
-        spark.catalog.clearCache()
-        t
+        QueryScope.run(timed(streamProbes.get(name) match {
+          case Some(drain) => drain(spark, dir)
+          case None => SparkEntry.queries(name)(spark, dir)
+            .write.mode("overwrite").format("noop").save()
+        }))
       }.min
 
     // shared shingle pipeline: memoized per (dir, tag), so force a
     // fresh build per timed run via distinct probe tags
     def sharedBest(dir: String): Double =
       Seq("_sp1", "_sp2").map { tag =>
-        val t = timed(graft.queries.TextPack.prepareShared(spark, dir, tag))
-        spark.catalog.clearCache()
-        t
+        QueryScope.run(timed(graft.queries.TextPack.prepareShared(spark, dir, tag)))
       }.min
 
     val sharedRows =

@@ -2,34 +2,36 @@ package graft.tools
 
 /** Per-query timing harness for optimization work: runs the named
   * queries through the same noop-sink protocol as graft.Bench (same
-  * session config, same clearCache between samples), printing every
-  * sample plus the min — so a candidate change can be A/B-measured in
-  * seconds instead of a full-battery run. Usage:
+  * session config and warm-up, each sample in its own QueryScope),
+  * printing every sample plus the min — so a candidate change can be
+  * A/B-measured in seconds instead of a full-battery run. Usage:
   *   SPARK_GRAFT_SF_DIR=... SPARK_GRAFT_CPUS=4 \
-  *     sbt "runMain graft.tools.TimeQ <reps> name [name...]"
-  * Shared silver tables are prepared (untimed) iff any named query
-  * consumes them, mirroring the bench's prepareShared split. */
+  *     sbt "runMain graft.tools.TimeQ <reps> ALL|name [name...]"
+  * The three shared silver-table builds are always timed first and
+  * printed as `_shared_pairs`, `_shared_knn` and `_shared_adc`. */
 object TimeQ {
+  /** The names in `names` that are not queries, in order. The shared
+    * builds' entry names are among them: they are always timed. */
+  def unknownNames(names: Seq[String]): Seq[String] =
+    names.filterNot(graft.SparkEntry.queries.contains)
+
   def main(args: Array[String]): Unit = {
     val reps = args.headOption.map(_.toInt).getOrElse(3)
     val names =
       if (args.drop(1).toSeq == Seq("ALL"))
         graft.SparkEntry.queries.keys.toSeq.sorted
       else args.drop(1).toSeq
+    val unknown = unknownNames(names)
+    if (unknown.nonEmpty) {
+      System.err.println("usage: graft.tools.TimeQ <reps> ALL|name [name...]" +
+        s" (unknown: ${unknown.mkString(",")}; the shared builds are always timed)")
+      sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = graft.Sessions.create(graft.Bench.sessionConf(localDir = None))
     spark.sparkContext.setLogLevel("ERROR")
     ExtraConf.applyTo(spark).foreach { case (k, v) => println(s"[timeq] conf $k=$v") }
-    // same warm-up as Bench: JIT/codegen the common paths untimed
-    locally {
-      import org.apache.spark.sql.functions._
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1000)
-      li.groupBy(col("l_returnflag")).agg(sum(col("l_quantity"))).count()
-      li.join(broadcast(li.select(col("l_orderkey").as("k")).limit(10)),
-        col("l_orderkey") === col("k")).count()
-      spark.read.parquet(s"$sfDir/documents.parquet").count()
-      spark.catalog.clearCache()
-    }
+    graft.Bench.warmUp(spark, sfDir)
     // Deterministic work metrics, immune to host noise: job/stage/task
     // counts and shuffle bytes per query execution. Wall time on this
     // box swings 2-10x with hypervisor load; task counts do not.
@@ -57,10 +59,11 @@ object TimeQ {
     def timedBuild(name: String)(build: => Unit): Unit = {
       org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
       val before = snap()
-      val t0 = System.nanoTime()
-      build
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
+      val sec = graft.QueryScope.run {
+        val t0 = System.nanoTime()
+        build
+        (System.nanoTime() - t0) / 1e9
+      }
       org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
       val after = snap()
       println(f"[timeq] $name%-28s min=$sec%.3f jobs=${after._1 - before._1} " +
@@ -88,8 +91,7 @@ object TimeQ {
         org.apache.spark.graftshim.ListenerDrain.drain(spark.sparkContext)
         val before = snap()
         val t0 = System.nanoTime()
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        spark.catalog.clearCache()
+        graft.QueryScope.run(fn(spark, sfDir).write.mode("overwrite").format("noop").save())
         samples(n) = samples(n) :+ (System.nanoTime() - t0) / 1e9
         // drain the async bus deterministically (was a fixed
         // Thread.sleep, which let late stage events bleed across

@@ -23,8 +23,12 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("every query returns rows at sf0.001") {
+    val cache = spark.sharedState.cacheManager
+    // suites sharing this session may leave cached plans behind
+    spark.catalog.clearCache()
     val empties = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
-      val n = fn(spark, TestSpark.sf).count()
+      val n = QueryScope.run(fn(spark, TestSpark.sf).count())
+      assert(cache.isEmpty, s"$name left a persisted relation behind its scope")
       if (n == 0) Some(name) else None
     }
     // candidate-pair queries may legitimately be empty at tiny SF; all

@@ -117,23 +117,25 @@ class EraRankTwoPassSpec extends AnyFunSuite {
   }
 
   test("managed pair's cleanup unpersists the shared base; answers survive it") {
-    // the pair form persists its bucketed base (four consumers); the
-    // managed variant must release that cache entry on cleanup, and a
-    // post-cleanup re-materialization must still agree (bucketing is a
-    // pure function of values + frozen literals, so the recompute path
-    // is consistent by construction)
+    // the pair form persists its bucketed base (four consumers) into
+    // the caller's QueryScope; closing the scope must release that
+    // cache entry, and a re-materialization afterwards must still
+    // agree (bucketing is a pure function of values + frozen literals,
+    // so the recompute path is consistent by construction)
     val df = fixture
     val before = spark.sparkContext.getPersistentRDDs.size
-    val (ra, rb, cleanup) = EraRank.withRowNumberTwoPassPairManaged(
-      df, "rn", 4, col("era"),
-      col("id"), Seq.empty, col("pred"), Seq(col("id")))
-    val gotA = ra.orderBy(col("era"), col("id")).collect().toSeq
-    val gotB = rb.orderBy(col("era"), col("id")).collect().toSeq
-    assert(spark.sparkContext.getPersistentRDDs.size > before,
-      "pair form should have persisted its shared base")
-    cleanup()
+    val (ra, rb, gotA, gotB) = QueryScope.run {
+      val (ra, rb) = EraRank.withRowNumberTwoPassPair(
+        df, "rn", 4, col("era"),
+        col("id"), Seq.empty, col("pred"), Seq(col("id")))
+      val gotA = ra.orderBy(col("era"), col("id")).collect().toSeq
+      val gotB = rb.orderBy(col("era"), col("id")).collect().toSeq
+      assert(spark.sparkContext.getPersistentRDDs.size > before,
+        "pair form should have persisted its shared base")
+      (ra, rb, gotA, gotB)
+    }
     assert(spark.sparkContext.getPersistentRDDs.size == before,
-      "cleanup must unpersist the shared base")
+      "closing the scope must unpersist the shared base")
     assert(ra.orderBy(col("era"), col("id")).collect().toSeq == gotA)
     assert(rb.orderBy(col("era"), col("id")).collect().toSeq == gotB)
   }
