@@ -5,7 +5,7 @@ import org.apache.spark.ml.regression.RandomForestRegressor
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Folds
+import graft.operators.{EraRank, Folds}
 
 /** M7 `mean_decrease_accuracy` (`feature_selection_numerai.py:13-154`):
   * permutation feature importance under era-grouped CV.
@@ -14,7 +14,7 @@ import graft.operators.Folds
   * shuffle that column (driver-side numpy, re-scattered) → re-score →
   * normalized drop. Spark shape: the model is fit once per fold
   * (MLlib distributes the fit), the permutation is the era-local
-  * two-ordering join ([[Folds.permuteWithinEra]]) executed on the
+  * two-ordering join ([[Folds.permuteManyWithinEra]]) executed on the
   * executors, and every re-score is one lazy plan — the driver never
   * touches row data (SURVEY §3.1).
   */
@@ -53,7 +53,6 @@ object FeatureSelection {
           permKeyFor: Option[Int => Column] = None): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
     // every action finishes before this returns (the result is a local
     // relation), so the fold split and each fold's persists are
     // released here, each fold's as soon as that fold is scored
@@ -89,28 +88,19 @@ object FeatureSelection {
           fr.select(test.columns.map(col): _*).withColumn("graft_feat", lit(tag))
         }.reduce(_ unionByName _)
         val scored = predict(tagged)
-        // r14: era-size-adaptive rank dispatch, measured on the PERSISTED
-        // test frame (cheap) — the variant tag multiplies window-partition
-        // COUNT by features+1 while each (variant, era) partition stays
-        // one era of test rows, so the test frame's largest era is the
-        // honest dispatch statistic for the tagged union. Past the
-        // ceiling, the rank rides the two-pass form with a composite
-        // (variant, era) key — bit-identical values, no window partition
-        // spans an era (the same hazard SCALE.md's permutation pair
-        // quantifies: 23.7x vs 5.5x wall at 100x).
-        val twoPass = maxEraByFold.getOrElse(f.toLong, 0L) >
-          graft.operators.EraRank.onePassCeiling(test)
+        // r14: era-size-adaptive rank dispatch on the test frame's
+        // largest era (the upfront statistic, no extra job) — the
+        // variant tag multiplies window-partition COUNT by features+1
+        // while each (variant, era) partition stays one era of test
+        // rows. Past the ceiling, the rank rides the two-pass form with
+        // a composite (variant, era) key — bit-identical values.
         val ranked =
-          if (!twoPass) {
-            val order = Window.partitionBy(col("graft_feat"), col(eraCol))
-              .orderBy((col("pred") +: idCols.map(col)).map(_.asc): _*)
-            val whole = Window.partitionBy(col("graft_feat"), col(eraCol))
-            scored.withColumn("graft_r",
-              row_number().over(order).cast("double") / count(lit(1)).over(whole))
-          } else {
-            graft.operators.EraRank.withPctRankFirstTwoPass(scored, "graft_r", 32,
+          if (EraRank.onePass(test, maxEraByFold.getOrElse(f.toLong, 0L)))
+            EraRank.withPctRankFirst(scored, "graft_r",
+              Seq(col("graft_feat"), col(eraCol)), col("pred"), idCols.map(col): _*)
+          else
+            EraRank.withPctRankFirstTwoPass(scored, "graft_r", 32,
               struct(col("graft_feat"), col(eraCol)), col("pred"), idCols.map(col): _*)
-          }
         val sp = ranked
           .groupBy(col("graft_feat"))
           .agg(corr(col(targetCol), col("graft_r")).as("spearman"))

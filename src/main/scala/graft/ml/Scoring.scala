@@ -15,7 +15,7 @@ object Scoring {
     * same way the reference's quantized targets are in [0,1]. */
   def scores(df: DataFrame, era: Column, pred: Column, truth: Column,
              truthScale: Double, tie: Column*): DataFrame =
-    EraRank.withPctRankFirst(df, "graft_r", era, pred, tie: _*)
+    EraRank.withPctRankFirst(df, "graft_r", Seq(era), pred, tie: _*)
       .agg(
         round(corr(truth, col("graft_r")), 6).as("spearman"),
         round(avg(pow(truth / truthScale - col("graft_r"), 4)), 6).as("qme"))

@@ -73,17 +73,15 @@ object ExactPercentile {
     *
     * SIZE-DISPATCHED (r18): below [[DefaultOnePassMaxBytes]] (by
     * Catalyst's estimate) the cumulative count comes from one
-    * running-frame window per group; above it, from the same
-    * sketch-bucketed offset decomposition as
-    * [[EraRank.withPctRankFirstTwoPass]] — identical integers by
+    * running-frame window per group; above it, from
+    * [[EraRank.bucketed]] over the DISTINCT (group, value) counts,
+    * weighted by each value's effective count, with the running sum
+    * taken within (group, bucket) — identical integers by
     * construction (ExactPercentileSpec pins both forms to the builtin
     * on ties, nulls, and all-null groups), so the dispatch is a pure
-    * plan choice. `onePassMaxBytes`: -1 resolves the session conf /
-    * default; an explicit 0 forces the bucketed form (how the spec
-    * and plan audits pin the ceiling-remover machinery). */
+    * plan choice. */
   def grouped(df: DataFrame, groupBy: Seq[String], valueCol: String,
-              ps: Seq[(String, Double)],
-              onePassMaxBytes: Long = -1L): DataFrame = {
+              ps: Seq[(String, Double)]): DataFrame = {
     require(ps.nonEmpty)
     // constant group key when ungrouped: keeps one code path and
     // avoids the partitionless-window WARN
@@ -96,17 +94,15 @@ object ExactPercentile {
       .groupBy((g :+ v.as("graft_v")): _*)
       .agg(count(lit(1)).as("graft_c"))
     val gCols = gNames.map(col)
-    val ceiling =
-      if (onePassMaxBytes >= 0) onePassMaxBytes
-      else df.sparkSession.conf
-        .get("spark.graft.percentile.onePassMaxBytes",
-          DefaultOnePassMaxBytes.toString).toLong
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val ceiling = df.sparkSession.conf
+      .get("spark.graft.percentile.onePassMaxBytes", DefaultOnePassMaxBytes.toString)
+      .toLong
+    val onePass = df.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(ceiling)
     // null values sort first but must not consume rank indices: their
     // effective count is 0, so cum-c <= i < cum can never hold there
     val cEff = when(col("graft_v").isNotNull, col("graft_c")).otherwise(0L)
     val cum =
-      if (est <= BigInt(ceiling)) {
+      if (onePass) {
         val run = Window.partitionBy(gCols: _*).orderBy(col("graft_v"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val whole = Window.partitionBy(gCols: _*)
@@ -115,7 +111,16 @@ object ExactPercentile {
           .withColumn("graft_cum", sum(col("graft_ce")).over(run))
           .withColumn("graft_n", sum(col("graft_ce")).over(whole))
           .withColumn("graft_nt", sum(col("graft_c")).over(whole))
-      } else bucketedCum(cnts.withColumn("graft_ce", cEff), gNames)
+      } else {
+        // offset + running sum within (group, bucket) = the global
+        // running sum; nulls co-bucket at 0 with effective count 0
+        val local = Window.partitionBy((gCols :+ col("graft_bkt")): _*)
+          .orderBy(col("graft_v"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        EraRank.bucketed(cnts.withColumn("graft_ce", cEff), gNames,
+            Seq(col("graft_v")), weight = col("graft_ce")).head
+          .withColumn("graft_cum", col("graft_off") + sum(col("graft_ce")).over(local))
+      }
     // all bracketing predicates are ROW-LOCAL (n rides every row), so
     // one final aggregate collects every percentile's order statistics
     def pos(p: Double): Column = (col("graft_n") - 1).cast("double") * lit(p)
@@ -126,7 +131,9 @@ object ExactPercentile {
       val lo = floor(pos(p)).cast("long")
       val hi = ceil(pos(p)).cast("long")
       Seq(max(at(lo)).as(s"graft_lo_$name"), max(at(hi)).as(s"graft_hi_$name"))
-    } ++ Seq(max(col("graft_n")).as("graft_n"), max(col("graft_nt")).as("n_total"))
+    } ++ Seq(max(col("graft_n")).as("graft_n"),
+      // the bucketed form carries no per-row group total of all rows
+      (if (onePass) max(col("graft_nt")) else sum(col("graft_c"))).as("n_total"))
     val folded = cum.groupBy(gCols: _*).agg(aggs.head, aggs.tail: _*)
     val outs = ps.map { case (name, p) =>
       val n1 = (col("graft_n") - 1).cast("double")
@@ -145,57 +152,6 @@ object ExactPercentile {
     val keep = if (groupBy.nonEmpty) groupBy.map(col) else Seq.empty[Column]
     val out = folded.select((keep ++ outs :+ col("n_total")): _*)
     groupedFinish(df, groupBy, ps, out)
-  }
-
-  /** The sketch-bucketed cumulative count — the 100 TB path of
-    * [[grouped]], removing the one-task-per-group running window: the
-    * same monotone-bucket decomposition as
-    * [[EraRank.withPctRankFirstTwoPass]], here over the DISTINCT
-    * (group, value) counts.
-    *   1. a sketch aggregate fits 31 coarse CDF edges per group over
-    *      the distinct values (only monotonicity is used; edges are
-    *      frozen to plan literals so every consumer provably sees the
-    *      same boundaries);
-    *   2. each row buckets by `#edges < v` — a pure function of the
-    *      value, so bucketing is monotone and ties co-bucket;
-    *   3. per-(group, bucket) EXACT sums cumsum into exclusive
-    *      offsets (plus per-group totals) over a tiny
-    *      #groups × buckets relation, broadcast back;
-    *   4. offset + within-(group, bucket) running sum = exactly the
-    *      global running sum — all integers, bit-identical to the
-    *      one-pass window.
-    * Null values co-bucket at 0 (they sort first there, matching the
-    * one-pass NULLS FIRST order) with effective count 0, so they can
-    * never satisfy a bracketing predicate — the builtin's semantics,
-    * preserved. */
-  private def bucketedCum(cnts: DataFrame, gNames: Seq[String]): DataFrame = {
-    val gCols = gNames.map(col)
-    val buckets = 32
-    val pcts = array((1 until buckets).map(i => lit(i.toDouble / buckets)): _*)
-    val edges = graft.Frozen.copy(cnts.groupBy(gCols: _*)
-      .agg(percentile_approx(col("graft_v"), pcts, lit(100)).as("graft_edges")))
-    val bucketed = cnts.join(broadcast(edges), gNames, "left")
-      .withColumn("graft_bkt",
-        coalesce(size(filter(col("graft_edges"), e => e < col("graft_v"))), lit(0)))
-      .drop("graft_edges")
-    val offs = bucketed.groupBy((gCols :+ col("graft_bkt")): _*)
-      .agg(sum(col("graft_ce")).as("graft_sb"), sum(col("graft_c")).as("graft_cb"))
-      .withColumn("graft_offe", coalesce(
-        sum(col("graft_sb")).over(Window.partitionBy(gCols: _*)
-          .orderBy(col("graft_bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("graft_n",
-        sum(col("graft_sb")).over(Window.partitionBy(gCols: _*)))
-      .withColumn("graft_nt",
-        sum(col("graft_cb")).over(Window.partitionBy(gCols: _*)))
-      .select((gCols :+ col("graft_bkt") :+ col("graft_offe")
-        :+ col("graft_n") :+ col("graft_nt")): _*)
-    val local = Window.partitionBy((gCols :+ col("graft_bkt")): _*)
-      .orderBy(col("graft_v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    bucketed.join(broadcast(offs), gNames :+ "graft_bkt")
-      .withColumn("graft_cum", col("graft_offe") + sum(col("graft_ce")).over(local))
-      .drop("graft_bkt", "graft_offe")
   }
 
   /** The empty-relation parity tail of [[grouped]], shared by both cum

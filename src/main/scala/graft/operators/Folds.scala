@@ -90,17 +90,6 @@ object Folds {
     distinctEras.withColumn("fold", fold.cast("long"))
   }
 
-  /** T5: permute `valueCol` within each era by re-ordering on `orderKey`
-    * — the "two independent orderings joined on row position" form.
-    * Deterministic given a deterministic `orderKey` (pass an arithmetic
-    * hash of the row id for oracle-checkable runs, or
-    * `xxhash64(id, lit(seed))` for production).
-    *
-    * Scale: both windows partition by era, so ranking is per-era local;
-    * the positional join shuffles on (era, rn) — no global ordering
-    * bottleneck. This mirrors destroying one feature's signal while
-    * keeping its marginal distribution per fold (MDA's core trick).
-    */
   /** T5 batched form: permute SEVERAL columns in one two-ordering join
     * (all receive the same re-deal). Adds `<col>_perm` columns. Used by
     * MDA, where per-feature variants then become pure projections —
@@ -126,11 +115,10 @@ object Folds {
     * 100x data because BOTH its ranking windows partition by era
     * alone (one task per era, the W1 hazard again). Here both
     * orderings' per-era row numbers come from
-    * [[EraRank.withRowNumberTwoPassPair]] (sketch-bucketed
+    * [[EraRank.withRowNumberTwoPassPair]] ([[EraRank.bucketed]]
     * offsets + (era, bucket) windows — no window partition ever spans
-    * an era),
-    * and the positional join keys on (era, rn), which is unique per
-    * era — no skew. Requires numeric id-head and orderKey columns
+    * an era), and the positional join keys on (era, rn), which is
+    * unique per era — no skew. Requires numeric id-head and orderKey columns
     * (they feed the bucket sketch). Row-identical to the one-pass
     * form (FoldsSpec pins it): the ranks themselves are bit-equal.
     */
@@ -157,37 +145,33 @@ object Folds {
       .drop("graft_rn", "graft_rn_b", "graft_era_b")
   }
 
-  /** Era-size-ADAPTIVE permutation: measures the largest era
-    * ([[EraRank.maxEraRows]] — one column-pruned count aggregate) and
-    * dispatches to the one-pass window form below the task-size
+  /** Era-size-ADAPTIVE permutation: [[EraRank.onePass]] on the
+    * largest era ([[EraRank.maxEraRows]] — one column-pruned count
+    * aggregate) picks the one-pass window form below the task-size
     * crossover, the shared-pass two-pass form above it. The two forms
     * are row-identical by construction (FoldsSpec pins it), so the
     * dispatch is a pure plan choice; SCALE.md's permutation pair
     * measured the stakes (one-pass 23.7× wall at 100× data vs the
     * two-pass 5.5× — and the reverse ~2× penalty for running the
-    * two-pass on task-sized eras). `onePassMaxEraRows`: -1 resolves
-    * `spark.graft.rank.onePassMaxEraRows` /
-    * [[EraRank.DefaultOnePassMaxEraRows]]; 0 forces the two-pass. */
+    * two-pass on task-sized eras). */
   def permuteWithinEraAdaptive(df: DataFrame, valueCol: String, eraCol: String,
-                               idCols: Seq[String], orderKey: Column,
-                               buckets: Int = 32,
-                               onePassMaxEraRows: Long = -1L): DataFrame = {
-    // one resolver for both dispatchers (EraRank owns the conf key):
-    // a future key/default change lands in exactly one place, so the
-    // rank and permutation crossovers can never silently diverge
-    val ceiling =
-      if (onePassMaxEraRows >= 0) onePassMaxEraRows
-      else EraRank.onePassCeiling(df)
-    // ceiling 0 = two-pass unconditionally: skip the dispatch count
-    // aggregate whose answer cannot change the branch (every era with
-    // >=1 row exceeds 0; both forms emit identical empty results on an
-    // empty relation)
-    if (ceiling > 0L && EraRank.maxEraRows(df, col(eraCol)) <= ceiling)
+                               idCols: Seq[String], orderKey: Column): DataFrame =
+    if (EraRank.onePass(df, EraRank.maxEraRows(df, col(eraCol))))
       permuteWithinEra(df, valueCol, eraCol, idCols, orderKey)
     else
-      permuteWithinEraTwoPass(df, valueCol, eraCol, idCols, orderKey, buckets)
-  }
+      permuteWithinEraTwoPass(df, valueCol, eraCol, idCols, orderKey)
 
+  /** T5: permute `valueCol` within each era by re-ordering on `orderKey`
+    * — the "two independent orderings joined on row position" form.
+    * Deterministic given a deterministic `orderKey` (pass an arithmetic
+    * hash of the row id for oracle-checkable runs, or
+    * `xxhash64(id, lit(seed))` for production).
+    *
+    * Scale: both windows partition by era, so ranking is per-era local;
+    * the positional join shuffles on (era, rn) — no global ordering
+    * bottleneck. This mirrors destroying one feature's signal while
+    * keeping its marginal distribution per fold (MDA's core trick).
+    */
   def permuteWithinEra(df: DataFrame, valueCol: String, eraCol: String,
                        idCols: Seq[String], orderKey: Column): DataFrame = {
     val ids = idCols.map(col)

@@ -94,7 +94,7 @@ object CorePack extends QueryPack {
   def qWindowRankEra(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
       .select(col("event_id"), Tables.eraOfTs(col("ts")).as("era"), col("value"))
-    EraRank.withPctRankFirst(ev, "r", col("era"), col("value"), col("event_id"))
+    EraRank.withPctRankFirst(ev, "r", Seq(col("era")), col("value"), col("event_id"))
       .select(col("event_id"), col("era"), round(col("r"), 6).as("r"))
       .orderBy(col("event_id"))
   }
@@ -133,12 +133,11 @@ object CorePack extends QueryPack {
       .select(Tables.eraOfDate(col("l_shipdate")).as("era"),
         col("l_extendedprice").as("pred"), col("l_quantity").as("y"),
         col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
-    // r14: through the dispatcher with the ceiling forced to 0 — this
-    // row pins the two-pass branch (the ceiling-remover machinery)
-    // regardless of fixture-scale era sizes
-    EraRank.spearmanByEraAdaptive(li, col("era"), col("pred"), col("y"),
-      Seq(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
-        col("l_suppkey")), onePassMaxEraRows = 0L)
+    // the two-pass form directly: this row pins the ceiling-remover
+    // machinery regardless of fixture-scale era sizes
+    EraRank.withPctRankFirstTwoPass(li, "graft_r", 32, col("era"), col("pred"),
+        col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
+      .agg(round(corr(col("y"), col("graft_r")), 6).as("spearman"))
   }
 
   /** M2 per-era diagnostic — one Spearman row per era (the notebook's
@@ -159,7 +158,7 @@ object CorePack extends QueryPack {
       .select(Tables.eraOfDate(col("l_shipdate")).as("era"),
         col("l_extendedprice").as("pred"), col("l_quantity"),
         col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
-    val ranked = EraRank.withPctRankFirst(li, "r", col("era"), col("pred"),
+    val ranked = EraRank.withPctRankFirst(li, "r", Seq(col("era")), col("pred"),
       col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
     ranked.agg(round(avg(pow(col("l_quantity") / 50.0 - col("r"), 4)), 6).as("qme"))
   }

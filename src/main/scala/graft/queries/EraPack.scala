@@ -97,13 +97,12 @@ object EraPack extends QueryPack {
     val hashKey =
       (col("l_orderkey") * lit(2654435761L) + col("l_linenumber") * lit(40503L)
         + col("l_partkey") * lit(7919L) + col("l_suppkey") * lit(104729L)) % lit(999999937L)
-    // r14: same dispatcher, ceiling forced to 0 — this row exists to
-    // keep the ceiling-remover machinery oracle-checked, so it pins
-    // the two-pass branch rather than letting fixture-scale era sizes
-    // dispatch it away (see the operator scaladoc for the crossover)
-    Folds.permuteWithinEraAdaptive(base, "l_quantity", "era",
-        Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"), hashKey,
-        onePassMaxEraRows = 0L)
+    // the two-pass form directly: this row exists to keep the
+    // ceiling-remover machinery oracle-checked, so it pins the
+    // two-pass rather than letting fixture-scale era sizes dispatch it
+    // away (see the operator scaladoc for the crossover)
+    Folds.permuteWithinEraTwoPass(base, "l_quantity", "era",
+        Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"), hashKey)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
         col("l_suppkey"), col("l_quantity").as("q_perm"))
       .orderBy(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Memo, QueryScope, Tables}
-import graft.operators.{Ann, Pq}
+import graft.operators.{Ann, EraRank, Pq}
 
 /** Similarity search over the `embeddings` table (north-star ANN
   * surface): brute-force cosine top-k as the exact baseline, and a
@@ -766,54 +766,28 @@ object SimilarityPack extends QueryPack {
     * distribution-free feature preprocessing step); emitted for one
     * probe vector so the output stays bounded.
     *
-    * TWO-PHASE EXACT RANK, not `percent_rank over (partition by pos)`:
-    * the single-window form puts the corpus's entire per-dimension
-    * column in ONE task (64 partitions each of corpus size at 100x).
-    * Instead: (1) a partial+final sketch aggregate fits ~32 coarse CDF
-    * edges per dimension (accuracy is irrelevant — only monotonicity
-    * is used); (2) each row buckets by `#edges < x`, a function of x
-    * alone, so ties co-bucket and bucketing is monotone; (3) bucket
-    * counts cumsum into exclusive offsets over a <=32-rows-per-dim
-    * relation; (4) min-rank within the (pos, bucket) slice — each
-    * window partition now holds ~1/32 of a dimension, and the bucket
-    * fan-out widens with corpus size. offset + local rank is exactly
-    * the global min-rank, so the emitted values are bit-identical to
-    * the exact window (the DuckDB oracle still says percent_rank). */
+    * EXACT min-rank over [[graft.operators.EraRank.bucketed]], not
+    * `percent_rank over (partition by pos)`: the single-window form
+    * puts the corpus's entire per-dimension column in ONE task (64
+    * partitions each of corpus size at 100x); here each window
+    * partition holds ~1/32 of a dimension. offset + local rank is
+    * exactly the global min-rank, so the emitted values are
+    * bit-identical to the exact window (the DuckDB oracle still says
+    * percent_rank). */
   def qQuantileNorm(s: SparkSession, d: String): DataFrame = {
-    // e feeds the sketch aggregate AND the bucketing join; bucketed
-    // (below) feeds the offset rollup AND the final rank — persist
-    // both so the embeddings explode runs once per execution (guide
-    // §1.2)
+    // e feeds the sketch sample AND the bucketing join; the bucketed
+    // base feeds the offset rollup AND the final rank — persist both
+    // so the embeddings explode runs once per execution (guide §1.2)
     val e = embSpread(s, d)
       .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
       .select(col("vec_id"), col("pos").cast("long").as("pos"),
         col("x").cast("double").as("x"))
       .transform(QueryScope.persist)
-    val pcts = array((1 until 32).map(i => lit(i / 32.0)): _*)
-    // low sketch accuracy on purpose: the edges only need to be
-    // monotone bucket bounds (exactness comes from the rank phase),
-    // and a coarser GK sketch merges cheaper in the partial agg
-    val edges = e.groupBy(col("pos")).agg(
-      percentile_approx(col("x"), pcts, lit(100)).as("edges"),
-      count(lit(1)).as("n_pos"))
-    val bucketed = e.join(broadcast(edges), Seq("pos"))
-      .withColumn("bkt", size(filter(col("edges"), ed => ed < col("x"))))
-      .drop("edges")
-      .transform(QueryScope.persist)
-    // exclusive per-dim offset: rows in strictly-lower buckets all have
-    // strictly smaller x (bucketing is monotone), so offset + local
-    // min-rank = global min-rank
-    val offs = bucketed.groupBy(col("pos"), col("bkt"))
-      .agg(count(lit(1)).as("nb"))
-      .withColumn("off", coalesce(
-        sum(col("nb")).over(Window.partitionBy(col("pos")).orderBy(col("bkt"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pos"), col("bkt"), col("off"))
-    bucketed.join(broadcast(offs), Seq("pos", "bkt"))
+    EraRank.bucketed(e, Seq("pos"), Seq(col("x")), persist = true).head
       .withColumn("rk", rank().over(
-        Window.partitionBy(col("pos"), col("bkt")).orderBy(col("x"))))
-      .withColumn("qn", when(col("n_pos") > 1,
-        (col("off") + col("rk") - 1).cast("double") / (col("n_pos") - 1))
+        Window.partitionBy(col("pos"), col("graft_bkt")).orderBy(col("x"))))
+      .withColumn("qn", when(col("graft_n") > 1,
+        (col("graft_off") + col("rk") - 1).cast("double") / (col("graft_n") - 1))
         .otherwise(lit(0.0)))
       .filter(col("vec_id") === 0)
       .select(col("pos"), round(col("x"), 6).as("x"), round(col("qn"), 6).as("qn"))

@@ -32,9 +32,12 @@ object TimeQ {
     spark.sparkContext.setLogLevel("ERROR")
     ExtraConf.applyTo(spark).foreach { case (k, v) => println(s"[timeq] conf $k=$v") }
     graft.Bench.warmUp(spark, sfDir)
-    // Deterministic work metrics, immune to host noise: job/stage/task
-    // counts and shuffle bytes per query execution. Wall time on this
-    // box swings 2-10x with hypervisor load; task counts do not.
+    // Work metrics per query execution. Job/stage/task counts are
+    // deterministic, immune to host noise (wall time on a shared host
+    // swings 2-10x; task counts do not). Shuffle bytes are NOT: with
+    // the same plan and counts, q_permute_era read 25,352, 25,356 and
+    // 25,358 KB in some runs at sf0.1 and 25,117 KB in others, so a
+    // byte shift is a work change only if it beats that spread.
     val jobs = new java.util.concurrent.atomic.AtomicLong(0)
     val stages = new java.util.concurrent.atomic.AtomicLong(0)
     val tasks = new java.util.concurrent.atomic.AtomicLong(0)

@@ -19,7 +19,7 @@ class EraRankSpec extends AnyFunSuite {
       (1, 1L, 10.0), (1, 2L, 20.0), (1, 3L, 20.0), (1, 4L, 30.0),
       (2, 5L, 7.0)
     ).toDF("era", "id", "pred")
-    val got = EraRank.withPctRankFirst(df, "r", col("era"), col("pred"), col("id"))
+    val got = EraRank.withPctRankFirst(df, "r", Seq(col("era")), col("pred"), col("id"))
       .orderBy("id").select("r").as[Double].collect()
     assert(got.toSeq == Seq(0.25, 0.5, 0.75, 1.0, 1.0))
   }

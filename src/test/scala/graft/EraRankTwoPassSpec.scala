@@ -1,11 +1,14 @@
 package graft
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.EraRank
+import graft.streaming.EventStream.withConf
 
 /** The W1 scale mitigation (SCALE.md "Windows"): two-pass era-rank via
   * sketch-bucketed offsets + (era, bucket) windows must be
@@ -17,19 +20,75 @@ class EraRankTwoPassSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** The sketch samples rows whose value hash is 0 mod 10: these
+    * values all miss it. */
+  private lazy val unsampled: Seq[Double] = (1 to 100).map(_.toDouble).toDF("p")
+    .filter(pmod(xxhash64(col("p")), lit(10)) =!= 0).as[Double].collect().take(6).toSeq
+
   /** Adversarial fixture: heavy pred ties (3 distinct values across 60
-    * rows per era), a null-pred row, an all-null era, a 1-row era. */
+    * rows per era), a null-pred row, an all-null era, a 1-row era, and
+    * an era whose tied values all miss the sketch sample. */
   private def fixture = {
     val dense = for (e <- 1 to 3; i <- 1 to 60)
       yield (e.toLong, (e * 100 + i).toLong, Some((i % 3).toDouble))
     val nulls = Seq((1L, 990L, None), (4L, 991L, None), (4L, 992L, None))
     val single = Seq((5L, 995L, Some(42.0)))
-    (dense ++ nulls ++ single).toDF("era", "id", "pred")
+    val missed = (0 until 24).map(i => (6L, (600 + i).toLong, Some(unsampled(i % 6))))
+    (dense ++ nulls ++ single ++ missed).toDF("era", "id", "pred")
+  }
+
+  test("the fixture's sample-missed era has no sampled row") {
+    assert(fixture.filter(col("era") === 6 &&
+      pmod(xxhash64(col("pred")), lit(10)) === 0).count() == 0)
+    assert(fixture.filter(col("era") === 6).count() == 24)
+  }
+
+  /** The kernel plus one local window `f` over (era, bucket) against
+    * `f` over the whole era, row for row, with the group totals. */
+  private def sameAsWholeEra(f: WindowSpec => Column, weight: Column = lit(1L)): Unit = {
+    val df = fixture.withColumn("w",
+      when(col("pred").isNull, 0L).otherwise(col("id") % 5 + 1))
+    val got = EraRank.bucketed(df, Seq("era"), Seq(col("pred")), 8, weight).head
+      .select(col("id"),
+        (col("graft_off") + f(Window.partitionBy(col("era"), col("graft_bkt")))).cast("long"),
+        col("graft_n"))
+    val exp = df.select(col("id"), f(Window.partitionBy(col("era"))).cast("long"),
+      sum(weight).over(Window.partitionBy(col("era"))))
+    assert(got.count() == df.count()) // no row dropped at the offset join
+    assert(got.except(exp).count() == 0 && exp.except(got).count() == 0)
+  }
+
+  test("kernel + local row_number equals the whole-era row_number") {
+    sameAsWholeEra(p => row_number().over(p.orderBy(col("pred"), col("id"))))
+  }
+
+  test("kernel + local rank equals the whole-era min-rank") {
+    sameAsWholeEra(p => rank().over(p.orderBy(col("pred"))))
+  }
+
+  test("kernel + local weighted running sum equals the whole-era cumsum") {
+    sameAsWholeEra(p => sum(col("w")).over(p.orderBy(col("pred"), col("id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)), col("w"))
+  }
+
+  test("kernel min-rank over every embedding row equals rank() per dimension") {
+    val e = Tables.embeddings(spark, TestSpark.sf)
+      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("pos", "x")))
+      .select(col("vec_id"), col("pos").cast("long").as("pos"),
+        col("x").cast("double").as("x"))
+    val got = EraRank.bucketed(e, Seq("pos"), Seq(col("x"))).head
+      .select(col("vec_id"), col("pos"), col("graft_off") + rank().over(
+        Window.partitionBy(col("pos"), col("graft_bkt")).orderBy(col("x"))))
+    val exp = e.select(col("vec_id"), col("pos"),
+      rank().over(Window.partitionBy(col("pos")).orderBy(col("x"))).cast("long"))
+    val n = e.count()
+    assert(n > 1000 && got.count() == n)
+    assert(got.except(exp).count() == 0 && exp.except(got).count() == 0)
   }
 
   test("two-pass rank is row-identical to one-pass on ties/nulls/tiny eras") {
     val df = fixture
-    val one = EraRank.withPctRankFirst(df, "r", col("era"), col("pred"), col("id"))
+    val one = EraRank.withPctRankFirst(df, "r", Seq(col("era")), col("pred"), col("id"))
       .select(col("id"), col("r"))
     val two = EraRank.withPctRankFirstTwoPass(df, "r", 8, col("era"),
         col("pred"), col("id"))
@@ -42,7 +101,7 @@ class EraRankTwoPassSpec extends AnyFunSuite {
     // only 3 distinct pred values vs 16 buckets: most edge slots repeat,
     // ties MUST co-bucket for correctness
     val df = fixture
-    val one = EraRank.withPctRankFirst(df, "r", col("era"), col("pred"), col("id"))
+    val one = EraRank.withPctRankFirst(df, "r", Seq(col("era")), col("pred"), col("id"))
       .select(col("id"), col("r"))
     val two = EraRank.withPctRankFirstTwoPass(df, "r", 16, col("era"),
         col("pred"), col("id"))
@@ -51,6 +110,7 @@ class EraRankTwoPassSpec extends AnyFunSuite {
   }
 
   test("spearmanByEraTwoPass equals spearmanByEra on real fixture shape") {
+    // the two-pass path is the adaptive dispatch forced by a 0 ceiling
     val li = Tables.lineitem(spark, TestSpark.sf)
       .select(Tables.eraOfDate(col("l_shipdate")).as("era"),
         col("l_extendedprice").as("pred"), col("l_quantity").as("y"),
@@ -58,9 +118,12 @@ class EraRankTwoPassSpec extends AnyFunSuite {
     val a = EraRank.spearmanByEra(li, col("era"), col("pred"), col("y"),
       col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
       .as[Double].head()
-    val b = EraRank.spearmanByEraTwoPass(li, col("era"), col("pred"), col("y"),
-      col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey"))
-      .as[Double].head()
+    val b = withConf(spark, "spark.graft.rank.onePassMaxEraRows" -> "0") {
+      val two = EraRank.spearmanByEraAdaptive(li, col("era"), col("pred"), col("y"),
+        Seq(col("l_orderkey"), col("l_linenumber"), col("l_partkey"), col("l_suppkey")))
+      assert(two.queryExecution.analyzed.toString.contains("graft_bkt"))
+      two.as[Double].head()
+    }
     assert(a == b)
   }
 
@@ -100,7 +163,7 @@ class EraRankTwoPassSpec extends AnyFunSuite {
       .toDF("era", "id", "pred")
     val ranked = EraRank.withPctRankFirstTwoPass(df, "r", 8, col("era"),
       col("pred"), col("id"))
-    val one = EraRank.withPctRankFirst(df, "r", col("era"), col("pred"), col("id"))
+    val one = EraRank.withPctRankFirst(df, "r", Seq(col("era")), col("pred"), col("id"))
       .select(col("id"), col("r"))
     assert(one.except(ranked.select(col("id"), col("r"))).count() == 0)
     // reconstruct the bucket groups the operator used (same ~10%

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ExactPercentile
+import graft.streaming.EventStream.withConf
 
 /** The relational exact percentile must be BIT-IDENTICAL to the
   * `percentile` builtin it replaces — no rounding tolerance: the
@@ -12,6 +13,9 @@ import graft.operators.ExactPercentile
 class ExactPercentileSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  /** Ceiling 0: every input takes the bucketed cum-count. */
+  private val ForceBucketed = "spark.graft.percentile.onePassMaxBytes" -> "0"
 
   private def builtin(df: org.apache.spark.sql.DataFrame, g: String,
                       v: String, ps: Seq[(String, Double)]) =
@@ -28,9 +32,9 @@ class ExactPercentileSpec extends AnyFunSuite {
     assert(got.map(_.toSeq) == exp.map(_.toSeq))
     // the size-dispatched bucketed form (ceiling 0 forces it) must be
     // bit-identical too — the dispatch is a pure plan choice
-    val bucketed = ExactPercentile.grouped(df, Seq(g), v, ps,
-        onePassMaxBytes = 0L)
-      .orderBy(col(g)).collect().toSeq
+    val bucketed = withConf(spark, ForceBucketed) {
+      ExactPercentile.grouped(df, Seq(g), v, ps).orderBy(col(g)).collect().toSeq
+    }
     assert(bucketed.map(_.toSeq) == exp.map(_.toSeq))
   }
 
@@ -100,8 +104,10 @@ class ExactPercentileSpec extends AnyFunSuite {
     val got = ExactPercentile.grouped(ev, Seq.empty, "value",
       Seq(("med", 0.5), ("p90", 0.9))).collect().head
     assert(got.toSeq == exp.toSeq)
-    val bkt = ExactPercentile.grouped(ev, Seq.empty, "value",
-      Seq(("med", 0.5), ("p90", 0.9)), onePassMaxBytes = 0L).collect().head
+    val bkt = withConf(spark, ForceBucketed) {
+      ExactPercentile.grouped(ev, Seq.empty, "value",
+        Seq(("med", 0.5), ("p90", 0.9))).collect().head
+    }
     assert(bkt.toSeq == exp.toSeq)
   }
 
@@ -115,9 +121,10 @@ class ExactPercentileSpec extends AnyFunSuite {
     assert(!onePass.queryExecution.analyzed.toString.contains("graft_bkt"))
     // forced bucketed: the cum-count window partitions by
     // (group, bucket), never by the group alone
-    val forced = ExactPercentile.grouped(li, Seq("l_returnflag"),
-      "l_extendedprice", ps, onePassMaxBytes = 0L)
-    val plan = forced.queryExecution.analyzed.toString
+    val plan = withConf(spark, ForceBucketed) {
+      ExactPercentile.grouped(li, Seq("l_returnflag"), "l_extendedprice", ps)
+        .queryExecution.analyzed.toString
+    }
     assert(plan.contains("graft_bkt"))
     assert(!plan.matches("(?s).*windowspecdefinition\\(l_returnflag[^,]*, graft_v.*"),
       "a running window still partitions by the group alone")

@@ -5,16 +5,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{EraRank, Folds}
 import graft.queries.EraPack
+import graft.streaming.EventStream.withConf
 
 /** The r14 era-size-adaptive rank dispatch: maxEraRows measures right,
-  * the crossover picks the one-pass form for task-sized eras and the
-  * two-pass form past the ceiling, both branches stay row-identical,
-  * and the driver's permutation pair pins one branch each through the
-  * SAME dispatcher entry point.
+  * the session ceiling (`spark.graft.rank.onePassMaxEraRows`) picks the
+  * one-pass form for task-sized eras and the two-pass form past it,
+  * both branches stay row-identical, and the q_permute_era query pair
+  * pins one branch each.
   */
 class FoldsDispatchSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+
+  private val Ceiling = "spark.graft.rank.onePassMaxEraRows"
 
   private def synth(rowsPerEra: Seq[Int]) =
     rowsPerEra.zipWithIndex.flatMap { case (n, e) =>
@@ -31,11 +34,13 @@ class FoldsDispatchSpec extends AnyFunSuite {
     val df = synth(Seq(8, 12))
     // the two-pass plan is recognizable by its bucket column; the
     // one-pass never introduces it
-    val below = EraRank.withPctRankFirstAdaptive(df, "r", col("era"),
-      col("v"), Seq(col("id")), onePassMaxEraRows = 100L)
+    val below = withConf(spark, Ceiling -> "100") {
+      EraRank.withPctRankFirstAdaptive(df, "r", col("era"), col("v"), Seq(col("id")))
+    }
     assert(!below.queryExecution.analyzed.toString.contains("graft_bkt"))
-    val above = EraRank.withPctRankFirstAdaptive(df, "r", col("era"),
-      col("v"), Seq(col("id")), onePassMaxEraRows = 10L)
+    val above = withConf(spark, Ceiling -> "10") {
+      EraRank.withPctRankFirstAdaptive(df, "r", col("era"), col("v"), Seq(col("id")))
+    }
     assert(above.queryExecution.analyzed.toString.contains("graft_bkt"))
     // both branches emit identical values
     assert(below.except(above).count() == 0 && above.except(below).count() == 0)
@@ -65,10 +70,12 @@ class FoldsDispatchSpec extends AnyFunSuite {
   test("adaptive permutation: both branches row-identical on a synthetic frame") {
     val df = synth(Seq(30, 45))
     val key = (col("id") * lit(2654435761L)) % lit(999999937L)
-    val one = Folds.permuteWithinEraAdaptive(df, "v", "era", Seq("id"), key,
-      onePassMaxEraRows = Long.MaxValue >> 1)
-    val two = Folds.permuteWithinEraAdaptive(df, "v", "era", Seq("id"), key,
-      onePassMaxEraRows = 0L)
+    val one = withConf(spark, Ceiling -> (Long.MaxValue >> 1).toString) {
+      Folds.permuteWithinEraAdaptive(df, "v", "era", Seq("id"), key)
+    }
+    val two = withConf(spark, Ceiling -> "0") {
+      Folds.permuteWithinEraAdaptive(df, "v", "era", Seq("id"), key)
+    }
     assert(one.count() == df.count())
     assert(one.except(two).count() == 0 && two.except(one).count() == 0)
   }
@@ -78,8 +85,8 @@ class FoldsDispatchSpec extends AnyFunSuite {
     // the one-pass window (no bucket column in the plan)
     val onePass = EraPack.qPermuteEra(spark, TestSpark.sf)
     assert(!onePass.queryExecution.analyzed.toString.contains("graft_bkt"))
-    // q_permute_era_two_pass: ceiling forced to 0 -> the shared-pass
-    // two-pass branch (bucket pair columns present)
+    // q_permute_era_two_pass: the shared-pass two-pass form directly
+    // (bucket pair columns present)
     val twoPass = EraPack.qPermuteEraTwoPass(spark, TestSpark.sf)
     assert(twoPass.queryExecution.analyzed.toString.contains("graft_bkt_a"))
   }

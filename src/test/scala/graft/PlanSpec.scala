@@ -195,7 +195,7 @@ class PlanSpec extends AnyFunSuite {
     // the <=32-rows-per-dim bucket-count relation, which is fine)
     val p = plan("q_quantile_norm")
     assert(!p.contains("percent_rank"), p.take(1500))
-    assert("windowspecdefinition\\(pos#\\d+L?, bkt#".r.findFirstIn(p).isDefined,
+    assert("windowspecdefinition\\(pos#\\d+L?, graft_bkt#".r.findFirstIn(p).isDefined,
       p.take(1500))
   }
 

@@ -27,7 +27,7 @@ class PropertySpec extends AnyFunSuite {
     for (rows <- samples(smallData, 8)) {
       val df = rows.zipWithIndex.map { case ((e, v), i) => (e, i.toLong, v) }
         .toDF("era", "id", "pred")
-      val ranked = EraRank.withPctRankFirst(df, "r", col("era"), col("pred"), col("id"))
+      val ranked = EraRank.withPctRankFirst(df, "r", Seq(col("era")), col("pred"), col("id"))
       val (lo, hi) = ranked.agg(min("r"), max("r")).as[(Double, Double)].head()
       assert(lo > 0.0 && hi <= 1.0)
       val maxPerEra = ranked.groupBy("era").agg(max("r").as("m"))
