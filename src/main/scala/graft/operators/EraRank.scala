@@ -132,8 +132,7 @@ object EraRank {
     * pair's three readers; for two (offsets + one rank) the 100x probe
     * measured persist-vs-rescan as a wash, and the rescan holds no
     * storage memory. Re-deriving is consistent, since bucketing is a pure
-    * function of values and frozen literals. A null group key drops
-    * its rows at the offset join.
+    * function of values and frozen literals.
     */
   def bucketed(df: DataFrame, keys: Seq[String], values: Seq[Column],
                buckets: Int = 32, weight: Column = lit(1L),
@@ -166,11 +165,17 @@ object EraRank {
         .orderBy(col("graft_bkt")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .withColumn("graft_n", sum(col("graft_nb")).over(part))
       .transform(o => if (m > 1) graft.Frozen.copy(o) else o)
+    // the offset join is null-safe on the group keys: a null key is one
+    // group, as it is to the one-pass window's partitionBy
+    val on = keys.indices.map(j => s"graft_k$j")
     sfx.zipWithIndex.map { case (s, i) =>
-      val slice = offs.filter(col("graft_gid") === gid(i)).select((ks :+
-        col("graft_bkt").as(s"graft_bkt$s") :+ col("graft_off").as(s"graft_off$s") :+
-        col("graft_n")): _*)
-      shared.join(broadcast(slice), keys :+ s"graft_bkt$s")
+      val b = s"graft_bkt$s"
+      val slice = offs.filter(col("graft_gid") === gid(i)).select((ks.zip(on)
+        .map { case (k, j) => k.as(j) } :+ col("graft_bkt").as("graft_kb") :+
+        col("graft_off").as(s"graft_off$s") :+ col("graft_n")): _*)
+      val cond = keys.zip(on).map { case (k, j) => col(k) <=> col(j) }
+        .foldLeft(col(b) === col("graft_kb"))(_ && _)
+      shared.join(broadcast(slice), cond).drop(("graft_kb" +: on): _*)
     }
   }
 

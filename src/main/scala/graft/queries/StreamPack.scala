@@ -1,9 +1,12 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.TempDirs
 import graft.streaming.EventStream
+import graft.streaming.EventStream.{Plan, RocksDb, Sink, toMemory}
 
 /** SURVEY §2.10 surfaced to the driver: the Structured Streaming
   * pipeline run end-to-end as a checkable query, not just a test.
@@ -15,48 +18,150 @@ import graft.streaming.EventStream
   */
 object StreamPack extends QueryPack {
 
-  private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** A harness stream declared once: its plan, output mode, start-time
+    * conf, outer-join horizon and silver-index scope, with the sink as
+    * the only free part. The `q_stream_*` entries reduce the rows
+    * [[EventStream.toMemory]] returns; `ScaleProbe` drains the same
+    * declarations through [[EventStream.toNoop]]. */
+  type Stream = (SparkSession, String, Sink) => DataFrame
+
+  val tumbling: Stream = (s, d, sink) =>
+    sink(Plan(EventStream.windowedAgg(s, d), "complete"))
+  val dedup: Stream = (s, d, sink) => sink(Plan(EventStream.dedupCounts(s, d), "complete"))
+  val enrich: Stream = (s, d, sink) =>
+    sink(Plan(EventStream.enrichedSegmentTotals(s, d), "complete"))
+
+  /** Update mode: the sink holds every per-key state update. */
+  val userTotals: Stream = (s, d, sink) =>
+    sink(Plan(EventStream.runningUserTotals(s, d).toDF(), "update"))
+  val userStats: Stream = (s, d, sink) =>
+    sink(Plan(EventStream.runningUserStats(s, d).toDF(), "update"))
+
+  /** Append mode: each surviving row is emitted once, when first seen. */
+  val dedupWm: Stream = (s, d, sink) =>
+    sink(Plan(EventStream.dedupWithinWatermark(s, d), "append"))
+
+  /** Complete mode (Spark supports append/complete for session-window
+    * aggregations, not update): after the drain the sink IS the final
+    * session relation. */
+  val sessions: Stream = (s, d, sink) =>
+    sink(Plan(EventStream.sessionCounts(s, d), "complete"))
+
+  /** Append mode, the only one stream-stream joins support. */
+  val join: Stream = (s, d, sink) =>
+    sink(Plan(EventStream.clickPurchasePairs(s, d), "append"))
+
+  /** Append mode, exiting on the final-watermark signal ([[EventStream
+    * .drain]]'s `horizonMs`): the null-extended rows land only in the
+    * cleanup batch that runs with that watermark. */
+  val leftJoin: Stream = (s, d, sink) => sink(Plan(EventStream.clickPurchaseLeftPairs(s, d),
+    "append", horizonMs = EventStream.outerHorizonMs(s, d)))
+  val fullJoin: Stream = (s, d, sink) => sink(Plan(EventStream.clickPurchaseFullPairs(s, d),
+    "append", horizonMs = EventStream.outerHorizonMs(s, d)))
+
+  /** The history index goes through the full WRITE → READ-BACK silver
+    * path ([[EventStream.writeNeardupIndex]]), so the driver-checked
+    * query exercises exactly what production runs. */
+  val neardup: Stream = (s, d, sink) =>
+    TempDirs.scoped("graft_neardup_silver") { silver =>
+      val hist = EventStream.writeNeardupIndex(s, d, silver.toString)
+      sink(Plan(EventStream.neardupAgainstHistory(s, d, hist), "append"))
+    }
+
+  val qualityGate: Stream = (s, d, sink) =>
+    TempDirs.scoped("graft_qgate_silver") { silver =>
+      val (model, thr) = EventStream.writeQualityModel(s, d, silver.toString)
+      sink(Plan(EventStream.qualityGate(s, d, model, thr), "append"))
+    }
+
+  /** `requireK` pins the IVF width ([[EventStream.writeAnnIndex]]):
+    * the battery pins the DuckDB oracle's 16 centroids, the scale
+    * probe passes None for the adaptive width. */
+  def ann(requireK: Option[Int]): Stream = (s, d, sink) =>
+    TempDirs.scoped("graft_ann_silver") { silver =>
+      val ix = EventStream.writeAnnIndex(s, d, silver.toString, requireK)
+      sink(Plan(EventStream.annAgainstHistory(s, d, ix), "append"))
+    }
+  val annGated: Stream = ann(Some(16))
+
+  val closedSessions: Stream = (s, d, sink) => sink(Plan(
+    EventStream.closedSessions(EventStream.eventsStream(s, d)).toDF(), "append"))
+
+  /** Under the [[RocksDb]] provider, which `transformWithState` needs. */
+  val twsSessions: Stream = (s, d, sink) => sink(Plan(
+    EventStream.closedSessionsTws(EventStream.eventsStream(s, d)).toDF(), "append", Seq(RocksDb)))
+
+  /** The batch → streaming WARM-START migration end-to-end over the
+    * fixture: the archive (events before the midpoint of the observed
+    * time range) is sessionized in BATCH through the shared merge/close
+    * kernel ([[EventStream.sessionSnapshot]], closed under the archive
+    * watermark wm1 = ms-floored archive max − the battery's 1 h delay);
+    * the live half drains as a stream that starts from the per-key
+    * OPEN intervals as `transformWithState` initial state,
+    * late-filtered at wm1 ([[EventStream.closedSessionsTwsFromSnapshot]]).
+    * Returns batch-closed ∪ stream-emitted, which must equal a single
+    * full-history stream run. Degenerate inputs fall back to the plain
+    * full-history stream, semantically what a migration with nothing
+    * to migrate is. */
+  val warmSessions: Stream = (s, d, sink) =>
+    EventStream.warmHalves(s, d) match {
+      case None => twsSessions(s, d, sink)
+      case Some((batchClosed, openInit, live, wm1)) =>
+        batchClosed.unionByName(sink(Plan(EventStream.closedSessionsTwsFromSnapshot(
+          live, openInit, wmMs = Some(wm1)).toDF(), "append", Seq(RocksDb))))
+    }
+
+  /** Every declared stream by its query name. */
+  val streams: Map[String, Stream] = Map(
+    "q_stream_sessions_closed" -> closedSessions,
+    "q_stream_tws_sessions" -> twsSessions,
+    "q_stream_tumbling"    -> tumbling,
+    "q_stream_dedup"       -> dedup,
+    "q_stream_dedup_wm"    -> dedupWm,
+    "q_stream_user_totals" -> userTotals,
+    "q_stream_stats"       -> userStats,
+    "q_stream_session"     -> sessions,
+    "q_stream_join"        -> join,
+    "q_stream_left_join"   -> leftJoin,
+    "q_stream_full_join"   -> fullJoin,
+    "q_stream_enrich"      -> enrich,
+    "q_stream_neardup"     -> neardup,
+    "q_stream_quality_gate" -> qualityGate,
+    "q_stream_ann" -> annGated,
+    "q_stream_warm_sessions" -> warmSessions,
+  )
 
   def qStreamTumbling(s: SparkSession, d: String): DataFrame =
-    EventStream.runOnce(s, d, s"graft_stream_q${runSeq.incrementAndGet()}")
-      .orderBy(col("wstart"))
+    tumbling(s, d, toMemory).orderBy(col("wstart"))
 
   /** Streaming exact dedup drained to completion: per-lang distinct
     * document counts, checked by the same batch-distinct SQL oracle —
     * the streaming path must reproduce the batch answer exactly. */
   def qStreamDedup(s: SparkSession, d: String): DataFrame =
-    EventStream.runDedupOnce(s, d, s"graft_stream_d${runSeq.incrementAndGet()}")
-      .orderBy(col("lang"))
+    dedup(s, d, toMemory).orderBy(col("lang"))
+
+  /** Each user's FINAL state in an update-mode drain: the max-n_events
+    * row, since n_events is strictly increasing per key. */
+  private def finalState(updates: DataFrame): DataFrame = updates
+    .withColumn("rn", row_number().over(
+      Window.partitionBy(col("user_id")).orderBy(col("n_events").desc)))
+    .filter(col("rn") === 1)
 
   /** Custom streaming state (mapGroupsWithState) driver-checked: the
     * update-mode stream of per-user running totals is reduced to each
-    * key's FINAL state (max-n_events row — n_events is strictly
-    * increasing per key), which must equal the batch groupBy exactly.
+    * key's final state, which must equal the batch groupBy exactly.
     * Total rounded at the edge only; state accumulates raw doubles. */
-  def qStreamUserTotals(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val updates = EventStream.runUserTotalsOnce(
-      s, d, s"graft_stream_u${runSeq.incrementAndGet()}")
-    updates
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("user_id")).orderBy(col("n_events").desc)))
-      .filter(col("rn") === 1)
+  def qStreamUserTotals(s: SparkSession, d: String): DataFrame =
+    finalState(userTotals(s, d, toMemory))
       .select(col("user_id"), col("n_events"), round(col("total"), 2).as("total"))
       .orderBy(col("user_id"))
-  }
 
   /** Stateful running moments (Welford/Chan in GroupState) drained to
     * final state: per-user count/mean/sample-std must equal the batch
     * avg/stddev_samp aggregate — the oracle is plain SQL over the
     * same events. */
-  def qStreamStats(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val updates = EventStream.runUserStatsOnce(
-      s, d, s"graft_stream_w${runSeq.incrementAndGet()}")
-    updates
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("user_id")).orderBy(col("n_events").desc)))
-      .filter(col("rn") === 1)
+  def qStreamStats(s: SparkSession, d: String): DataFrame =
+    finalState(userStats(s, d, toMemory))
       // emit the SUM, not the mean: 2-decimal inputs keep their sum on
       // the decimal grid (round 2 is exact), while a mean emission sits
       // on a .005 half boundary for ~1% of keys and flips per engine;
@@ -66,7 +171,6 @@ object StreamPack extends QueryPack {
         round(when(col("n_events") > 1,
           sqrt(col("m2") / (col("n_events") - 1))), 4).as("std_value"))
       .orderBy(col("user_id"))
-  }
 
   /** Streaming MERGE sink driver-checked: each micro-batch's updated
     * per-user totals are CDC-applied (row-replacement upsert) into a
@@ -76,7 +180,8 @@ object StreamPack extends QueryPack {
     * `q_stream_user_totals`, reached through a completely different
     * sink path: warehouse merge instead of memory-sink reduction). */
   def qStreamUpsert(s: SparkSession, d: String): DataFrame =
-    EventStream.runStreamingUpsert(s, d)
+    EventStream.drainMergeSink(s,
+        EventStream.upsertTotalsAgg(EventStream.eventsStream(s, d)), "user_id")
       .orderBy(col("user_id"))
 
   /** Watermark-bounded streaming dedup drained and summarized: the
@@ -85,8 +190,7 @@ object StreamPack extends QueryPack {
     * size — the scale path plain `dropDuplicates` lacks) must
     * reproduce the batch per-type aggregate exactly. */
   def qStreamDedupWm(s: SparkSession, d: String): DataFrame =
-    EventStream.runDedupWmOnce(
-        s, d, s"graft_stream_dw${runSeq.incrementAndGet()}")
+    dedupWm(s, d, toMemory)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
       .orderBy(col("event_type"))
@@ -97,16 +201,14 @@ object StreamPack extends QueryPack {
     * aggregated per (segment, event type); must equal the batch
     * join + agg exactly. */
   def qStreamEnrich(s: SparkSession, d: String): DataFrame =
-    EventStream.runEnrichOnce(s, d, s"graft_stream_e${runSeq.incrementAndGet()}")
-      .orderBy(col("c_mktsegment"), col("event_type"))
+    enrich(s, d, toMemory).orderBy(col("c_mktsegment"), col("event_type"))
 
   /** Streaming session windows reduced to the batch summary: the
     * complete-mode drain leaves the final per-user session set in the
     * sink; summarizing it must reproduce the batch gaps-and-islands
     * answer exactly (identical oracle to `q_session_window`). */
   def qStreamSession(s: SparkSession, d: String): DataFrame =
-    EventStream.runSessionsOnce(
-        s, d, s"graft_stream_s${runSeq.incrementAndGet()}")
+    sessions(s, d, toMemory)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_sessions"), sum(col("n")).as("n_events"),
         max(col("n")).as("max_session_events"))
@@ -117,7 +219,7 @@ object StreamPack extends QueryPack {
     * is the oracle — the streaming join must reproduce the batch pair
     * set exactly once both streams are exhausted. */
   def qStreamJoin(s: SparkSession, d: String): DataFrame =
-    EventStream.runJoinOnce(s, d, s"graft_stream_j${runSeq.incrementAndGet()}")
+    join(s, d, toMemory)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy(col("user_id"))
@@ -132,7 +234,7 @@ object StreamPack extends QueryPack {
     * horizon (ts_c + 1 h) — the exact condition under which the
     * streaming operator may emit it. */
   def qStreamLeftJoin(s: SparkSession, d: String): DataFrame =
-    EventStream.runLeftJoinOnce(s, d, s"graft_stream_lj${runSeq.incrementAndGet()}")
+    leftJoin(s, d, toMemory)
       .groupBy(col("user_id"))
       .agg(count(col("purchase_id")).as("n_pairs"),
         count(when(col("purchase_id").isNull, 1)).as("n_unconverted"))
@@ -146,7 +248,7 @@ object StreamPack extends QueryPack {
     * watermark passes ts_c + 1 h (its last matchable purchase time), a
     * purchase when it passes ts_p (its last matchable click time). */
   def qStreamFullJoin(s: SparkSession, d: String): DataFrame =
-    EventStream.runFullJoinOnce(s, d, s"graft_stream_fj${runSeq.incrementAndGet()}")
+    fullJoin(s, d, toMemory)
       .groupBy(col("user_id"))
       .agg(count(when(col("click_id").isNotNull
           && col("purchase_id").isNotNull, 1)).as("n_pairs"),
@@ -164,10 +266,17 @@ object StreamPack extends QueryPack {
     * store), so the per-batch cost is independent of archive size;
     * the oracle replays the whole dataflow — sketch, split, banded
     * candidates, exact component agreement, per-doc collapse — in
-    * SQL. */
+    * SQL. The collapse runs over the drained rows: a pair surfaces
+    * once per shared band, so distinct first, then one row per live
+    * doc — lowest-id history match as the dedup rep, candidate count,
+    * best agreement. */
   def qStreamNeardup(s: SparkSession, d: String): DataFrame =
-    EventStream.runNeardupOnce(s, d,
-      s"graft_stream_nd${runSeq.incrementAndGet()}")
+    neardup(s, d, toMemory)
+      .select(col("doc_id"), col("hist_id"), col("n_match")).distinct()
+      .groupBy(col("doc_id"))
+      .agg(min(col("hist_id")).as("rep"), count(lit(1)).as("n_cand"),
+        max(col("n_match")).as("best_match"))
+      .orderBy(col("doc_id"))
 
   /** Streaming quality gate — filter-on-ingest against the
     * batch-fitted per-language unigram LM
@@ -179,33 +288,34 @@ object StreamPack extends QueryPack {
     * in SQL — fit, OOV fallback, threshold, and keep bit all
     * replayed exactly. */
   def qStreamQualityGate(s: SparkSession, d: String): DataFrame =
-    EventStream.runQualityGateOnce(s, d,
-      s"graft_stream_qg${runSeq.incrementAndGet()}")
+    qualityGate(s, d, toMemory).orderBy(col("doc_id"))
 
-  /** Streaming VECTOR SEARCH ([[EventStream.runAnnOnce]]) — the
-    * RAG-ingest lookup: the archive (vec_id % 5 != 0) builds a
-    * flat-IVF silver index (seeded 16-centroid assignment, posting
-    * lists with vectors); the live fifth streams through a scan-local
-    * nprobe=4 probe kernel against the broadcast centroid table and a
-    * stateless stream-static cluster join, emitting exact-cosine
-    * candidates above a 0.2 floor; top-5 per query is the post-drain
-    * batch reduction. The oracle replays assignment, probes, cosine,
-    * floor, and ranking relationally. */
+  /** Streaming VECTOR SEARCH ([[ann]]) — the RAG-ingest lookup: the
+    * archive (vec_id % 5 != 0) builds a flat-IVF silver index (seeded
+    * 16-centroid assignment, posting lists with vectors); the live
+    * fifth streams through a scan-local nprobe=4 probe kernel against
+    * the broadcast centroid table and a stateless stream-static
+    * cluster join, emitting exact-cosine candidates above a 0.2 floor;
+    * top-5 per query is the post-drain batch reduction (re-delivered
+    * rows collapse under distinct). The oracle replays assignment,
+    * probes, cosine, floor, and ranking relationally. */
   def qStreamAnn(s: SparkSession, d: String): DataFrame =
-    EventStream.runAnnOnce(s, d,
-      s"graft_stream_ann${runSeq.incrementAndGet()}")
+    annGated(s, d, toMemory)
+      .select(col("q_id"), col("n_id"), col("cos")).distinct()
+      .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
+        .orderBy(col("cos").desc, col("n_id"))).cast("long"))
+      .filter(col("rank") <= 5)
+      .orderBy(col("q_id"), col("rank"))
 
-  /** The batch → streaming WARM-START migration, driver-checked end
-    * to end ([[EventStream.runWarmSessionsOnce]]): archive half
-    * sessionized in batch (shared kernel, closed under the archive
-    * watermark), live half streamed from the open-interval snapshot
-    * as `transformWithState` initial state with the archive-watermark
-    * late filter. The union must equal one full-history stream run —
-    * same oracle SQL as `q_stream_sessions_closed`: a seamless
-    * migration adds no row and loses none. */
+  /** The batch → streaming WARM-START migration ([[warmSessions]]),
+    * driver-checked end to end: the union must equal one full-history
+    * stream run — same oracle SQL as `q_stream_sessions_closed`: a
+    * seamless migration adds no row and loses none. (Disjointness and
+    * the straddling-session merge are additionally spec-pinned in
+    * TwsSessionSpec on adversarial synthetic input, including
+    * stragglers behind wm1.) */
   def qStreamWarmSessions(s: SparkSession, d: String): DataFrame =
-    EventStream.runWarmSessionsOnce(s, d,
-      s"graft_stream_ws${runSeq.incrementAndGet()}")
+    warmSessions(s, d, toMemory).orderBy(col("user_id"), col("start_us"))
 
   /** Custom-state sessionization (flatMapGroupsWithState + event-time
     * timeout) driver-checked: the append stream of CLOSED sessions.
@@ -223,9 +333,7 @@ object StreamPack extends QueryPack {
     * with exact integer math. The timeout and late-merge arms are
     * also MemoryStream-driven in `StatefulSessionSpec`. */
   def qStreamSessionsClosed(s: SparkSession, d: String): DataFrame =
-    EventStream.runClosedSessionsOnce(
-        s, d, s"graft_stream_c${runSeq.incrementAndGet()}")
-      .orderBy(col("user_id"), col("start_us"))
+    closedSessions(s, d, toMemory).orderBy(col("user_id"), col("start_us"))
 
   /** The same watermark-gated sessionization re-expressed with the
     * Spark 4 arbitrary-state API (`transformWithState`: named typed
@@ -237,9 +345,7 @@ object StreamPack extends QueryPack {
     * registration/deletion across re-arms, expired-timer dispatch,
     * and the RocksDB multi-column-family state layout. */
   def qStreamTwsSessions(s: SparkSession, d: String): DataFrame =
-    EventStream.runClosedSessionsTwsOnce(
-        s, d, s"graft_stream_t${runSeq.incrementAndGet()}")
-      .orderBy(col("user_id"), col("start_us"))
+    twsSessions(s, d, toMemory).orderBy(col("user_id"), col("start_us"))
 
   val queries: Map[String, Q] = Map(
     "q_stream_sessions_closed" -> qStreamSessionsClosed,

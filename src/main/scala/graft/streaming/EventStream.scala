@@ -59,15 +59,15 @@ object EventStream {
     * signature agreement (>= 8 of 16 components ⇔ est >= 0.5, integer
     * math both engines replay). Emitted rows are (live doc, history
     * match, n_match) in append mode, the bronze relation; per-doc
-    * collapse is the next batch stage (see [[runNeardupOnce]]).
+    * collapse is the next batch stage (`q_stream_neardup`'s reduction
+    * over [[graft.queries.StreamPack.neardup]]'s drained rows).
     * Deterministic by construction: every output row is a pure
     * function of (doc, index), independent of batch boundaries.
-    * History = `doc_id % 5 != 0`; the stream replays the other fifth.
+    * `hist` is the index [[writeNeardupIndex]] reads back: history =
+    * `doc_id % 5 != 0`; the stream replays the other fifth.
     */
   def neardupAgainstHistory(spark: SparkSession, dir: String,
-                            index: Option[DataFrame] = None): DataFrame = {
-    val hist = index.getOrElse(
-      graft.queries.TextPack.minhashIndex(spark, dir, col("doc_id") % 5 =!= 0))
+                            hist: DataFrame): DataFrame = {
     val live = fixtureStream(spark, s"$dir/documents.parquet")
       .filter(col("doc_id") % 5 === 0)
     neardupJoin(live, hist)
@@ -109,42 +109,6 @@ object EventStream {
     spark.read.parquet(out)
   }
 
-  /** Drain [[neardupAgainstHistory]] (append mode — the join is
-    * stateless, every row final when emitted) and run the silver
-    * collapse over the sink: a pair surfaces once per shared band, so
-    * distinct first, then one row per live doc — lowest-id history
-    * match as the dedup rep, candidate count, best agreement. The
-    * index goes through the full WRITE → READ-BACK silver-table path
-    * ([[writeNeardupIndex]]), so the driver-checked query exercises
-    * exactly what production runs. */
-  def runNeardupOnce(spark: SparkSession, dir: String,
-                     name: String = "graft_stream_neardup"): DataFrame = {
-    val sink = graft.TempDirs.scoped("graft_neardup_silver") { silver =>
-      val hist = writeNeardupIndex(spark, dir, silver.toString)
-      drainToMemory(spark, neardupAgainstHistory(spark, dir, Some(hist)), name,
-        mode = "append")
-    }
-    sink.select(col("doc_id"), col("hist_id"), col("n_match")).distinct()
-      .groupBy(col("doc_id"))
-      .agg(min(col("hist_id")).as("rep"), count(lit(1)).as("n_cand"),
-        max(col("n_match")).as("best_match"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** STREAMING VECTOR SEARCH — the RAG-ingest shape: an arriving
-    * embedding stream is looked up against a BATCH-BUILT flat-IVF
-    * index (the silver-table contract of [[writeNeardupIndex]], for
-    * vectors): seeded centroids + nearest-centroid posting lists are
-    * written once by the batch job; each live vector computes its
-    * nprobe=4 probe lists scan-local against the 16-row broadcast
-    * centroid table (a per-row kernel, no window — streams cannot
-    * rank), then a STATELESS stream-static equi-join on the cluster
-    * key scores candidates by exact cosine with a 0.2 floor bounding
-    * emission. Top-k per query is a batch aggregation AFTER the
-    * drain (the [[runNeardupOnce]] convention — re-delivered rows
-    * collapse under distinct). At 100 TB the static side is a
-    * cluster-keyed columnar re-scan per micro-batch and the stream
-    * side never shuffles. */
   /** Scale-relative IVF width (the [[graft.queries.SimilarityPack
     * .lshBitsFor]] convention): the smallest k in [16, 2^20] with
     * 320·k >= n, so expected posting-list occupancy stays ~320 as the
@@ -319,33 +283,26 @@ object EventStream {
       .select(col("q_id"), col("n_id"), col("cos"))
   }
 
+  /** STREAMING VECTOR SEARCH — the RAG-ingest shape: an arriving
+    * embedding stream is looked up against a BATCH-BUILT flat-IVF
+    * index (the silver-table contract of [[writeNeardupIndex]], for
+    * vectors): seeded centroids + nearest-centroid posting lists are
+    * written once by the batch job; each live vector computes its
+    * nprobe=4 probe lists scan-local against the 16-row broadcast
+    * centroid table (a per-row kernel, no window — streams cannot
+    * rank), then a STATELESS stream-static equi-join on the cluster
+    * key scores candidates by exact cosine with a 0.2 floor bounding
+    * emission. Top-k per query is a batch aggregation AFTER the
+    * drain (`q_stream_ann`'s reduction — re-delivered rows collapse
+    * under distinct). At 100 TB the static side is a
+    * cluster-keyed columnar re-scan per micro-batch and the stream
+    * side never shuffles. */
   def annAgainstHistory(spark: SparkSession, dir: String,
                         index: (DataFrame, DataFrame)): DataFrame = {
     val live = fixtureStream(spark, s"$dir/embeddings.parquet")
       .filter(col("vec_id") % 5 === 0)
     annProbeJoin(live, index._1, index._2)
   }
-
-  def runAnnOnce(spark: SparkSession, dir: String,
-                 name: String = "graft_stream_ann"): DataFrame =
-    graft.TempDirs.scoped("graft_ann_silver") { silver =>
-      // oracle-gated path: the DuckDB oracle seeds exactly 16
-      // centroids, so pin k=16 here (see writeAnnIndex scaladoc)
-      val ix = writeAnnIndex(spark, dir, silver.toString, requireK = Some(16))
-      import org.apache.spark.sql.expressions.Window
-      drainToMemory(spark, annAgainstHistory(spark, dir, ix), name, mode = "append")
-        .select(col("q_id"), col("n_id"), col("cos")).distinct()
-        .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
-          .orderBy(col("cos").desc, col("n_id"))).cast("long"))
-        .filter(col("rank") <= 5)
-        .orderBy(col("q_id"), col("rank"))
-        // the reduction reads the memory sink, but the plan's SILVER
-        // scans die with the scoped dir — materialize eagerly
-        // (runNeardupOnce's reduction touches only the sink, so it
-        // skips this; here `posting` feeds nothing post-drain, but
-        // localCheckpoint also guards the sink against name reuse)
-        .localCheckpoint(true)
-    }
 
   /** STREAMING QUALITY GATE — score an arriving document stream
     * against a BATCH-FITTED per-language unigram LM and keep/drop by
@@ -449,17 +406,6 @@ object EventStream {
     (spark.read.parquet(s"$out/model"), spark.read.parquet(s"$out/thr"))
   }
 
-  /** Drain [[qualityGate]] through the silver-model path (append
-    * mode — stateless, every row final when emitted). */
-  def runQualityGateOnce(spark: SparkSession, dir: String,
-                         name: String = "graft_stream_qgate"): DataFrame = {
-    val sink = graft.TempDirs.scoped("graft_qgate_silver") { silver =>
-      val (model, thr) = writeQualityModel(spark, dir, silver.toString)
-      drainToMemory(spark, qualityGate(spark, dir, model, thr), name, mode = "append")
-    }
-    sink.orderBy(col("doc_id"))
-  }
-
   /** Streaming exact dedup (the north-star dedup family as a STREAM
     * op): content-hash `dropDuplicates` over a document stream →
     * per-language distinct counts. The dedup key includes `lang` so
@@ -473,11 +419,6 @@ object EventStream {
       .dropDuplicates("lang", "h")
       .groupBy(col("lang")).agg(count(lit(1)).as("n_distinct"))
   }
-
-  /** Drain [[dedupCounts]] synchronously into a memory sink. */
-  def runDedupOnce(spark: SparkSession, dir: String,
-                   name: String = "graft_stream_dedup"): DataFrame =
-    drainToMemory(spark, dedupCounts(spark, dir), name)
 
   /** Watermark-BOUNDED streaming dedup — the 100 TB scale path that
     * [[dedupCounts]]' plain `dropDuplicates` is not: its key state
@@ -494,20 +435,6 @@ object EventStream {
     eventsStream(spark, dir).union(eventsStream(spark, dir))
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
-
-  /** Drain [[dedupWithinWatermark]] in APPEND mode (each surviving
-    * row is emitted exactly once, when first seen). */
-  def runDedupWmOnce(spark: SparkSession, dir: String,
-                     name: String = "graft_stream_dedup_wm"): DataFrame =
-    drainToMemory(spark, dedupWithinWatermark(spark, dir), name, mode = "append")
-
-  /** Drain [[runningUserTotals]] in UPDATE mode: the sink accumulates
-    * every per-key state update; the caller reduces to final state
-    * (n_events is strictly increasing per key, so the max-n_events row
-    * IS the final state). */
-  def runUserTotalsOnce(spark: SparkSession, dir: String,
-                        name: String = "graft_stream_totals"): DataFrame =
-    drainToMemory(spark, runningUserTotals(spark, dir).toDF(), name, mode = "update")
 
   /** Run `body` with every `(key, value)` pair set on the session
     * conf, then restore each key it set to its previous value (or
@@ -636,24 +563,60 @@ object EventStream {
       }
     }
 
-  /** [[drain]] into a memory sink named `name`; returns the sink
-    * table (the Verify harness reads the drained result from it). */
-  private def drainToMemory(spark: SparkSession, df: DataFrame, name: String,
-                            mode: String = "complete",
-                            conf: Seq[(String, String)] = Nil,
-                            horizonMs: Option[Long] = None): DataFrame = {
-    drain(spark, df, mode, _.format("memory").queryName(name), conf, horizonMs)
-    spark.table(name)
+  /** One drain of a declared stream, everything but its sink: the
+    * plan `df` and [[drain]]'s `mode`, `conf` and `horizonMs`. */
+  final case class Plan(df: DataFrame, mode: String,
+                        conf: Seq[(String, String)] = Nil,
+                        horizonMs: Option[Long] = None) {
+    def drain(sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
+      EventStream.drain(df.sparkSession, df, mode, sink, conf, horizonMs)
   }
+
+  /** Where a declared stream's rows go: drains the [[Plan]] and returns
+    * a frame with the plan's schema. */
+  type Sink = Plan => DataFrame
+
+  private val memorySinks = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** The query battery's sink: [[drain]] into a memory sink named from
+    * one counter, then return its rows and drop its view. The frame is
+    * resolved before the drop, so it still reads the drained rows, but
+    * the session keeps no view — and no reference to the rows — once
+    * the caller lets the frame go. */
+  val toMemory: Sink = p => {
+    val spark = p.df.sparkSession
+    val name = s"graft_stream_${memorySinks.incrementAndGet()}"
+    try { p.drain(_.format("memory").queryName(name)); spark.table(name) }
+    finally spark.catalog.dropTempView(name)
+  }
+
+  /** The scale probe's sink: [[drain]] through the no-op sink and
+    * return an empty frame with the plan's schema. A memory sink
+    * collects every append/update row at the driver — at 100x the
+    * dedup stream's ~10M surviving rows OOM an 8g driver, and the
+    * collection, not the state store, dominates wall time (measured:
+    * 65x wall at 100x with a 48g heap) — so the probe times the
+    * state-store + shuffle path that actually scales to a cluster. */
+  val toNoop: Sink = p => {
+    p.drain(_.format("noop"))
+    emptyFrame(p.df.sparkSession, p.df.schema)
+  }
+
+  /** A zero-row frame with `schema`: a drain with nothing to return
+    * still hands back the plan's columns, not a schemaless frame that
+    * breaks downstream column references. */
+  private def emptyFrame(spark: SparkSession,
+                         schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Streaming session windows (the gap-merge analogue of the batch
     * gaps-and-islands query): per-user sessions with a 30-minute gap,
     * watermarked so late events beyond an hour open new sessions
     * instead of unbounded state growth. Session bounds are emitted as
     * epoch SECONDS (`cast(timestamp as long)`); the complete-mode
-    * drain in [[runSessionsOnce]] leaves the final session set in the
-    * sink, so no update reduction is needed (Spark rejects update
-    * mode for session-window aggregations). */
+    * drain of [[graft.queries.StreamPack.sessions]] leaves the final
+    * session set in the sink, so no update reduction is needed (Spark
+    * rejects update mode for session-window aggregations). */
   def sessionCounts(spark: SparkSession, dir: String,
                     gap: String = "30 minutes"): DataFrame =
     eventsStream(spark, dir)
@@ -663,14 +626,6 @@ object EventStream {
       .select(col("user_id").cast("long").as("user_id"),
         col("sw.start").cast("long").as("ss"),
         col("sw.end").cast("long").as("se"), col("n"))
-
-  /** Drain [[sessionCounts]] in COMPLETE mode (Spark supports
-    * append/complete for session-window aggregations, not update):
-    * the sink holds the full current session set each batch, so after
-    * the drain it IS the final session relation. */
-  def runSessionsOnce(spark: SparkSession, dir: String,
-                      name: String = "graft_stream_sess"): DataFrame =
-    drainToMemory(spark, sessionCounts(spark, dir), name)
 
   /** Stream-stream click → purchase self-join: clicks ⋈ purchases by
     * the same user within an hour, as one `joinType`. Both sides are
@@ -704,13 +659,6 @@ object EventStream {
   def clickPurchasePairs(spark: SparkSession, dir: String): DataFrame =
     clickPurchaseJoin(spark, dir, "inner")
 
-  /** Drain [[clickPurchasePairs]] in APPEND mode (the only mode
-    * stream-stream joins support); the sink accumulates the full pair
-    * set once the stream is exhausted. */
-  def runJoinOnce(spark: SparkSession, dir: String,
-                  name: String = "graft_stream_join"): DataFrame =
-    drainToMemory(spark, clickPurchasePairs(spark, dir), name, mode = "append")
-
   /** LEFT OUTER [[clickPurchaseJoin]] — unconverted clicks retained
     * (the funnel/abandonment shape inner joins cannot express). Outer
     * semantics on unbounded streams are WATERMARK-GATED: a click's
@@ -739,21 +687,6 @@ object EventStream {
     * window). */
   def clickPurchaseFullPairs(spark: SparkSession, dir: String): DataFrame =
     clickPurchaseJoin(spark, dir, "fullOuter")
-
-  /** Drain [[clickPurchaseLeftPairs]] in APPEND mode, exiting on the
-    * final-watermark signal ([[drain]]'s `horizonMs`): the
-    * null-extended rows land only in the cleanup batch that runs with
-    * that watermark. */
-  def runLeftJoinOnce(spark: SparkSession, dir: String,
-                      name: String = "graft_stream_left_join"): DataFrame =
-    drainToMemory(spark, clickPurchaseLeftPairs(spark, dir), name,
-      mode = "append", horizonMs = outerHorizonMs(spark, dir))
-
-  /** Drain [[clickPurchaseFullPairs]] — same signal-gated exit. */
-  def runFullJoinOnce(spark: SparkSession, dir: String,
-                      name: String = "graft_stream_full_join"): DataFrame =
-    drainToMemory(spark, clickPurchaseFullPairs(spark, dir), name,
-      mode = "append", horizonMs = outerHorizonMs(spark, dir))
 
   /** The final global watermark of the click/purchase outer joins, in
     * epoch millis — computable BEFORE the stream runs because it is a
@@ -798,11 +731,6 @@ object EventStream {
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
   }
 
-  /** Drain [[enrichedSegmentTotals]] synchronously (complete mode). */
-  def runEnrichOnce(spark: SparkSession, dir: String,
-                    name: String = "graft_stream_enrich"): DataFrame =
-    drainToMemory(spark, enrichedSegmentTotals(spark, dir), name)
-
   /** STREAMING MERGE sink — the "streaming upsert into a warehouse
     * table" shape (the foreachBatch pattern table formats market as
     * streaming MERGE INTO, here over plain parquet via
@@ -839,12 +767,8 @@ object EventStream {
           java.nio.file.Paths.get(p)))
         snap = Some(out)
     })
-    // schema-preserving empty fallback: a zero-batch stream must
-    // still return the aggregate's columns, not a schemaless frame
-    // that breaks downstream column references
-    snap.map(spark.read.parquet).getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], agg.schema))
+    // a zero-batch stream still returns the aggregate's columns
+    snap.map(spark.read.parquet).getOrElse(emptyFrame(spark, agg.schema))
   }
 
   /** Per-user cumulative totals as an update-mode streaming aggregate
@@ -854,11 +778,6 @@ object EventStream {
       .select(col("user_id").cast("long").as("user_id"), col("value"))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("total"))
-
-  /** Drain the event stream through the streaming MERGE sink and
-    * return the final per-user snapshot. */
-  def runStreamingUpsert(spark: SparkSession, dir: String): DataFrame =
-    drainMergeSink(spark, upsertTotalsAgg(eventsStream(spark, dir)), "user_id")
 
   case class UserTotals(user_id: Long, n_events: Long, total: Double)
 
@@ -927,12 +846,6 @@ object EventStream {
       }
   }
 
-  /** Drain [[runningUserStats]] in UPDATE mode (memory sink keeps the
-    * last emission per touched key per micro-batch). */
-  def runUserStatsOnce(spark: SparkSession, dir: String,
-                       name: String = "graft_stream"): DataFrame =
-    drainToMemory(spark, runningUserStats(spark, dir).toDF(), name, mode = "update")
-
   /** The schema'd events stream with ts normalized — shared by the
     * windowed/stateful queries, and public so tests and custom
     * pipelines can compose their own streaming ops (e.g. the
@@ -951,11 +864,6 @@ object EventStream {
       case _ => raw
     }
   }
-
-  /** Drain the stream synchronously into a memory sink and return the
-    * completed result (test/driver harness helper). */
-  def runOnce(spark: SparkSession, dir: String, name: String = "graft_stream"): DataFrame =
-    drainToMemory(spark, windowedAgg(spark, dir), name)
 
   case class SessionOut(user_id: Long, start_us: Long, end_us: Long, n: Long)
   case class OpenSession(start_us: Long, last_us: Long, n: Long)
@@ -1274,37 +1182,6 @@ object EventStream {
       }
   }
 
-  /** The batch → streaming WARM-START migration end-to-end over the
-    * fixture, driver-checkable: the archive (events before the
-    * midpoint of the observed time range) is sessionized in BATCH
-    * through the shared merge/close kernel ([[sessionSnapshot]],
-    * closed under the archive watermark wm1 = ms-floored archive max −
-    * the battery's 1 h delay); the live half replays as a stream that
-    * starts from the per-key OPEN intervals as `transformWithState`
-    * initial state, late-filtered at wm1 ([[closedSessionsTwsFromSnapshot]]).
-    * batch-closed ∪ stream-emitted must equal a single full-history
-    * stream run — so the ORACLE is literally `q_stream_sessions_closed`'s
-    * gaps-and-islands SQL: the migration added no seam. (Disjointness
-    * and the straddling-session merge are additionally spec-pinned in
-    * TwsSessionSpec on adversarial synthetic input, including
-    * stragglers behind wm1.) */
-  def runWarmSessionsOnce(spark: SparkSession, dir: String,
-                          name: String = "graft_stream_warm"): DataFrame =
-    warmHalves(spark, dir) match {
-      case None =>
-        // DEGENERATE INPUTS fall back to the plain full-history stream
-        // (semantically what a migration with nothing to migrate is)
-        drainToMemory(spark, closedSessionsTws(eventsStream(spark, dir)).toDF(),
-          name, mode = "append", conf = Seq(RocksDb))
-          .orderBy(col("user_id"), col("start_us"))
-      case Some((batchClosed, openInit, live, wm1)) =>
-        val streamed = drainToMemory(spark,
-          closedSessionsTwsFromSnapshot(live, openInit, wmMs = Some(wm1)).toDF(),
-          name, mode = "append", conf = Seq(RocksDb))
-        batchClosed.unionByName(streamed)
-          .orderBy(col("user_id"), col("start_us"))
-    }
-
   /** Shared halves of the warm-start migration: (batch-closed
     * sessions, per-key open-interval initial state, late-filtered
     * live stream, archive watermark). None on degenerate input — an
@@ -1348,34 +1225,4 @@ object EventStream {
       (batchClosed, openInit, live, wm1)
     }
   }
-
-  /** Probe harness for the warm-start migration: the SAME dataflow as
-    * [[runWarmSessionsOnce]] — archive sessionized in batch, stream
-    * seeded with the per-key open intervals as initial state — but
-    * both halves consumed through the no-op sink at full drain
-    * parallelism. The timed path is the snapshot shuffle, the
-    * initial-state distribution (one state-store write per carried
-    * key — the classic hidden funnel a key-count blow-up exposes),
-    * and the seeded stream; nothing is driver-collected. */
-  def probeWarmSessions(spark: SparkSession, dir: String): Unit =
-    warmHalves(spark, dir).foreach { case (batchClosed, openInit, live, wm1) =>
-      batchClosed.write.mode("overwrite").format("noop").save()
-      drain(spark,
-        closedSessionsTwsFromSnapshot(live, openInit, wmMs = Some(wm1)).toDF(),
-        "append", _.format("noop"), Seq(RocksDb))
-    }
-
-  /** Drain [[closedSessions]] over the fixture replay (append mode —
-    * closed sessions are final by construction). */
-  def runClosedSessionsOnce(spark: SparkSession, dir: String,
-                            name: String = "graft_stream_closed"): DataFrame =
-    drainToMemory(spark, closedSessions(eventsStream(spark, dir)).toDF(), name,
-      mode = "append")
-
-  /** Drain [[closedSessionsTws]] under the [[RocksDb]] state store
-    * provider, which `transformWithState` requires. */
-  def runClosedSessionsTwsOnce(spark: SparkSession, dir: String,
-                               name: String = "graft_stream_tws"): DataFrame =
-    drainToMemory(spark, closedSessionsTws(eventsStream(spark, dir)).toDF(), name,
-      mode = "append", conf = Seq(RocksDb))
 }

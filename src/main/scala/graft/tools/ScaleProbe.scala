@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{QueryScope, SparkEntry, Tables, TempDirs}
+import graft.queries.{SimilarityPack, StreamPack}
+import graft.streaming.EventStream.{Plan, RocksDb, dedupWithinWatermark, toNoop}
 
 /** 10x scale probe (empirical backing for SCALE.md): blow the heavy
   * fixtures up `factor`x with key-shifted, content-salted copies, then
@@ -201,7 +203,11 @@ object ScaleProbe {
     // watermark)
     "q_stream_tumbling", "q_stream_user_totals", "q_stream_dedup_wm",
     "q_stream_dedup_wm_rocksdb",
-    // r12: the sessionization state-API pair (see streamProbes)
+    // r12: the sessionization state-API pair: identical close
+    // semantics (shared merge/close kernel), different state plumbing
+    // — fmgws on the default HDFS-backed store vs transformWithState
+    // on RocksDB, head to head on the same workload (state ~ open
+    // intervals per in-flight user, bounded by the watermark window)
     "q_stream_sessions_closed", "q_stream_tws_sessions",
     // r12: hashed-unigram DSIR — two linear corpus scans that md5
     // every word occurrence, a 256-row broadcast, one doc-keyed
@@ -213,7 +219,9 @@ object ScaleProbe {
     // plan has no state whose cost grows with the archive, so wall
     // time should track TOTAL volume (index build + live sketch +
     // banded join) linearly; word-salting keeps cross-copy candidate
-    // structure from inflating (no cross-copy shingle collisions)
+    // structure from inflating (no cross-copy shingle collisions).
+    // r15 quality gate: model fit + silver write + broadcast, then a
+    // stateless scoring pass linear in docs
     "q_stream_neardup", "q_stream_quality_gate",
     // r16: streaming vector search — index build is one corpus
     // assignment pass, the stream side is a stateless cluster join;
@@ -258,97 +266,31 @@ object ScaleProbe {
     // claim and the O(log) contraction round count at blow-up scale
     "q_knn_graph")
 
-  /** Probe drains for the streaming entries: the SparkEntry query fns
-    * drain to a MEMORY sink (the Verify harness needs a DataFrame
-    * back), which collects every append/update row at the driver —
-    * at 100x the dedup stream's ~10M surviving rows OOM an 8g driver
-    * and the collection, not the state store, dominates wall time
-    * (measured: 65x wall at 100x with a 48g heap). The probe instead
-    * drains the same unlaunched plans through the no-op streaming
-    * sink at full parallelism, timing the state-store + shuffle path
-    * that actually scales to a cluster. */
-  private val streamProbes: Map[String, (SparkSession, String) => Unit] = {
-    import graft.streaming.EventStream
-    def noop(s: SparkSession, df: DataFrame, mode: String,
-             conf: Seq[(String, String)] = Nil): Unit =
-      EventStream.drain(s, df, mode, _.format("noop"), conf)
-    Map(
-      // batch override (not a stream): the gated q_knn_join pins k=16
-      // for its static oracle; the probe wants the adaptive width so
-      // the two-level index engages at blow-up scale
-      "q_knn_join" ->
-        ((s, d) => graft.queries.SimilarityPack.knnJoin(s, d, requireK = None,
-          useShared = false)
-          .write.mode("overwrite").format("noop").save()),
-      "q_knn_label" ->
-        ((s, d) => graft.queries.SimilarityPack.knnLabel(s, d, requireK = None,
-          useShared = false)
-          .write.mode("overwrite").format("noop").save()),
-      "q_knn_graph" ->
-        ((s, d) => graft.queries.SimilarityPack.knnGraph(s, d, requireK = None,
-          useShared = false)
-          .write.mode("overwrite").format("noop").save()),
-      "q_stream_tumbling" ->
-        ((s, d) => noop(s, EventStream.windowedAgg(s, d), "complete")),
-      "q_stream_user_totals" ->
-        ((s, d) => noop(s, EventStream.runningUserTotals(s, d).toDF(), "update")),
-      "q_stream_dedup_wm" ->
-        ((s, d) => noop(s, EventStream.dedupWithinWatermark(s, d), "append")),
-      // probe-only store comparison on the one stream whose state
-      // actually grows with the corpus (every in-flight key): the
-      // same watermarked dedup under RocksDB instead of the default
-      // HDFS-backed (in-JVM-heap) store. At 100x the store holds
-      // ~20M union keys on one box — exactly the regime RocksDB's
-      // off-heap layout exists for
-      "q_stream_dedup_wm_rocksdb" ->
-        ((s, d) => noop(s, EventStream.dedupWithinWatermark(s, d), "append",
-          Seq(EventStream.RocksDb))),
-      // the sessionization pair: identical close semantics (shared
-      // merge/close kernel), different state plumbing — fmgws on the
-      // default HDFS-backed store vs transformWithState on RocksDB.
-      // Probing both measures the state-API + store overhead head to
-      // head on the same workload (state ~ open intervals per
-      // in-flight user, bounded by the watermark window per key)
-      "q_stream_sessions_closed" ->
-        ((s, d) => noop(s,
-          EventStream.closedSessions(EventStream.eventsStream(s, d)).toDF(),
-          "append")),
-      "q_stream_tws_sessions" ->
-        ((s, d) => noop(s,
-          EventStream.closedSessionsTws(EventStream.eventsStream(s, d)).toDF(),
-          "append", Seq(EventStream.RocksDb))),
-      // r14 warm-start migration: batch half through the noop batch
-      // sink, seeded TWS stream through the noop streaming sink — the
-      // timed path includes the initial-state distribution per key
-      "q_stream_warm_sessions" ->
-        ((s, d) => EventStream.probeWarmSessions(s, d)),
-      "q_stream_left_join" ->
-        ((s, d) => noop(s, EventStream.clickPurchaseLeftPairs(s, d), "append")),
-      "q_stream_full_join" ->
-        ((s, d) => noop(s, EventStream.clickPurchaseFullPairs(s, d), "append")),
-      // r15 quality gate: stateless broadcast scorer — the timed path
-      // is model fit + silver write + collect/broadcast + stream
-      // scoring; the model is vocabulary-sized (word-salted copies
-      // grow it linearly), the scoring pass is linear in docs
-      "q_stream_quality_gate" ->
-        ((s, d) => TempDirs.scoped("graft_probe_qgate") { silver =>
-          val (model, thr) = EventStream.writeQualityModel(s, d, silver.toString)
-          noop(s, EventStream.qualityGate(s, d, model, thr), "append")
-        }),
-      "q_stream_ann" ->
-        ((s, d) => TempDirs.scoped("graft_probe_ann") { silver =>
-          val ix = EventStream.writeAnnIndex(s, d, silver.toString)
-          noop(s, EventStream.annAgainstHistory(s, d, ix), "append")
-        }),
-      "q_stream_neardup" ->
-        // r14: through the real silver-table path — index WRITTEN to
-        // parquet and read back; the timed path is index build + silver
-        // write + live sketch + stream-static banded join
-        ((s, d) => TempDirs.scoped("graft_probe_silver") { silver =>
-          val hist = EventStream.writeNeardupIndex(s, d, silver.toString)
-          noop(s, EventStream.neardupAgainstHistory(s, d, Some(hist)), "append")
-        }))
-  }
+  /** The probes that differ from their query on purpose. Every other
+    * `q_stream_*` probe drains its [[StreamPack]] declaration through
+    * [[graft.streaming.EventStream.toNoop]]; the rest run their query
+    * as is. */
+  private val overrides: Map[String, (SparkSession, String) => DataFrame] = Map(
+    // the gated kNN queries and q_stream_ann pin k=16 for their static
+    // oracles; the probe wants the adaptive width, so the two-level
+    // index engages at blow-up scale
+    "q_knn_join" -> ((s, d) => SimilarityPack.knnJoin(s, d, requireK = None, useShared = false)),
+    "q_knn_label" -> ((s, d) => SimilarityPack.knnLabel(s, d, requireK = None, useShared = false)),
+    "q_knn_graph" -> ((s, d) => SimilarityPack.knnGraph(s, d, requireK = None, useShared = false)),
+    "q_stream_ann" -> ((s, d) => StreamPack.ann(None)(s, d, toNoop)),
+    // probe-only store comparison on the one stream whose state
+    // actually grows with the corpus (every in-flight key): the
+    // watermarked dedup under RocksDB instead of the default
+    // HDFS-backed (in-JVM-heap) store. At 100x the store holds ~20M
+    // union keys on one box — exactly the regime RocksDB's off-heap
+    // layout exists for
+    "q_stream_dedup_wm_rocksdb" -> ((s, d) => toNoop(Plan(dedupWithinWatermark(s, d), "append", Seq(RocksDb)))))
+
+  private def probe(name: String): (SparkSession, String) => DataFrame =
+    overrides.getOrElse(name, StreamPack.streams.get(name) match {
+      case Some(stream) => (s, d) => stream(s, d, toNoop)
+      case None => SparkEntry.queries(name)
+    })
 
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -382,11 +324,8 @@ object ScaleProbe {
     // "cost" 0.2 s at 100x under count() vs ~22 s actually executed)
     def best(name: String, dir: String): Double =
       (1 to 2).map { _ =>
-        QueryScope.run(timed(streamProbes.get(name) match {
-          case Some(drain) => drain(spark, dir)
-          case None => SparkEntry.queries(name)(spark, dir)
-            .write.mode("overwrite").format("noop").save()
-        }))
+        QueryScope.run(timed(probe(name)(spark, dir)
+          .write.mode("overwrite").format("noop").save()))
       }.min
 
     // shared shingle pipeline: memoized per (dir, tag), so force a

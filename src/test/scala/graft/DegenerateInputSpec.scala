@@ -64,9 +64,9 @@ class DegenerateInputSpec extends AnyFunSuite {
     Tables.events(spark, TestSpark.sf).limit(5)
       .withColumn("ts", lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
       .write.parquet(s"$dir/events.parquet")
-    val warm = EventStream.runWarmSessionsOnce(spark, dir, "graft_degen_warm")
+    val warm = graft.queries.StreamPack.qStreamWarmSessions(spark, dir)
       .collect().toSeq
-    val full = EventStream.runClosedSessionsTwsOnce(spark, dir, "graft_degen_full")
+    val full = graft.queries.StreamPack.twsSessions(spark, dir, EventStream.toMemory)
       .orderBy(col("user_id"), col("start_us")).collect().toSeq
     assert(warm.map(_.toSeq) == full.map(_.toSeq))
   }
@@ -114,7 +114,7 @@ class DegenerateInputSpec extends AnyFunSuite {
     // streaming ANN: history of 2 < k=16 centroids — limit(k) degrades
     // to one-vector-per-list; the lone live vector matches only its
     // identical twin above the 0.2 floor
-    val ann = EventStream.runAnnOnce(spark, dir, "graft_degen_ann")
+    val ann = graft.queries.StreamPack.qStreamAnn(spark, dir)
       .as[(Long, Long, Double, Long)].collect()
     assert(ann.toSeq == Seq((0L, 1L, 1.0, 1L)))
   }

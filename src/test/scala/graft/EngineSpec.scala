@@ -26,9 +26,13 @@ class EngineSpec extends AnyFunSuite {
     val cache = spark.sharedState.cacheManager
     // suites sharing this session may leave cached plans behind
     spark.catalog.clearCache()
+    def streamViews() = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.startsWith("graft_stream_")).map(_.name).toSet
+    val viewsBefore = streamViews()
     val empties = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
       val n = QueryScope.run(fn(spark, TestSpark.sf).count())
       assert(cache.isEmpty, s"$name left a persisted relation behind its scope")
+      assert(streamViews() == viewsBefore, s"$name left a memory-sink view behind its scope")
       if (n == 0) Some(name) else None
     }
     // candidate-pair queries may legitimately be empty at tiny SF; all
@@ -81,7 +85,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("streaming windowed agg matches the batch tumbling-window query") {
-    val stream = EventStream.runOnce(spark, TestSpark.sf, "graft_stream_test")
+    val stream = graft.queries.StreamPack.tumbling(spark, TestSpark.sf, EventStream.toMemory)
       .select("wstart", "n", "sum_value").orderBy("wstart").collect()
     val batch = graft.queries.EventsPack.qTumblingWindow(spark, TestSpark.sf)
       .select("wstart", "n", "sum_value").orderBy("wstart").collect()
@@ -154,7 +158,7 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("stream-stream join reproduces the batch interval join exactly") {
-    val stream = EventStream.runJoinOnce(spark, TestSpark.sf, "graft_ssj_test")
+    val stream = graft.queries.StreamPack.join(spark, TestSpark.sf, EventStream.toMemory)
       .select("user_id", "click_id", "purchase_id")
     val ev = Tables.events(spark, TestSpark.sf)
     val clicks = ev.filter(col("event_type") === "click")

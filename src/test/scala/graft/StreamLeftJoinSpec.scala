@@ -3,27 +3,29 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.queries.StreamPack
 import graft.streaming.EventStream
+import graft.streaming.EventStream.toMemory
 
 /** The r14 stream-stream LEFT OUTER join: matched pairs must equal the
   * inner form exactly, null-extended clicks must appear iff the final
   * watermark passed their match horizon, and repeated drains must be
-  * deterministic (the no-data-batch wait in runLeftJoinOnce is doing
-  * its job).
+  * deterministic (the no-data-batch wait of the [[StreamPack.leftJoin]]
+  * declaration's final-watermark horizon is doing its job).
   */
 class StreamLeftJoinSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def drainOnce(tag: String) =
-    EventStream.runLeftJoinOnce(spark, TestSpark.sf, s"graft_lj_spec_$tag")
+  private def drainOnce() =
+    StreamPack.leftJoin(spark, TestSpark.sf, toMemory)
       .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
       .collect().toSeq
 
   test("matched pairs equal the inner join; unconverted clicks are watermark-gated") {
-    val out = EventStream.runLeftJoinOnce(spark, TestSpark.sf, "graft_lj_spec_m")
+    val out = StreamPack.leftJoin(spark, TestSpark.sf, toMemory)
     val matched = out.filter(col("purchase_id").isNotNull)
       .select(col("user_id"), col("click_id"), col("purchase_id"))
-    val inner = EventStream.runJoinOnce(spark, TestSpark.sf, "graft_lj_spec_i")
+    val inner = StreamPack.join(spark, TestSpark.sf, toMemory)
       .select(col("user_id"), col("click_id"), col("purchase_id"))
     assert(matched.except(inner).count() == 0 && inner.except(matched).count() == 0)
 
@@ -55,7 +57,7 @@ class StreamLeftJoinSpec extends AnyFunSuite {
   }
 
   test("repeated drains are deterministic") {
-    assert(drainOnce("r1") == drainOnce("r2"))
+    assert(drainOnce() == drainOnce())
   }
 
   test("drain exit signal equals the engine's final committed watermark exactly") {
@@ -78,7 +80,11 @@ class StreamLeftJoinSpec extends AnyFunSuite {
         }
     }
     spark.streams.addListener(l)
-    try EventStream.runLeftJoinOnce(spark, TestSpark.sf, "graft_lj_spec_sig")
+    // its own memory sink: the listener needs a known query name
+    try StreamPack.leftJoin(spark, TestSpark.sf, p => {
+      p.drain(_.format("memory").queryName("graft_lj_spec_sig"))
+      spark.table("graft_lj_spec_sig")
+    })
     finally spark.streams.removeListener(l)
     import scala.jdk.CollectionConverters._
     assert(seen.asScala.nonEmpty)
@@ -87,10 +93,10 @@ class StreamLeftJoinSpec extends AnyFunSuite {
   }
 
   test("full outer: matched = inner; both null sets are watermark-gated") {
-    val out = EventStream.runFullJoinOnce(spark, TestSpark.sf, "graft_fj_spec")
+    val out = StreamPack.fullJoin(spark, TestSpark.sf, toMemory)
     val matched = out.filter(col("click_id").isNotNull && col("purchase_id").isNotNull)
       .select(col("user_id"), col("click_id"), col("purchase_id"))
-    val inner = EventStream.runJoinOnce(spark, TestSpark.sf, "graft_fj_spec_i")
+    val inner = StreamPack.join(spark, TestSpark.sf, toMemory)
       .select(col("user_id"), col("click_id"), col("purchase_id"))
     assert(matched.except(inner).count() == 0 && inner.except(matched).count() == 0)
 

@@ -208,10 +208,10 @@ class TwsSessionSpec extends AnyFunSuite {
   test("fixture replay: row-identical to the flatMapGroupsWithState sessionizer") {
     import spark.implicits._
     val dir = TestSpark.sf
-    val fmgws = EventStream.runClosedSessionsOnce(spark, dir,
-        "graft_tws_eq_fmgws").as[SessionOut].collect().toSet
-    val tws = EventStream.runClosedSessionsTwsOnce(spark, dir,
-        "graft_tws_eq_tws").as[SessionOut].collect().toSet
+    val fmgws = graft.queries.StreamPack.closedSessions(spark, dir, EventStream.toMemory)
+      .as[SessionOut].collect().toSet
+    val tws = graft.queries.StreamPack.twsSessions(spark, dir, EventStream.toMemory)
+      .as[SessionOut].collect().toSet
     assert(tws.nonEmpty)
     assert(tws == fmgws)
   }
