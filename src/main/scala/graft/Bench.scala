@@ -3,11 +3,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   /** The bench session's conf: [[Sessions.conf]] plus
     *  - stream-drain checkpoints on RAM when the host has /dev/shm:
-    *    the offset/commit WAL fsyncs per micro-batch and /tmp is
-    *    disk-backed here (~100 ms/drain; perfbench `--trace 1`
-    *    reports it as `streaming.wal_commit_s`);
-    *    durability across JVMs is meaningless for these
-    *    drain-to-completion harness streams;
+    *    the offset/commit WAL fsyncs per micro-batch. With on-disk
+    *    checkpoints perfbench `--trace 1` reports that WAL as
+    *    `streaming.wal_commit_s`, ~0.02 s per corpus_dedup warm
+    *    sweep (4 cores, sf0.1); durability across JVMs is meaningless
+    *    for these drain-to-completion harness streams;
     *  - `localDir` (`SPARK_GRAFT_LOCAL_DIR`): shuffle/spill scratch,
     *    overridable so a RAM-backed dir can take the block-manager
     *    writes off the /tmp disk; unset keeps the JVM tmpdir;

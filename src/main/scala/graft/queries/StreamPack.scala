@@ -27,7 +27,6 @@ object StreamPack extends QueryPack {
 
   val tumbling: Stream = (s, d, sink) =>
     sink(Plan(EventStream.windowedAgg(s, d), "complete"))
-  val dedup: Stream = (s, d, sink) => sink(Plan(EventStream.dedupCounts(s, d), "complete"))
   val enrich: Stream = (s, d, sink) =>
     sink(Plan(EventStream.enrichedSegmentTotals(s, d), "complete"))
 
@@ -38,6 +37,7 @@ object StreamPack extends QueryPack {
     sink(Plan(EventStream.runningUserStats(s, d).toDF(), "update"))
 
   /** Append mode: each surviving row is emitted once, when first seen. */
+  val dedup: Stream = (s, d, sink) => sink(Plan(EventStream.dedupCounts(s, d), "append"))
   val dedupWm: Stream = (s, d, sink) =>
     sink(Plan(EventStream.dedupWithinWatermark(s, d), "append"))
 
@@ -134,11 +134,14 @@ object StreamPack extends QueryPack {
   def qStreamTumbling(s: SparkSession, d: String): DataFrame =
     tumbling(s, d, toMemory).orderBy(col("wstart"))
 
-  /** Streaming exact dedup drained to completion: per-lang distinct
-    * document counts, checked by the same batch-distinct SQL oracle —
+  /** Streaming exact dedup drained to completion and counted: the
+    * append drain's distinct `(lang, h)` rows, counted per language
+    * after the drain, checked by the same batch-distinct SQL oracle —
     * the streaming path must reproduce the batch answer exactly. */
   def qStreamDedup(s: SparkSession, d: String): DataFrame =
-    dedup(s, d, toMemory).orderBy(col("lang"))
+    dedup(s, d, toMemory)
+      .groupBy(col("lang")).agg(count(lit(1)).as("n_distinct"))
+      .orderBy(col("lang"))
 
   /** Each user's FINAL state in an update-mode drain: the max-n_events
     * row, since n_events is strictly increasing per key. */

@@ -407,18 +407,20 @@ object EventStream {
   }
 
   /** Streaming exact dedup (the north-star dedup family as a STREAM
-    * op): content-hash `dropDuplicates` over a document stream →
-    * per-language distinct counts. The dedup key includes `lang` so
+    * op): content-hash `dropDuplicates` over a document stream, the
+    * plan's one stateful operator. Drained in append mode, each
+    * distinct `(lang, h)` row is emitted once, when first seen;
+    * `q_stream_dedup` counts them per language after the drain (the
+    * qStreamDedupWm pattern), so no second state store holds the
+    * 5-row per-language aggregate. The dedup key includes `lang` so
     * the result is independent of stream arrival order. At 100 TB the
     * dedup state is bounded with `dropDuplicatesWithinWatermark` (the
     * hash state otherwise grows with the corpus); the drain-once
     * harness form keeps full state, which the fixture bounds. */
-  def dedupCounts(spark: SparkSession, dir: String): DataFrame = {
+  def dedupCounts(spark: SparkSession, dir: String): DataFrame =
     fixtureStream(spark, s"$dir/documents.parquet")
       .select(col("lang"), sha2(col("text"), 256).as("h"))
       .dropDuplicates("lang", "h")
-      .groupBy(col("lang")).agg(count(lit(1)).as("n_distinct"))
-  }
 
   /** Watermark-BOUNDED streaming dedup — the 100 TB scale path that
     * [[dedupCounts]]' plain `dropDuplicates` is not: its key state
@@ -441,13 +443,15 @@ object EventStream {
     * unset it), also when a later pair or `body` throws. Start-time confs (the
     * shuffle-partition count, the state-store provider) are read when
     * a query starts, so pinning them around [[drain]] scopes them to
-    * that one query. */
+    * that one query. "Previous" is the explicitly set value
+    * (`getAll`): `getOption` also returns a registered key's default,
+    * and restoring that would leave the key set where it was unset. */
   private[graft] def withConf[A](spark: SparkSession, pairs: (String, String)*)
                                 (body: => A): A = {
     val prev = scala.collection.mutable.ArrayBuffer.empty[(String, Option[String])]
     try {
       pairs.foreach { case (k, v) =>
-        val p = spark.conf.getOption(k)
+        val p = spark.conf.getAll.get(k)
         spark.conf.set(k, v)
         prev += k -> p
       }
@@ -470,15 +474,22 @@ object EventStream {
     "spark.sql.streaming.stateStore.providerClass" ->
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  /** Start-time conf pair selecting Spark's `FileSystem`-based
+    * checkpoint file manager, pinned by every [[drain]] (why: see
+    * there). */
+  private[graft] val CheckpointManager: (String, String) =
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[org.apache.spark.sql.execution.streaming.checkpointing
+        .FileSystemBasedCheckpointFileManager].getName
+
   /** Per-drain checkpoint dir, honoring the optional
-    * `spark.graft.stream.checkpointDir` base: the offset/commit WAL is
-    * written and fsynced per micro-batch, and on the bench host /tmp
-    * is disk-backed while /dev/shm is RAM — the harness points the
-    * base there (~100 ms/drain, which perfbench `--trace 1` reports
-    * as `streaming.wal_commit_s`; a checkpoint that survives the JVM
-    * is a durability feature these drain-to-completion harness
-    * streams never use). Unset, the JVM tmpdir default applies — the
-    * production-safe choice. */
+    * `spark.graft.stream.checkpointDir` base. `graft.Bench` points the
+    * base at /dev/shm when the host has it; perfbench points it at its
+    * run's on-disk checkpoint dir, so the offset/commit WAL that
+    * `--trace 1` reports as `streaming.wal_commit_s` (~0.02 s per
+    * corpus_dedup warm sweep) is written to disk there. Unset, the JVM
+    * tmpdir default applies — the production-safe choice. Either way
+    * the dir is a fresh local path, deleted when the drain ends. */
   private def newCheckpointDir(spark: SparkSession): java.nio.file.Path =
     spark.conf.getOption("spark.graft.stream.checkpointDir") match {
       case Some(base) => graft.TempDirs.createUnder(base, "graft_stream_ckpt")
@@ -490,16 +501,25 @@ object EventStream {
     *
     * - Bounded state-partition count: a stateful streaming query
     *   materializes one state store per shuffle partition at START
-    *   time, so a 32-partition session pays 32 store inits +
-    *   maintenance threads for a fixture-sized stream — the dominant
-    *   (and noisy) cost of the harness queries. The drain pins
+    *   time, so a 32-partition session would pay 32 store inits for a
+    *   fixture-sized stream. The drain pins
     *   `spark.graft.stream.drainPartitions` (default 4) for its query;
     *   results are unaffected (same aggregation, fewer state shards).
-    *   The scale probe raises it to full parallelism: at 100x the
-    *   4-way pin, not the state store, would be the measured
-    *   bottleneck.
+    *   The scale probe raises it to full parallelism. At fixture
+    *   scale 1, 2 or 4 partitions moved the corpus_dedup drain's wall
+    *   time by less than its noise.
+    * - FileSystem checkpoint manager ([[CheckpointManager]]): Spark's
+    *   default manager goes through Hadoop's `FileContext`, whose
+    *   local rename runs `readlink` twice as a shell fork when
+    *   `libhadoop` is not loaded — 192 forks per `q_stream_dedup`
+    *   drain at sf0.001 and sf0.1 alike, the dominant cost of its
+    *   state and WAL commits. The `FileSystem` manager renames with
+    *   a plain `File.renameTo`; the checkpoint is a fresh local dir
+    *   that never outlives the drain, so the `FileContext` rename's
+    *   atomicity buys nothing here.
+    *   Checkpoint file checksums and `.crc` files stay on.
     * - `conf`: further start-time pairs for this query (e.g.
-    *   [[RocksDb]]), pinned with the partition count by [[withConf]].
+    *   [[RocksDb]]), pinned after the two above by [[withConf]].
     * - Explicit checkpoint dir ([[newCheckpointDir]]) instead of
     *   Spark's implicit temp one, deleted right after the drain: the
     *   scale probe drains every stream twice per size, and leaving
@@ -523,8 +543,9 @@ object EventStream {
             sink: DataStreamWriter[Row] => DataStreamWriter[Row],
             conf: Seq[(String, String)] = Nil,
             horizonMs: Option[Long] = None): Unit =
-    withConf(spark, ("spark.sql.shuffle.partitions" ->
-        spark.conf.get("spark.graft.stream.drainPartitions", "4")) +: conf: _*) {
+    withConf(spark, Seq("spark.sql.shuffle.partitions" ->
+        spark.conf.get("spark.graft.stream.drainPartitions", "4"),
+        CheckpointManager) ++ conf: _*) {
       val ckpt = newCheckpointDir(spark)
       // every watermark progress, keyed by query id: the id is known
       // only once start() returns, and a progress may precede that

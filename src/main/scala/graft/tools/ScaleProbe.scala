@@ -301,8 +301,7 @@ object ScaleProbe {
     val spark = graft.Sessions.create(graft.Sessions.conf() ++ Seq(
       "spark.sql.codegen.cache.maxEntries" -> "5000",
       // stream drains get full parallelism here (EventStream's
-      // fixture-scale default is 4: right for Verify/Bench where
-      // state-store init dominates, a 4-way ceiling at 100x data)
+      // fixture-scale default is 4, a 4-way ceiling at 100x data)
       "spark.graft.stream.drainPartitions" -> graft.Sessions.cpus))
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.StreamingQueryException
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.EventStream
-import graft.streaming.EventStream.{RocksDb, drain, withConf}
+import graft.streaming.EventStream.{CheckpointManager, RocksDb, drain, withConf}
 
 /** The one stream drain undoes everything it sets up — the pinned
   * start-time conf, the horizon listener, the checkpoint dir, the
@@ -41,8 +41,7 @@ class StreamDrainSpec extends AnyFunSuite {
     * listeners and checkpoint base are as before and no query runs. */
   private def leavesNoTrace(body: => Unit): Unit = {
     val base = java.nio.file.Files.createTempDirectory("graft_drain_spec")
-    def state() = (spark.conf.getOption(Partitions), spark.conf.getOption(Provider),
-      spark.streams.listListeners().length)
+    def state() = (spark.conf.getAll, spark.streams.listListeners().length)
     val before = state()
     try {
       withConf(spark, "spark.graft.stream.checkpointDir" -> base.toString,
@@ -79,14 +78,15 @@ class StreamDrainSpec extends AnyFunSuite {
   }
 
   test("foreachBatch drain pins its conf for the query and leaves no trace") {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, String)]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, String, String)]()
     threeWays((df, mode) => drain(spark, df, mode, _.foreachBatch {
       (batch: Dataset[Row], _: Long) =>
-        seen.add((batch.count(), spark.conf.get(Partitions), spark.conf.get(Provider)))
+        seen.add((batch.count(), spark.conf.get(Partitions), spark.conf.get(Provider),
+          spark.conf.get(CheckpointManager._1)))
         ()
     }, Seq(RocksDb))) {
       import scala.jdk.CollectionConverters._
-      assert(seen.asScala.toSeq == Seq((2L, "2", RocksDb._2)))
+      assert(seen.asScala.toSeq == Seq((2L, "2", RocksDb._2, CheckpointManager._2)))
     }
   }
 
@@ -123,6 +123,11 @@ class StreamDrainSpec extends AnyFunSuite {
       intercept[AnalysisException](withConf(spark, unset -> "in",
         "spark.sql.warehouse.dir" -> "/nowhere")(()))
       assert(spark.conf.getOption(unset).isEmpty)
+      // a key with a Spark default that was unset is unset again, not
+      // set to its default
+      assert(!spark.conf.getAll.contains(Provider))
+      withConf(spark, RocksDb)(assert(spark.conf.get(Provider) == RocksDb._2))
+      assert(!spark.conf.getAll.contains(Provider))
     } finally spark.conf.unset(set)
   }
 }
