@@ -9,7 +9,7 @@ import java.util.concurrent.{Callable, ExecutionException, Executors}
   *  - `CrossVal` fold fits;
   *  - `Reduction.tuneOverKs` candidates (each nesting the fold pool);
   *  - `Reduction.tuneOverKsSharedFit` fold fits, then candidates;
-  *  - `FeatureSelection.mda` folds;
+  *  - `FeatureSelection.mda` fold fits;
   *  - `Tuning.hyperbandBatchTagged` brackets;
   *  - `TextPack.prepareShared` silver-table builds.
   *

@@ -3,6 +3,7 @@ package graft.ml
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.regression.RandomForestRegressor
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Literal, Round}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{EraRank, Folds}
@@ -40,12 +41,17 @@ object FeatureSelection {
     * (`feature_selection_numerai.py:54-55`), averaged over k era folds,
     * descending. Deterministic given `seed`.
     *
-    * Per fold, the baseline and every per-feature permuted variant are
-    * unioned into ONE tagged relation, model-transformed once, and
-    * scored with a single grouped aggregate (rank window partitioned by
-    * (variant, era) → corr per variant) — one Spark action per fold
-    * instead of features+1, and the variant fan-out runs fully on the
-    * executors.
+    * After the k fold fits, ONE Spark action scores every fold and
+    * every variant: one within-era permutation deals all folds at once
+    * (its key is `CASE fold WHEN f THEN permKeyFor(f)`; folds partition
+    * eras, so each era's deal is its fold's deal), one broadcast tag
+    * cross join projects the baseline and each feature's permuted
+    * variant, each fold's predictor scores its own fold's rows, and
+    * one rank over (variant, era) feeds one corr per (fold, variant).
+    * The fold mean, its HALF_UP rounding and the sort run on the
+    * driver over those k × (features+1) numbers, and the result is a
+    * sorted local relation. With a fitter that runs no job, the whole
+    * call is two Spark actions: the fold table and the scoring.
     */
   def mda(df: DataFrame, eraCol: String, featCols: Seq[String],
           targetCol: String, idCols: Seq[String], k: Int, seed: Long,
@@ -53,71 +59,62 @@ object FeatureSelection {
           permKeyFor: Option[Int => Column] = None): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // every action finishes before this returns (the result is a local
-    // relation), so the fold split and each fold's persists are
-    // released here, each fold's as soon as that fold is scored
-    val rows = Folds.withFoldSplit(df, eraCol, k) { withFold =>
-      // ONE upfront aggregate replaces a per-fold maxEraRows action (the
-      // dispatch statistic below) AND materializes the persisted base
-      // before the fold threads start — two concurrent first-touch
-      // actions would otherwise both compute it (guide §1.2)
-      val maxEraByFold = withFold.groupBy(col("fold"), col(eraCol))
-        .agg(count(lit(1)).as("graft_n"))
-        .groupBy(col("fold")).agg(max(col("graft_n")).as("graft_m"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // per-fold fit + permutation scoring run concurrently: each fold's
-      // fit and collect are independent jobs
-      def foldRows(f: Int): Seq[(String, Long, Double)] = graft.QueryScope.run {
-        val train = withFold.filter(col("fold") =!= f).drop("fold")
-        val test = withFold.filter(col("fold") === f).drop("fold")
-          .transform(graft.QueryScope.persist)
-        // one permutation join yields every feature's permuted copy;
-        // per-feature variants are then pure projections over it.
-        // permKeyFor lets the deterministic-fitter oracle twin swap the
-        // xxhash64 deal for an ANSI-SQL-expressible arithmetic hash.
-        val permKey = permKeyFor.map(_(f))
-          .getOrElse(xxhash64(idCols.map(col) :+ lit(seed + f): _*))
-        val permuted = Folds.permuteManyWithinEra(test, featCols, eraCol, idCols,
-          permKey).transform(graft.QueryScope.persist)
-        val predict = fit(train)
-        val variants = ("__base__", test) +: featCols.map { ft =>
-          ft -> permuted.select(test.columns.map(c =>
-            if (c == ft) col(s"${ft}_perm").as(ft) else col(c)): _*)
-        }
-        val tagged = variants.map { case (tag, fr) =>
-          fr.select(test.columns.map(col): _*).withColumn("graft_feat", lit(tag))
-        }.reduce(_ unionByName _)
-        val scored = predict(tagged)
-        // r14: era-size-adaptive rank dispatch on the test frame's
-        // largest era (the upfront statistic, no extra job) — the
-        // variant tag multiplies window-partition COUNT by features+1
-        // while each (variant, era) partition stays one era of test
-        // rows. Past the ceiling, the rank rides the two-pass form with
-        // a composite (variant, era) key — bit-identical values.
-        val ranked =
-          if (EraRank.onePass(test, maxEraByFold.getOrElse(f.toLong, 0L)))
-            EraRank.withPctRankFirst(scored, "graft_r",
-              Seq(col("graft_feat"), col(eraCol)), col("pred"), idCols.map(col): _*)
-          else
-            EraRank.withPctRankFirstTwoPass(scored, "graft_r", 32,
-              struct(col("graft_feat"), col(eraCol)), col("pred"), idCols.map(col): _*)
-        val sp = ranked
-          .groupBy(col("graft_feat"))
-          .agg(corr(col(targetCol), col("graft_r")).as("spearman"))
-          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-        val base = sp("__base__")
-        featCols.map { feat =>
-          val shuff = sp(feat)
-          val imp = if (shuff >= 1.0) 0.0 else (base - shuff) / (1.0 - shuff)
-          (feat, f.toLong, imp)
-        }
+    // permKeyFor lets the deterministic-fitter oracle twin swap the
+    // xxhash64 deal for an ANSI-SQL-expressible arithmetic hash
+    val keyFor = permKeyFor.getOrElse((f: Int) =>
+      xxhash64(idCols.map(col) :+ lit(seed + f): _*))
+    // the scoring collect finishes before the split is released
+    val sp = Folds.withFoldSplit(df, eraCol, k) { (withFold, maxEraRows) =>
+      // the fold fits are independent jobs, so they overlap
+      val predictors = graft.Pools.inOrder(k)((0 until k).map { f => () =>
+        fit(withFold.filter(col("fold") =!= f).drop("fold"))
+      })
+      val testCols = withFold.columns.filterNot(_ == "fold")
+      val permKey = (1 until k).foldLeft(when(col("fold") === 0, keyFor(0))) {
+        (c, f) => c.when(col("fold") === f, keyFor(f))
       }
-      graft.Pools.inOrder(k)((0 until k).map(f => () => foldRows(f))).flatten
+      val permuted = Folds.permuteManyWithinEra(withFold, featCols, eraCol,
+        idCols, permKey)
+      val tags = ("__base__" +: featCols).toDF("graft_feat")
+      val variants = permuted.crossJoin(broadcast(tags)).select(
+        (col("fold") +: testCols.map(c =>
+          if (featCols.contains(c))
+            when(col("graft_feat") === c, col(s"${c}_perm")).otherwise(col(c)).as(c)
+          else col(c)) :+ col("graft_feat")): _*)
+      // each predictor sees its own fold's rows without `fold`, as
+      // `fit`'s contract promises; the tag is re-added after
+      val scored = predictors.zipWithIndex.map { case (predict, f) =>
+        predict(variants.filter(col("fold") === f).drop("fold"))
+          .withColumn("fold", lit(f.toLong))
+      }.reduce(_ unionByName _)
+      // every (variant, era) rank partition is one era of one fold, so
+      // the largest era is the dispatch statistic; past the ceiling the
+      // two-pass form keys on (variant, era) — bit-identical values
+      val ranked =
+        if (EraRank.onePass(withFold, maxEraRows))
+          EraRank.withPctRankFirst(scored, "graft_r",
+            Seq(col("graft_feat"), col(eraCol)), col("pred"), idCols.map(col): _*)
+        else
+          EraRank.withPctRankFirstTwoPass(scored, "graft_r", 32,
+            struct(col("graft_feat"), col(eraCol)), col("pred"), idCols.map(col): _*)
+      ranked.groupBy(col("fold"), col("graft_feat"))
+        .agg(corr(col(targetCol), col("graft_r")).as("spearman"))
+        .collect().map(r => (r.getLong(0).toInt, r.getString(1)) -> r.getDouble(2)).toMap
     }
-    rows.toDF("feature", "fold", "importance")
-      .groupBy(col("feature"))
-      .agg(round(avg(col("importance")), 6).as("importance"))
-      .orderBy(col("importance").desc, col("feature"))
+    // the fold mean sums in fold order, as a sequential loop would, and
+    // rounds with Spark's own `round` so the values match the SQL form
+    featCols.map { feat =>
+      val imps = (0 until k).map { f =>
+        val (base, shuff) = (sp((f, "__base__")), sp((f, feat)))
+        if (shuff >= 1.0) 0.0 else (base - shuff) / (1.0 - shuff)
+      }
+      feat -> Round(Literal(imps.foldLeft(0.0)(_ + _) / k), Literal(6))
+        .eval().asInstanceOf[Double]
+    }.sortWith { case ((fa, a), (fb, b)) =>
+      // importance descending (NaN first, as Spark sorts it), then feature
+      val c = java.lang.Double.compare(b, a)
+      if (c != 0) c < 0 else fa < fb
+    }.toDF("feature", "importance")
   }
 
   /** M9 selector: top-n features by importance (`feature_selection_

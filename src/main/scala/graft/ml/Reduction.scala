@@ -104,7 +104,7 @@ object Reduction {
                           score: DataFrame => DataFrame,
                           metric: String = "spearman"): Seq[(Int, Double)] = {
     if (ks.isEmpty) return Seq.empty
-    graft.operators.Folds.withFoldSplit(reduced, eraCol, folds) { cached =>
+    graft.operators.Folds.withFoldSplit(reduced, eraCol, folds) { (cached, _) =>
       val fitAll = fitAllFor(colsFor(ks.max))
       // one fit per fold (each collects its model row at the driver
       // edge); the fold fits are independent, so they overlap
@@ -146,7 +146,7 @@ object Reduction {
     // per-candidate kfoldScores form re-derived the fold-assignment
     // aggregate and re-persisted an identical join plan per candidate
     // (one redundant pass per k, plus a CacheManager warn per extra)
-    graft.operators.Folds.withFoldSplit(reduced, eraCol, folds) { cached =>
+    graft.operators.Folds.withFoldSplit(reduced, eraCol, folds) { (cached, _) =>
       // candidates score concurrently over the shared persisted frame,
       // each running its own fold pool inside kfoldScoresPrejoined
       graft.Pools.inOrder(ks.length)(ks.map { k => () =>

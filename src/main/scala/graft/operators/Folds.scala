@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Era-grouped fold machinery (`utils.py:11-48` `kfold_era`) and the
   * column-permutation primitive behind MDA (`feature_selection_numerai
@@ -24,16 +27,29 @@ object Folds {
       .withColumn("fold",
         ((row_number().over(Window.orderBy(col(eraCol))) - 1) % k).cast("long"))
 
-  /** Scoped fold split: `df` broadcast-joined to the [[foldAssignment]]
-    * of its distinct eras, persisted, handed to `body`, and released
+  /** Scoped fold split. The fold table — [[foldAssignment]] over a
+    * per-era row-count aggregate, so there is still one fold rule — is
+    * collected once and joined back to `df` as a broadcast local
+    * relation (literal rows, so no consumer re-derives it). The
+    * joined frame is persisted, handed to `body`
+    * with the largest era's row count (the [[EraRank.onePass]]
+    * dispatch statistic, read off the same collect), and released
     * with `body`'s own [[graft.QueryScope]] when `body` returns or
     * throws. Every fold branch (and every candidate scored against the
     * same split) re-reads the one persisted join. `body` must finish
     * every action on the frame before it returns. */
-  def withFoldSplit[A](df: DataFrame, eraCol: String, k: Int)(body: DataFrame => A): A =
+  def withFoldSplit[A](df: DataFrame, eraCol: String, k: Int)(
+      body: (DataFrame, Long) => A): A =
     graft.QueryScope.run {
-      val folds = foldAssignment(df.select(col(eraCol)).distinct(), eraCol, k)
-      body(df.join(broadcast(folds), eraCol).transform(graft.QueryScope.persist))
+      val eras = foldAssignment(
+        df.groupBy(col(eraCol)).agg(count(lit(1)).as("graft_n")), eraCol, k)
+        .collect()
+      val schema = StructType(Seq(df.schema(eraCol), StructField("fold", LongType)))
+      val folds = df.sparkSession.createDataFrame(
+        eras.map(r => Row(r.get(0), r.getLong(2))).toSeq.asJava, schema)
+      val maxEraRows = eras.map(_.getLong(1)).maxOption.getOrElse(0L)
+      body(df.join(broadcast(folds), eraCol).transform(graft.QueryScope.persist),
+        maxEraRows)
     }
 
   /** M1 seeded-random variant (`utils.py:26-29`: np.random.shuffle of

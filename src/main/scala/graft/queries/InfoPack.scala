@@ -47,15 +47,22 @@ object InfoPack extends QueryPack {
     * the upper-triangle theta join of `feature_clustering.py:26-33`).
     * Scale path for all-pairs over wide matrices: pivot to columns +
     * `RowMatrix.computeCovariance` — the explode/join form shown here
-    * is the honest relational shape for a bounded pair set. */
-  def qPairwiseCorr(s: SparkSession, d: String): DataFrame = {
+    * is the honest relational shape for a bounded pair set. Sorted by
+    * (pa, pb); [[pairwiseCorrEdges]] is the same relation unsorted. */
+  def qPairwiseCorr(s: SparkSession, d: String): DataFrame =
+    pairwiseCorrEdges(s, d).orderBy(col("pa"), col("pb"))
+
+  /** [[qPairwiseCorr]]'s 28 edges without its final sort, for consumers
+    * whose use does not depend on row order: `qFeatureClusters` and
+    * `qClusterSilhouette` fill a distance matrix from them, and the
+    * sort would cost each one more job and shuffle. */
+  def pairwiseCorrEdges(s: SparkSession, d: String): DataFrame = {
     val e = components(s, d, 8)
     val a = e.select(col("vec_id"), col("pos").as("pa"), col("x").as("xa"))
     val b = e.select(col("vec_id").as("vb"), col("pos").as("pb"), col("x").as("xb"))
     a.join(b, col("vec_id") === col("vb") && col("pa") < col("pb"))
       .groupBy(col("pa"), col("pb"))
       .agg(round(corr(col("xa"), col("xb")), 5).as("c"))
-      .orderBy(col("pa"), col("pb"))
   }
 
   /** A6-adjacent — L2 norm per embedding vector via the native

@@ -163,10 +163,13 @@ object MlPack extends QueryPack {
   /** M14+M15 — pairwise corr-distance over 8 embedding components
     * (distributed agg) → driver-side agglomerative clustering with
     * silhouette scan over k=2..4 (`feature_clustering.py:39-132`).
-    * Deterministic; rows-only check (clustering is not ANSI SQL). */
+    * Deterministic; rows-only check (clustering is not ANSI SQL). The
+    * ≤ 4 cluster rows are grouped and sorted on the driver and emitted
+    * as a local relation (no grouping or sorting job after the edge
+    * collect). */
   def qFeatureClusters(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val edges = InfoPack.qPairwiseCorr(s, d)
+    val edges = InfoPack.pairwiseCorrEdges(s, d)
       .select(col("pa"), col("pb"), (lit(1.0) - abs(col("c"))).as("dist"))
       .collect()
     val n = 8
@@ -176,15 +179,12 @@ object MlPack extends QueryPack {
       dist(i)(j) = dv; dist(j)(i) = dv
     }
     val (algo, k, labels, sil) = Clustering.optimalClustersScan(dist, Seq(2, 3, 4))
-    labels.zipWithIndex.map { case (lbl, i) => (lbl.toLong, s"e_$i") }
-      .toSeq.toDF("label", "feature")
-      .groupBy(col("label"))
-      .agg(array_join(sort_array(collect_list(col("feature"))), ",").as("members"),
-        count(lit(1)).as("n"))
-      .withColumn("k", lit(k.toLong))
-      .withColumn("algorithm", lit(algo))
-      .withColumn("silhouette", round(lit(sil), 6))
-      .orderBy(col("label"))
+    labels.zipWithIndex.groupBy(_._1).toSeq.sortBy(_._1).map { case (lbl, ms) =>
+      (lbl.toLong, ms.map(m => s"e_${m._2}").sorted.mkString(","), ms.length.toLong,
+        k.toLong, algo, sil)
+    }.toDF("label", "members", "n", "k", "algorithm", "graft_sil")
+      .select(col("label"), col("members"), col("n"), col("k"), col("algorithm"),
+        round(col("graft_sil"), 6).as("silhouette"))
   }
 
   /** M15's oracle-green twin (the seeded-ANN-twin pattern): k-medoids
@@ -202,10 +202,11 @@ object MlPack extends QueryPack {
     * seeding or silhouette regression fails the hash check — the
     * agglomerative/HDBSCAN merge logic that stays driver-only is
     * pinned by `ClusteringMultimodalSpec`. The 28-edge collect is the
-    * bounded matrix edge (8 features). */
+    * bounded matrix edge (8 features); the 8 rows are sorted on the
+    * driver and emitted as a local relation. */
   def qClusterSilhouette(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val edges = InfoPack.qPairwiseCorr(s, d).collect()
+    val edges = InfoPack.pairwiseCorrEdges(s, d).collect()
     val n = 8
     val de5 = Array.fill(n, n)(0L)
     edges.foreach { r =>
@@ -231,10 +232,10 @@ object MlPack extends QueryPack {
         own.map(de5(i)).sum, own.size.toLong,
         oth.map(de5(i)).sum, oth.size.toLong, terms(i)._3)
     }
-    rows.toDF("feature", "medoid_pos", "a_num", "a_den", "b_num", "b_den", "s_raw")
+    rows.sortBy(_._1)
+      .toDF("feature", "medoid_pos", "a_num", "a_den", "b_num", "b_den", "s_raw")
       .select(col("feature"), col("medoid_pos"), col("a_num"), col("a_den"),
         col("b_num"), col("b_den"), round(col("s_raw"), 6).as("s"))
-      .orderBy(col("feature"))
   }
 
   /** M12's oracle-green twin: [[graft.ml.Reduction.tuneOverKs]] — the
