@@ -23,9 +23,8 @@ object CrossVal {
 
   def kfoldScores(df: DataFrame, eraCol: String, k: Int,
                   fit: DataFrame => (DataFrame => DataFrame),
-                  score: DataFrame => DataFrame,
-                  seed: Option[Long] = None): DataFrame =
-    kfoldScoresFull(df, eraCol, k, fit, (_, _, scored) => score(scored), seed)
+                  score: DataFrame => DataFrame): DataFrame =
+    kfoldScoresFull(df, eraCol, k, fit, (_, _, scored) => score(scored))
 
   /** [[kfoldScores]] whose score callback also sees the fold's TRAIN
     * and TEST frames — for invariant-emitting consumers (`q_cv_rf`)
@@ -34,14 +33,8 @@ object CrossVal {
     * recompute every emitted value without reproducing the model. */
   def kfoldScoresFull(df: DataFrame, eraCol: String, k: Int,
                       fit: DataFrame => (DataFrame => DataFrame),
-                      score: (DataFrame, DataFrame, DataFrame) => DataFrame,
-                      seed: Option[Long] = None): DataFrame = {
-    val folds = seed match {
-      case Some(sd) => Folds.eraKFoldRandom(
-        df.select(col(eraCol)).distinct(), eraCol, k, sd)
-      case None => Folds.foldAssignment(
-        df.select(col(eraCol)).distinct(), eraCol, k)
-    }
+                      score: (DataFrame, DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val folds = Folds.foldAssignment(df.select(col(eraCol)).distinct(), eraCol, k)
     // persisted: every fold branch re-reads the same fact+fold join
     val withFold = df.join(broadcast(folds), eraCol).transform(graft.QueryScope.persist)
     kfoldCore(withFold, k, fit, score)

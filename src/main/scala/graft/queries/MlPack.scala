@@ -238,8 +238,9 @@ object MlPack extends QueryPack {
         col("b_num"), col("b_den"), round(col("s_raw"), 6).as("s"))
   }
 
-  /** M12's oracle-green twin: [[graft.ml.Reduction.tuneOverKs]] — the
-    * exact candidate-scan/CV/leaderboard loop `q_reduction_tune` runs
+  /** M12's oracle-green twin:
+    * [[graft.ml.Reduction.tuneOverKsSharedFit]] — the exact
+    * candidate-scan/CV/leaderboard loop `q_reduction_tune` runs
     * on the PCA projection — driven with the identity reducer
     * (first-k raw features), which makes every stage ANSI SQL: the
     * round-robin era folds, the additive univariate-OLS fitter's
@@ -253,7 +254,7 @@ object MlPack extends QueryPack {
     // shared-fit nested scan (r18): one OLS aggregate per fold serves
     // all three k prefixes, one action collects the leaderboard —
     // identical values to the per-candidate tuneOverKs loop
-    // (SelectionSpec pins the leaderboards equal)
+    // (ReductionSpec pins the leaderboards equal)
     val lb = Reduction.tuneOverKsSharedFit(featureFrame(s, d),
       k => featCols.take(k),
       Seq(2, 4, 6), "era", 2,

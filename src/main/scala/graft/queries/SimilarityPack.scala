@@ -800,76 +800,54 @@ object SimilarityPack extends QueryPack {
     * of `feature_clustering.py:26-33`'s all-pairs distance matrix,
     * and the r16 verdict's named round-17 item): every vector is
     * simultaneously a posting-list MEMBER (assigned to its nearest
-    * seeded centroid) and a QUERY (probing its nprobe=4 nearest
-    * cells), candidates meet in a cluster-keyed equi-join — never
-    * all-pairs — and exact cosine ranks top-3 per vector with no
-    * similarity floor (a kNN join owes every vector its k neighbors).
+    * seeded centroid) and a QUERY (probing its nprobe nearest cells),
+    * candidates meet in a cluster-keyed equi-join — never all-pairs —
+    * and exact cosine ranks top-3 per vector with no similarity floor
+    * (a kNN join owes every vector its k neighbors).
     *
-    * Scale shape: index and probe reuse the streaming-ANN machinery
-    * ([[graft.streaming.EventStream.buildAnnIndex]] — two-level past
-    * k=256, so build cost is O(n·√k)); candidates per vector are
-    * bounded at nprobe·(n/k) ≈ 1280 by the occupancy contract, so
-    * total candidate volume is linear in n at any corpus size. The
-    * oracle replays seeded assignment, probes, cosine, and ranking
-    * relationally (the q_stream_ann pattern, with every vector on
-    * both sides); `requireK` pins the width the static oracle
-    * hardcodes — ScaleProbe passes None and gets the adaptive,
-    * two-level form. */
-  /** The FLAT candidate relation (q_id, n_id, cos) — pure Catalyst:
-    * streams need the per-row probe kernel (no windows on a stream),
-    * but a batch self-join ranks relationally — ONE
-    * crossJoin-with-broadcast pass yields assignment (rn = 1 ⇒
-    * posting list) AND probe set (rn ≤ 8) from the same window, with
-    * no driver collect and no kernel broadcast. Identical arithmetic
-    * to the kernel path (index-order sums), spec-pinned equal in
-    * KnnJoinSpec. */
-  private def knnCandidatesFlat(s: SparkSession, d: String, k: Int): DataFrame = {
+    * The candidate relation (q_id, n_id, cos): the [[Ann]] index over
+    * every vector ([[Ann.buildAnnIndex]] — two-level past k=256, so
+    * build cost is O(n·√k)) probed by the same kernel as
+    * `q_stream_ann` ([[Ann.annProbeJoin]]) with no cosine floor. At
+    * fixture k the index is the flat seeded form the DuckDB oracle
+    * replays relationally (the q_stream_ann pattern, with every vector
+    * on both sides).
+    *
+    * nprobe=8 (vs the streaming lookup's 4): a kNN GRAPH op keeps
+    * recall high even on near-uniform vectors — measured on the
+    * fixture (ANN-adversarial random data): recall@3 vs exact kNN
+    * 0.48 / 0.63 / 0.74 at nprobe 4 / 6 / 8. Candidates stay
+    * bounded at nprobe·(n/k) ≈ 2560 per vector — linear in n. */
+  private[graft] def knnCandidates(s: SparkSession, d: String, k: Int): DataFrame = {
     val e = Tables.spread(s, Tables.embeddings(s, d)
       .select(col("vec_id"), asDouble(col("embedding")).as("v")))
-    val cents = e.orderBy(col("vec_id")).limit(k)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val diff = zip_with(col("v"), col("cv"), _ - _)
-    val ranked = e.crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("v"), col("cid"),
-        dot(diff, diff).as("dist"))
-      .withColumn("rn", row_number().over(Window.partitionBy(col("vec_id"))
-        .orderBy(col("dist"), col("cid"))))
-      .filter(col("rn") <= 8)
-    val posting = ranked.filter(col("rn") === 1)
-      .select(col("vec_id").as("n_id"), col("cid").as("cluster"),
-        col("v").as("hv"), sqrt(dot(col("v"), col("v"))).as("hn"))
-    val probes = ranked
-      .select(col("vec_id").as("q_id"), col("cid").as("cluster"),
-        col("v").as("qv"), sqrt(dot(col("v"), col("v"))).as("qn"))
-    probes.join(posting, Seq("cluster"))
-      .filter(col("q_id") =!= col("n_id"))
-      .withColumn("cos", round(
-        dot(col("qv"), col("hv")) / (col("qn") * col("hn")), 6))
-      .select(col("q_id"), col("n_id"), col("cos"))
+    val (cents, posting) = Ann.buildAnnIndex(e, k)
+    val live = Tables.spread(s,
+      Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
+    Ann.annProbeJoin(live, cents, posting, floor = -2.0, nprobe = 8)
   }
 
-  /** Silver-table form of the flat candidates — the kNN join, the
-    * prototype labeler, and the mutual-kNN graph all consume the SAME
-    * relation, so the first consumer materializes it once per
-    * (dir, content) and the others read the table (the `_shared_pairs`
-    * pattern; Bench times the build as its own `_shared_knn` entry).
+  /** The one ranked kNN relation: the join, the prototype labeler and
+    * the mutual-kNN graph all read it, so the first consumer
+    * materializes it once per (dir, content) at the dir's adaptive
+    * width and the others read the table (the `_shared_pairs` pattern;
+    * Bench and TimeQ time the build as its own `_shared_knn` entry).
     * The table stores only the rows any consumer can touch — the
     * GLOBAL top-8 per query (knn_join/graph read rank ≤ 3; 8 leaves
     * headroom for a wider k without a schema change) plus the top-3
     * per query over SEED members (the labeler's relation) — so the
     * corpus-sized candidate join and its rank windows run once in the
     * build and every consumer reads a ~11n-row table, not the
-    * nprobe·(n/k)·n candidate volume. Only the gated flat path
-    * memoizes: the kernel/adaptive path is ScaleProbe territory,
-    * where each cell must pay its own build. */
-  private def sharedKnnCandidates(s: SparkSession, d: String, k: Int,
+    * nprobe·(n/k)·n candidate volume. */
+  private def sharedKnnCandidates(s: SparkSession, d: String,
                                   tagSuffix: String = ""): DataFrame =
     s.read.parquet(Memo.table(s, "knncand" + tagSuffix, s"$d/embeddings.parquet") { out =>
       // persisted for the one materializing write (released when the
       // build's scope closes): both rank subsets read the same
-      // candidate relation, and unpersisted the crossJoin+window
-      // pipeline would execute twice
-      val cand = knnCandidatesFlat(s, d, k).transform(QueryScope.persist)
+      // candidate relation, and unpersisted the index build and probe
+      // would execute twice
+      val cand = knnCandidates(s, d, Ann.ivfKFor(embCount(s, d)))
+        .transform(QueryScope.persist)
       val globalTop = cand
         .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
           .orderBy(col("cos").desc, col("n_id"))).cast("long"))
@@ -890,86 +868,25 @@ object SimilarityPack extends QueryPack {
 
   /** Bench hook: materialize the shared kNN candidate table so its
     * cost is a visible line item, not silently folded into whichever
-    * kNN query happens to run first. No-op when the dir's adaptive k
-    * exceeds the flat ceiling (consumers take the kernel path there). */
+    * kNN query happens to run first. */
   def prepareSharedKnn(s: SparkSession, d: String, tagSuffix: String = ""): Unit = {
-    val k = resolveK(s, d)
-    if (k <= graft.streaming.EventStream.TwoLevelKMin) {
-      sharedKnnCandidates(s, d, k, tagSuffix); ()
-    }
+    sharedKnnCandidates(s, d, tagSuffix); ()
   }
 
-  /** The ONE k-resolution point for the kNN family (r17 review: this
-    * logic was copy-pasted at four sites, two already drifting in the
-    * message string): the dir's adaptive IVF width via `ivfKFor`,
-    * plus the oracle pin guard — a gated verify path passes
-    * `requireK` + the query name so a fixture whose adaptive k drifts
-    * from the static oracle fails LOUDLY with a pointer to the cause
-    * instead of silently diverging at the hash gate. */
-  private def resolveK(s: SparkSession, d: String,
-                       requireK: Option[Int] = None,
-                       queryName: String = "knn"): Int = {
-    val k = graft.streaming.EventStream.ivfKFor(embCount(s, d))
-    requireK.foreach { want =>
-      require(k == want, s"$queryName oracle pins k=$want centroids but " +
-        s"ivfKFor resolved k=$k; parameterize the oracle before gating this SF")
-    }
-    k
-  }
-
-  /** Compute-form candidates (no silver table): the flat Catalyst
-    * self-join at gated k, or the two-level index + probe kernel
-    * (O(n·√k) build, O(√k) probe — the streaming-ANN machinery,
-    * shared) past the flat ceiling / under forceKernel.
-    *
-    * nprobe=8 (vs the streaming lookup's 4): a kNN GRAPH op keeps
-    * recall high even on near-uniform vectors — measured on the
-    * fixture (ANN-adversarial random data): recall@3 vs exact kNN
-    * 0.48 / 0.63 / 0.74 at nprobe 4 / 6 / 8. Candidates stay
-    * bounded at nprobe·(n/k) ≈ 2560 per vector — linear in n. */
-  private[graft] def knnCandidates(s: SparkSession, d: String,
-                                   requireK: Option[Int],
-                                   forceKernel: Boolean = false): DataFrame = {
-    val es = graft.streaming.EventStream
-    val k = resolveK(s, d, requireK)
-    if (k <= es.TwoLevelKMin && !forceKernel) knnCandidatesFlat(s, d, k)
-    else {
-      val e = Tables.spread(s, Tables.embeddings(s, d)
-        .select(col("vec_id"), asDouble(col("embedding")).as("v")))
-      val (cents, posting) = es.buildAnnIndex(e, k)
-      val live = Tables.spread(s,
-        Tables.embeddings(s, d).select(col("vec_id"), col("embedding")))
-      es.annProbeJoin(live, cents, posting, floor = -2.0, nprobe = 8)
-    }
-  }
-
-  /** True when the shared silver table serves this (dir, flags)
-    * combination: gated flat path only. */
-  private def sharedServes(s: SparkSession, d: String,
-                           forceKernel: Boolean, useShared: Boolean): Option[Int] = {
-    val k = resolveK(s, d)
-    if (useShared && !forceKernel &&
-      k <= graft.streaming.EventStream.TwoLevelKMin) Some(k) else None
+  /** The shared table as a consumer reads it, after the oracle pin
+    * check: a gated verify path passes `requireK` + the query name. */
+  private def knnTable(s: SparkSession, d: String, requireK: Option[Int],
+                       query: String): DataFrame = {
+    Ann.width(embCount(s, d), requireK, query)
+    sharedKnnCandidates(s, d)
   }
 
   private[graft] def knnJoin(s: SparkSession, d: String,
-                             requireK: Option[Int],
-                             forceKernel: Boolean = false,
-                             useShared: Boolean = true): DataFrame = {
-    resolveK(s, d, requireK, "q_knn_join")
-    val ranked = sharedServes(s, d, forceKernel, useShared) match {
-      case Some(k) => sharedKnnCandidates(s, d, k)
-        .filter(col("rank").isNotNull)
-        .select(col("q_id"), col("n_id"), col("cos"), col("rank"))
-      case None => knnCandidates(s, d, requireK, forceKernel)
-        .withColumn("rank", row_number().over(Window.partitionBy(col("q_id"))
-          .orderBy(col("cos").desc, col("n_id"))).cast("long"))
-    }
-    ranked
+                             requireK: Option[Int]): DataFrame =
+    knnTable(s, d, requireK, "q_knn_join")
       .filter(col("rank") <= 3)
       .select(col("q_id").as("vec_id"), col("n_id"), col("cos"), col("rank"))
       .orderBy(col("vec_id"), col("rank"))
-  }
 
   def qKnnJoin(s: SparkSession, d: String): DataFrame =
     knnJoin(s, d, requireK = Some(16))
@@ -981,12 +898,11 @@ object SimilarityPack extends QueryPack {
     * prototype classifier of Cover & Hart 1967 run at corpus scale):
     * seeds = the deterministic 25% slice `vec_id % 4 = 0` keeping
     * their true label; every NON-seed vector takes the majority label
-    * of its top-3 seed neighbors. Candidates come from the SAME
-    * shared IVF index as [[knnCandidates]] (one index, many
-    * consumers — the production shape), restricted afterwards to
-    * (non-seed query, seed member) pairs: the candidate set is "seed
-    * members of the cells the query probes", so build cost is paid
-    * once for the whole family.
+    * of its top-3 seed neighbors. The votes read the seed top-3 rows
+    * of the SAME shared table as [[knnJoin]] (one index, many
+    * consumers — the production shape), ranked over (non-seed query,
+    * seed member) candidate pairs: "seed members of the cells the
+    * query probes", so build cost is paid once for the whole family.
     *
     * Determinism: candidate cosines are on the 1e-6 grid (rounded in
     * the shared relation); votes rank by (count DESC, Σcos_u DESC,
@@ -997,21 +913,10 @@ object SimilarityPack extends QueryPack {
     * occupancy contract and 25% seed density, an empty probe set is
     * vanishingly rare; the fixture has none). */
   private[graft] def knnLabel(s: SparkSession, d: String,
-                              requireK: Option[Int],
-                              forceKernel: Boolean = false,
-                              useShared: Boolean = true): DataFrame = {
-    resolveK(s, d, requireK, "q_knn_label")
-    val top3 = sharedServes(s, d, forceKernel, useShared) match {
-      case Some(k) => sharedKnnCandidates(s, d, k)
-        .filter(col("seed_rank").isNotNull)
-        .withColumn("cos_u", round(col("cos") * lit(1e6)).cast("long"))
-      case None => knnCandidates(s, d, requireK, forceKernel)
-        .filter(pmod(col("n_id"), lit(4)) === 0 && pmod(col("q_id"), lit(4)) =!= 0)
-        .withColumn("cos_u", round(col("cos") * lit(1e6)).cast("long"))
-        .withColumn("seed_rank", row_number().over(Window.partitionBy(col("q_id"))
-          .orderBy(col("cos").desc, col("n_id"))))
-        .filter(col("seed_rank") <= 3)
-    }
+                              requireK: Option[Int]): DataFrame = {
+    val top3 = knnTable(s, d, requireK, "q_knn_label")
+      .filter(col("seed_rank").isNotNull)
+      .withColumn("cos_u", round(col("cos") * lit(1e6)).cast("long"))
     val lbl = Tables.embeddings(s, d)
       .select(col("vec_id").as("n_id"), col("label").cast("long").as("n_label"))
     val votes = top3.join(lbl, Seq("n_id"))
@@ -1062,10 +967,8 @@ object SimilarityPack extends QueryPack {
     * lineage cut is cheap and downstream plans stay flat (same guard
     * as the stream-ANN silver scans). */
   private[graft] def mutualKnnEdges(s: SparkSession, d: String,
-                                    requireK: Option[Int],
-                                    forceKernel: Boolean = false,
-                                    useShared: Boolean = true): DataFrame = {
-    val top = knnJoin(s, d, requireK, forceKernel, useShared)
+                                    requireK: Option[Int]): DataFrame = {
+    val top = knnJoin(s, d, requireK)
       .select(col("vec_id").as("a"), col("n_id").as("b"), col("cos"))
     val fwd = top.filter(col("a") < col("b"))
     val rev = top.filter(col("a") > col("b"))
@@ -1077,10 +980,8 @@ object SimilarityPack extends QueryPack {
   }
 
   private[graft] def knnGraph(s: SparkSession, d: String,
-                              requireK: Option[Int],
-                              forceKernel: Boolean = false,
-                              useShared: Boolean = true): DataFrame = {
-    val mutual = mutualKnnEdges(s, d, requireK, forceKernel, useShared)
+                              requireK: Option[Int]): DataFrame = {
+    val mutual = mutualKnnEdges(s, d, requireK)
     graft.operators.ConnectedComponents.labels(mutual)
       .groupBy(col("rep").as("component"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("id")).as("id_sum"))
@@ -1111,10 +1012,8 @@ object SimilarityPack extends QueryPack {
     * clustering = 2·T / (deg·(deg−1)) — one IEEE division of exact
     * BIGINTs (0.0 where deg < 2), rounded at 6 on both engines. */
   private[graft] def knnTriangles(s: SparkSession, d: String,
-                                  requireK: Option[Int],
-                                  forceKernel: Boolean = false,
-                                  useShared: Boolean = true): DataFrame = {
-    val mut = mutualKnnEdges(s, d, requireK, forceKernel, useShared)
+                                  requireK: Option[Int]): DataFrame = {
+    val mut = mutualKnnEdges(s, d, requireK)
     val wedges = mut.select(col("a").as("x"), col("b").as("y"))
       .join(mut.select(col("a").as("y"), col("b").as("z")), Seq("y"))
     val tri = wedges.join(mut.select(col("a").as("x"), col("b").as("z")),

@@ -74,7 +74,7 @@ object StreamPack extends QueryPack {
       sink(Plan(EventStream.qualityGate(s, d, model, thr), "append"))
     }
 
-  /** `requireK` pins the IVF width ([[EventStream.writeAnnIndex]]):
+  /** `requireK` pins the IVF width ([[graft.operators.Ann.width]]):
     * the battery pins the DuckDB oracle's 16 centroids, the scale
     * probe passes None for the adaptive width. */
   def ann(requireK: Option[Int]): Stream = (s, d, sink) =>

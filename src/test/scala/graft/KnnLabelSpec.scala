@@ -8,7 +8,8 @@ import graft.queries.SimilarityPack
 /** kNN-prototype labeling: the DuckDB oracle pins exact values; these
   * pin the semantics — only non-seeds are labeled, the vote really is
   * the top-3 seed-neighbor majority under the integer-grid tie order,
-  * and the flat/kernel candidate paths agree. */
+  * over the engine's candidates and over the seeded flat IVF
+  * reference. */
 class KnnLabelSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -30,36 +31,40 @@ class KnnLabelSpec extends AnyFunSuite {
     }
   }
 
-  test("prediction is the majority label of the top-3 seed candidates") {
-    // independent replay from the shared candidate relation, vote
-    // recomputed in plain Scala under the documented tie order
+  /** The vote replayed in plain Scala under the documented tie order,
+    * from a (q_id, n_id, cos) candidate relation. */
+  private def replay(cand: Seq[(Long, Long, Double)]): Map[Long, (Long, Long, Long)] = {
     val labels = Tables.embeddings(spark, TestSpark.sf)
       .select(col("vec_id"), col("label").cast("long"))
       .as[(Long, Long)].collect().toMap
-    val cand = SimilarityPack.knnCandidates(spark, TestSpark.sf, Some(16))
-      .as[(Long, Long, Double)].collect()
-      .filter { case (q, nId, _) => q % 4 != 0 && nId % 4 == 0 }
-    val want = cand.groupBy(_._1).map { case (q, cs) =>
-      val top3 = cs.sortBy { case (_, nId, cos) => (-cos, nId) }.take(3)
-      val byLabel = top3.groupBy(c => labels(c._2)).map { case (l, g) =>
-        (l, g.length, g.map(c => math.round(c._3 * 1e6)).sum)
+    cand.filter { case (q, nId, _) => q % 4 != 0 && nId % 4 == 0 }
+      .groupBy(_._1).map { case (q, cs) =>
+        val top3 = cs.sortBy { case (_, nId, cos) => (-cos, nId) }.take(3)
+        val byLabel = top3.groupBy(c => labels(c._2)).map { case (l, g) =>
+          (l, g.length, g.map(c => math.round(c._3 * 1e6)).sum)
+        }
+        val (pred, votes, cu) = byLabel.toSeq
+          .sortBy { case (l, n, u) => (-n, -u, l) }.head
+        (q, (pred, votes.toLong, cu))
       }
-      val (pred, votes, cu) = byLabel.toSeq
-        .sortBy { case (l, n, u) => (-n, -u, l) }.head
-      (q, (pred, votes.toLong, cu))
-    }
+  }
+
+  private def assertVotes(want: Map[Long, (Long, Long, Long)]): Unit = {
     assert(rows.length == want.size)
     rows.foreach { case (v, pred, votes, cu, _, _) =>
       assert(want(v) == ((pred, votes, cu)), s"vector $v: ${want(v)} vs engine")
     }
   }
 
-  test("relational flat path and index-kernel path emit identical rows") {
-    val kernel = SimilarityPack.knnLabel(spark, TestSpark.sf,
-        requireK = Some(16), forceKernel = true)
-      .as[(Long, Long, Long, Long, Long, Long)].collect()
-    assert(kernel.sameElements(rows),
-      "kernel path diverged from the relational flat path")
+  test("prediction is the majority label of the top-3 seed candidates") {
+    // independent replay from the engine's candidate relation
+    assertVotes(replay(SimilarityPack.knnCandidates(spark, TestSpark.sf, 16)
+      .as[(Long, Long, Double)].collect()))
+  }
+
+  test("labels equal the vote replayed over the seeded flat IVF reference") {
+    // the flat relational IVF the DuckDB oracle replays, as candidates
+    assertVotes(replay(KnnFlatReference.rows(spark, TestSpark.sf, 16)))
   }
 
   test("fixture accuracy is chance-level — the truth column does not leak") {

@@ -4,6 +4,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Ann
 import graft.streaming.EventStream
 
 /** Streaming vector search: the candidate emission is a pure function
@@ -29,7 +30,7 @@ class StreamAnnSpec extends AnyFunSuite {
                            name: String): Set[(Long, Long, Double)] = {
     implicit val sq = spark.sqlContext
     val input = MemoryStream[(Long, Seq[Float])]
-    val q = EventStream.annProbeJoin(
+    val q = Ann.annProbeJoin(
         input.toDS().toDF("vec_id", "embedding"), silver._1, silver._2)
       .writeStream.outputMode("append").format("memory")
       .queryName(name).start()
@@ -44,7 +45,7 @@ class StreamAnnSpec extends AnyFunSuite {
     val one = drainBatched(Seq(liveRows), "graft_sann_one")
     val small = drainBatched(liveRows.grouped(17).toSeq, "graft_sann_small")
     val rev = drainBatched(liveRows.reverse.grouped(31).toSeq, "graft_sann_rev")
-    val batch = EventStream.annProbeJoin(
+    val batch = Ann.annProbeJoin(
       Tables.embeddings(spark, TestSpark.sf).filter(col("vec_id") % 5 === 0)
         .select(col("vec_id"), col("embedding")),
       silver._1, silver._2).as[(Long, Long, Double)].collect().toSet
@@ -66,7 +67,7 @@ class StreamAnnSpec extends AnyFunSuite {
     val e = Tables.embeddings(spark, TestSpark.sf)
       .filter(col("vec_id") % 5 =!= 0)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
-    val (cents, posting) = EventStream.buildAnnIndex(e, 16, twoLevelMin = 4)
+    val (cents, posting) = Ann.buildAnnIndex(e, 16, twoLevelMin = 4)
     val cRows = cents.select(col("cid"), col("parent"), col("level"))
       .as[(Long, Long, Int)].collect()
     val l1 = cRows.filter(_._3 == 1)
@@ -89,18 +90,18 @@ class StreamAnnSpec extends AnyFunSuite {
     val e = Tables.embeddings(spark, TestSpark.sf)
       .filter(col("vec_id") % 5 =!= 0)
       .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
-    val twoLevel = EventStream.buildAnnIndex(e, 16, twoLevelMin = 4)
+    val twoLevel = Ann.buildAnnIndex(e, 16, twoLevelMin = 4)
     val live = Tables.embeddings(spark, TestSpark.sf)
       .filter(col("vec_id") % 5 === 0)
       .select(col("vec_id"), col("embedding"))
-    val hier = EventStream.annProbeJoin(live, twoLevel._1, twoLevel._2)
+    val hier = Ann.annProbeJoin(live, twoLevel._1, twoLevel._2)
       .as[(Long, Long, Double)].collect()
     assert(hier.nonEmpty, "hierarchical probe emits candidates")
     assert(hier.forall(_._3 >= 0.2) && hier.forall(r => r._1 != r._2))
     // ANN recall sanity vs the flat index at the same k: the
     // hierarchical probe is approximate, but on the fixture it must
     // recover a solid majority of the flat probe's candidate pairs
-    val flat = EventStream.annProbeJoin(live, silver._1, silver._2)
+    val flat = Ann.annProbeJoin(live, silver._1, silver._2)
       .as[(Long, Long, Double)].collect()
     val hs = hier.map(r => (r._1, r._2)).toSet
     val fs = flat.map(r => (r._1, r._2)).toSet
